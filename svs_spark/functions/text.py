@@ -253,6 +253,131 @@ def fingerprint(text: Column | str) -> Column:
     )
 
 
+# --- NumPy twins for Arrow kernels -------------------------------------------
+# The Python side of the polynomial hash, for mapInPandas kernels that
+# cannot use the Column fold above (interpreted, DEVNOTES invariant 5).
+
+
+def _powers(n: int):
+    """int64 table [B^0 .. B^(n-1)] mod M, grown by doubling:
+    B^(k+j) = B^j · B^k, each product < 2^60."""
+    import numpy as np
+
+    p = np.ones(1, dtype=np.int64)
+    while len(p) < n:
+        step = int(p[-1]) * FINGERPRINT_BASE % FINGERPRINT_MOD  # B^len(p)
+        p = np.concatenate((p, p * step % FINGERPRINT_MOD))
+    return p[: max(n, 1)]
+
+
+def poly_hash_many(strings):
+    """``fingerprint`` of every string in one vectorized pass: the
+    Horner fold acc = (acc·B + codepoint) mod M, returned as int64[].
+
+    This is the only Python implementation of the hash; the Column form
+    (``fingerprint`` / ``dedup.token_hashes``) and the DuckDB form
+    (``oracle_gen.token_hash_sql``) are its spec. The batch is encoded
+    as ONE UTF-32 buffer plus offsets; each codepoint is weighted by
+    B^(distance to its string's end), reduced mod M and summed per
+    string, which equals the fold bit for bit. No overflow: a term is
+    < 2^21 · 2^30 before its reduction and a string's sum of reduced
+    terms stays < 2^63 below 2^33 codepoints. Memory is O(total
+    codepoints), independent of the longest string. Empty → 0.
+    """
+    import numpy as np
+
+    strings = list(strings)
+    lens = np.fromiter(map(len, strings), dtype=np.int64, count=len(strings))
+    out = np.zeros(len(strings), dtype=np.int64)
+    total = int(lens.sum())
+    if total == 0:
+        return out
+    cps = np.frombuffer(
+        "".join(strings).encode("utf-32-le", "surrogatepass"), dtype=np.uint32
+    )
+    ends = np.cumsum(lens)
+    # exponent of each codepoint: its distance to the end of its string
+    terms = np.repeat(ends - 1, lens)
+    terms -= np.arange(total, dtype=np.int64)
+    terms = _powers(int(lens.max()))[terms]
+    terms *= cps
+    terms %= FINGERPRINT_MOD
+    nz = lens > 0
+    out[nz] = np.add.reduceat(terms, (ends - lens)[nz]) % FINGERPRINT_MOD
+    return out
+
+
+def window_starts(counts, width: int):
+    """Flat start index of every ``width``-long window inside
+    consecutive segments of the given lengths (each ≥ ``width``),
+    segment-major: the gather index for k-token shingles and for
+    sliding-window minima over a flattened batch."""
+    import numpy as np
+
+    counts = np.asarray(counts, dtype=np.int64)
+    n_win = counts - (width - 1)
+    seg_off = np.cumsum(counts) - counts
+    win_off = np.cumsum(n_win) - n_win
+    return np.repeat(seg_off - win_off, n_win) + np.arange(
+        int(n_win.sum()), dtype=np.int64
+    )
+
+
+def shingle_hash_many(tok_hash, tok_len, starts, k: int):
+    """Hash of each k-token shingle "t_s t_s+1 … t_s+k-1" (tokens joined
+    by one space) from per-token hashes and lengths, by polynomial
+    decomposition of the fold:
+        h(acc ⧺ " " ⧺ t) = acc·B^(|t|+1) + 32·B^|t| + h(t)   (mod M)
+    — bit-identical to ``poly_hash_many`` over the shingle strings,
+    without ever building them. ``starts`` indexes each shingle's first
+    token (see ``window_starts``)."""
+    P = _powers(int(tok_len.max()) + 2)
+    acc = tok_hash[starts]
+    for j in range(1, k):
+        lj = tok_len[starts + j]
+        acc *= P[lj + 1]
+        acc %= FINGERPRINT_MOD
+        acc += 32 * P[lj] + tok_hash[starts + j]
+        acc %= FINGERPRINT_MOD
+    return acc
+
+
+def tokenize_many(texts, min_tokens: int = 1):
+    """The hash kernels' shared tokenize step: ``text.lower().split(" ")``
+    per document (Spark ``split(lower(text), ' ')``), flattened and
+    interned for one batch.
+
+    Returns ``(keep, n_tok, codes, uniq_hash, uniq_len)``: ``keep`` =
+    positions of the documents with ≥ ``min_tokens`` tokens (null text
+    has none and is never kept, as SQL's ``len(string_split(NULL))`` is
+    NULL); ``n_tok`` = their token counts; ``codes`` = per-batch intern
+    id of every kept token, doc-major (string-exact, so a hash collision
+    never merges two tokens); ``uniq_hash`` / ``uniq_len`` = fingerprint
+    and length per intern id.
+    """
+    import numpy as np
+    import pandas as pd
+
+    keep, n_tok, flat = [], [], []
+    for pos, text in enumerate(texts):
+        if not isinstance(text, str):
+            continue
+        toks = text.lower().split(" ")
+        if len(toks) < min_tokens:
+            continue
+        keep.append(pos)
+        n_tok.append(len(toks))
+        flat.extend(toks)
+    codes, uniq = pd.factorize(np.asarray(flat, dtype=object))
+    return (
+        keep,
+        np.asarray(n_tok, dtype=np.int64),
+        codes.astype(np.int64),
+        poly_hash_many(uniq),
+        np.fromiter(map(len, uniq), dtype=np.int64, count=len(uniq)),
+    )
+
+
 def shingles(text: Column | str, k: int = 5) -> Column:
     """Array of k-word shingles (space-joined) from lowercased text."""
     c = F.col(text) if isinstance(text, str) else text

@@ -23,7 +23,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from svs_spark.cache_hooks import persist_tracked
-from svs_spark.functions.text import FINGERPRINT_BASE, FINGERPRINT_MOD
+from svs_spark.functions.text import (
+    FINGERPRINT_BASE,
+    FINGERPRINT_MOD,
+    shingle_hash_many,
+    tokenize_many,
+    window_starts,
+)
 
 MINHASH_PRIME = 2_147_483_647  # 2^31 - 1
 SIMHASH_BITS = 32
@@ -94,6 +100,20 @@ def minhash_signature(tok_hashes: Column, num_hashes: int = 16) -> Column:
     return F.array(*sigs)
 
 
+def _doc_chunks(offsets, max_span: int):
+    """(lo, hi) doc ranges over a flattened batch (``offsets`` = per-doc
+    start positions plus the end) whose spans hold ≤ ``max_span`` items,
+    at least one doc each — keeps a per-chunk (span × hashes) matrix at
+    tens of MB regardless of batch size or doc length."""
+    lo, n = 0, len(offsets) - 1
+    while lo < n:
+        hi = lo + 1
+        while hi < n and offsets[hi + 1] - offsets[lo] <= max_span:
+            hi += 1
+        yield lo, hi
+        lo = hi
+
+
 def _signature_batch_kernel(
     id_col: str,
     text_col: str,
@@ -105,9 +125,11 @@ def _signature_batch_kernel(
 
     Computes exactly the same integers as the SQL oracle (polynomial
     shingle hash + affine permutations, all int64) but fast: each batch
-    memoizes shingle→hash in a dict and runs the permutations as one
-    vectorized numpy broadcast per doc. Docs with fewer than
-    ``shingle_size`` tokens are skipped (mirrored by the oracle filter).
+    hashes its distinct tokens once (``tokenize_many``), combines them
+    into shingle hashes with ``shingle_hash_many`` and runs the
+    permutations as vectorized numpy broadcasts. Docs with fewer than
+    ``shingle_size`` tokens — and null text — are skipped (mirrored by
+    the oracle's ``len(string_split(...)) >= k`` filter).
 
     Shingles (not unigrams) are load-bearing for LSH bucket sizes: with
     a small vocabulary, every doc's unigram *set* is near-identical, so
@@ -123,51 +145,12 @@ def _signature_batch_kernel(
     coeffs = np.asarray(minhash_coeffs(num_hashes), dtype=np.int64)
     a_vec = coeffs[:, 0][:, None]
     b_vec = coeffs[:, 1][:, None]
-
-    def poly_hash(token: str) -> int:
-        acc = 0
-        for ch in token:
-            acc = (acc * FINGERPRINT_BASE + ord(ch)) % FINGERPRINT_MOD
-        return acc
+    k = shingle_size
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # Shingle hashes are computed by POLYNOMIAL DECOMPOSITION: the
-        # base-31 fold over a shingle "t1 t2 t3" factors into per-token
-        # hashes combined with powers of the base —
-        #   h(acc ⧺ " t") = acc·B^(|t|+1) + 32·B^|t| + h(t)  (mod M)
-        # so only unique TOKENS ever see the per-character Python loop
-        # (memoized across batches), and every window combine is one
-        # vectorized int64 numpy pass over all of the batch's windows.
-        # Bit-identical to hashing the shingle string directly — the
-        # identity the oracle relies on. Per-doc dedup keys on token
-        # INTERN IDS (exact string identity, like the oracle's distinct
-        # over shingle strings), not on hash values, so a hash
-        # collision inside a doc cannot merge two distinct shingles.
-        tok_cache: dict[str, tuple[int, int, int]] = {}
-        pow_tab = [1, FINGERPRINT_BASE]
-        k = shingle_size
-
-        def pows_to(n: int) -> np.ndarray:
-            while len(pow_tab) <= n:
-                pow_tab.append(
-                    pow_tab[-1] * FINGERPRINT_BASE % FINGERPRINT_MOD
-                )
-            return np.asarray(pow_tab, dtype=np.int64)
-
         for pdf in batches:
-            docs_toks: list[list[str]] = []
-            ids_out: list[int] = []
-            keep_pos: list[int] = []
-            for pos, (did, text) in enumerate(
-                zip(pdf[id_col], pdf[text_col])
-            ):
-                toks = text.lower().split(" ")
-                if len(toks) < k:
-                    continue
-                ids_out.append(did)
-                keep_pos.append(pos)
-                docs_toks.append(toks)
-            if not ids_out:
+            keep_pos, n_tok, TID, uh, ul = tokenize_many(pdf[text_col], k)
+            if not keep_pos:
                 # typed empty frame: bare [] columns default to float64,
                 # which Arrow cannot convert to the array<long> fields
                 yield pd.DataFrame(
@@ -182,49 +165,15 @@ def _signature_batch_kernel(
                     }
                 )
                 continue
-
-            # memoization is an optimization only — cap the cross-batch
-            # cache so an unbounded vocabulary (URLs, ids) can't grow it
-            # into executor OOM; intern ids stay per-batch-consistent
-            # because a cleared cache just re-interns from zero
-            if len(tok_cache) > 4_000_000:
-                tok_cache.clear()
-            flat_ids, flat_h, flat_len = [], [], []
-            for toks in docs_toks:
-                for t in toks:
-                    ent = tok_cache.get(t)
-                    if ent is None:
-                        ent = (len(tok_cache), poly_hash(t), len(t))
-                        tok_cache[t] = ent
-                    flat_ids.append(ent[0])
-                    flat_h.append(ent[1])
-                    flat_len.append(ent[2])
-            TID = np.asarray(flat_ids, dtype=np.int64)
-            H = np.asarray(flat_h, dtype=np.int64)
-            L = np.asarray(flat_len, dtype=np.int64)
-            P = pows_to(int(L.max()) + 2)
-
-            n_wins = [len(t) - k + 1 for t in docs_toks]
-            tok_off = np.concatenate(
-                ([0], np.cumsum([len(t) for t in docs_toks]))
-            )
-            starts = np.concatenate(
-                [
-                    np.arange(tok_off[d], tok_off[d] + n_wins[d])
-                    for d in range(len(docs_toks))
-                ]
-            )
-            doc_idx = np.repeat(np.arange(len(docs_toks)), n_wins)
-
-            acc = H[starts].copy()
-            for j in range(1, k):
-                lj = L[starts + j]
-                acc *= P[lj + 1]
-                acc %= FINGERPRINT_MOD
-                acc += 32 * P[lj] + H[starts + j]
-                acc %= FINGERPRINT_MOD
-
-            dedup_cols = {"d": doc_idx}
+            ids_out = pdf[id_col].to_numpy()[keep_pos]
+            starts = window_starts(n_tok, k)
+            acc = shingle_hash_many(uh[TID], ul[TID], starts, k)
+            # per-doc dedup keys on token INTERN IDS (exact string
+            # identity, like the oracle's distinct over shingle
+            # strings), not on hash values, so a hash collision inside
+            # a doc cannot merge two distinct shingles
+            n_win = n_tok - (k - 1)
+            dedup_cols = {"d": np.repeat(np.arange(len(n_tok)), n_win)}
             for j in range(k):
                 dedup_cols[f"t{j}"] = TID[starts + j]
             dd = (
@@ -233,13 +182,11 @@ def _signature_batch_kernel(
                 .drop_duplicates(subset=list(dedup_cols))
             )
             harr = dd["h"].to_numpy()
-            counts = np.bincount(
-                dd["d"].to_numpy(), minlength=len(docs_toks)
-            )
+            counts = np.bincount(dd["d"].to_numpy(), minlength=len(n_tok))
             offsets = np.concatenate(([0], np.cumsum(counts)))
             hs_out = [
                 harr[offsets[d] : offsets[d + 1]].tolist()
-                for d in range(len(docs_toks))
+                for d in range(len(n_tok))
             ]
             # chunk on doc boundaries so the (num_hashes × span)
             # permutation matrix stays ~tens of MB regardless of batch
@@ -247,24 +194,12 @@ def _signature_batch_kernel(
             # tokens) and can reach GBs on long-doc corpora)
             sig_parts = []
             max_span = max(1, 4_000_000 // num_hashes)
-            lo_doc = 0
-            while lo_doc < len(ids_out):
-                hi_doc = lo_doc
-                while (
-                    hi_doc < len(ids_out)
-                    and offsets[hi_doc + 1] - offsets[lo_doc] <= max_span
-                ):
-                    hi_doc += 1
-                hi_doc = max(hi_doc, lo_doc + 1)  # ≥1 doc per chunk
-                span = harr[offsets[lo_doc] : offsets[hi_doc]]
-                mat = a_vec * span
+            for lo, hi in _doc_chunks(offsets, max_span):
+                mat = a_vec * harr[offsets[lo] : offsets[hi]]
                 mat += b_vec
                 mat %= MINHASH_PRIME
-                cuts = np.asarray(
-                    [o - offsets[lo_doc] for o in offsets[lo_doc:hi_doc]]
-                )
+                cuts = offsets[lo:hi] - offsets[lo]
                 sig_parts.append(np.minimum.reduceat(mat, cuts, axis=1))
-                lo_doc = hi_doc
             sig = np.concatenate(sig_parts, axis=1)
             yield pd.DataFrame(
                 {
@@ -279,6 +214,87 @@ def _signature_batch_kernel(
             )
 
     return run
+
+
+def _minhash_key_arr(num_hashes: int, bands: int) -> Column:
+    """Band-key array from a ``sig`` column: one xxhash64 long per band
+    over its ``num_hashes // bands`` signature values. Band keys collapse
+    to 8-byte longs before the exchange (DEVNOTES invariant 7) and every
+    row carries the full array, so duplicate-band matches die in a
+    per-row predicate (``_first_agreeing_band``) instead of a distinct.
+    One SQL string instead of bands·rows Column builders (round-9 py4j
+    diet; identical expression tree)."""
+    rows = num_hashes // bands
+    return F.expr(
+        "array("
+        + ", ".join(
+            "xxhash64(concat_ws('-', "
+            + ", ".join(
+                f"CAST(sig[{bi * rows + ri}] AS STRING)" for ri in range(rows)
+            )
+            + "))"
+            for bi in range(bands)
+        )
+        + ")"
+    )
+
+
+def _first_agreeing_band(
+    bands: int, hot_by_band: dict[int, list] | None = None
+) -> Column:
+    """True iff a (band, key) match between key arrays ``ka`` / ``kb`` is
+    the pair's FIRST agreeing band (all earlier bands differ), so a pair
+    agreeing on several bands is emitted once without a distinct().
+    Unrolled per band: ``sequence(0, band-1)`` descends at band=0 and
+    must not be used here.
+
+    ``hot_by_band`` (band → over-cap keys, see ``minhash_lsh_pairs``'s
+    bucket_cap): an agreeing-but-skipped earlier band never produced
+    the candidate, so it counts as differing — "first COLD agreeing
+    band". Both members share that bucket, so ``ka``'s key identifies
+    it. Without hot buckets the nested CASE tree is built as ONE SQL
+    string (py4j diet); with them, a Column fold of the same predicate
+    adds the hot-key InSets."""
+    if not hot_by_band:
+        def _ed(i: int) -> str:
+            if i == 0:
+                return "true"
+            return "(true AND " + " AND ".join(
+                f"(ka[{j}] != kb[{j}])" for j in range(i)
+            ) + ")"
+
+        fm_sql = "true"
+        for i in range(bands - 1, -1, -1):
+            fm_sql = f"(CASE WHEN band = {i} THEN {_ed(i)} ELSE {fm_sql} END)"
+        return F.expr(fm_sql)
+    first_match = F.lit(True)
+    for i in range(bands - 1, -1, -1):
+        earlier_differ = F.lit(True)
+        for j in range(i):
+            differs = F.col("ka")[j] != F.col("kb")[j]
+            if hot_by_band.get(j):
+                differs = differs | F.col("ka")[j].isin(hot_by_band[j])
+            earlier_differ = earlier_differ & differs
+        first_match = F.when(F.col("band") == i, earlier_differ).otherwise(
+            first_match
+        )
+    return first_match
+
+
+def _verify_jaccard(
+    joined: DataFrame, hs_a: str, hs_b: str, threshold: float
+) -> DataFrame:
+    """Exact shingle-set Jaccard of the candidate rows in ``joined``
+    (``inter`` and ``jac`` columns added), keeping jac ≥ threshold."""
+    return (
+        joined.withColumn("inter", F.size(F.array_intersect(hs_a, hs_b)))
+        .withColumn(
+            "jac",
+            F.col("inter").cast("double")
+            / (F.size(hs_a) + F.size(hs_b) - F.col("inter")),
+        )
+        .filter(F.col("jac") >= threshold)
+    )
 
 
 def minhash_lsh_pairs(
@@ -320,7 +336,6 @@ def minhash_lsh_pairs(
 
     Returns (id_a, id_b, jaccard).
     """
-    rows = num_hashes // bands
     base = docs.select(id_col, text_col).mapInPandas(
         _signature_batch_kernel(id_col, text_col, num_hashes, shingle_size),
         schema="did long, hs array<long>, sig array<long>",
@@ -330,28 +345,9 @@ def minhash_lsh_pairs(
     # released when the registry builds the next query)
     base = persist_tracked(base)
 
-    # Band keys collapse to 8-byte xxhash64 longs before the exchange
-    # (DEVNOTES invariant 7) and every row carries the full key array,
-    # so duplicate-band matches can be killed by a per-row predicate
-    # instead of a .distinct() shuffle over the matched set.
-    # (one SQL string instead of bands*rows Column builders — round-9
-    # py4j diet; identical expression tree)
-    key_arr = F.expr(
-        "array("
-        + ", ".join(
-            "xxhash64(concat_ws('-', "
-            + ", ".join(
-                f"CAST(sig[{bi * rows + ri}] AS STRING)"
-                for ri in range(rows)
-            )
-            + "))"
-            for bi in range(bands)
-        )
-        + ")"
-    )
-    band_rows = base.select("did", key_arr.alias("keys")).select(
-        "did", "keys", F.posexplode("keys").alias("band", "key")
-    )
+    band_rows = base.select(
+        "did", _minhash_key_arr(num_hashes, bands).alias("keys")
+    ).select("did", "keys", F.posexplode("keys").alias("band", "key"))
 
     # hot-bucket cap (see simhash_pairs): collect over-cap (band, key)
     # buckets per band, report the skipped mass, drop their rows
@@ -384,44 +380,13 @@ def minhash_lsh_pairs(
     b = band_rows.select(
         F.col("did").alias("id_b"), F.col("keys").alias("kb"), "band", "key"
     )
-    # A pair agreeing on several bands would surface once per band:
-    # emit it only at its FIRST agreeing band (all earlier bands
-    # differ) — the same codegen'd filter as simhash_pairs, replacing
-    # the distinct() that dominated this operator's runtime (100k-doc
-    # probe: candidates 33 s → 2.7 s, identical pair set). Under a
-    # bucket_cap, first COLD agreeing band (an agreeing-but-skipped
-    # earlier band never produced the candidate; both members share
-    # that bucket, so either side's key identifies it).
-    if not hot_by_band:
-        # SQL fast path (py4j diet): same nested CASE tree as the
-        # Column fold below, built in one round-trip
-        def _ed(i: int) -> str:
-            if i == 0:
-                return "true"
-            return "(true AND " + " AND ".join(
-                f"(ka[{j}] != kb[{j}])" for j in range(i)
-            ) + ")"
-
-        fm_sql = "true"
-        for i in range(bands - 1, -1, -1):
-            fm_sql = f"(CASE WHEN band = {i} THEN {_ed(i)} ELSE {fm_sql} END)"
-        first_match = F.expr(fm_sql)
-    else:
-        first_match = F.lit(True)
-        for i in range(bands - 1, -1, -1):
-            earlier_differ = F.lit(True)
-            for j in range(i):
-                differs = F.col("ka")[j] != F.col("kb")[j]
-                if hot_by_band.get(j):
-                    differs = differs | F.col("ka")[j].isin(hot_by_band[j])
-                earlier_differ = earlier_differ & differs
-            first_match = F.when(
-                F.col("band") == i, earlier_differ
-            ).otherwise(first_match)
+    # first-agreeing-band emission replaces the distinct() that
+    # dominated this operator's runtime (100k-doc probe: candidates
+    # 33 s → 2.7 s, identical pair set)
     cands = (
         a.join(b, ["band", "key"])
         .filter(F.col("id_a") < F.col("id_b"))
-        .filter(first_match)
+        .filter(_first_agreeing_band(bands, hot_by_band))
         .select("id_a", "id_b")
     )
 
@@ -433,16 +398,9 @@ def minhash_lsh_pairs(
         F.col("did").alias("id_b"), F.col("hs").alias("hs_b"),
         F.col("sig").alias("sig_b"),
     )
-    verified = (
-        cands.join(ta, "id_a")
-        .join(tb, "id_b")
-        .withColumn("inter", F.size(F.array_intersect("hs_a", "hs_b")))
-        .withColumn(
-            "jac",
-            F.col("inter").cast("double")
-            / (F.size("hs_a") + F.size("hs_b") - F.col("inter")),
-        )
-        .filter(F.col("jac") >= jaccard_threshold)
+    verified = _verify_jaccard(
+        cands.join(ta, "id_a").join(tb, "id_b"),
+        "hs_a", "hs_b", jaccard_threshold,
     )
     if emit_estimate:
         # the signature-side Jaccard ESTIMATE: fraction of minhash
@@ -510,10 +468,10 @@ def simhash_segments(bits: int, n_segments: int) -> list[tuple[int, int]]:
 def _simhash_batch_kernel(id_col: str, text_col: str, bits: int):
     """Arrow-batched SimHash signatures: identical integers to the
     ``simhash()`` Column spec (token poly-hash → per-bit affine parity
-    votes) but one vectorized (tokens × bits) NumPy pass per doc instead
-    of ``bits`` interpreted HigherOrderFunction folds — the Column form
-    is ~10× slower because per-token lambda folds never enter
-    whole-stage codegen (DEVNOTES invariant #5)."""
+    votes) but vectorized (tokens × bits) NumPy passes per doc chunk
+    instead of ``bits`` interpreted HigherOrderFunction folds — the
+    Column form is ~10× slower because per-token lambda folds never
+    enter whole-stage codegen (DEVNOTES invariant #5)."""
     import numpy as np
     import pandas as pd
     from typing import Iterator
@@ -524,73 +482,41 @@ def _simhash_batch_kernel(id_col: str, text_col: str, bits: int):
     # (matches bit_weight(); astype would be UB for out-of-range values)
     weights = (np.uint64(1) << i_arr.astype(np.uint64)).view(np.int64)
 
-    def poly_hash(token: str) -> int:
-        acc = 0
-        for ch in token:
-            acc = (acc * FINGERPRINT_BASE + ord(ch)) % FINGERPRINT_MOD
-        return acc
-
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cache: dict[str, int] = {}
         for pdf in batches:
             if not len(pdf):
                 continue
-            # flatten the whole batch to one (Σ|tokens|,) hash vector +
-            # per-doc offsets: ONE (pairs × bits) vote matrix and a
-            # segment-sum (reduceat) replace the per-doc Python loop —
-            # the loop's small-matrix dispatch overhead dominated at
-            # ~100 tokens/doc
-            all_hs: list[int] = []
-            offsets = [0]
-            ids_out = []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                for t in dict.fromkeys(text.lower().split(" ")):
-                    h = cache.get(t)
-                    if h is None:
-                        h = poly_hash(t)
-                        cache[t] = h
-                    all_hs.append(h)
-                offsets.append(len(all_hs))
-                ids_out.append(did)
-            if not ids_out:  # zero-row batch: np.concatenate([]) raises
-                yield pd.DataFrame(
-                    {
-                        "did": pd.Series([], dtype="int64"),
-                        "sh": pd.Series([], dtype="int64"),
-                    }
-                )
-                continue
-            harr = np.asarray(all_hs, dtype=np.int64)[:, None]
-            # chunk on doc boundaries: the (span × bits) vote matrix
-            # stays ~tens of MB regardless of batch size / doc length.
-            # Empty docs (offsets[i] == offsets[i+1]) would break
-            # reduceat; the split guarantees ≥1 token ('' splits to [''])
+            # flatten the whole batch to one hash vector over each doc's
+            # DISTINCT tokens (the spec's array_distinct) + per-doc
+            # offsets: ONE (pairs × bits) vote matrix per chunk and a
+            # segment-sum (reduceat) replace a per-doc Python loop.
+            # Null text has no tokens and keeps signature 0, as the
+            # spec's fold over a NULL array does.
+            keep, n_tok, codes, uh, _ = tokenize_many(pdf[text_col])
+            sh_out = np.zeros(len(pdf), dtype=np.int64)
+            n_u = max(len(uh), 1)
+            pairs = np.unique(
+                np.repeat(np.arange(len(keep)), n_tok) * n_u + codes
+            )
+            harr = uh[pairs % n_u][:, None]
+            counts = np.bincount(pairs // n_u, minlength=len(keep))
+            offsets = np.concatenate(([0], np.cumsum(counts)))
+            # every kept doc has ≥1 token ('' splits to ['']), so no
+            # reduceat segment is empty
             sh_parts = []
-            max_span = max(1, 4_000_000 // bits)
-            lo_doc = 0
-            while lo_doc < len(ids_out):
-                hi_doc = lo_doc
-                while (
-                    hi_doc < len(ids_out)
-                    and offsets[hi_doc + 1] - offsets[lo_doc] <= max_span
-                ):
-                    hi_doc += 1
-                hi_doc = max(hi_doc, lo_doc + 1)
-                span = harr[offsets[lo_doc] : offsets[hi_doc]]
-                votes = span * mult
+            for lo, hi in _doc_chunks(offsets, max(1, 4_000_000 // bits)):
+                votes = harr[offsets[lo] : offsets[hi]] * mult
                 votes += i_arr
                 votes %= SIMHASH_MOD
                 votes %= 2
                 votes *= 2
                 votes -= 1
-                cuts = np.asarray(
-                    [o - offsets[lo_doc] for o in offsets[lo_doc:hi_doc]]
-                )
+                cuts = offsets[lo:hi] - offsets[lo]
                 sums = np.add.reduceat(votes, cuts, axis=0)
                 sh_parts.append((weights * (sums > 0)).sum(axis=1))
-                lo_doc = hi_doc
-            sh_out = np.concatenate(sh_parts)
-            yield pd.DataFrame({"did": ids_out, "sh": sh_out})
+            if sh_parts:
+                sh_out[keep] = np.concatenate(sh_parts)
+            yield pd.DataFrame({"did": pdf[id_col].to_numpy(), "sh": sh_out})
 
     return run
 
@@ -1230,43 +1156,6 @@ def boilerplate_line_stats(
 # ---------------------------------------------------------------------------
 
 
-def _minhash_key_arr(num_hashes: int, bands: int) -> Column:
-    """Band-key array (xxhash64 longs) from a ``sig`` column."""
-    rows = num_hashes // bands
-    return F.array(
-        *[
-            F.xxhash64(
-                F.concat_ws(
-                    "-",
-                    *[
-                        F.col("sig")[bi * rows + ri].cast("string")
-                        for ri in range(rows)
-                    ],
-                )
-            )
-            for bi in range(bands)
-        ]
-    )
-
-
-def _first_agreeing_band(bands: int) -> Column:
-    """True iff the current (band, key) match is the pair's FIRST
-    agreeing band — kills multi-band duplicates without a distinct.
-    Unrolled per band: ``sequence(0, band-1)`` descends at band=0 and
-    must not be used here."""
-    first_match = F.lit(True)
-    for i in range(bands - 1, -1, -1):
-        earlier_differ = F.lit(True)
-        for j in range(i):
-            earlier_differ = earlier_differ & (
-                F.col("ka")[j] != F.col("kb")[j]
-            )
-        first_match = F.when(F.col("band") == i, earlier_differ).otherwise(
-            first_match
-        )
-    return first_match
-
-
 def minhash_signatures(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -1370,16 +1259,9 @@ def minhash_incremental_pairs(
     )
     ta = hs_all.select(F.col("did").alias("id_a"), F.col("hs").alias("hs_a"))
     tb = hs_all.select(F.col("did").alias("id_b"), F.col("hs").alias("hs_b"))
-    verified = (
-        cands.join(ta, "id_a")
-        .join(tb, "id_b")
-        .withColumn("inter", F.size(F.array_intersect("hs_a", "hs_b")))
-        .withColumn(
-            "jac",
-            F.col("inter").cast("double")
-            / (F.size("hs_a") + F.size("hs_b") - F.col("inter")),
-        )
-        .filter(F.col("jac") >= jaccard_threshold)
+    verified = _verify_jaccard(
+        cands.join(ta, "id_a").join(tb, "id_b"),
+        "hs_a", "hs_b", jaccard_threshold,
     )
     return verified.select(
         "id_a", "id_b", F.round("jac", 6).alias("jaccard")
@@ -1445,19 +1327,12 @@ def minhash_index_recall_telemetry(
     ub = universe.select(
         F.col("did").alias("id_u"), F.col("hs").alias("hs_u")
     )
-    jac = (
-        F.size(F.array_intersect("hs_n", "hs_u")).cast("double")
-        / (
-            F.size("hs_n")
-            + F.size("hs_u")
-            - F.size(F.array_intersect("hs_n", "hs_u"))
-        )
-    )
     truth = {
         (r["id_a"], r["id_b"])
-        for r in na.crossJoin(ub)
-        .filter(F.col("id_n") != F.col("id_u"))
-        .filter(jac >= jaccard_threshold)
+        for r in _verify_jaccard(
+            na.crossJoin(ub).filter(F.col("id_n") != F.col("id_u")),
+            "hs_n", "hs_u", jaccard_threshold,
+        )
         .select(
             F.least("id_n", "id_u").alias("id_a"),
             F.greatest("id_n", "id_u").alias("id_b"),
@@ -1725,29 +1600,15 @@ def minhash_lsh_bipartite(
     corpus_bench measures the exact screen at ~203 s; the banded
     bipartite screen scales with collisions, not with train size.
     """
-    rows = num_hashes // bands
     base = docs.select(id_col, text_col).mapInPandas(
         _signature_batch_kernel(id_col, text_col, num_hashes, shingle_size),
         schema="did long, hs array<long>, sig array<long>",
     )
     base = persist_tracked(base)
-    # (one SQL string instead of bands*rows Column builders — round-9
-    # py4j diet; identical expression tree)
-    key_arr = F.expr(
-        "array("
-        + ", ".join(
-            "xxhash64(concat_ws('-', "
-            + ", ".join(
-                f"CAST(sig[{bi * rows + ri}] AS STRING)"
-                for ri in range(rows)
-            )
-            + "))"
-            for bi in range(bands)
-        )
-        + ")"
-    )
     band_rows = base.select(
-        "did", right_side.alias("is_right"), key_arr.alias("keys")
+        "did",
+        right_side.alias("is_right"),
+        _minhash_key_arr(num_hashes, bands).alias("keys"),
     ).select(
         "did", "is_right", "keys",
         F.posexplode("keys").alias("band", "key"),
@@ -1760,19 +1621,9 @@ def minhash_lsh_bipartite(
         F.col("did").alias("id_right"), F.col("keys").alias("kb"),
         "band", "key",
     )
-    first_match = F.lit(True)
-    for i in range(bands - 1, -1, -1):
-        earlier_differ = F.lit(True)
-        for j in range(i):
-            earlier_differ = earlier_differ & (
-                F.col("ka")[j] != F.col("kb")[j]
-            )
-        first_match = F.when(F.col("band") == i, earlier_differ).otherwise(
-            first_match
-        )
     cands = (
         a.join(b, ["band", "key"])
-        .filter(first_match)
+        .filter(_first_agreeing_band(bands))
         .select("id_left", "id_right")
     )
     if candidates_only:
@@ -1781,21 +1632,13 @@ def minhash_lsh_bipartite(
     tb = base.select(
         F.col("did").alias("id_right"), F.col("hs").alias("hs_b")
     )
-    verified = (
-        cands.join(ta, "id_left")
-        .join(tb, "id_right")
-        .withColumn("inter", F.size(F.array_intersect("hs_a", "hs_b")))
-        .withColumn(
-            "jac",
-            F.col("inter").cast("double")
-            / (F.size("hs_a") + F.size("hs_b") - F.col("inter")),
-        )
-        .filter(F.col("jac") >= jaccard_threshold)
+    verified = _verify_jaccard(
+        cands.join(ta, "id_left").join(tb, "id_right"),
+        "hs_a", "hs_b", jaccard_threshold,
     )
-    out = verified.select(
+    return verified.select(
         "id_left", "id_right", F.round("jac", 6).alias("jaccard")
     )
-    return out
 
 
 def containment_prefix_candidates(

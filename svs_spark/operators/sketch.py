@@ -39,6 +39,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 
+from svs_spark.functions.text import poly_hash_many
+
 __all__ = [
     "KLL",
     "kll_quantiles",
@@ -391,22 +393,29 @@ def frequent_items(
 # expressible as a plain (row, col)-keyed sum aggregate.
 #
 # Hashing is splitmix64 over the same portable polynomial fingerprint
-# the dedup family uses, evaluated in the NumPy kernel with per-batch
-# memoization — identical integers driver-side at query time, no JVM
+# the dedup family uses, evaluated in the NumPy kernel once per batch's
+# distinct items — identical integers driver-side at query time, no JVM
 # round trip per lookup.
 # ---------------------------------------------------------------------------
 
 
-def _cm_fingerprint(item: str) -> int:
-    acc = 0
-    for ch in item:
-        acc = (acc * 31 + ord(ch)) % 1_000_000_007
-    return acc
+def _cm_positions_many(items, width: int, depth: int):
+    """(len(items), depth) int64 cell columns: splitmix64 over each
+    item's fingerprint (``poly_hash_many``), one seed per sketch row.
+    uint64 arithmetic wraps mod 2^64 exactly like the scalar mixer."""
+    import numpy as np
+
+    f = poly_hash_many(items).astype(np.uint64)[:, None]
+    z = f ^ (np.arange(depth, dtype=np.uint64) + np.uint64(0xCB9))
+    z += np.uint64(0x9E3779B97F4A7C15)
+    z = (z ^ (z >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
+    z = (z ^ (z >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
+    z ^= z >> np.uint64(31)
+    return (z % np.uint64(width)).astype(np.int64)
 
 
 def _cm_positions(item: str, width: int, depth: int) -> "list[int]":
-    f = _cm_fingerprint(item)
-    return [_splitmix64(f ^ (0xCB9 + row)) % width for row in range(depth)]
+    return _cm_positions_many([item], width, depth)[0].tolist()
 
 
 class CountMin:
@@ -438,7 +447,8 @@ def count_min(
     """Build a count-min sketch over ``item_col`` in one scan.
 
     Each partition's kernel increments a LOCAL (depth × width) matrix
-    (vectorized over the batch's value_counts, fingerprints memoized),
+    (vectorized over the batch's value_counts, whose distinct items are
+    hashed in one ``poly_hash_many`` call),
     then emits it as (row, col, cnt) triples for the non-zero cells;
     the merge is one (row, col)-keyed sum — the exchange carries at
     most n_partitions × depth × width rows of 24 bytes, constant in
@@ -450,16 +460,13 @@ def count_min(
         import numpy as np
 
         table = np.zeros((depth, width), dtype=np.int64)
-        memo: dict[str, "list[int]"] = {}
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            for item, c in pdf[item_col].astype(str).value_counts().items():
-                pos = memo.get(item)
-                if pos is None:
-                    pos = memo[item] = _cm_positions(item, width, depth)
-                for row, p in enumerate(pos):
-                    table[row, p] += int(c)
+            vc = pdf[item_col].astype(str).value_counts()
+            pos = _cm_positions_many(vc.index, width, depth)
+            for row in range(depth):
+                np.add.at(table[row], pos[:, row], vc.to_numpy())
         rows, cols = table.nonzero()
         yield pd.DataFrame(
             {

@@ -1840,48 +1840,18 @@ def q_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     def kernel(batches):
         import numpy as np
         import pandas as pd
-        from svs_spark.functions.text import FINGERPRINT_BASE, FINGERPRINT_MOD
+        from svs_spark.functions.text import (
+            shingle_hash_many,
+            tokenize_many,
+            window_starts,
+        )
 
-        # Shingle hashes by POLYNOMIAL DECOMPOSITION (the minhash
-        # signature kernel's identity, operators/dedup.py):
-        #   h(acc ⧺ " t") = acc·B^(|t|+1) + 32·B^|t| + h(t)  (mod M)
-        # so only unique TOKENS see the per-character Python loop
-        # (memoized across batches) and the k-token combines plus the
-        # w-window minima are vectorized int64 numpy passes over all
-        # of the batch's positions — bit-identical integers to hashing
-        # each shingle string directly (the identity the oracle relies
-        # on; products stay < 2^60 at M = 1e9+7). The previous form
-        # hashed every shingle string through the Python loop: ~20
-        # chars × |windows| per doc of interpreter work (guide §4.2).
-        tok_cache: dict = {}
-        pow_tab = [1, FINGERPRINT_BASE]
-
-        def pows_to(n: int) -> np.ndarray:
-            while len(pow_tab) <= n:
-                pow_tab.append(
-                    pow_tab[-1] * FINGERPRINT_BASE % FINGERPRINT_MOD
-                )
-            return np.asarray(pow_tab, dtype=np.int64)
-
-        def ph(tok: str) -> tuple:
-            ent = tok_cache.get(tok)
-            if ent is None:
-                h = 0
-                for ch in tok:
-                    h = (h * FINGERPRINT_BASE + ord(ch)) % FINGERPRINT_MOD
-                ent = (h, len(tok))
-                tok_cache[tok] = ent
-            return ent
-
+        # shingle hashes by polynomial decomposition over the batch's
+        # distinct tokens (functions/text.py), then the w-window minima
+        # as vectorized int64 passes over all of the batch's positions
         for pdf in batches:
-            ids_out, docs_toks = [], []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                toks = text.lower().split(" ")
-                if len(toks) < k + w - 1:
-                    continue
-                ids_out.append(did)
-                docs_toks.append(toks)
-            if not ids_out:
+            keep, n_tok, codes, uh, ul = tokenize_many(pdf["text"], k + w - 1)
+            if not keep:
                 yield pd.DataFrame(
                     {
                         "doc_id": pd.Series([], dtype="int64"),
@@ -1889,51 +1859,22 @@ def q_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                     }
                 )
                 continue
-            if len(tok_cache) > 4_000_000:
-                tok_cache.clear()
-            flat_h, flat_len = [], []
-            for toks in docs_toks:
-                for t in toks:
-                    hh, ll = ph(t)
-                    flat_h.append(hh)
-                    flat_len.append(ll)
-            H = np.asarray(flat_h, dtype=np.int64)
-            L = np.asarray(flat_len, dtype=np.int64)
-            P = pows_to(int(L.max()) + 2)
-            n_sh = [len(t) - k + 1 for t in docs_toks]
-            tok_off = np.concatenate(
-                ([0], np.cumsum([len(t) for t in docs_toks]))
+            acc = shingle_hash_many(
+                uh[codes], ul[codes], window_starts(n_tok, k), k
             )
-            starts = np.concatenate(
-                [
-                    np.arange(tok_off[d], tok_off[d] + n_sh[d])
-                    for d in range(len(docs_toks))
-                ]
-            )
-            acc = H[starts].copy()
-            for j in range(1, k):
-                lj = L[starts + j]
-                acc *= P[lj + 1]
-                acc %= FINGERPRINT_MOD
-                acc += 32 * P[lj] + H[starts + j]
-                acc %= FINGERPRINT_MOD
-            sh_off = np.concatenate(([0], np.cumsum(n_sh)))
-            n_wn = [m - w + 1 for m in n_sh]
-            wstarts = np.concatenate(
-                [
-                    np.arange(sh_off[d], sh_off[d] + n_wn[d])
-                    for d in range(len(docs_toks))
-                ]
-            )
-            mins = acc[wstarts].copy()
+            n_sh = n_tok - (k - 1)
+            wstarts = window_starts(n_sh, w)
+            mins = acc[wstarts]
             for j in range(1, w):
                 np.minimum(mins, acc[wstarts + j], out=mins)
-            wn_off = np.concatenate(([0], np.cumsum(n_wn)))
+            wn_off = np.concatenate(([0], np.cumsum(n_sh - (w - 1))))
             prints = [
                 list(dict.fromkeys(mins[wn_off[d] : wn_off[d + 1]].tolist()))
-                for d in range(len(docs_toks))
+                for d in range(len(keep))
             ]
-            yield pd.DataFrame({"doc_id": ids_out, "prints": prints})
+            yield pd.DataFrame(
+                {"doc_id": pdf["doc_id"].to_numpy()[keep], "prints": prints}
+            )
 
     base = cached(
         docs.select("doc_id", "text")
@@ -1996,46 +1937,18 @@ def q_embed_and_retrieve(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
 
     def kernel(batches):
-        import numpy as np
         import pandas as pd
-        from svs_spark.functions.text import FINGERPRINT_BASE, FINGERPRINT_MOD
+        from svs_spark.functions.text import poly_hash_many
 
         for pdf in batches:
-            ids, vecs = [], []
-            texts = list(pdf["text"])
-            n = len(texts)
-            if n:
-                # vectorized polynomial hash: codepoints come out of
-                # utf-32-le bytes in one shot per doc, and the Horner
-                # fold runs ACROSS docs per position with a length
-                # mask — identical int64 arithmetic to the per-char
-                # loop (h·31 + c < 2^35 at M = 1e9+7), just not in the
-                # interpreter (guide §4.2). The downstream raw/norm
-                # floats keep the original per-doc Python order so
-                # every double is bit-identical.
-                lens = np.asarray([len(t) for t in texts], dtype=np.int64)
-                maxlen = int(lens.max())
-                C = np.zeros((n, maxlen), dtype=np.int64)
-                for i, t in enumerate(texts):
-                    if t:
-                        C[i, : len(t)] = np.frombuffer(
-                            t.encode("utf-32-le"), dtype=np.uint32
-                        )
-                hv = np.zeros(n, dtype=np.int64)
-                for pos in range(maxlen):
-                    active = pos < lens
-                    hv = np.where(
-                        active,
-                        (hv * FINGERPRINT_BASE + C[:, pos]) % FINGERPRINT_MOD,
-                        hv,
-                    )
-            for i, did in enumerate(pdf["doc_id"]):
-                h = int(hv[i])
+            # the raw/norm floats keep the per-doc Python order so
+            # every double is bit-identical to the oracle's
+            vecs = []
+            for h in poly_hash_many(pdf["text"]).tolist():
                 raw = [float((h * m) % 1009 - 504) for m in _HE_MULTS]
                 norm = _math.sqrt(sum(x * x for x in raw))
-                ids.append(did)
                 vecs.append([x / norm for x in raw])
-            yield pd.DataFrame({"doc_id": ids, "v": vecs})
+            yield pd.DataFrame({"doc_id": pdf["doc_id"].to_numpy(), "v": vecs})
 
     emb = docs.select("doc_id", "text").mapInPandas(
         kernel, schema="doc_id long, v array<double>"

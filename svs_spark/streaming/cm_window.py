@@ -31,25 +31,19 @@ import pandas as pd
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from svs_spark.operators.sketch import _cm_positions
+from svs_spark.operators.sketch import _cm_positions, _cm_positions_many
 
 
 def _positions_udf(width: int, depth: int):
     """Arrow-batched positions kernel: item string -> array<long> of the
-    ``depth`` cell columns, memoized per batch (value_counts-style
-    corpora repeat items heavily)."""
+    ``depth`` cell columns; each batch's distinct items are hashed in
+    one call (value_counts-style corpora repeat items heavily)."""
 
     def kernel(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        memo: dict[str, list[int]] = {}
-
-        def pos(item: str) -> list[int]:
-            p = memo.get(item)
-            if p is None:
-                p = memo[item] = _cm_positions(item, width, depth)
-            return p
-
         for s in batches:
-            yield s.astype(str).map(pos)
+            codes, uniq = pd.factorize(s.astype(str))
+            pos = _cm_positions_many(uniq, width, depth)
+            yield pd.Series(pos[codes].tolist())
 
     return F.pandas_udf(kernel, "array<long>")
 

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from svs_spark.operators.dedup import (
     _first_agreeing_band,
+    _verify_jaccard,
     minhash_signatures,
 )
 
@@ -66,16 +67,9 @@ def near_dup_pairs_stream(
     hs_old = old_sigs.select(
         F.col("did").alias("corpus_id"), F.col("hs").alias("hs_o")
     )
-    verified = (
-        cands.select("new_id", "corpus_id", "hs_n")
-        .join(hs_old, "corpus_id")
-        .withColumn("inter", F.size(F.array_intersect("hs_n", "hs_o")))
-        .withColumn(
-            "jac",
-            F.col("inter").cast("double")
-            / (F.size("hs_n") + F.size("hs_o") - F.col("inter")),
-        )
-        .filter(F.col("jac") >= jaccard_threshold)
+    verified = _verify_jaccard(
+        cands.select("new_id", "corpus_id", "hs_n").join(hs_old, "corpus_id"),
+        "hs_n", "hs_o", jaccard_threshold,
     )
     return verified.select(
         "new_id", "corpus_id", F.round("jac", 6).alias("jaccard")

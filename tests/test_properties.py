@@ -12,7 +12,11 @@ import random
 
 from hypothesis import given, settings, strategies as st
 
-from svs_spark.functions.text import FINGERPRINT_BASE, FINGERPRINT_MOD
+from svs_spark.functions.text import (
+    FINGERPRINT_BASE,
+    FINGERPRINT_MOD,
+    poly_hash_many,
+)
 from svs_spark.operators.dedup import MINHASH_PRIME, minhash_coeffs
 
 
@@ -58,6 +62,48 @@ def test_fingerprint_range_and_determinism(text):
     a, b = poly_hash(text), poly_hash(text)
     assert a == b
     assert 0 <= a < FINGERPRINT_MOD
+
+
+# astral (emoji, musical symbol), combining marks, a ZWJ family
+# sequence, CJK, and the surrogate-free top of the code space
+_HASH_ALPHABET = st.sampled_from(
+    list("ab z") + ["\u0301", "\u200d", "\U0001F389", "\U0001D11E",
+                    "\U0001F469", "\u4e16", "\U0010FFFF", "\x00"]
+) | st.characters(blacklist_categories=("Cs",))
+
+
+@given(st.lists(st.text(alphabet=_HASH_ALPHABET, max_size=60), max_size=40))
+@settings(max_examples=200, deadline=None)
+def test_poly_hash_many_equals_horner_fold(xs):
+    """The vectorized batch hash is the per-character Horner fold, bit
+    for bit — empty strings (→ 0), astral, combining and ZWJ text
+    included, in any mix of lengths within one batch."""
+    assert poly_hash_many(xs).tolist() == [poly_hash(x) for x in xs]
+
+
+def test_poly_hash_many_memory_grows_with_total_codepoints():
+    """One 1 MB document in a 10k-doc batch: peak memory stays a small
+    constant per codepoint of the batch (no rows × longest-doc matrix),
+    and the long document still hashes exactly."""
+    import tracemalloc
+
+    rng = random.Random(7)
+    docs = [
+        "".join(rng.choice("abc é🎉") for _ in range(rng.randint(0, 20)))
+        for _ in range(10_000)
+    ]
+    big = "".join(rng.choice("xyz 你好") for _ in range(1_000_000))
+    docs.insert(5_000, big)
+    total = sum(map(len, docs))
+    tracemalloc.start()
+    try:
+        got = poly_hash_many(docs)
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert peak < 64 * total, (peak, total)
+    assert int(got[5_000]) == poly_hash(big)
+    assert got[:50].tolist() == [poly_hash(d) for d in docs[:50]]
 
 
 @given(st.sets(st.text(alphabet="abcdef", min_size=1, max_size=6), min_size=1, max_size=30))

@@ -39,7 +39,8 @@ def _plant(spark, tmp_path, rows):
     """Write a documents.parquet with the full testdata schema so any
     registered query/oracle pair can run against it."""
     docs = spark.createDataFrame(
-        [(i, t, "xx", "planted", len(t)) for i, t in rows],
+        [(i, t, "xx", "planted", None if t is None else len(t))
+         for i, t in rows],
         "doc_id long, text string, lang string, source string, n_chars long",
     )
     docs.write.mode("overwrite").parquet(f"{tmp_path}/documents.parquet")
@@ -404,6 +405,8 @@ def test_nfc_audit_multilingual(spark, tmp_path):
         "winnow_pairs",        # winnowing window minima over token hashes
         "token_stats",         # tokenization counts
         "lang_id_counts",      # n-gram language heuristic
+        "embed_and_retrieve",  # whole-text polynomial hash -> embedding
+        "minhash_lsh_dedup",   # shingle hashes -> MinHash bands -> Jaccard
     ],
 )
 def test_hash_kernel_oracle_parity_multilingual(spark, tmp_path, qname):
@@ -413,8 +416,6 @@ def test_hash_kernel_oracle_parity_multilingual(spark, tmp_path, qname):
     per-CODE-POINT (Spark split('') ≡ DuckDB string_split(x, '') ≡
     Python list(str), probed incl. astral emoji). Near-identical CJK
     docs are planted so pair-emitting queries have non-empty output."""
-    from svs_spark.queries import queries, oracle_sql
-
     rows = [(i, t) for i, t in enumerate(MULTI.values())]
     # near-dups for the pair queries: one token changed; the long
     # NON-repeating shared CJK run gives winnowing enough distinct
@@ -428,6 +429,15 @@ def test_hash_kernel_oracle_parity_multilingual(spark, tmp_path, qname):
     rows.append((103, long_cjk + " 结尾 专属 标记"))
     rows.append((104, long_cjk + " 另一 结尾 标志"))
     path = _plant(spark, tmp_path, rows)
+    got = _oracle_parity(spark, path, qname)
+    assert got, f"{qname}: planted corpus must produce rows"
+
+
+def _oracle_parity(spark, path, qname):
+    """Run ``qname`` on the planted corpus in Spark and DuckDB, assert
+    cell-exact agreement (floats at 6 places), return the sorted rows."""
+    from svs_spark.queries import queries, oracle_sql
+
     df = queries()[qname](spark, path)
     cols = sorted(df.columns)
     norm = lambda v: round(v, 6) if isinstance(v, float) else v  # noqa: E731
@@ -443,7 +453,35 @@ def test_hash_kernel_oracle_parity_multilingual(spark, tmp_path, qname):
     )
     assert sorted(res.columns) == cols, qname
     assert got == want, (qname, got[:3], want[:3])
+    return got
+
+
+@pytest.mark.parametrize(
+    "qname", ["minhash_lsh_dedup", "simhash_pairs", "winnow_pairs"]
+)
+def test_null_text_oracle_parity(spark, tmp_path, qname):
+    """A NULL ``text`` cell must not crash the Arrow hash kernels:
+    MinHash and winnowing skip the doc (the oracles' ``WHERE
+    len(string_split(...)) >= k`` drops it), SimHash gives it signature
+    0 (its Column spec and oracle both fold an empty vote to 0), so it
+    pairs with every doc whose signature has few set bits."""
+    long_cjk = " ".join(
+        chr(0x4E00 + i) + chr(0x4E00 + i + 1) for i in range(100)
+    )
+    rows = [
+        (1, long_cjk + " 结尾 专属 标记"),
+        (2, None),
+        (3, long_cjk + " 另一 结尾 标志"),
+        (4, "a"),       # one token: below every shingle/winnow minimum
+        (5, ""),        # empty, not null: one empty token
+        (6, "a b c d"),  # its 32 bit votes all tie or lose: signature 0
+    ]
+    path = _plant(spark, tmp_path, rows)
+    got = _oracle_parity(spark, path, qname)
     assert got, f"{qname}: planted corpus must produce rows"
+    if qname == "simhash_pairs":
+        # (hamming, id_a, id_b): the null doc's 0 signature takes part
+        assert (0, 2, 6) in got
 
 
 def test_tokenizer_fertility_multilingual(spark, tmp_path):

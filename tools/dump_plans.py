@@ -1,8 +1,10 @@
-"""Dump `.explain("formatted")` snapshots for the round-10 optimization
-targets to plans/r10/<query>_<tag>.txt (judge deliverable: before/after
-plan evidence for every query touched this round).
+"""Dump `.explain("formatted")` snapshots of registered queries to
+plans/<subdir>/<query>_<tag>.txt — before/after plan evidence for
+every query a change touches.
 
-Usage: python tools/dump_r10_plans.py <tag> <query> [query ...]
+Usage: python tools/dump_plans.py <subdir> <tag> <query> [query ...]
+
+Reads the tables from $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1).
 """
 
 from __future__ import annotations
@@ -10,33 +12,31 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def main() -> None:
-    tag = sys.argv[1]
-    names = sys.argv[2:]
+    if len(sys.argv) < 4:
+        sys.exit(__doc__)
+    subdir, tag, names = sys.argv[1], sys.argv[2], sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     from svs_spark.plans.explain import plan_string
     from svs_spark.queries import queries, release_caches
     from svs_spark.session import get_session
 
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans",
-        "r10",
-    )
+    out_dir = os.path.join(REPO, "plans", subdir)
     os.makedirs(out_dir, exist_ok=True)
 
-    spark = get_session("dump_r10_plans")
+    spark = get_session("dump_plans")
     spark.sparkContext.setLogLevel("ERROR")
     registry = queries()
     for name in names:
         df = registry[name](spark, sf_dir)
         with open(os.path.join(out_dir, f"{name}_{tag}.txt"), "w") as f:
             f.write(plan_string(df))
-        print(f"wrote plans/r10/{name}_{tag}.txt")
+        print(f"wrote plans/{subdir}/{name}_{tag}.txt")
     release_caches()
     spark.stop()
 
