@@ -4,7 +4,7 @@ every query a change touches.
 
 Usage: python tools/dump_plans.py <subdir> <tag> <query> [query ...]
 
-Reads the tables from $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1).
+Reads the tables from the directory named by $SPARK_GRAFT_SF_DIR.
 """
 
 from __future__ import annotations
