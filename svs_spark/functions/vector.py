@@ -17,6 +17,7 @@ approximately equal — it is used for benchmarks, not the correctness gate.
 
 from __future__ import annotations
 
+import math
 from typing import Sequence
 
 from pyspark.sql import Column
@@ -40,15 +41,31 @@ def dot(a: Column | str, b: Column | str) -> Column:
     )
 
 
+def _sql_number(v: float | int) -> str:
+    if isinstance(v, int):
+        return str(v)  # INT when it fits, else BIGINT: F.lit's typing
+    v = float(v)
+    if math.isfinite(v):
+        return repr(v) + "D"  # shortest round-trip form: the same DOUBLE
+    return f"CAST('{v}' AS DOUBLE)"  # 'nan', 'inf', '-inf'
+
+
+def array_lit(values: Sequence[float | int]) -> Column:
+    """``F.array(*[F.lit(v) for v in values])`` in one JVM call: the
+    array is parsed from SQL text instead of built by one py4j round
+    trip per element (384 dims: 0.16 s -> 0.003 s). Python ints and
+    floats give the same literal types and values as ``F.lit``, so the
+    optimized plan is the same."""
+    return F.expr("array(" + ", ".join(map(_sql_number, values)) + ")")
+
+
 def dot_literal(a: Column | str, vec: Sequence[float]) -> Column:
     """Dot product against a fixed Python-side query vector.
 
     The vector is folded into the plan as an array literal (broadcast to
     every task with the serialized plan — no shuffle, no join).
     """
-    a = _col(a)
-    lit_vec = F.array(*[F.lit(float(v)) for v in vec])
-    return dot(a, lit_vec)
+    return dot(_col(a), array_lit([float(v) for v in vec]))
 
 
 def l2_norm(a: Column | str) -> Column:
@@ -155,7 +172,7 @@ def sign_agreement(a: Column | str, qsigns: Sequence[int]) -> Column:
     pattern: Σ (x_i >= 0 ? s_i : -s_i) = dim − 2·hamming. The unpacked
     twin of the packed Hamming screen — SQL-mirrorable, used by the
     oracle-gated query; tests assert packed ≡ unpacked."""
-    qlit = F.array(*[F.lit(int(s)) for s in qsigns])
+    qlit = array_lit([int(s) for s in qsigns])
     return F.aggregate(
         F.zip_with(
             _col(a),

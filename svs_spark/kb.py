@@ -13,7 +13,7 @@ embeddings table+FK    nullable embedding column on docs (the FK
                        existed only for no-vector rows + matrix scans)
 edges table            edges: edge_id, src, dst, rel, weight, directed
 keyval/keyval_user     keyval: key, plus typed value columns
-NumPy matrix cache     persist() on the docs DataFrame
+NumPy matrix cache     persist() on the docs DataFrame, after load()
 asyncio lock           Spark's distributed execution (the reference's
                        serial lock is its scalability ceiling, §4)
 =====================  =========================================
@@ -28,11 +28,14 @@ from __future__ import annotations
 
 import base64
 import datetime
+import functools
 import json
+import operator
 import warnings
 from contextlib import contextmanager
 from typing import Any, Iterator, List, Optional
 
+import numpy as np
 from pyspark.sql import DataFrame, Row, SparkSession, functions as F
 from pyspark.sql.types import (
     ArrayType, BooleanType, DoubleType, FloatType, IntegerType, LongType,
@@ -40,11 +43,13 @@ from pyspark.sql.types import (
 )
 
 from svs_spark.functions.embeddings import (
+    BULK_EMBEDDING_CHUNK_SIZE,
     EmbeddingFunc,
     embed_df,
     make_embeddings_func,
     with_magnitude_check,
 )
+from svs_spark.functions.vector import array_lit
 from svs_spark.sources.warehouse import Warehouse, resolve_location
 
 SCHEMA_VERSION = 1  # kb.py:64
@@ -86,6 +91,14 @@ KEYVAL_SCHEMA = StructType([
     StructField("val_type", StringType(), False),
     StructField("val", StringType(), False),
 ])
+
+# bucket key and bucket count a table gets at its first point rewrite
+BUCKET_KEYS = {"docs": ("id", DOCS_BUCKETS), "edges": ("edge_id", EDGES_BUCKETS)}
+
+TABLE_SCHEMAS = {
+    "docs": DOCS_SCHEMA, "edges": EDGES_SCHEMA,
+    "keyval": KEYVAL_SCHEMA, "_meta": KEYVAL_SCHEMA,
+}
 
 _MISSING = object()
 
@@ -136,10 +149,12 @@ class KnowledgeBase:
     ):
         self.spark = spark
         root = resolve_location(path_or_url)
-        self.wh = Warehouse(spark, root)
+        self.wh = Warehouse(spark, root, schemas=TABLE_SCHEMAS)
         if force_fresh_db:
             self.wh.drop_all()
-        self._cached_docs: Optional[DataFrame] = None
+        self._loaded: Optional[DataFrame] = None
+        # table -> (stamp, next id): max(id) + 1 of that table version
+        self._next_ids: dict[str, tuple] = {}
         self._init_meta(embedding_func, embedding_params)
 
     # -- lifecycle (S1-S5) --------------------------------------------------
@@ -227,26 +242,64 @@ class KnowledgeBase:
 
     def load(self) -> None:
         """Warm the vector cache (kb.py:964-967): persist + materialize —
-        Spark's columnar cache replaces the reference's RAM matrix."""
-        self.docs.persist()
-        self.docs.count()
+        Spark's columnar cache replaces the reference's RAM matrix. It
+        holds until this instance's next commit."""
+        self._invalidate()
+        self._loaded = self.docs.persist()
+        self._loaded.count()
 
-    # -- cached docs view (the _EmbeddingsMatrix analogue, kb.py:856-893) ---
+    # -- table views (the _EmbeddingsMatrix analogue, kb.py:856-893) ---------
 
     @property
     def docs(self) -> DataFrame:
-        if self._cached_docs is None:
-            self._cached_docs = self.wh.read("docs")
-        return self._cached_docs
+        """The current docs version: the warehouse caches the handle
+        under the table's stamp, so a commit by any writer is seen."""
+        return self.wh.read("docs")
 
     @property
     def edges(self) -> DataFrame:
         return self.wh.read("edges")
 
     def _invalidate(self) -> None:
-        if self._cached_docs is not None:
-            self._cached_docs.unpersist()
-        self._cached_docs = None
+        if self._loaded is not None:
+            self._loaded.unpersist()
+        self._loaded = None
+
+    def _by_key(self, table: str, keys) -> DataFrame:
+        """``table`` pruned to the buckets that can hold ``keys`` (values
+        of its bucket key); the whole table when it is not bucketed."""
+        bmeta = self.wh.bucket_meta(table)
+        if bmeta is None:
+            return self.wh.read(table)
+        nb = bmeta["n_buckets"]
+        return self.wh.read_buckets(
+            table, sorted({Warehouse.bucket_of(k, nb) for k in keys})
+        )
+
+    # -- id allocation: max(id) + 1, cached per table version ----------------
+
+    def _next_id(self, table: str, col: str) -> int:
+        stamp = self.wh.stamp(table)
+        hit = self._next_ids.get(table)
+        if hit is None or hit[0] != stamp:
+            [top] = self.wh.read(table).agg(F.max(col)).first()
+            hit = self._next_ids[table] = (stamp, (top or 0) + 1)
+        return hit[1]
+
+    def _commit(self, table: str, write, next_id: Optional[int] = None):
+        """Run ``write`` (a read-modify-write of ``table`` returning the
+        stamp after its swap) under the table's writer lock. The cached
+        next id survives only if it described the version this commit
+        replaced: unchanged, or ``next_id`` when the commit added ids.
+        Commits made any other way move the stamp and so drop it."""
+        with self.wh.write_lock(table):
+            before = self.wh.stamp(table)
+            after = write()
+        hit = self._next_ids.get(table)
+        if hit is not None and hit[0] == before:
+            self._next_ids[table] = (
+                after, hit[1] if next_id is None else next_id
+            )
 
     # -- counts (Q1) ----------------------------------------------------------
 
@@ -261,60 +314,87 @@ class KnowledgeBase:
 
     # -- docs write paths: bucketed point-update locality ---------------------
 
-    def _append_docs(self, new_df: DataFrame) -> None:
-        """Append new doc rows touching only their hash buckets.
+    def _rewrite(self, table: str, keys, patch):
+        """Commit ``patch(rows)`` in place of the rows of the buckets that
+        can hold ``keys`` (values of the bucket key), reading and
+        rewriting only those buckets; returns the stamp after the swap.
+        A table not yet bucketed (plain and empty at init) is rewritten
+        whole into the bucketed layout, so every later rewrite touches
+        only its own buckets — a single add_doc touches ONE bucket."""
+        bmeta = self.wh.bucket_meta(table)
+        if bmeta is None:
+            key_col, nb = BUCKET_KEYS[table]
+            post = patch(self.wh.read(table))
+            return self.wh.write_bucketed(table, post, key_col, nb)
+        nb = bmeta["n_buckets"]
+        pbs = sorted({Warehouse.bucket_of(k, nb) for k in keys})
+        post = patch(self.wh.read_buckets(table, pbs))
+        return self.wh.overwrite_buckets(table, pbs, post)
 
-        First append converts the (plain, empty-at-init) docs table to
-        the bucketed layout; afterwards an append of rows hitting k
-        buckets rewrites k/DOCS_BUCKETS of the table — a single add_doc
-        touches ONE bucket.  The distinct-bucket probe collects ≤
-        DOCS_BUCKETS rows, never data."""
-        if self.wh.bucket_meta("docs") is None:
-            self.wh.write_bucketed(
-                "docs", self.docs.unionByName(new_df), "id", DOCS_BUCKETS
-            )
-        else:
-            pbs = [
-                r[0]
-                for r in new_df.select(
-                    F.pmod(F.col("id"), F.lit(DOCS_BUCKETS)).cast("int")
-                ).distinct().collect()
-            ]
-            post = self.wh.read_buckets("docs", pbs).unionByName(new_df)
-            self.wh.overwrite_buckets("docs", pbs, post)
+    def _append_docs(self, new_df: DataFrame, ids=None):
+        """Append new doc rows touching only their hash buckets. The
+        buckets come from ``ids`` when the driver holds them, else from
+        a distinct-bucket probe that collects ≤ n_buckets rows, never
+        data."""
         self._invalidate()
+        bmeta = self.wh.bucket_meta("docs")
+        if ids is None and bmeta is not None:
+            nb = F.lit(bmeta["n_buckets"])
+            # bucket numbers: each is its own key, as pmod(b, n) = b
+            ids = [r[0] for r in new_df.select(
+                F.pmod(F.col("id"), nb).cast("int")
+            ).distinct().collect()]
+        return self._rewrite("docs", ids or [], lambda d: d.unionByName(new_df))
 
     def _point_update_docs(self, doc_id: int, column: str, value) -> None:
-        """Rewrite exactly one doc's column, touching only its bucket
-        (full-table fallback for pre-bucketed warehouses)."""
-        bmeta = self.wh.bucket_meta("docs")
-        patch = lambda df: df.withColumn(  # noqa: E731
-            column,
-            F.when(F.col("id") == doc_id, value).otherwise(F.col(column)),
-        )
-        if bmeta is not None:
-            pb = Warehouse.bucket_of(doc_id, bmeta["n_buckets"])
-            bucket = self.wh.read_buckets("docs", [pb])
-            if bucket.filter(F.col("id") == doc_id).first() is None:
+        """Rewrite exactly one doc's column, touching only its bucket."""
+
+        def patch(rows: DataFrame) -> DataFrame:
+            if rows.filter(F.col("id") == doc_id).first() is None:
                 raise ValueError(f"no such doc: {doc_id}")
-            self.wh.overwrite_buckets("docs", [pb], patch(bucket))
-        else:
-            if self.docs.filter(F.col("id") == doc_id).first() is None:
-                raise ValueError(f"no such doc: {doc_id}")
-            self.wh.write("docs", patch(self.docs))
+            return rows.withColumn(column, F.when(
+                F.col("id") == doc_id, value
+            ).otherwise(F.col(column)))
+
         self._invalidate()
+        self._commit("docs", lambda: self._rewrite("docs", [doc_id], patch))
+
+    def _append_embedded(
+        self, df: DataFrame, no_embedding: bool, head: Optional[DataFrame] = None
+    ) -> None:
+        """Append ``head`` (already in docs shape) plus ``df`` with its
+        embedding cast to the docs column. ``_append_docs`` runs ≥2
+        actions (bucket probe + write), so an embedded frame is persisted
+        first: the provider runs exactly once per doc."""
+        staged = df.select(
+            "id", "parent_id", "level", "text",
+            F.col("embedding").cast(ArrayType(FloatType())).alias("embedding"),
+            "meta",
+        )
+        if head is not None:
+            staged = head.unionByName(staged)
+        if no_embedding:
+            self._append_docs(staged)
+            return
+        staged = staged.persist()
+        try:
+            staged.count()
+            self._append_docs(staged)
+        finally:
+            staged.unpersist()
 
     # -- DML: bulk add (M1) ---------------------------------------------------
 
     @contextmanager
     def bulk_add_docs(self):
         """Transactional bulk insert (kb.py:1486-1524): level computed
-        from the parent (pending or stored), embeddings backfilled in
-        chunks on exit, the whole context committed as ONE atomic write."""
-        pending: list[dict] = []
+        from the parent (pending or stored), embeddings computed on exit
+        by calling the provider on the driver in BULK_EMBEDDING_CHUNK_SIZE
+        chunks (kb.py:1516-1521), the whole context committed as ONE
+        atomic write. ``add_documents_df`` is the distributed path."""
+        pending: list[tuple] = []
         known_levels: dict[int, int] = {}
-        next_id = (self.docs.agg(F.max("id")).first()[0] or 0) + 1
-        counter = [next_id]
+        counter = [self._next_id("docs", "id")]
 
         def add_doc(
             text: str,
@@ -327,71 +407,42 @@ class KnowledgeBase:
             elif parent_id in known_levels:
                 level = known_levels[parent_id] + 1
             else:
-                row = self.docs.filter(F.col("id") == parent_id).select(
-                    "level"
-                ).first()
+                row = self._point_read(parent_id)
                 if row is None:
                     raise ValueError(f"invalid parent_id: {parent_id}")
-                known_levels[parent_id] = row[0]
-                level = row[0] + 1
+                known_levels[parent_id] = row["level"]
+                level = row["level"] + 1
             doc_id = counter[0]
             counter[0] += 1
             known_levels[doc_id] = level
-            pending.append(
-                {
-                    "id": doc_id,
-                    "parent_id": parent_id,
-                    "level": level,
-                    "text": text,
-                    "no_embedding": no_embedding,
-                    "meta": json.dumps(meta) if meta is not None else None,
-                }
-            )
+            enc = json.dumps(meta) if meta is not None else None
+            pending.append((doc_id, parent_id, level, text, enc, no_embedding))
             return doc_id
 
         yield add_doc
 
         if not pending:
             return
-        new_rows = self.spark.createDataFrame(
-            [
-                (p["id"], p["parent_id"], p["level"], p["text"], p["meta"],
-                 p["no_embedding"])
-                for p in pending
-            ],
-            StructType([
-                StructField("id", LongType(), False),
-                StructField("parent_id", LongType(), True),
-                StructField("level", IntegerType(), False),
-                StructField("text", StringType(), False),
-                StructField("meta", StringType(), True),
-                StructField("no_embedding", BooleanType(), False),
-            ]),
+        texts = [p[3] for p in pending if not p[5]]
+        # the magnitude-checked provider, in the reference's chunks; the
+        # float32 rounding is the one embed_df's Arrow column applies
+        vecs = iter([
+            np.asarray(v, dtype=np.float32).tolist()
+            for i in range(0, len(texts), BULK_EMBEDDING_CHUNK_SIZE)
+            for v in self.embedding_func(
+                texts[i:i + BULK_EMBEDDING_CHUNK_SIZE]
+            )
+        ])
+        rows = [
+            (i, pid, level, text, None if skip else next(vecs), enc)
+            for i, pid, level, text, enc, skip in pending
+        ]
+        new_rows = self.spark.createDataFrame(rows, DOCS_SCHEMA)
+        self._commit(
+            "docs",
+            lambda: self._append_docs(new_rows, [r[0] for r in rows]),
+            next_id=counter[0],
         )
-        to_embed = new_rows.filter(~F.col("no_embedding")).drop("no_embedding")
-        skipped = (
-            new_rows.filter(F.col("no_embedding"))
-            .drop("no_embedding")
-            .withColumn("embedding", F.lit(None).cast(ArrayType(FloatType())))
-        )
-        embedded = embed_df(to_embed, self.embedding_func, check=False)
-        # magnitude guard applied inside embed via the wrapped func below
-        embedded = embedded.select(
-            "id", "parent_id", "level", "text",
-            F.col("embedding").cast(ArrayType(FloatType())).alias("embedding"),
-            "meta",
-        )
-        skipped = skipped.select(
-            "id", "parent_id", "level", "text", "embedding", "meta"
-        )
-        # _append_docs runs ≥2 actions (bucket probe + write); persist so
-        # the embedding provider runs exactly once per pending doc.
-        staged = embedded.unionByName(skipped).persist()
-        try:
-            staged.count()
-            self._append_docs(staged)
-        finally:
-            staged.unpersist()
 
     def add_doc(self, text: str, parent_id: Optional[int] = None,
                 meta: Optional[dict] = None, no_embedding: bool = False) -> int:
@@ -452,22 +503,7 @@ class KnowledgeBase:
             )
         else:
             staged = embed_df(new_rows, self.embedding_func, check=False)
-        staged = staged.select(
-            "id", "parent_id", "level", "text",
-            F.col("embedding").cast(ArrayType(FloatType())).alias("embedding"),
-            "meta",
-        )
-        if no_embedding:
-            self._append_docs(staged)
-        else:
-            # _append_docs runs ≥2 actions (bucket probe + write); persist
-            # the embedded frame so the provider runs exactly once/doc.
-            staged = staged.persist()
-            try:
-                staged.count()
-                self._append_docs(staged)
-            finally:
-                staged.unpersist()
+        self._append_embedded(staged, no_embedding)
         return n_new
 
     def add_chunked_documents_df(
@@ -547,23 +583,7 @@ class KnowledgeBase:
             )
         else:
             chunks = embed_df(chunks_pre, self.embedding_func, check=False)
-        chunks = chunks.select(
-            "id", "parent_id", "level", "text",
-            F.col("embedding").cast(ArrayType(FloatType())).alias("embedding"),
-            "meta",
-        )
-        staged = parents.unionByName(chunks)
-        if no_embedding:
-            self._append_docs(staged)
-        else:
-            # _append_docs runs ≥2 actions (bucket probe + write); persist
-            # the embedded frame so the provider runs exactly once/chunk.
-            staged = staged.persist()
-            try:
-                staged.count()
-                self._append_docs(staged)
-            finally:
-                staged.unpersist()
+        self._append_embedded(chunks, no_embedding, parents)
         return n_parents, n_chunks
 
     # -- DML: bulk delete (M2) -------------------------------------------------
@@ -593,7 +613,7 @@ class KnowledgeBase:
         ids = set(deletions)
         existing = {
             r["id"]
-            for r in self.docs.filter(F.col("id").isin(list(ids)))
+            for r in self._by_key("docs", ids).filter(F.col("id").isin(list(ids)))
             .select("id").collect()
         }
         children = (
@@ -615,47 +635,28 @@ class KnowledgeBase:
                 )
             removed.add(doc_id)
         id_list = list(removed)
-        bmeta = self.wh.bucket_meta("docs")
-        if bmeta is not None:
-            # rewrite only the deleted ids' buckets (1..k of n, pruned read)
-            pbs = sorted(
-                {Warehouse.bucket_of(i, bmeta["n_buckets"]) for i in id_list}
-            )
-            post = self.wh.read_buckets("docs", pbs).filter(
-                ~F.col("id").isin(id_list)
-            )
-            self.wh.overwrite_buckets("docs", pbs, post)
-        else:
-            self.wh.write(
-                "docs", self.docs.filter(~F.col("id").isin(id_list))
-            )
+        # rewrite only the deleted ids' buckets (1..k of n, pruned read)
+        self._rewrite("docs", id_list, lambda d: d.filter(~F.col("id").isin(id_list)))
         cascade_pred = (
             F.col("src").isin(id_list)
             | F.col("dst").isin(id_list)
             | F.col("rel").isin(id_list)
         )
         ebmeta = self.wh.bucket_meta("edges")
+        touched = []
         if ebmeta is not None:
             # the cascade predicate keys on src/dst/rel, not the bucket
             # key, so finding victims needs a full scan — but the WRITE
-            # doesn't: collect the (≤ n_buckets) distinct _pb values of
-            # matching edges and rewrite only those buckets. A delete
-            # with no incident edges rewrites nothing.
-            touched = [
-                r["_pb"]
-                for r in self.spark.read.parquet(self.wh.table_path("edges"))
-                .filter(cascade_pred)
-                .select("_pb")
-                .distinct()
-                .collect()
-            ]
-            if touched:
-                post = self.wh.read_buckets("edges", touched).filter(
-                    ~cascade_pred
-                )
-                self.wh.overwrite_buckets("edges", touched, post)
-        else:
-            self.wh.write("edges", self.edges.filter(~cascade_pred))
+            # doesn't: collect the (≤ n_buckets) distinct bucket numbers
+            # (each its own key) of matching edges and rewrite only
+            # those buckets. A delete with no incident edges rewrites
+            # nothing.
+            nb = F.lit(ebmeta["n_buckets"])
+            touched = [r[0] for r in self.edges.filter(cascade_pred).select(
+                F.pmod(F.col("edge_id"), nb).cast("int")
+            ).distinct().collect()]
+        if touched or ebmeta is None:
+            self._rewrite("edges", touched, lambda d: d.filter(~cascade_pred))
         self._invalidate()
 
     def del_doc(self, doc_id: int) -> None:
@@ -677,7 +678,7 @@ class KnowledgeBase:
         """kb.py:526-571: replace one doc's vector — bucket-local
         rewrite like update_doc_meta."""
         lit = (
-            F.array(*[F.lit(float(x)) for x in embedding]).cast(
+            array_lit([float(x) for x in embedding]).cast(
                 ArrayType(FloatType())
             )
             if embedding is not None
@@ -707,14 +708,7 @@ class KnowledgeBase:
         """Point lookup routed through the bucketed layout: the partition
         filter prunes the scan to 1/DOCS_BUCKETS of the table (plus
         parquet row-group min/max pruning on id inside the bucket)."""
-        bmeta = self.wh.bucket_meta("docs")
-        src = (
-            self.wh.read_buckets(
-                "docs", [Warehouse.bucket_of(doc_id, bmeta["n_buckets"])]
-            )
-            if bmeta is not None
-            else self.docs
-        )
+        src = self._by_key("docs", [doc_id])
         return src.filter(F.col("id") == doc_id).first()
 
     def query_doc(self, doc_id: int, include_embedding: bool = False) -> dict:
@@ -726,17 +720,15 @@ class KnowledgeBase:
     def query_children(
         self, doc_id: int, include_embedding: bool = False
     ) -> List[dict]:
-        rows = (
-            self.docs.filter(F.col("parent_id") == doc_id)
-            .orderBy("id")
-            .collect()
-        )
+        rows = self.docs.filter(F.col("parent_id") == doc_id).collect()
+        rows.sort(key=lambda r: r["id"])
         return [self._to_record(r, include_embedding) for r in rows]
 
     def query_level(
         self, level: int, include_embedding: bool = False
     ) -> List[dict]:
-        rows = self.docs.filter(F.col("level") == level).orderBy("id").collect()
+        rows = self.docs.filter(F.col("level") == level).collect()
+        rows.sort(key=lambda r: r["id"])
         return [self._to_record(r, include_embedding) for r in rows]
 
     @staticmethod
@@ -797,23 +789,22 @@ class KnowledgeBase:
     # -- similarity (V1-V4) -------------------------------------------------------
 
     def retrieve(self, query: str, n: int) -> List[dict]:
-        """kb.py:1608-1640: embed query → brute-force cosine top-n →
-        fetch winner docs. Scoring/top-k runs distributed (see
+        """kb.py:1608-1640: embed query → brute-force cosine top-n of
+        the docs, which carry their own fields: one scan + bounded heaps,
+        collected in (score, id) DESC order (see
         operators.similarity.retrieve_topk scale notes)."""
         from svs_spark.operators.similarity import retrieve_topk
 
         qvec = self.embedding_func([query])[0]
         emb = self.docs.filter(F.col("embedding").isNotNull())
-        winners = retrieve_topk(emb, qvec, n, id_col="id", vec_col="embedding")
-        rows = (
-            self.docs.alias("d")
-            .join(F.broadcast(winners.alias("w")), F.col("d.id") == F.col("w.id"))
-            .select("d.*", F.col("w.score"))
-            .orderBy(F.desc("score"), F.desc("d.id"))
-            .collect()
-        )
+        rows = retrieve_topk(
+            emb, qvec, n, id_col="id", vec_col="embedding",
+            extra_cols=("parent_id", "level", "text", "meta"),
+        ).collect()
+        # every scored doc has a vector: its tri-state embedding is True
         return [
-            {"score": r["score"], "doc": self._to_record(r, False)}
+            {"score": r["score"],
+             "doc": self._to_record(Row(**r.asDict(), embedding=True), False)}
             for r in rows
         ]
 
@@ -844,25 +835,26 @@ class KnowledgeBase:
 
     def _collect_found(self, df: DataFrame, cols: list, values: list) -> set:
         """One bounded job: which of ``values`` (tuples over ``cols``)
-        exist in ``df``. ≤64 single-column values go through an ``isin``
-        filter (pushes to the parquet scan — point-lookup friendly);
-        larger or composite batches broadcast-semi-join a local
-        DataFrame (an ``isin`` of 100k ids is a 100k-node expression
-        tree; a conjunction-OR over key triples is worse)."""
+        exist in ``df``. ≤64 values go through a filter that pushes to
+        the parquet scan (an ``isin``, or an OR of key conjunctions);
+        larger batches broadcast-semi-join a local DataFrame (an
+        ``isin`` of 100k ids is a 100k-node expression tree, and the
+        broadcast costs a job of its own)."""
         if not values:
             return set()
-        if len(cols) == 1 and len(values) <= 64:
-            rows = (
-                df.filter(F.col(cols[0]).isin([v[0] for v in values]))
-                .select(*cols).distinct().collect()
-            )
-        else:
+        if len(values) > 64:
             probe = self.spark.createDataFrame(values, cols)
-            rows = (
-                df.join(F.broadcast(probe), on=cols, how="left_semi")
-                .select(*cols).distinct().collect()
-            )
-        return {tuple(r) for r in rows}
+            df = df.join(F.broadcast(probe), on=cols, how="left_semi")
+        elif len(cols) == 1:
+            df = df.filter(F.col(cols[0]).isin([v[0] for v in values]))
+        else:
+            df = df.filter(functools.reduce(operator.or_, [
+                functools.reduce(operator.and_, [
+                    F.col(c) == x for c, x in zip(cols, v)
+                ]) for v in values
+            ]))
+        # no distinct(): the set dedups on the driver, without a shuffle
+        return {tuple(r) for r in df.select(*cols).collect()}
 
     @contextmanager
     def bulk_graph_update(self, eager_validation: bool = False):
@@ -892,8 +884,8 @@ class KnowledgeBase:
         Scale shape: calls only stage ops in a driver-side buffer (the
         single per-call check — duplicate key within this bulk — is
         pure memory); ALL persisted-state validation happens once at
-        commit with three bounded jobs (edge-key semi-join, doc-FK
-        semi-join, del-id bucket-pruned lookup), then the original
+        commit with three bounded jobs (edge-key lookup, bucket-pruned
+        doc-FK lookup, bucket-pruned del-id lookup), then the original
         sequential semantics are REPLAYED in memory against the
         prefetched answers — first violation wins, exactly as if each
         call had validated eagerly (including adds later rolled back by
@@ -903,8 +895,7 @@ class KnowledgeBase:
         itself is a single del-filter + union write (atomic via the
         warehouse swap); on any validation error nothing is written.
         """
-        [max_id] = self.edges.agg(F.max("edge_id")).first()
-        start_eid = (max_id or 0) + 1
+        start_eid = self._next_id("edges", "edge_id")
         counter = [start_eid]
         # ops replayed at commit: ("add", eid, src, dst, rel, w, directed)
         # or ("del", edge_id)
@@ -927,7 +918,7 @@ class KnowledgeBase:
                 for i in (src, dst, rel):
                     if i not in eager_docs_ok:
                         if not self._collect_found(
-                            self.docs, ["id"], [(i,)]
+                            self._by_key("docs", [i]), ["id"], [(i,)]
                         ):
                             raise ValueError(f"no such doc: {i}")
                         eager_docs_ok.add(i)
@@ -957,7 +948,8 @@ class KnowledgeBase:
                     if edge_id in eager_dels:
                         raise ValueError(f"no such edge: [{edge_id}]")
                     row = (
-                        self.edges.filter(F.col("edge_id") == edge_id)
+                        self._by_key("edges", [edge_id])
+                        .filter(F.col("edge_id") == edge_id)
                         .select("src", "dst", "rel")
                         .first()
                     )
@@ -1002,30 +994,17 @@ class KnowledgeBase:
         found_docs = {
             t[0]
             for t in self._collect_found(
-                self.docs, ["id"], [(i,) for i in need_docs]
+                self._by_key("docs", need_docs), ["id"],
+                [(i,) for i in need_docs],
             )
         }
         persisted_del_ids = sorted(
             {op[1] for op in ops if op[0] == "del" and op[1] < start_eid}
         )
-        bmeta = self.wh.bucket_meta("edges")
-        del_src = (
-            self.wh.read_buckets(
-                "edges",
-                sorted(
-                    {
-                        Warehouse.bucket_of(e, bmeta["n_buckets"])
-                        for e in persisted_del_ids
-                    }
-                ),
-            )
-            if bmeta is not None and persisted_del_ids
-            else self.edges
-        )
         del_map = (
             {
                 r["edge_id"]: (r["src"], r["dst"], r["rel"])
-                for r in del_src.join(
+                for r in self._by_key("edges", persisted_del_ids).join(
                     F.broadcast(
                         self.spark.createDataFrame(
                             [(e,) for e in persisted_del_ids], ["edge_id"]
@@ -1080,29 +1059,20 @@ class KnowledgeBase:
         adds_df = (
             self.spark.createDataFrame(adds, EDGES_SCHEMA) if adds else None
         )
-        bmeta = self.wh.bucket_meta("edges")
-        if bmeta is None:
-            # first mutation upgrades the layout (one full rewrite, same
-            # as the docs table at its first point mutation) so every
-            # later bulk touches only its edge_ids' buckets
-            df = self.edges
-            if dels:
-                df = df.filter(~F.col("edge_id").isin(list(dels)))
-            if adds_df is not None:
-                df = df.unionByName(adds_df)
-            self.wh.write_bucketed("edges", df, "edge_id", EDGES_BUCKETS)
-        else:
-            nb = bmeta["n_buckets"]
-            pbs = sorted(
-                {Warehouse.bucket_of(a[0], nb) for a in adds}
-                | {Warehouse.bucket_of(e, nb) for e in dels}
-            )
-            post = self.wh.read_buckets("edges", pbs)
+
+        def patch(post: DataFrame) -> DataFrame:
             if dels:
                 post = post.filter(~F.col("edge_id").isin(list(dels)))
-            if adds_df is not None:
-                post = post.unionByName(adds_df)
-            self.wh.overwrite_buckets("edges", pbs, post)
+            return post if adds_df is None else post.unionByName(adds_df)
+
+        def write():
+            keys = [a[0] for a in adds] + list(dels)
+            return self._rewrite("edges", keys, patch)
+
+        if dels:
+            write()  # a delete may lower max(edge_id): the stamp drops it
+        else:
+            self._commit("edges", write, next_id=max(a[0] for a in adds) + 1)
 
     def add_edge(self, doc1: int, doc2: int, relationship: int,
                  weight: Optional[float] = None) -> int:

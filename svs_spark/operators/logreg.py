@@ -31,6 +31,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 
+from svs_spark.functions.vector import array_lit
+
 
 def _partial_newton(w: np.ndarray, dim: int):
     wl = w.copy()
@@ -140,7 +142,7 @@ def predict(df: DataFrame, model: dict, features_col: str = "features") -> DataF
     z = F.aggregate(
         F.zip_with(
             F.col(features_col).cast("array<double>"),
-            F.array(*[F.lit(v) for v in wts]),
+            array_lit(wts),
             lambda a, b: a * b,
         ),
         F.lit(float(model["intercept"])),

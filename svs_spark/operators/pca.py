@@ -32,6 +32,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 
+from svs_spark.functions.vector import array_lit
+
 
 def _partial_moments(dim: int):
     def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -120,7 +122,7 @@ def project(
         F.aggregate(
             F.zip_with(
                 F.col(col),
-                F.array(*[F.lit(v) for v in row]),
+                array_lit(row),
                 lambda a, b: a.cast("double") * b,
             ),
             F.lit(0.0),

@@ -3150,7 +3150,7 @@ def q_ann_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle can apply the identical transform.
     """
     emb = load(spark, sf_dir, "embeddings")
-    qlit = F.array(*[F.lit(v) for v in QVEC_INT8])
+    qlit = V.array_lit(QVEC_INT8)
     scored = emb.select(
         "vec_id",
         V.dot_int8(V.quantize_int8("embedding"), qlit).alias("iscore"),
@@ -12430,8 +12430,8 @@ def q_retrieval_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.broadcast(q.select("query_id", "qlabel")), "query_id"
     ).join(c.select("vec_id", "label"), "vec_id")
     rel = F.when(F.col("label") == F.col("qlabel"), 1).otherwise(0)
-    dcg_terms = F.array(*[F.lit(v) for v in _DCG_NANO])
-    idcg_terms = F.array(*[F.lit(v) for v in _IDCG_NANO_CUM])
+    dcg_terms = V.array_lit(_DCG_NANO)
+    idcg_terms = V.array_lit(_IDCG_NANO_CUM)
     per_q = top.groupBy("query_id").agg(
         F.sum(rel).cast("long").alias("n_rel_top10"),
         F.sum(
@@ -12633,7 +12633,7 @@ def q_benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.substring(cents.cast("string"), 1, 1).cast("int").alias("digit")
     )
     total = d.agg(F.count("*").alias("n_total"))
-    exp_terms = F.array(*[F.lit(v) for v in _BENFORD_EXP])
+    exp_terms = V.array_lit(_BENFORD_EXP)
     return (
         d.groupBy("digit")
         .agg(F.count("*").cast("long").alias("n"))

@@ -35,6 +35,7 @@ import urllib.request
 import warnings
 from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 REMOTE_CACHE_DIR = ".remote_cache"
 BUCKET_META_FILE = "_buckets.json"
@@ -211,11 +212,24 @@ def resolve_location(path_or_url: str, cache_root: str = ".") -> str:
 
 
 class Warehouse:
-    """Directory of parquet tables with atomic-swap rewrites."""
+    """Directory of parquet tables with atomic-swap rewrites.
 
-    def __init__(self, spark: SparkSession, root: str):
+    ``schemas`` maps a table name to its fixed schema: reads of those
+    tables skip the parquet footer-inference job. Read handles are
+    cached per table under its :meth:`stamp`, so a handle never outlives
+    the table version whose files it lists."""
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        root: str,
+        schemas: dict[str, StructType] | None = None,
+    ):
         self.spark = spark
         self.root = root
+        self.schemas = schemas or {}
+        # name -> (stamp, scan with _pb, scan without _pb)
+        self._handles: dict[str, tuple] = {}
         self._held_locks: set[str] = set()
         os.makedirs(root, exist_ok=True)
 
@@ -260,9 +274,40 @@ class Warehouse:
     def exists(self, name: str) -> bool:
         return os.path.exists(self.table_path(name))
 
+    def stamp(self, name: str) -> tuple[int, int] | None:
+        """Version stamp of table ``name``: the ``(inode, mtime_ns)`` of
+        its directory. A whole-table swap gives a new inode and a bucket
+        swap renames entries in the directory, so every commit below
+        changes it. None when the table does not exist."""
+        try:
+            st = os.stat(self.table_path(name))
+        except OSError:
+            return None
+        return st.st_ino, st.st_mtime_ns
+
+    def _scan(self, name: str) -> tuple:
+        """(stamp, scan with _pb, scan without _pb) of the current table
+        version. The stamp is taken before the listing, so a commit that
+        races the read leaves a handle whose stamp is already stale."""
+        stamp = self.stamp(name)
+        hit = self._handles.get(name)
+        if hit is not None and hit[0] == stamp:
+            return hit
+        reader = self.spark.read
+        schema = self.schemas.get(name)
+        if schema is not None:
+            if self.bucket_meta(name) is not None:
+                schema = StructType(
+                    schema.fields + [StructField("_pb", IntegerType())]
+                )
+            reader = reader.schema(schema)
+        raw = reader.parquet(self.table_path(name))
+        view = raw.drop("_pb") if "_pb" in raw.columns else raw
+        self._handles[name] = (stamp, raw, view)
+        return self._handles[name]
+
     def read(self, name: str) -> DataFrame:
-        df = self.spark.read.parquet(self.table_path(name))
-        return df.drop("_pb") if "_pb" in df.columns else df
+        return self._scan(name)[2]
 
     # -- bucketed layout: point mutations touch 1/n of the table ----------
 
@@ -281,12 +326,13 @@ class Warehouse:
 
     def write_bucketed(
         self, name: str, df: DataFrame, key_col: str, n_buckets: int
-    ) -> None:
+    ) -> tuple[int, int]:
         """Atomically (re)write ``name`` partitioned by
         ``_pb = pmod(key_col, n_buckets)``.  Bulk rewrites stay atomic
         via the same staging+swap as ``write``; the payoff is that
         subsequent POINT mutations go through ``overwrite_buckets`` and
-        touch only their own partitions."""
+        touch only their own partitions. Like every commit here, returns
+        the table's stamp read under the writer lock after the swap."""
         with self.write_lock(name):
             path = self.table_path(name)
             staging = path + ".staging"
@@ -309,8 +355,7 @@ class Warehouse:
                 # degrade to a plain empty table (same as overwrite_buckets
                 # when every bucket empties); schema is preserved from df
                 shutil.rmtree(staging)
-                self.write(name, df.limit(0))
-                return
+                return self.write(name, df.limit(0))
             with open(os.path.join(staging, BUCKET_META_FILE), "w") as f:
                 json.dump({"key_col": key_col, "n_buckets": n_buckets}, f)
             if os.path.exists(path):
@@ -318,16 +363,18 @@ class Warehouse:
             os.rename(staging, path)
             if os.path.exists(old):
                 shutil.rmtree(old)
+            return self.stamp(name)
+
     def read_buckets(self, name: str, buckets: list[int]) -> DataFrame:
         """Rows of the given buckets only — the ``_pb IN (...)`` filter
         is a partition filter, so the scan never opens other buckets'
         files."""
-        df = self.spark.read.parquet(self.table_path(name))
-        return df.filter(F.col("_pb").isin(buckets)).drop("_pb")
+        raw = self._scan(name)[1]
+        return raw.filter(F.col("_pb").isin(buckets)).drop("_pb")
 
     def overwrite_buckets(
         self, name: str, buckets: list[int], df: DataFrame
-    ) -> None:
+    ) -> tuple[int, int]:
         """Replace the given buckets' contents with ``df`` (which must
         hold exactly those buckets' post-state, without ``_pb``).  Each
         bucket stages fully before an atomic per-partition dir swap, so
@@ -369,7 +416,9 @@ class Warehouse:
             if not any(d.startswith("_pb=") for d in os.listdir(path)):
                 # every bucket emptied: degrade to a plain empty table so
                 # reads keep working (schema preserved from df)
-                self.write(name, df.limit(0))
+                return self.write(name, df.limit(0))
+            return self.stamp(name)
+
     def merge_into(
         self,
         name: str,
@@ -410,7 +459,8 @@ class Warehouse:
             rows = post.count()
             self.overwrite_buckets(name, touched, post)
             return {"buckets": touched, "rows_written": rows}
-    def write(self, name: str, df: DataFrame) -> None:
+
+    def write(self, name: str, df: DataFrame) -> tuple[int, int]:
         """Atomically replace table ``name`` with ``df``.
 
         The new contents are fully materialized to <name>.staging before
@@ -429,6 +479,8 @@ class Warehouse:
             os.rename(staging, path)
             if os.path.exists(old):
                 shutil.rmtree(old)
+            return self.stamp(name)
+
     def drop_all(self) -> None:
         """force_fresh_db parity (kb.py:951-952): delete + recreate."""
         if os.path.exists(self.root):

@@ -597,3 +597,142 @@ class TestBucketedDml:
         assert len(kb2) == 20
         kb2.update_doc_meta(3, {"ok": 1})
         assert kb2.query_doc(3)["meta"] == {"ok": 1}
+
+
+def _jobs_in(spark, group: str, fn) -> int:
+    """Spark jobs ``fn`` runs, counted through its own job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setJobGroup(f"{group}-done", "")
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+class TestCallCost:
+    def test_two_instances_take_turns(self, spark, kb):
+        """A second instance's commits are seen by the first: handles and
+        id counters are keyed by the table version, not held forever."""
+        other = KnowledgeBase(spark, kb.wh.root)
+
+        def both_see(n_docs: int, kids: list) -> None:
+            for x in (kb, other):
+                assert x.count() == n_docs
+                assert [r["id"] for r in x.query_children(1)] == kids
+                assert len(x.retrieve("anything", 10)) == n_docs
+
+        assert kb.add_doc("first doc") == 1
+        both_see(1, [])  # both instances now hold a docs handle
+        assert other.add_doc("second doc", parent_id=1) == 2
+        both_see(2, [2])
+        assert kb.add_doc("third doc", parent_id=1) == 3
+        both_see(3, [2, 3])
+        assert kb.add_edge(1, 2, 3) == 1
+        assert other.count_edges() == 1
+        assert other.add_edge(2, 3, 1) == 2
+        assert kb.count_edges() == 2
+        assert kb.add_edge(3, 1, 2) == 3
+        assert other.count_edges() == 3
+        other.update_doc_meta(1, {"by": "other"})
+        assert kb.query_doc(1)["meta"] == {"by": "other"}
+        kb.update_doc_meta(3, {"by": "kb"})
+        assert other.query_doc(3)["meta"] == {"by": "kb"}
+        assert other.add_doc("forth doc", parent_id=3) == 4
+        assert kb.add_doc("fifth doc", parent_id=4) == 5
+        assert other.query_doc(5)["level"] == 3
+        both_see(5, [2, 3])
+
+    def test_warm_call_job_budget(self, spark, kb):
+        """Each call runs only the jobs its answer needs: no schema
+        inference, no max(id) scan, no sort before a collect."""
+        with kb.bulk_add_docs() as add:
+            roots = [add(f"doc {i}") for i in range(8)]
+            for i in range(8):
+                add(f"child {i}", parent_id=roots[i % 3])
+
+        def kv_set():
+            with kb.bulk_keyval_update() as kv:
+                kv.set("key", 1)
+
+        budgets = {
+            "query_doc": (1, lambda p: kb.query_doc(roots[1])),
+            "query_children": (1, lambda p: kb.query_children(roots[0])),
+            "retrieve": (1, lambda p: kb.retrieve("doc", 5)),
+            "add_doc": (3, lambda p: kb.add_doc("new", parent_id=roots[2])),
+            "update_doc_meta": (
+                3, lambda p: kb.update_doc_meta(roots[3], {"pass": p})
+            ),
+            "add_edge": (4, lambda p: kb.add_edge(roots[0], roots[1], roots[p])),
+            "keyval_set": (2, lambda p: kv_set()),
+        }
+        for p in (0, 1):  # pass 0 warms the KB: bucketed tables, id counters
+            for name, (budget, call) in budgets.items():
+                jobs = _jobs_in(spark, f"kb-budget-{name}-{p}", lambda: call(p))
+                assert p == 0 or 0 < jobs <= budget, f"{name}: {jobs} jobs"
+
+    def test_id_allocation_is_max_plus_one(self, kb):
+        """Cached id counters give exactly the ids max(id) + 1 gives,
+        including reuse of a deleted max id."""
+        a, b = kb.add_doc("first doc"), kb.add_doc("second doc")
+        assert (a, b) == (1, 2)
+        kb.del_doc(b)
+        assert kb.add_doc("third doc") == 2  # the deleted max id again
+        kb.update_doc_meta(a, {"x": 1})
+        assert kb.add_doc("forth doc") == 3
+        kb.del_doc(1)  # not the max: the next id does not move
+        assert kb.add_doc("fifth doc") == 4
+        e1, e2 = kb.add_edge(2, 3, 4), kb.add_edge(3, 4, 2)
+        assert (e1, e2) == (1, 2)
+        kb.del_edge(e2)
+        assert kb.add_edge(4, 2, 3) == 2
+        with kb.bulk_graph_update() as g:
+            g.add_edge(2, 4, 3)  # 3
+            rolled_back = g.add_edge(2, 4, 2)  # 4, never stored
+            g.del_edge(rolled_back)
+        assert kb.add_edge(3, 2, 4) == 4
+
+    def test_driver_embedding_matches_embed_df(self, spark, tmp_path):
+        """bulk_add_docs embeds on the driver in ≤ 200-text chunks and
+        stores the same float32 bits the distributed embed_df stores."""
+        import zlib
+
+        import numpy as np
+
+        from svs_spark.functions.embeddings import embed_df
+
+        class Provider:
+            def __init__(self):
+                self.chunks: list[int] = []
+
+            def __call__(self, texts):
+                self.chunks.append(len(texts))
+                out = []
+                for t in texts:
+                    rng = np.random.default_rng(zlib.crc32(t.encode()))
+                    v = rng.standard_normal(24)
+                    out.append((v / np.linalg.norm(v)).tolist())
+                return out
+
+        provider = Provider()
+        kb = KnowledgeBase(spark, str(tmp_path / "emb"),
+                           embedding_func=provider, force_fresh_db=True)
+        texts = [f"text number {i}" for i in range(450)]
+        with kb.bulk_add_docs() as add:
+            for i, t in enumerate(texts):
+                add(t, no_embedding=(i % 50 == 7))
+        embedded = [t for i, t in enumerate(texts) if i % 50 != 7]
+        assert max(provider.chunks) <= 200
+        assert sum(provider.chunks) == len(embedded)
+        stored = {r["text"]: r["embedding"] for r in kb.docs.collect()}
+        want = embed_df(
+            spark.createDataFrame([(t,) for t in embedded], "text string"),
+            provider,
+        ).collect()
+        assert len(want) == len(embedded)
+        for r in want:
+            got = np.asarray(stored[r["text"]], dtype=np.float32)
+            assert got.tobytes() == np.asarray(
+                r["embedding"], dtype=np.float32
+            ).tobytes()
+        assert sum(v is None for v in stored.values()) == 9

@@ -1,6 +1,7 @@
 """Throttle-invariant per-query cost: CPU-seconds consumed by the whole
-container (cgroup cpuacct — driver + JVM + python workers) around each
-query's bench-style collect, next to the wall clock.
+container (cgroup v1 cpuacct, else cgroup v2 cpu.stat — driver + JVM +
+python workers) around each query's bench-style collect, next to the
+wall clock.
 
 The sandbox host suffers hypervisor steal that inflates WALL times 3-30x
 a few minutes into any sustained run (round-9/10 characterization), but
@@ -13,7 +14,8 @@ Usage: python tools/cpu_profile.py [query ...]   (default: bench HEADLINE)
 Env:   SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
 
 Prints one JSON line per query: {"q": name, "cpu_sec": s, "wall_sec": s}
-(best of 2 runs after one warm-up, mirroring bench.py).
+(best of 2 runs after one warm-up, mirroring bench.py). ``cpu_sec`` is
+null when neither cgroup file is readable.
 """
 
 from __future__ import annotations
@@ -25,15 +27,26 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-_CPUACCT = "/sys/fs/cgroup/cpuacct/cpuacct.usage"
+_CPUACCT = "/sys/fs/cgroup/cpuacct/cpuacct.usage"  # cgroup v1, ns
+_CPU_STAT = "/sys/fs/cgroup/cpu.stat"  # cgroup v2, usage_usec line
 
 
-def cpu_ns() -> int:
+def cpu_ns() -> int | None:
+    """Container CPU time in ns: cgroup v1, then v2, else None."""
     try:
         with open(_CPUACCT) as f:
             return int(f.read())
-    except OSError:
-        return -1
+    except (OSError, ValueError):
+        pass
+    try:
+        with open(_CPU_STAT) as f:
+            for line in f:
+                key, _, val = line.partition(" ")
+                if key == "usage_usec":
+                    return int(val) * 1000
+    except (OSError, ValueError):
+        pass
+    return None
 
 
 def main() -> None:
@@ -78,7 +91,7 @@ def main() -> None:
         except Exception as e:  # noqa: BLE001
             print(json.dumps({"q": n, "err": str(e)[:200]}))
             continue
-        best_cpu = 9e9
+        cpus = []
         best_wall = 9e9
         for _ in range(2):
             spark.sparkContext.setJobDescription(f"cpu_profile:{n}")
@@ -88,8 +101,11 @@ def main() -> None:
             rows = df.collect()
             assert rows is not None
             best_wall = min(best_wall, time.perf_counter() - t0)
-            best_cpu = min(best_cpu, (cpu_ns() - c0) / 1e9)
-        rec = {"q": n, "cpu_sec": round(best_cpu, 3), "wall_sec": round(best_wall, 4)}
+            c1 = cpu_ns()
+            if c0 is not None and c1 is not None:
+                cpus.append((c1 - c0) / 1e9)
+        best_cpu = round(min(cpus), 3) if cpus else None
+        rec = {"q": n, "cpu_sec": best_cpu, "wall_sec": round(best_wall, 4)}
         out.append(rec)
         print(json.dumps(rec), flush=True)
 
@@ -100,7 +116,10 @@ def main() -> None:
         json.dumps(
             {
                 "q": "_TOTAL",
-                "cpu_sec": round(sum(r["cpu_sec"] for r in out), 2),
+                "cpu_sec": (
+                    round(sum(r["cpu_sec"] for r in out), 2)
+                    if all(r["cpu_sec"] is not None for r in out) else None
+                ),
                 "wall_sec": round(sum(r["wall_sec"] for r in out), 3),
                 "n": len(out),
             }

@@ -4,7 +4,9 @@ every query a change touches.
 
 Usage: python tools/dump_plans.py <subdir> <tag> <query> [query ...]
 
-Reads the tables from the directory named by $SPARK_GRAFT_SF_DIR.
+Reads the tables from the directory named by $SPARK_GRAFT_SF_DIR, and
+writes that directory as `<sf_dir>` in the scan locations, so snapshots
+taken on different hosts compare equal.
 """
 
 from __future__ import annotations
@@ -35,7 +37,8 @@ def main() -> None:
     for name in names:
         df = registry[name](spark, sf_dir)
         with open(os.path.join(out_dir, f"{name}_{tag}.txt"), "w") as f:
-            f.write(plan_string(df))
+            plan = plan_string(df)
+            f.write(plan.replace(os.path.abspath(sf_dir), "<sf_dir>"))
         print(f"wrote plans/{subdir}/{name}_{tag}.txt")
     release_caches()
     spark.stop()
