@@ -13,6 +13,10 @@ DuckDB oracle (``list_dot_product`` over ``DOUBLE[]``) hash-matches our
 results exactly. The pandas-UDF matmul path (``svs_spark.operators.
 similarity.score_batch``) is faster but SIMD reassociation makes it only
 approximately equal — it is used for benchmarks, not the correctness gate.
+
+The NumPy helpers (``stack_rows``, ``unpack_rows``, ``topk_ties``,
+``quantize_int8_many``) are the per-batch steps every Arrow GEMM operator
+shares: one decode, one local top-k selection, one int8 quantization.
 """
 
 from __future__ import annotations
@@ -112,6 +116,64 @@ def quantize_int8(a: Column | str) -> Column:
             * 127
         ).cast("int"),
     )
+
+
+def quantize_int8_many(mat):
+    """``quantize_int8`` of a NumPy array (any shape), as int8: the
+    Arrow-kernel form every IVF int8 path uses. The clamp, scale and
+    round run in the input's dtype. ``np.rint`` rounds halves to even
+    where the Column form's ``F.round`` rounds them away from zero, so
+    the two agree everywhere except exact ``.5`` products."""
+    import numpy as np
+
+    q = np.clip(np.rint(np.clip(mat, -1.0, 1.0) * 127), -127, 127)
+    return q.astype(np.int8)
+
+
+def stack_rows(values, dtype):
+    """(n × d) matrix of ``dtype`` from n array cells — an Arrow batch's
+    ``pdf[col].to_numpy()`` or a list of collected vectors. The one
+    decode of ARRAY<numeric> columns in the GEMM kernels."""
+    import numpy as np
+
+    return np.vstack(values).astype(dtype)
+
+
+def unpack_rows(values, dtype):
+    """(n × d) matrix of ``dtype`` from n packed BINARY cells (the IVF /
+    PQ layouts' ``femb``, ``qemb`` and ``code`` columns): one buffer
+    join, then a read-only view of it."""
+    import numpy as np
+
+    return np.frombuffer(b"".join(values), dtype=dtype).reshape(
+        len(values), -1
+    )
+
+
+def topk_ties(scores, k: int, axis: int = 0):
+    """``np.nonzero``-style indices of every entry of ``scores`` at or
+    above the k-th largest along ``axis``, excluding the ``-inf`` mask
+    value: boundary ties with the k-th entry are ALL kept.
+
+    This is the only local top-k selection of the GEMM operators. A
+    batch, block or partition prunes to these entries; the global
+    (score desc, id desc) order — a ranked window or
+    TakeOrderedAndProject — then picks the final k. ``argpartition``
+    alone keeps an arbitrary subset of tied entries, which can drop the
+    id-desc winner before the global order sees it (DEVNOTES
+    invariant 16)."""
+    import numpy as np
+
+    take = min(k, scores.shape[axis])
+    if take <= 0:
+        return tuple(np.empty(0, dtype=np.intp) for _ in scores.shape)
+    part = np.take(
+        np.argpartition(-scores, take - 1, axis=axis), range(take), axis=axis
+    )
+    kth = np.take_along_axis(scores, part, axis=axis).min(
+        axis=axis, keepdims=True
+    )
+    return np.nonzero((scores >= kth) & (scores > -np.inf))
 
 
 def dot_int8(a: Column | str, b: Column | str) -> Column:

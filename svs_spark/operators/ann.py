@@ -19,9 +19,9 @@ from __future__ import annotations
 from typing import Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
-from pyspark.sql.window import Window
 
 from svs_spark.functions.vector import dot, dot_literal
+from svs_spark.operators.similarity import ranked_topk
 
 
 def hyperplane(bit: int, dim: int) -> list[float]:
@@ -114,13 +114,7 @@ def knn_join(
         cand_id,
         F.round(dot("qvec", "cvec"), 6).alias("score"),
     )
-    w = Window.partitionBy(query_id).orderBy(
-        F.desc("score"), F.desc(cand_id)
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return ranked_topk(scored, [query_id], cand_id, k)
 
 
 def ivf_centroids(

@@ -37,6 +37,7 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
+from svs_spark.functions.vector import stack_rows
 from svs_spark.operators.similarity import centroid_assign
 
 _NANO = 1_000_000_000
@@ -51,6 +52,30 @@ def _screen_margin(dim: int) -> float:
     floored at the historical 1e-3 so emitted scores stay identical
     at the dims already benchmarked."""
     return max(1e-3, 8.0 * dim * 2.0 ** -24)
+
+
+def _screened_pairs(a, b, threshold: float, round_decimals: int):
+    """(i, j, score) of every row pair with round(a_i·b_j,
+    round_decimals) ≥ threshold; ``b=None`` pairs ``a`` with itself,
+    upper triangle only (i < j). Two precisions: the O(n·m·d) GEMM
+    screens in float32 (half the bytes/FLOP cost), and only candidates
+    within ``_screen_margin`` of the threshold are re-scored exactly in
+    float64, so the scores are bit-identical to an all-float64 kernel
+    after rounding."""
+    import numpy as np
+
+    cut = threshold - _screen_margin(a.shape[1])
+    a32 = a.astype(np.float32)
+    if b is None:
+        b = a
+        i, j = np.triu_indices(len(a), k=1)
+        cand = (a32 @ a32.T)[i, j] >= cut
+        i, j = i[cand], j[cand]
+    else:
+        i, j = np.nonzero(a32 @ b.astype(np.float32).T >= cut)
+    exact = np.round(np.einsum("ij,ij->i", a[i], b[j]), round_decimals)
+    keep = exact >= threshold
+    return i[keep], j[keep], exact[keep]
 
 
 def _recompute_means(assigned: DataFrame, vec_col: str) -> DataFrame:
@@ -300,47 +325,16 @@ def within_cluster_pairs(
             )
 
     def pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
-        if n < 2:
-            return pd.DataFrame(
-                {"cluster_id": [], "id_a": [], "id_b": [], "score": []}
-            ).astype(
-                {"cluster_id": "int64", "id_a": "int64",
-                 "id_b": "int64", "score": "float64"}
-            )
         order = np.argsort(pdf[id_col].to_numpy(), kind="stable")
         ids = pdf[id_col].to_numpy()[order]
-        # two-precision block: the O(c²·d) GEMM screens in float32
-        # (half the bytes/FLOP cost); only candidate pairs within a
-        # dim-derived safety margin (_screen_margin: ≥8× the
-        # worst-case float32 dot error for unit vectors at this dim)
-        # are re-scored exactly in float64, so emitted scores are
-        # bit-identical to the all-float64 kernel after
-        # round(round_decimals)
-        mat = np.vstack(pdf[vec_col].to_numpy()[order]).astype(np.float64)
-        mat32 = mat.astype(np.float32)
-        s32 = mat32 @ mat32.T
-        ia, ib = np.triu_indices(n, k=1)
-        cand = s32[ia, ib] >= threshold - _screen_margin(mat.shape[1])
-        ia, ib = ia[cand], ib[cand]
-        if not len(ia):
-            return pd.DataFrame(
-                {"cluster_id": [], "id_a": [], "id_b": [], "score": []}
-            ).astype(
-                {"cluster_id": "int64", "id_a": "int64",
-                 "id_b": "int64", "score": "float64"}
-            )
-        exact = np.round(
-            np.einsum("ij,ij->i", mat[ia], mat[ib]), round_decimals
-        )
-        keep = exact >= threshold
+        mat = stack_rows(pdf[vec_col].to_numpy()[order], np.float64)
+        ia, ib, exact = _screened_pairs(mat, None, threshold, round_decimals)
         return pd.DataFrame(
             {
-                "cluster_id": np.full(int(keep.sum()),
-                                      pdf[cluster_col].iloc[0]),
-                "id_a": ids[ia[keep]],
-                "id_b": ids[ib[keep]],
-                "score": exact[keep],
+                "cluster_id": np.full(len(ia), pdf[cluster_col].iloc[0]),
+                "id_a": ids[ia],
+                "id_b": ids[ib],
+                "score": exact,
             }
         )
 
@@ -398,28 +392,17 @@ def semdedup_recall_probe(
     if not samp_rows:
         return {"true_pairs": 0, "found_pairs": 0, "recall": 1.0}
     s_ids = np.asarray([r[id_col] for r in samp_rows], dtype=np.int64)
-    s_mat = np.vstack([r[vec_col] for r in samp_rows]).astype(np.float64)
-    s_mat32 = s_mat.astype(np.float32)
+    s_mat = stack_rows([r[vec_col] for r in samp_rows], np.float64)
 
     def truth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             ids = pdf[id_col].to_numpy()
-            # same two-precision block as the pair kernel: float32
-            # GEMM screen with the dim-derived margin (_screen_margin,
-            # ≥8x the worst-case float32 dot error at this dim),
-            # float64 exact rescore of candidates only
-            mat = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-            s32 = mat.astype(np.float32) @ s_mat32.T
-            ci, sj = np.nonzero(s32 >= threshold - _screen_margin(mat.shape[1]))
+            mat = stack_rows(pdf[vec_col].to_numpy(), np.float64)
+            ci, sj, _ = _screened_pairs(mat, s_mat, threshold, round_decimals)
             if not len(ci):
                 continue
-            exact = np.round(
-                np.einsum("ij,ij->i", mat[ci], s_mat[sj]), round_decimals
-            )
-            ok = exact >= threshold
-            ci, sj = ci[ok], sj[ok]
             keep = ids[ci] != s_ids[sj]
             a = np.minimum(ids[ci][keep], s_ids[sj][keep])
             b = np.maximum(ids[ci][keep], s_ids[sj][keep])

@@ -30,6 +30,8 @@ from svs_spark.functions.text import (
     tokenize_many,
     window_starts,
 )
+from svs_spark.functions.vector import stack_rows
+from svs_spark.operators.similarity import block_matrix, block_pairs
 
 MINHASH_PRIME = 2_147_483_647  # 2^31 - 1
 SIMHASH_BITS = 32
@@ -677,25 +679,13 @@ def embedding_near_dup_pairs(
     import pandas as pd
     from typing import Iterator
 
-    blocked = embeddings.select(
-        F.col(id_col).alias("vid"),
-        F.col(vec_col).alias("vec"),
-        F.floor(F.col(id_col) / block_size).alias("blk"),
-    )
-    mats = blocked.groupBy("blk").agg(
-        F.collect_list(F.struct("vid", "vec")).alias("items")
-    )
-    a = mats.select(F.col("blk").alias("blk_a"), F.col("items").alias("items_a"))
-    b = mats.select(F.col("blk").alias("blk_b"), F.col("items").alias("items_b"))
-    pairs = a.join(b, F.col("blk_a") <= F.col("blk_b"))
+    pairs = block_pairs(embeddings, id_col, vec_col, block_size)
 
     def score_blocks(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             for items_a, items_b in zip(pdf["items_a"], pdf["items_b"]):
-                ia = np.fromiter((x["vid"] for x in items_a), dtype=np.int64)
-                ma = np.vstack([x["vec"] for x in items_a]).astype(np.float64)
-                ib = np.fromiter((x["vid"] for x in items_b), dtype=np.int64)
-                mb = np.vstack([x["vec"] for x in items_b]).astype(np.float64)
+                ia, ma = block_matrix(items_a)
+                ib, mb = block_matrix(items_b)
                 gram = ma @ mb.T
                 ii, jj = np.nonzero(
                     (ia[:, None] < ib[None, :]) & (gram >= threshold)
@@ -890,7 +880,7 @@ def embedding_near_dup_lsh_pairs(
         for pdf in it:
             if not len(pdf):
                 continue
-            mat = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
+            mat = stack_rows(pdf[vec_col].to_numpy(), np.float64)
             bits = (mat @ planes) > 0  # (batch, bands·nbits)
             bks = (
                 bits.reshape(len(mat), bands, nbits) * weights
@@ -946,8 +936,8 @@ def embedding_near_dup_lsh_pairs(
         for pdf in it:
             if not len(pdf):
                 continue
-            ma = np.vstack(pdf["vec_a"].to_numpy()).astype(np.float64)
-            mb = np.vstack(pdf["vec_b"].to_numpy()).astype(np.float64)
+            ma = stack_rows(pdf["vec_a"].to_numpy(), np.float64)
+            mb = stack_rows(pdf["vec_b"].to_numpy(), np.float64)
             raw = np.einsum("ij,ij->i", ma, mb)
             keep = raw >= threshold
             if not keep.any():

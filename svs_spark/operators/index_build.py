@@ -25,7 +25,13 @@ from typing import Sequence
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from svs_spark.operators.ann import hyperplane_bucket, query_bucket
-from svs_spark.functions.vector import dot_literal
+from svs_spark.functions.vector import (
+    dot_literal,
+    quantize_int8_many,
+    stack_rows,
+    topk_ties,
+    unpack_rows,
+)
 
 
 def build_lsh_index(
@@ -52,11 +58,13 @@ def build_lsh_index(
         .partitionBy("bucket")
         .parquet(out_path)
     )
-    meta = {
-        "nbits": nbits,
-        "dim": dim,
-        "num_vectors": embeddings.count(),
-    }
+    _write_index_meta(
+        out_path,
+        {"nbits": nbits, "dim": dim, "num_vectors": embeddings.count()},
+    )
+
+
+def _write_index_meta(out_path: str, meta: dict) -> None:
     meta_dir = os.path.join(out_path, "_index_meta")
     os.makedirs(meta_dir, exist_ok=True)
     with open(os.path.join(meta_dir, "meta.json"), "w") as f:
@@ -134,17 +142,16 @@ def build_two_level_index(
     from svs_spark.operators.ann import ivf_centroids
 
     cent = ivf_centroids(embeddings, vec_col, cluster_col)
-    meta = {
-        "nbits": nbits,
-        "dim": dim,
-        "cluster_col": cluster_col,
-        "num_vectors": embeddings.count(),
-        "centroids": {str(cl): v for cl, v in cent.items()},
-    }
-    meta_dir = os.path.join(out_path, "_index_meta")
-    os.makedirs(meta_dir, exist_ok=True)
-    with open(os.path.join(meta_dir, "meta.json"), "w") as f:
-        json.dump(meta, f)
+    _write_index_meta(
+        out_path,
+        {
+            "nbits": nbits,
+            "dim": dim,
+            "cluster_col": cluster_col,
+            "num_vectors": embeddings.count(),
+            "centroids": {str(cl): v for cl, v in cent.items()},
+        },
+    )
 
 
 def train_centroids_sample(
@@ -229,22 +236,46 @@ def build_ivf_index(
     incremental update = dynamic partition overwrite of changed labels.
     """
     import numpy as np
+
+    cent = np.ascontiguousarray(np.asarray(centroids, dtype=np.float32))
+    _write_ivf_layout(embeddings, out_path, cent, id_col, vec_col, "overwrite")
+    _write_index_meta(
+        out_path,
+        {
+            "kind": "ivf_int8",
+            "dim": int(cent.shape[1]),
+            "n_clusters": int(cent.shape[0]),
+            "centroids": [[float(x) for x in row] for row in cent],
+        },
+    )
+
+
+def _write_ivf_layout(
+    embeddings: DataFrame,
+    path: str,
+    cent,
+    id_col: str,
+    vec_col: str,
+    mode: str,
+) -> None:
+    """The IVF layout write shared by build (``mode="overwrite"``) and
+    incremental update (``"append"``): one Arrow kernel assigns each
+    vector to its nearest centroid (float32 GEMM argmax) and packs both
+    precisions, then a label-partitioned parquet write."""
+    import numpy as np
     import pandas as pd
     from typing import Iterator
 
-    cent = np.ascontiguousarray(np.asarray(centroids, dtype=np.float32))
-    spark = embeddings.sparkSession
-    bc = spark.sparkContext.broadcast(cent)
+    bc = embeddings.sparkSession.sparkContext.broadcast(cent)
 
     def assign_quantize(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         c = bc.value
         for pdf in it:
             if not len(pdf):
                 continue
-            mat = np.vstack(pdf[vec_col].to_numpy()).astype(np.float32)
+            mat = stack_rows(pdf[vec_col].to_numpy(), np.float32)
             labels = np.argmax(mat @ c.T, axis=1).astype(np.int32)
-            q = np.clip(np.rint(np.clip(mat, -1.0, 1.0) * 127), -127, 127)
-            q = q.astype(np.int8)
+            q = quantize_int8_many(mat)
             yield pd.DataFrame(
                 {
                     "vec_id": pdf[id_col].to_numpy(),
@@ -263,20 +294,10 @@ def build_ivf_index(
     )
     (
         assigned.repartition(F.col("label"))
-        .write.mode("overwrite")
+        .write.mode(mode)
         .partitionBy("label")
-        .parquet(out_path)
+        .parquet(path)
     )
-    meta = {
-        "kind": "ivf_int8",
-        "dim": int(cent.shape[1]),
-        "n_clusters": int(cent.shape[0]),
-        "centroids": [[float(x) for x in row] for row in cent],
-    }
-    meta_dir = os.path.join(out_path, "_index_meta")
-    os.makedirs(meta_dir, exist_ok=True)
-    with open(os.path.join(meta_dir, "meta.json"), "w") as f:
-        json.dump(meta, f)
 
 
 def update_ivf_index(
@@ -295,44 +316,12 @@ def update_ivf_index(
     a periodic rebuild (standard IVF practice — FAISS does the same).
     """
     import numpy as np
-    import pandas as pd
-    from typing import Iterator
 
     meta = read_index_meta(index_path)
     cent = np.ascontiguousarray(
         np.asarray(meta["centroids"], dtype=np.float32)
     )
-    spark = new_embeddings.sparkSession
-    bc = spark.sparkContext.broadcast(cent)
-
-    def assign_quantize(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        c = bc.value
-        for pdf in it:
-            if not len(pdf):
-                continue
-            mat = np.vstack(pdf[vec_col].to_numpy()).astype(np.float32)
-            labels = np.argmax(mat @ c.T, axis=1).astype(np.int32)
-            q = np.clip(np.rint(np.clip(mat, -1.0, 1.0) * 127), -127, 127)
-            q = q.astype(np.int8)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf[id_col].to_numpy(),
-                    "label": labels,
-                    "qemb": [row.tobytes() for row in q],
-                    "femb": [row.tobytes() for row in mat],
-                }
-            )
-
-    assigned = new_embeddings.select(id_col, vec_col).mapInPandas(
-        assign_quantize,
-        schema="vec_id long, label int, qemb binary, femb binary",
-    )
-    (
-        assigned.repartition(F.col("label"))
-        .write.mode("append")
-        .partitionBy("label")
-        .parquet(index_path)
-    )
+    _write_ivf_layout(new_embeddings, index_path, cent, id_col, vec_col, "append")
 
 
 def warm_ivf_cache(
@@ -427,85 +416,89 @@ def search_ivf_index(
 
     cent = np.asarray(meta["centroids"], dtype=np.float32)
     q = np.asarray(qvec, dtype=np.float32)
-    ranked = np.argsort(-(cent @ q))[:probes]
-    probe_labels = [int(x) for x in ranked]
+    probe_labels = _probe_labels(cent, q, probes)
 
     if precision == "int8_rerank":
         # screen: int8 over-fetch of rerank_mult·k candidate ids (only
-        # the packed qemb column is read); ids are tiny (≤ a few KB) so
-        # collecting them to drive the rerank filter is bounded.
+        # the packed qemb column is read)
         cand = search_ivf_index(
             df, meta, qvec, max(k, rerank_mult * k), probes, "int8"
         )
-        cand_ids = [int(r["vec_id"]) for r in cand.select("vec_id").collect()]
-        exact = df.filter(
-            F.col("label").isin(probe_labels) & F.col("vec_id").isin(cand_ids)
-        ).select("vec_id", "femb")
-
-        def rescore(it):
-            qq = q.astype(np.float64)
-            for pdf in it:
-                if not len(pdf):
-                    continue
-                raw = b"".join(pdf["femb"].to_numpy())
-                mat = np.frombuffer(raw, dtype=np.float32).reshape(
-                    len(pdf), -1
-                )
-                s = mat.astype(np.float64) @ qq
-                yield pd.DataFrame(
-                    {
-                        "vec_id": pdf["vec_id"].to_numpy(),
-                        "score": s.astype(np.float64),
-                    }
-                )
-
-        return (
-            exact.mapInPandas(rescore, schema="vec_id long, score double")
-            .orderBy(F.desc("score"), F.desc("vec_id"))
-            .limit(k)
-        )
+        return _rerank_exact(df, probe_labels, cand, q, k)
 
     use_int8 = precision == "int8"
-    col = "qemb" if use_int8 else "femb"
-    qq = (
-        np.clip(np.rint(np.clip(q, -1.0, 1.0) * 127), -127, 127).astype(
-            np.int32
-        )
-        if use_int8
-        else q.astype(np.float64)
-    )
+    col, dt = ("qemb", np.int8) if use_int8 else ("femb", np.float32)
+    qq = (quantize_int8_many(q) if use_int8 else q).astype(np.float64)
 
     def score(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             if not len(pdf):
                 continue
-            raw = b"".join(pdf[col].to_numpy())
-            if use_int8:
-                mat = np.frombuffer(raw, dtype=np.int8).reshape(len(pdf), -1)
-                # float64 GEMM over the int8 values: every product and
-                # partial sum stays an exact integer (< 2^53), so scores
-                # are bit-identical to integer arithmetic — but it runs
-                # through BLAS, where NumPy's int32 matmul is a scalar
-                # loop (~5-10× slower for these shapes)
-                s = mat.astype(np.float64) @ qq.astype(np.float64)
-                s /= np.float64(127 * 127)
-            else:
-                mat = np.frombuffer(raw, dtype=np.float32).reshape(
-                    len(pdf), -1
-                )
-                s = mat.astype(np.float64) @ qq
-            ids = pdf["vec_id"].to_numpy()
-            if len(s) > k:
-                part = np.argpartition(-s, k - 1)[:k]
-            else:
-                part = np.arange(len(s))
+            mat = unpack_rows(pdf[col].to_numpy(), dt)
+            s = _dot_scores(mat, qq, use_int8)
+            (keep,) = topk_ties(s, k)
             yield pd.DataFrame(
-                {"vec_id": ids[part], "score": s[part].astype(np.float64)}
+                {"vec_id": pdf["vec_id"].to_numpy()[keep], "score": s[keep]}
             )
 
     hits = df.filter(F.col("label").isin(probe_labels)).select("vec_id", col)
     return (
         hits.mapInPandas(score, schema="vec_id long, score double")
+        .orderBy(F.desc("score"), F.desc("vec_id"))
+        .limit(k)
+    )
+
+
+def _probe_labels(cent, q, probes: int) -> "list[int]":
+    """The ``probes`` centroid labels nearest the query (float32 dot,
+    descending) — the IVF cluster ranking, read from index metadata."""
+    import numpy as np
+
+    return [int(x) for x in np.argsort(-(cent @ q))[:probes]]
+
+
+def _dot_scores(mat, qq, int8: bool = False):
+    """float64 scores of decoded index rows against the float64 query.
+    For int8 rows (``qq`` quantized too) the GEMM still runs in
+    float64: every product and partial sum stays an exact integer
+    (< 2^53), so scores are bit-identical to integer arithmetic — but
+    it runs through BLAS, where NumPy's int32 matmul is a scalar loop
+    (~5-10× slower for these shapes) — then rescales by 127²."""
+    import numpy as np
+
+    s = mat.astype(np.float64) @ qq
+    if int8:
+        s /= np.float64(127 * 127)
+    return s
+
+
+def _rerank_exact(df: DataFrame, probe_labels, cand: DataFrame, q, k: int):
+    """Stage 2 of the two-pass searches (int8_rerank, IVF-PQ): collect
+    the screen's candidate ids (≤ a few KB, so driving the filter with
+    them is bounded), re-score just those rows against the exact
+    float32 column — pushed down as a ``vec_id IN (...)`` filter, so
+    row-group stats bound decoding — and take the exact top-k."""
+    import numpy as np
+    import pandas as pd
+    from typing import Iterator
+
+    qq = q.astype(np.float64)
+    cand_ids = [int(r["vec_id"]) for r in cand.select("vec_id").collect()]
+    exact = df.filter(
+        F.col("label").isin(probe_labels) & F.col("vec_id").isin(cand_ids)
+    ).select("vec_id", "femb")
+
+    def rescore(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            if not len(pdf):
+                continue
+            s = _dot_scores(unpack_rows(pdf["femb"].to_numpy(), np.float32), qq)
+            yield pd.DataFrame(
+                {"vec_id": pdf["vec_id"].to_numpy(), "score": s}
+            )
+
+    return (
+        exact.mapInPandas(rescore, schema="vec_id long, score double")
         .orderBy(F.desc("score"), F.desc("vec_id"))
         .limit(k)
     )
@@ -538,9 +531,7 @@ def ivf_assigned_frame(spark, index_path: str) -> "DataFrame":
         for pdf in it:
             if not len(pdf):
                 continue
-            mat = np.frombuffer(
-                b"".join(pdf["femb"].to_numpy()), dtype=np.float32
-            ).reshape(len(pdf), -1)
+            mat = unpack_rows(pdf["femb"].to_numpy(), np.float32)
             yield pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"].to_numpy(),
@@ -615,9 +606,7 @@ class IvfLocalReader:
         else:
             tbl = pq.read_table(label_dir, columns=["vec_id", col])
             ids = tbl.column("vec_id").to_numpy()
-            raw = b"".join(tbl.column(col).to_pylist())
-            mat = np.frombuffer(raw, dtype=dt).reshape(len(ids), -1)
-            entry = (ids, mat)
+            entry = (ids, unpack_rows(tbl.column(col).to_pylist(), dt))
         # empty and loaded entries share one insert+evict path, so the
         # len(_cache) <= max_cached invariant holds for both
         self._cache[label] = entry
@@ -631,30 +620,19 @@ class IvfLocalReader:
         import numpy as np
 
         q = np.asarray(qvec, dtype=np.float32)
-        ranked = np.argsort(-(self._cent @ q))[:probes]
-        if self.precision == "int8":
-            qq = np.clip(
-                np.rint(np.clip(q, -1.0, 1.0) * 127), -127, 127
-            ).astype(np.float64)
-        else:
-            qq = q.astype(np.float64)
+        int8 = self.precision == "int8"
+        qq = (quantize_int8_many(q) if int8 else q).astype(np.float64)
         all_ids, all_scores = [], []
-        for label in (int(x) for x in ranked):
+        for label in _probe_labels(self._cent, q, probes):
             ids, mat = self._load_label(label)
-            s = mat.astype(np.float64) @ qq
-            if self.precision == "int8":
-                s = s / np.float64(127 * 127)
             all_ids.append(ids)
-            all_scores.append(s)
+            all_scores.append(_dot_scores(mat, qq, int8))
         ids = np.concatenate(all_ids)
         scores = np.concatenate(all_scores)
-        if len(scores) > k:
-            part = np.argpartition(-scores, k - 1)[:k]
-            ids, scores = ids[part], scores[part]
-        order = np.lexsort((-ids, -scores))
-        return [
-            (int(ids[i]), float(scores[i])) for i in order[: min(k, len(ids))]
-        ]
+        (keep,) = topk_ties(scores, k)
+        ids, scores = ids[keep], scores[keep]
+        order = np.lexsort((-ids, -scores))[:k]
+        return [(int(ids[i]), float(scores[i])) for i in order]
 
 
 def search_two_level_index(
@@ -727,10 +705,7 @@ def train_pq_codebooks(mat, m: int = 8, ksub: int = 256, iters: int = 10, seed: 
         sub = np.ascontiguousarray(mat[:, j * dsub : (j + 1) * dsub])
         cb = sub[rng.choice(n, size=ksub, replace=n < ksub)].copy()
         for _ in range(iters):
-            # squared-L2 assignment: argmin(||c||² − 2x·c); ||x||² is
-            # constant per row and drops out of the argmin
-            d2 = (cb * cb).sum(axis=1)[None, :] - 2.0 * (sub @ cb.T)
-            assign = np.argmin(d2, axis=1)
+            assign = _nearest_codeword(sub, cb)
             # vectorized Lloyd update: per-dim scatter-sum via bincount
             # (a per-centroid masking loop is ksub× slower)
             counts = np.bincount(assign, minlength=ksub)
@@ -749,6 +724,29 @@ def train_pq_codebooks(mat, m: int = 8, ksub: int = 256, iters: int = 10, seed: 
             cb[nz] = (sums[nz] / counts[nz, None]).astype(np.float32)
         books[j] = cb
     return books
+
+
+def _nearest_codeword(sub, cb):
+    """Per-row index of the nearest codeword of one PQ subspace:
+    squared-L2 argmin(||c||² − 2x·c) — ||x||² is constant per row and
+    drops out of the argmin."""
+    import numpy as np
+
+    d2 = (cb * cb).sum(axis=1)[None, :] - 2.0 * (sub @ cb.T)
+    return np.argmin(d2, axis=1)
+
+
+def _pq_codes(mat, books):
+    """(n × m) uint8 PQ codes of ``mat`` under (m, ksub, d/m)
+    ``books``: one subspace GEMM + argmin per code byte."""
+    import numpy as np
+
+    m, _, dsub = books.shape
+    codes = np.empty((len(mat), m), dtype=np.uint8)
+    for j in range(m):
+        sub = mat[:, j * dsub : (j + 1) * dsub]
+        codes[:, j] = _nearest_codeword(sub, books[j]).astype(np.uint8)
+    return codes
 
 
 def train_pq_codebooks_residual(
@@ -792,22 +790,15 @@ def pq_encode_df(
     from typing import Iterator
 
     books = np.ascontiguousarray(np.asarray(codebooks, dtype=np.float32))
-    m, ksub, dsub = books.shape
-    spark = embeddings.sparkSession
-    bc = spark.sparkContext.broadcast(books)
+    bc = embeddings.sparkSession.sparkContext.broadcast(books)
 
     def encode(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         bks = bc.value
         for pdf in it:
             if not len(pdf):
                 continue
-            mat = np.vstack(pdf[vec_col].to_numpy()).astype(np.float32)
-            codes = np.empty((len(mat), m), dtype=np.uint8)
-            for j in range(m):
-                sub = mat[:, j * dsub : (j + 1) * dsub]
-                cb = bks[j]
-                d2 = (cb * cb).sum(axis=1)[None, :] - 2.0 * (sub @ cb.T)
-                codes[:, j] = np.argmin(d2, axis=1).astype(np.uint8)
+            mat = stack_rows(pdf[vec_col].to_numpy(), np.float32)
+            codes = _pq_codes(mat, bks)
             yield pd.DataFrame(
                 {
                     "vec_id": pdf[id_col].to_numpy(),
@@ -874,16 +865,14 @@ def pq_adc_topk(
         for pdf in it:
             if not len(pdf):
                 continue
-            raw = b"".join(pdf["code"].to_numpy())
-            codes = np.frombuffer(raw, dtype=np.uint8).reshape(len(pdf), m)
+            codes = unpack_rows(pdf["code"].to_numpy(), np.uint8)
             s = tbl[midx[None, :], codes].sum(axis=1)
             if cst is not None:
                 s = s + cst[pdf["label"].to_numpy()]
-            ids = pdf["vec_id"].to_numpy()
-            if len(s) > n:
-                part = np.argpartition(-s, n - 1)[:n]
-                ids, s = ids[part], s[part]
-            yield pd.DataFrame({"vec_id": ids, "adc_score": s})
+            (keep,) = topk_ties(s, n)
+            yield pd.DataFrame(
+                {"vec_id": pdf["vec_id"].to_numpy()[keep], "adc_score": s[keep]}
+            )
 
     partials = encoded.select(*cols).mapInPandas(
         score, schema="vec_id long, adc_score double"
@@ -923,7 +912,7 @@ def build_pq_index(
 
     cent = np.ascontiguousarray(np.asarray(coarse_centroids, dtype=np.float32))
     books = np.ascontiguousarray(np.asarray(codebooks, dtype=np.float32))
-    m, ksub, dsub = books.shape
+    m, ksub, _ = books.shape
     spark = embeddings.sparkSession
     bc_c = spark.sparkContext.broadcast(cent)
     bc_b = spark.sparkContext.broadcast(books)
@@ -933,15 +922,9 @@ def build_pq_index(
         for pdf in it:
             if not len(pdf):
                 continue
-            mat = np.vstack(pdf[vec_col].to_numpy()).astype(np.float32)
+            mat = stack_rows(pdf[vec_col].to_numpy(), np.float32)
             labels = np.argmax(mat @ c.T, axis=1).astype(np.int32)
-            enc_mat = mat - c[labels] if residual else mat
-            codes = np.empty((len(mat), m), dtype=np.uint8)
-            for j in range(m):
-                sub = enc_mat[:, j * dsub : (j + 1) * dsub]
-                cb = bks[j]
-                d2 = (cb * cb).sum(axis=1)[None, :] - 2.0 * (sub @ cb.T)
-                codes[:, j] = np.argmin(d2, axis=1).astype(np.uint8)
+            codes = _pq_codes(mat - c[labels] if residual else mat, bks)
             yield pd.DataFrame(
                 {
                     "vec_id": pdf[id_col].to_numpy(),
@@ -961,22 +944,21 @@ def build_pq_index(
         .partitionBy("label")
         .parquet(out_path)
     )
-    meta = {
-        "kind": "ivf_pq",
-        "dim": int(cent.shape[1]),
-        "n_clusters": int(cent.shape[0]),
-        "m": int(m),
-        "ksub": int(ksub),
-        "residual": bool(residual),
-        "centroids": [[float(x) for x in row] for row in cent],
-        "codebooks": [
-            [[float(x) for x in cw] for cw in book] for book in books
-        ],
-    }
-    meta_dir = os.path.join(out_path, "_index_meta")
-    os.makedirs(meta_dir, exist_ok=True)
-    with open(os.path.join(meta_dir, "meta.json"), "w") as f:
-        json.dump(meta, f)
+    _write_index_meta(
+        out_path,
+        {
+            "kind": "ivf_pq",
+            "dim": int(cent.shape[1]),
+            "n_clusters": int(cent.shape[0]),
+            "m": int(m),
+            "ksub": int(ksub),
+            "residual": bool(residual),
+            "centroids": [[float(x) for x in row] for row in cent],
+            "codebooks": [
+                [[float(x) for x in cw] for cw in book] for book in books
+            ],
+        },
+    )
 
 
 def search_pq_index(
@@ -998,14 +980,11 @@ def search_pq_index(
     instead of dim bytes/row.
     """
     import numpy as np
-    import pandas as pd
-    from typing import Iterator
 
     cent = np.asarray(meta["centroids"], dtype=np.float32)
     books = np.asarray(meta["codebooks"], dtype=np.float32)
     q = np.asarray(qvec, dtype=np.float32)
-    ranked = np.argsort(-(cent @ q))[:probes]
-    probe_labels = [int(x) for x in ranked]
+    probe_labels = _probe_labels(cent, q, probes)
 
     hits = df.filter(F.col("label").isin(probe_labels))
     if meta.get("residual"):
@@ -1022,25 +1001,4 @@ def search_pq_index(
         screen_cols, books, qvec, max(k, rerank_mult * k),
         label_consts=consts,
     )
-    cand_ids = [int(r["vec_id"]) for r in cand.select("vec_id").collect()]
-    exact = df.filter(
-        F.col("label").isin(probe_labels) & F.col("vec_id").isin(cand_ids)
-    ).select("vec_id", "femb")
-
-    def rescore(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qq = q.astype(np.float64)
-        for pdf in it:
-            if not len(pdf):
-                continue
-            raw = b"".join(pdf["femb"].to_numpy())
-            mat = np.frombuffer(raw, dtype=np.float32).reshape(len(pdf), -1)
-            s = mat.astype(np.float64) @ qq
-            yield pd.DataFrame(
-                {"vec_id": pdf["vec_id"].to_numpy(), "score": s}
-            )
-
-    return (
-        exact.mapInPandas(rescore, schema="vec_id long, score double")
-        .orderBy(F.desc("score"), F.desc("vec_id"))
-        .limit(k)
-    )
+    return _rerank_exact(df, probe_labels, cand, q, k)

@@ -18,7 +18,8 @@ Spark-first design:
   (``np.dot(matrix, qvec)``), sharded across the cluster.
 - Top-k is ``ORDER BY score DESC LIMIT k`` which Catalyst plans as
   ``TakeOrderedAndProject``: per-partition bounded heaps + a driver merge
-  of k·num_partitions rows — the distributed form of ``np.argpartition``.
+  of k·num_partitions rows — the distributed form of the reference's
+  ``argpartition`` top-k.
   No global sort, no full shuffle.
 - Tie-break parity: the reference sorts ties by *higher index first*
   (tuple sort in ``util.py:203``); we order by (score DESC, id DESC).
@@ -26,13 +27,17 @@ Spark-first design:
 
 from __future__ import annotations
 
-import math
 from typing import Iterator, Sequence
 
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from svs_spark.functions.vector import dot, dot_literal
+from svs_spark.functions.vector import (
+    dot,
+    dot_literal,
+    stack_rows,
+    topk_ties,
+)
 
 
 def _label_values(pdf: pd.DataFrame, label_col: str):
@@ -53,6 +58,131 @@ def _label_values(pdf: pd.DataFrame, label_col: str):
             "before mining"
         )
     return s.to_numpy().astype(np.int64)
+
+
+def ranked_topk(
+    partials: DataFrame, keys: Sequence[str], id_col: str, k: int
+) -> DataFrame:
+    """The global merge after a local prune: rank each ``keys`` group
+    by (score desc, ``id_col`` desc) and keep ranks ≤ k, adding the
+    ``rank`` column. Every per-query / per-row top-k operator ends here,
+    so the locally kept boundary ties resolve in one place."""
+    from pyspark.sql.window import Window
+
+    w = Window.partitionBy(*keys).orderBy(F.desc("score"), F.desc(id_col))
+    return (
+        partials.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+    )
+
+
+def block_pairs(
+    embeddings: DataFrame, id_col: str, vec_col: str, block_size: int
+) -> DataFrame:
+    """The blocked-GEMM all-pairs layout: vectors grouped into
+    ``block_size``-id blocks (one ``collect_list`` of (vid, vec) structs
+    each), then every block pair with ``blk_a <= blk_b`` as one row
+    (blk_a, items_a, blk_b, items_b). Callers that want one task per
+    block pair repartition it themselves."""
+    blocked = embeddings.select(
+        F.col(id_col).alias("vid"),
+        F.col(vec_col).alias("vec"),
+        F.floor(F.col(id_col) / block_size).alias("blk"),
+    )
+    mats = blocked.groupBy("blk").agg(
+        F.collect_list(F.struct("vid", "vec")).alias("items")
+    )
+    a = mats.select(F.col("blk").alias("blk_a"), F.col("items").alias("items_a"))
+    b = mats.select(F.col("blk").alias("blk_b"), F.col("items").alias("items_b"))
+    return a.join(b, F.col("blk_a") <= F.col("blk_b"))
+
+
+def block_matrix(items):
+    """(ids int64, float64 matrix) of one ``block_pairs`` items cell."""
+    import numpy as np
+
+    ids = np.fromiter((x["vid"] for x in items), dtype=np.int64)
+    return ids, stack_rows([x["vec"] for x in items], np.float64)
+
+
+def _query_block_join(
+    embeddings: DataFrame,
+    query_vecs: "list[tuple[int, int | None, Sequence[float]]]",
+    k: int,
+    roles: "Sequence[tuple[str | None, str | None]]",
+    id_col: str,
+    vec_col: str,
+    label_col: str | None = None,
+    out_id: str | None = None,
+) -> DataFrame:
+    """The one-scan query-block kernel behind ``knn_join_batch``,
+    ``hard_negative_join`` and ``contrastive_pair_join``: the (d × q)
+    query matrix ships in the task closure, each Arrow batch runs ONE
+    BLAS GEMM, scores round to 6dp BEFORE any masking or selection (the
+    global window ranks by rounded score, so pruning on unrounded values
+    could drop the id-desc tie winner at the k boundary — ADVICE r1),
+    and each role keeps its local top-k with boundary ties. The exchange
+    carries ≤ len(roles)·k·q rows per batch.
+
+    ``query_vecs`` is [(query_id, query_label or None, vector), ...].
+    ``roles`` is [(tag, mask), ...]; mask None = every corpus row,
+    "other_label" = rows whose label differs from the query's,
+    "same_label" = rows sharing it, the query's own id excluded. Masked
+    entries score ``-inf`` and are never selected. A None tag (one role
+    only) leaves the ``role`` column out. Returns the unranked partials
+    (query_id, [role,] ``out_id`` (default ``id_col``), score)."""
+    import numpy as np
+
+    out_id = out_id or id_col
+    qids = [int(q) for q, _, _ in query_vecs]
+    qlabels = [int(lb) for _, lb, _ in query_vecs] if label_col else []
+    qmat_list = [[float(x) for x in v] for _, _, v in query_vecs]
+    tagged = roles[0][0] is not None
+
+    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        qmat = np.asarray(qmat_list, dtype=np.float64).T  # (d, q)
+        qid_arr = np.asarray(qids, dtype=np.int64)
+        qlab_arr = np.asarray(qlabels, dtype=np.int64)
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            ids = pdf[id_col].to_numpy()
+            if label_col:
+                labs = _label_values(pdf, label_col)
+                same = labs[:, None] == qlab_arr[None, :]
+            mat = stack_rows(pdf[vec_col].to_numpy(), np.float64)
+            base = np.round(mat @ qmat, 6)  # (batch, q) — one GEMM
+            outs = []
+            for tag, mask in roles:
+                if mask == "other_label":
+                    scores = np.where(same, -np.inf, base)
+                elif mask == "same_label":
+                    is_self = ids[:, None] == qid_arr[None, :]
+                    scores = np.where(~same | is_self, -np.inf, base)
+                else:
+                    scores = base
+                rows, cols = topk_ties(scores, k)
+                if len(rows) == 0:
+                    continue
+                out = {"query_id": qid_arr[cols]}
+                if tagged:
+                    out["role"] = tag
+                out[out_id] = ids[rows]
+                out["score"] = scores[rows, cols]
+                outs.append(pd.DataFrame(out))
+            if outs:
+                yield pd.concat(outs, ignore_index=True)
+
+    cols = [id_col, vec_col]
+    if label_col:
+        # cast plan-side: a structurally incompatible label type (array,
+        # struct, ...) fails HERE with an AnalysisException, not mid-stage
+        cols.append(F.col(label_col).cast("long").alias(label_col))
+    role_field = "role string, " if tagged else ""
+    return embeddings.select(*cols).mapInPandas(
+        score,
+        schema=f"query_id long, {role_field}{out_id} long, score double",
+    )
 
 
 def with_scores(
@@ -82,7 +212,6 @@ def with_scores_batch(
 
     q = None  # lazily materialized per executor
     qlist = [float(v) for v in query_vec]
-    out_fields = df.select(id_col, vec_col).schema.fieldNames()
     schema = f"{id_col} long, {score_col} double"
 
     def score_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -92,12 +221,11 @@ def with_scores_batch(
         for pdf in it:
             if len(pdf) == 0:
                 continue
-            mat = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
+            mat = stack_rows(pdf[vec_col].to_numpy(), np.float64)
             yield pd.DataFrame(
                 {id_col: pdf[id_col].to_numpy(), score_col: mat @ q}
             )
 
-    del out_fields
     return df.select(id_col, vec_col).mapInPandas(score_batches, schema=schema)
 
 
@@ -210,27 +338,15 @@ def block_pairwise_topk(
     """
     import numpy as np
 
-    blocked = embeddings.select(
-        F.col(id_col).alias("vid"),
-        F.col(vec_col).alias("vec"),
-        F.floor(F.col(id_col) / block_size).alias("blk"),
-    )
-    mats = blocked.groupBy("blk").agg(
-        F.collect_list(F.struct("vid", "vec")).alias("items")
-    )
-    a = mats.select(F.col("blk").alias("blk_a"), F.col("items").alias("items_a"))
-    b = mats.select(F.col("blk").alias("blk_b"), F.col("items").alias("items_b"))
-    pairs = a.join(b, F.col("blk_a") <= F.col("blk_b")).repartition(
+    pairs = block_pairs(embeddings, id_col, vec_col, block_size).repartition(
         F.col("blk_a"), F.col("blk_b")
     )
 
     def score_blocks(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             for items_a, items_b in zip(pdf["items_a"], pdf["items_b"]):
-                ia = np.fromiter((x["vid"] for x in items_a), dtype=np.int64)
-                ma = np.vstack([x["vec"] for x in items_a]).astype(np.float64)
-                ib = np.fromiter((x["vid"] for x in items_b), dtype=np.int64)
-                mb = np.vstack([x["vec"] for x in items_b]).astype(np.float64)
+                ia, ma = block_matrix(items_a)
+                ib, mb = block_matrix(items_b)
                 gram = ma @ mb.T  # one BLAS GEMM per block pair
                 ii, jj = np.nonzero(ia[:, None] < ib[None, :])
                 if len(ii) == 0:
@@ -276,51 +392,15 @@ def knn_join_batch(
     style point queries are explicitly a non-goal — BASELINE.json).
     Exact results: equal to per-query retrieve_topk (tested).
     """
-    import numpy as np
-
-    qids = [int(q) for q, _ in query_vecs]
-    qmat_list = [[float(x) for x in v] for _, v in query_vecs]
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qmat = np.asarray(qmat_list, dtype=np.float64).T  # (d, q)
-        qid_arr = np.asarray(qids, dtype=np.int64)
-        nq = qmat.shape[1]
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids = pdf[id_col].to_numpy()
-            mat = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-            # round BEFORE local selection: the global window ranks by
-            # rounded score, so pruning on unrounded values could drop
-            # the id-desc tie winner at the k boundary (ADVICE r1)
-            scores = np.round(mat @ qmat, 6)  # (batch, q) — one GEMM
-            take = min(k, len(ids))
-            part = np.argpartition(-scores, take - 1, axis=0)[:take]
-            # keep EVERY row tied with the kth score (argpartition's tie
-            # order is arbitrary); the global window resolves ties by
-            # id desc exactly like retrieve_topk
-            kth = np.take_along_axis(scores, part, axis=0).min(axis=0)
-            rows, cols = np.nonzero(scores >= kth[None, :])
-            yield pd.DataFrame(
-                {
-                    "query_id": qid_arr[cols],
-                    id_col: ids[rows],
-                    "score": scores[rows, cols],
-                }
-            )
-
-    partials = embeddings.select(id_col, vec_col).mapInPandas(
-        score, schema=f"query_id long, {id_col} long, score double"
+    partials = _query_block_join(
+        embeddings,
+        [(q, None, v) for q, v in query_vecs],
+        k,
+        [(None, None)],
+        id_col,
+        vec_col,
     )
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.desc(id_col)
-    )
-    return (
-        partials.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return ranked_topk(partials, ["query_id"], id_col, k)
 
 
 def knn_join_multiwidth(
@@ -375,18 +455,15 @@ def knn_join_multiwidth(
             if len(pdf) == 0:
                 continue
             ids = pdf[id_col].to_numpy()
-            mat = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
+            mat = stack_rows(pdf[vec_col].to_numpy(), np.float64)
             acc = np.zeros((len(ids), qmat.shape[1]), dtype=np.float64)
             outs = []
             prev = 0
-            take = min(k, len(ids))
             for w in ws:
                 acc += mat[:, prev:w] @ qmat[prev:w, :]
                 prev = w
                 scores = np.round(acc, 6)
-                part = np.argpartition(-scores, take - 1, axis=0)[:take]
-                kth = np.take_along_axis(scores, part, axis=0).min(axis=0)
-                rows, cols = np.nonzero(scores >= kth[None, :])
+                rows, cols = topk_ties(scores, k)
                 outs.append(
                     pd.DataFrame(
                         {
@@ -403,15 +480,7 @@ def knn_join_multiwidth(
         score,
         schema=f"dims int, query_id long, {id_col} long, score double",
     )
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("dims", "query_id").orderBy(
-        F.desc("score"), F.desc(id_col)
-    )
-    return (
-        partials.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return ranked_topk(partials, ["dims", "query_id"], id_col, k)
 
 
 def hard_negative_join(
@@ -435,9 +504,8 @@ def hard_negative_join(
     BEFORE local selection, so the per-batch prune can never starve a
     query whose top scores are all same-label (filtering AFTER a plain
     top-k would). The query row itself shares its own label, so it is
-    excluded automatically. Kept separate from knn_join_batch on
-    purpose: that kernel backs a driver-green query and stays
-    byte-identical.
+    excluded automatically. The kernel is ``knn_join_batch``'s own
+    (``_query_block_join``) with the "other_label" mask.
 
     ``query_vecs`` is [(query_id, query_label, vector), ...] — a
     bounded serving-style literal batch, like knn_join_batch's.
@@ -446,58 +514,16 @@ def hard_negative_join(
     cast to long on the DataFrame side (incompatible types fail at
     plan time) and nulls raise a clear ValueError in the kernel.
     """
-    import numpy as np
-
-    qids = [int(q) for q, _, _ in query_vecs]
-    qlabels = [int(lb) for _, lb, _ in query_vecs]
-    qmat_list = [[float(x) for x in v] for _, _, v in query_vecs]
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qmat = np.asarray(qmat_list, dtype=np.float64).T  # (d, q)
-        qid_arr = np.asarray(qids, dtype=np.int64)
-        qlab_arr = np.asarray(qlabels, dtype=np.int64)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids = pdf[id_col].to_numpy()
-            labs = _label_values(pdf, label_col)
-            mat = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-            # round BEFORE masking/selection: the global window ranks by
-            # rounded score, so pruning on unrounded values could drop
-            # the id-desc tie winner at the k boundary (same rule as
-            # knn_join_batch)
-            scores = np.round(mat @ qmat, 6)  # (batch, q)
-            scores[labs[:, None] == qlab_arr[None, :]] = -np.inf
-            take = min(k, len(ids))
-            part = np.argpartition(-scores, take - 1, axis=0)[:take]
-            kth = np.take_along_axis(scores, part, axis=0).min(axis=0)
-            rows, cols = np.nonzero(
-                (scores >= kth[None, :]) & np.isfinite(scores)
-            )
-            if len(rows) == 0:
-                continue
-            yield pd.DataFrame(
-                {
-                    "query_id": qid_arr[cols],
-                    id_col: ids[rows],
-                    "score": scores[rows, cols],
-                }
-            )
-
-    # cast plan-side: a structurally incompatible label type (array,
-    # struct, ...) fails HERE with an AnalysisException, not mid-stage
-    partials = embeddings.select(
-        id_col, vec_col, F.col(label_col).cast("long").alias(label_col)
-    ).mapInPandas(score, schema=f"query_id long, {id_col} long, score double")
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.desc(id_col)
+    partials = _query_block_join(
+        embeddings,
+        query_vecs,
+        k,
+        [(None, "other_label")],
+        id_col,
+        vec_col,
+        label_col,
     )
-    return (
-        partials.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return ranked_topk(partials, ["query_id"], id_col, k)
 
 
 def self_knn(
@@ -534,17 +560,7 @@ def self_knn(
     """
     import numpy as np
 
-    blocked = embeddings.select(
-        F.col(id_col).alias("vid"),
-        F.col(vec_col).alias("vec"),
-        F.floor(F.col(id_col) / block_size).alias("blk"),
-    )
-    mats = blocked.groupBy("blk").agg(
-        F.collect_list(F.struct("vid", "vec")).alias("items")
-    )
-    a = mats.select(F.col("blk").alias("blk_a"), F.col("items").alias("items_a"))
-    b = mats.select(F.col("blk").alias("blk_b"), F.col("items").alias("items_b"))
-    pairs = a.join(b, F.col("blk_a") <= F.col("blk_b")).repartition(
+    pairs = block_pairs(embeddings, id_col, vec_col, block_size).repartition(
         F.col("blk_a"), F.col("blk_b")
     )
 
@@ -553,21 +569,14 @@ def self_knn(
     ) -> "tuple[np.ndarray, np.ndarray, np.ndarray]":
         # per-row top-k of gram (rows = queries, cols = candidates),
         # self matches already masked to -inf
-        take = min(k, gram.shape[1])
-        part = np.argpartition(-gram, take - 1, axis=1)[:, :take]
-        kth = np.take_along_axis(gram, part, axis=1).min(axis=1)
-        rows, cols = np.nonzero(gram >= kth[:, None])
+        rows, cols = topk_ties(gram, k, axis=1)
         return ids_q[rows], ids_c[cols], gram[rows, cols]
 
     def score_blocks(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
         for pdf in it:
             for items_a, items_b in zip(pdf["items_a"], pdf["items_b"]):
-                ia = np.fromiter((x["vid"] for x in items_a), dtype=np.int64)
-                ma = np.vstack([x["vec"] for x in items_a]).astype(np.float64)
-                ib = np.fromiter((x["vid"] for x in items_b), dtype=np.int64)
-                mb = np.vstack([x["vec"] for x in items_b]).astype(np.float64)
+                ia, ma = block_matrix(items_a)
+                ib, mb = block_matrix(items_b)
                 gram = np.round(ma @ mb.T, round_decimals)  # one BLAS GEMM
                 gram[ia[:, None] == ib[None, :]] = -np.inf  # mask self
                 for q, c, s in (
@@ -576,22 +585,15 @@ def self_knn(
                     # (bi == bj would emit every candidate twice)
                     *([local_topk(ib, ia, gram.T)] if ia[0] != ib[0] else []),
                 ):
-                    ok = np.isfinite(s)
-                    if ok.any():
+                    if len(s):
                         yield pd.DataFrame(
-                            {"vec_id": q[ok], "nn_id": c[ok], "score": s[ok]}
+                            {"vec_id": q, "nn_id": c, "score": s}
                         )
 
     partials = pairs.mapInPandas(
         score_blocks, schema="vec_id long, nn_id long, score double"
     )
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("vec_id").orderBy(F.desc("score"), F.desc("nn_id"))
-    return (
-        partials.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return ranked_topk(partials, ["vec_id"], "nn_id", k)
 
 
 def centroid_assign(
@@ -633,7 +635,7 @@ def centroid_assign(
             if len(pdf) == 0:
                 continue
             ids = pdf[id_col].to_numpy()
-            mat = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
+            mat = stack_rows(pdf[vec_col].to_numpy(), np.float64)
             scores = np.round(mat @ cmat, round_decimals)  # one GEMM
             best = np.argmax(scores, axis=1)  # first max = lowest cid
             out = {
@@ -742,69 +744,16 @@ def contrastive_pair_join(
     ``label_col`` follows the same non-null integer contract as
     ``hard_negative_join``.
     """
-    import numpy as np
-
-    qids = [int(q) for q, _, _ in query_vecs]
-    qlabels = [int(lb) for _, lb, _ in query_vecs]
-    qmat_list = [[float(x) for x in v] for _, _, v in query_vecs]
-
-    def _role_rows(scores, ids, qid_arr, role, k):
-        # scores already masked (-inf = ineligible for this role)
-        take = min(k, scores.shape[0])
-        part = np.argpartition(-scores, take - 1, axis=0)[:take]
-        kth = np.take_along_axis(scores, part, axis=0).min(axis=0)
-        rows, cols = np.nonzero(
-            (scores >= kth[None, :]) & np.isfinite(scores)
-        )
-        return pd.DataFrame(
-            {
-                "query_id": qid_arr[cols],
-                "role": role,
-                "vid": ids[rows],
-                "score": scores[rows, cols],
-            }
-        )
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qmat = np.asarray(qmat_list, dtype=np.float64).T  # (d, q)
-        qid_arr = np.asarray(qids, dtype=np.int64)
-        qlab_arr = np.asarray(qlabels, dtype=np.int64)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids = pdf[id_col].to_numpy()
-            labs = _label_values(pdf, label_col)
-            mat = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-            base = np.round(mat @ qmat, 6)  # (batch, q)
-            same = labs[:, None] == qlab_arr[None, :]
-            self_mask = ids[:, None] == qid_arr[None, :]
-            pos = base.copy()
-            pos[~same | self_mask] = -np.inf
-            neg = base.copy()
-            neg[same] = -np.inf
-            out = [
-                _role_rows(pos, ids, qid_arr, "pos", k),
-                _role_rows(neg, ids, qid_arr, "neg", k),
-            ]
-            out = [o for o in out if len(o)]
-            if out:
-                yield pd.concat(out, ignore_index=True)
-
-    # same plan-side cast rule as hard_negative_join (see comment there)
-    partials = embeddings.select(
-        id_col, vec_col, F.col(label_col).cast("long").alias(label_col)
-    ).mapInPandas(
-        score, schema="query_id long, role string, vid long, score double"
+    partials = _query_block_join(
+        embeddings,
+        query_vecs,
+        k,
+        [("pos", "same_label"), ("neg", "other_label")],
+        id_col,
+        vec_col,
+        label_col,
+        out_id="vid",
     )
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("query_id", "role").orderBy(
-        F.desc("score"), F.desc("vid")
-    )
-    return (
-        partials.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "role", F.col("vid").alias(id_col), "score", "rank"
-        )
+    return ranked_topk(partials, ["query_id", "role"], "vid", k).select(
+        "query_id", "role", F.col("vid").alias(id_col), "score", "rank"
     )

@@ -158,48 +158,6 @@ def register(
 # identical local gate in tests/test_oracle_parity.py and
 # tools/parity_debug.py (exact values, no rounding) every round.
 
-# Queries whose IMPLEMENTATION was rewritten after their last green
-# driver row, mapped to the first round whose artifact exercises the
-# NEW code: green rows from EARLIER rounds don't count for them, so
-# they sort back into the checked-first window until a round ≥ the
-# mapped number re-verifies them (then the entry is inert and can be
-# dropped). (Round 3: simhash pair dedup rewritten to the first-match
-# filter; asof_last_purchase rerouted through the generalized
-# asof_join.)
-# (round 3's four rewrites — simhash_pairs/simhash48_pairs/
-# asof_last_purchase/minhash_lsh_dedup — all re-verified green in
-# CORRECTNESS_r03, so their entries were dropped. Round 4 rewrites that
-# already had a green row map to 4 here; rewrites of never-checked
-# queries need no entry.)
-_FORCE_RECHECK: dict[str, int] = {
-    # (round 4's hypertable_rollup / kb_delete_cascade entries
-    # re-verified green in CORRECTNESS_r04 and were dropped.)
-    # round 5: per-document size joins switched from forced broadcast
-    # to shuffle joins (scale fix) — earlier green rows verified the
-    # broadcast plan
-    "ngram_jaccard_pairs": 5,
-    "dedup_clusters": 5,
-    # round 5: persist dropped in favor of ReusedExchange on the shared
-    # aggregate subplan — earlier green rows verified the persisted plan
-    "tpch_q15ish": 5,
-    "tpch_q11ish": 5,
-    # (round 8's four rewrites — domain_reweighting /
-    # unigram_logprob_quality / hard_negative_mining /
-    # contrastive_triplets — all re-verified green in CORRECTNESS_r08,
-    # so their entries were dropped.)
-    # round 10: Arrow-kernel vectorization (winnow / embed hash —
-    # bit-identical integers, pinned by tests) and the bounded-input
-    # multimodal queries dropping the corpus spread (plan change:
-    # no repartition below the kernel) — earlier green rows verified
-    # the old kernels/plans
-    "winnow_pairs": 10,
-    "embed_and_retrieve": 10,
-    "multimodal_features": 10,
-    "multimodal_frame_stats": 10,
-    "multimodal_resize_meta": 10,
-    "audio_window_energy": 10,
-}
-
 
 def _driver_green() -> frozenset[str]:
     import glob
@@ -229,11 +187,7 @@ def _driver_green() -> frozenset[str]:
             )
             if name not in latest or rnd >= latest[name][0]:
                 latest[name] = (rnd, ok)
-    return frozenset(
-        name
-        for name, (rnd, ok) in latest.items()
-        if ok and rnd >= _FORCE_RECHECK.get(name, 0)
-    )
+    return frozenset(name for name, (_, ok) in latest.items() if ok)
 
 
 def _driver_order(d: dict) -> dict:
@@ -350,8 +304,6 @@ def load(
     # explicitly where it pays.
     if spread is None:
         spread = table == "documents"
-    if os.environ.get("SVS_NO_SPREAD"):  # measurement A/B control
-        spread = False
     if spread and stamp[1] > 0:
         try:
             max_split = int(

@@ -622,3 +622,57 @@ class TestIvfLocalReaderEmptyCell:
             got = reader.search(q, 5, probes=8)
             assert len(got) == 5
             assert len(reader._cache) <= 3
+
+
+class TestBoundaryTies:
+    """Five identical copies of the query (ids 100–104) tie for the top
+    score in one cluster: every index search returns the documented
+    (score desc, vec_id desc) order, so k=2 gives (104, 103). A local
+    prune that keeps only k of the tied rows returns whichever two it
+    happened to pick."""
+
+    @pytest.fixture(scope="class")
+    def tied(self, spark, tmp_path_factory):
+        import numpy as np
+
+        rng = np.random.default_rng(5)
+        dim = 16
+        q = rng.standard_normal(dim).astype(np.float32)
+        q /= np.linalg.norm(q)
+        mat = rng.standard_normal((40, dim)).astype(np.float32)
+        mat /= np.linalg.norm(mat, axis=1, keepdims=True)
+        full = np.vstack([mat, np.repeat(q[None, :], 5, axis=0)])
+        ids = list(range(40)) + list(range(100, 105))
+        df = spark.createDataFrame(
+            [(i, [float(x) for x in v]) for i, v in zip(ids, full)],
+            "vec_id long, embedding array<float>",
+        )
+        cent = q[None, :]  # one cluster holds every vector
+        root = tmp_path_factory.mktemp("ties")
+        ivf, pq = str(root / "ivf"), str(root / "pq")
+        IX.build_ivf_index(df, ivf, cent)
+        books = IX.train_pq_codebooks_residual(full, cent, m=4, ksub=8, iters=4)
+        IX.build_pq_index(df, pq, cent, books)
+        return [float(x) for x in q], ivf, pq
+
+    @pytest.mark.parametrize("precision", ["float32", "int8", "int8_rerank"])
+    def test_search_ivf_index(self, spark, tied, precision):
+        q, ivf, _ = tied
+        res = IX.search_ivf_index(
+            spark.read.parquet(ivf), IX.read_index_meta(ivf), q, 2,
+            probes=1, precision=precision,
+        )
+        assert [r["vec_id"] for r in res.collect()] == [104, 103]
+
+    def test_search_pq_index(self, spark, tied):
+        q, _, pq = tied
+        res = IX.search_pq_index(
+            spark.read.parquet(pq), IX.read_index_meta(pq), q, 2, probes=1
+        )
+        assert [r["vec_id"] for r in res.collect()] == [104, 103]
+
+    @pytest.mark.parametrize("precision", ["float32", "int8"])
+    def test_local_reader(self, tied, precision):
+        q, ivf, _ = tied
+        got = IX.IvfLocalReader(ivf, precision=precision).search(q, 2, probes=1)
+        assert [i for i, _ in got] == [104, 103]

@@ -298,6 +298,54 @@ def test_int8_quantization_error_bound(vec):
         assert abs(qi / 127.0 - c) <= 1 / 254 + 1e-12
 
 
+@given(st.data())
+@settings(max_examples=300, deadline=None)
+def test_topk_ties_then_global_order_equals_full_lexsort(data):
+    """The local top-k selection keeps every entry tied with the k-th
+    and drops the -inf mask, so ranking its survivors by (score desc,
+    id desc) gives the same top k as ranking every unmasked entry —
+    along either axis, for k below, at and above the candidate count."""
+    import numpy as np
+
+    from svs_spark.functions.vector import topk_ties
+
+    n = data.draw(st.integers(2, 12), label="n")
+    groups = data.draw(st.integers(1, 4), label="groups")
+    axis = data.draw(st.sampled_from([0, 1]), label="axis")
+    k = data.draw(st.sampled_from([1, n - 1, n, n + 3]), label="k")
+    # a few repeated values inject exact ties; -inf is the mask value
+    cell = st.one_of(
+        st.sampled_from([0.5, -0.25, -math.inf]),
+        st.floats(min_value=-1.0, max_value=1.0, allow_nan=False),
+    )
+    vals = data.draw(
+        st.lists(cell, min_size=n * groups, max_size=n * groups),
+        label="scores",
+    )
+    ids = np.asarray(
+        data.draw(st.permutations(range(100, 100 + n)), label="ids"),
+        dtype=np.int64,
+    )
+    scores = np.asarray(vals, dtype=np.float64).reshape(n, groups)
+    if axis == 1:
+        scores = np.ascontiguousarray(scores.T)
+
+    sel = topk_ties(scores, k, axis=axis)
+    for g in range(groups):
+        if axis == 0:
+            col, picked = scores[:, g], sel[0][sel[1] == g]
+        else:
+            col, picked = scores[g, :], sel[1][sel[0] == g]
+
+        def ranked(cands):
+            cands = np.asarray(cands, dtype=np.intp)
+            order = np.lexsort((-ids[cands], -col[cands]))
+            return [int(i) for i in ids[cands[order]][:k]]
+
+        assert np.all(col[picked] > -np.inf)
+        assert ranked(picked) == ranked(np.nonzero(col > -np.inf)[0])
+
+
 @given(
     st.lists(st.integers(min_value=1, max_value=5000), min_size=1, max_size=60),
     st.integers(min_value=64, max_value=4096),
