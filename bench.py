@@ -6,8 +6,10 @@ JSON line: {"metric": ..., "value": N, "unit": "sec", "queries": {...},
 Methodology mirrors the reference's "warm" numbers (BASELINE.md): the
 embeddings table is persisted + materialized before timing (the reference
 times retrieval against its cached RAM matrix, README.md:137 footnote),
-then each query is executed once and timed end-to-end (plan + execute +
-collect to driver).
+then each query is timed end-to-end, best of 2, split into build
+(``fn(spark, sf)``), plan (``executedPlan()``) and collect (execute +
+transfer to the driver; the collect reuses the plan). The parts of the
+best run and its container CPU-seconds go to BENCH_FULL.json per query.
 """
 
 from __future__ import annotations
@@ -266,6 +268,32 @@ def _calibration_spin_allcore(workers: int = 16) -> float:
     return round(time.perf_counter() - t0, 4)
 
 
+_CPUACCT = "/sys/fs/cgroup/cpuacct/cpuacct.usage"  # cgroup v1, ns
+_CPU_STAT = "/sys/fs/cgroup/cpu.stat"  # cgroup v2, usage_usec line
+
+
+def cpu_ns() -> int | None:
+    """Container CPU time in ns: cgroup v1, then v2, else None.
+
+    Driver, JVM and Python workers all count, and hypervisor steal does
+    not, so CPU-seconds stay comparable across host throttle states
+    where wall times do not."""
+    try:
+        with open(_CPUACCT) as f:
+            return int(f.read())
+    except (OSError, ValueError):
+        pass
+    try:
+        with open(_CPU_STAT) as f:
+            for line in f:
+                key, _, val = line.partition(" ")
+                if key == "usage_usec":
+                    return int(val) * 1000
+    except (OSError, ValueError):
+        pass
+    return None
+
+
 def _host_provenance(calib: float | None = None) -> dict:
     la1, la5, la15 = os.getloadavg()
     d = {"loadavg": [round(la1, 2), round(la5, 2), round(la15, 2)]}
@@ -282,7 +310,7 @@ def main() -> None:
 
     host_start = _host_provenance(_calibration_spin())
 
-    from svs_spark.session import get_session
+    from svs_spark.session import driver_java_opts, get_session
 
     # Right-size shuffle parallelism to the input volume (~64 MB per
     # partition, min 8): at sf0.1 that's 8 partitions — a fixed 32 wastes
@@ -296,27 +324,14 @@ def main() -> None:
     shuffle_parts = max(8, min(1024, total_bytes // (64 * 1024 * 1024)))
 
     # -Xlog:disable: JVM unified-logging warnings (GC etc.) print to
-    # stdout and would corrupt the one-line JSON contract
+    # stdout and would corrupt the one-line JSON contract; the rest are
+    # the session's own driver flags (the JIT-pool cap, session.py)
     spark = get_session(
         "svs_spark_bench",
         shuffle_partitions=int(shuffle_parts),
-        # -XX:CICompilerCount=4: 148 distinct queries generate ~10
-        # codegen units each; the default tiered-JIT pool on a 32-cpu
-        # host runs ~12 background compiler threads that compete with
-        # the 32 executor threads for the whole run (measured: 433
-        # CPU-s of accumulated JIT time by minute 9, with
-        # not-yet-compiled generated code running INTERPRETED — the
-        # 5-20x mid-run inflation blocks r9 attributed to host noise).
-        # Bounding the pool to 4 threads removed the inflation block:
-        # 193.8/127.6 s baseline runs -> 105.2 s, identical plans.
-        # C1-only (TieredStopAtLevel=1) was also measured and REJECTED
-        # (185.6 s — steady-state code too slow). Scale note: this is a
-        # DRIVER-JVM setting; on a real cluster the driver runs no
-        # tasks and 4 compiler threads are plenty, so the flag is not a
-        # local-mode-only tune. Env-overridable for A/B.
         extra_conf={
             "spark.driver.extraJavaOptions": "-Xlog:disable "
-            + os.environ.get("SVS_BENCH_JVM_FLAGS", "-XX:CICompilerCount=4")
+            + driver_java_opts()
         },
     )
     spark.sparkContext.setLogLevel("ERROR")
@@ -341,16 +356,34 @@ def main() -> None:
         registry[n](spark, sf_dir).count()  # warm-up pass (plan + JIT)
 
     # best of 2 timed runs per query: one-off scheduler hiccups and GC
-    # pauses otherwise dominate the sub-second entries
+    # pauses otherwise dominate the sub-second entries. The three parts
+    # of a run sum to its timed total.
     timings: dict[str, float] = {}
+    layers: dict[str, dict] = {}
     for n in names:
         best = float("inf")
         for _ in range(2):
+            c0 = cpu_ns()
             t0 = time.perf_counter()
             df = registry[n](spark, sf_dir)
+            t1 = time.perf_counter()
+            df._jdf.queryExecution().executedPlan()
+            t2 = time.perf_counter()
             rows = df.collect()
-            best = min(best, time.perf_counter() - t0)
+            t3 = time.perf_counter()
+            c1 = cpu_ns()
             assert rows is not None
+            if t3 - t0 < best:
+                best = t3 - t0
+                layers[n] = {
+                    "build": round(t1 - t0, 4),
+                    "plan": round(t2 - t1, 4),
+                    "collect": round(t3 - t2, 4),
+                    "cpu_s": (
+                        None if c0 is None or c1 is None
+                        else round((c1 - c0) / 1e9, 3)
+                    ),
+                }
         timings[n] = round(best, 4)
 
     from svs_spark.queries import release_caches
@@ -379,6 +412,7 @@ def main() -> None:
                 "value": total,
                 "unit": "sec",
                 "queries": timings,
+                "layers": layers,
                 "n_queries": len(timings),
                 "host": host,
                 "sf": sf,

@@ -32,22 +32,11 @@ from svs_spark.functions.text import (
 )
 from svs_spark.functions.vector import stack_rows
 from svs_spark.operators.similarity import block_matrix, block_pairs
+from svs_spark.operators.sketch import _splitmix64
 
 MINHASH_PRIME = 2_147_483_647  # 2^31 - 1
 SIMHASH_BITS = 32
 SIMHASH_MOD = 1_000_003
-
-
-_MASK64 = (1 << 64) - 1
-
-
-def _splitmix64(x: int) -> int:
-    """splitmix64 finalizer (public-domain PRNG constants) — decorrelates
-    consecutive seeds into independent-looking 64-bit values."""
-    z = (x + 0x9E3779B97F4A7C15) & _MASK64
-    z = ((z ^ (z >> 30)) * 0xBF58476D1CE4E5B9) & _MASK64
-    z = ((z ^ (z >> 27)) * 0x94D049BB133111EB) & _MASK64
-    return z ^ (z >> 31)
 
 
 def minhash_coeffs(num_hashes: int) -> list[tuple[int, int]]:

@@ -54,7 +54,9 @@ _MASK = (1 << 64) - 1
 
 
 def _splitmix64(x: int) -> int:
-    """Deterministic 64-bit mixer (public-domain splitmix64 constants)."""
+    """splitmix64 finalizer (public-domain PRNG constants) — decorrelates
+    consecutive seeds into independent-looking 64-bit values. Seeds the
+    MinHash coefficients (dedup.minhash_coeffs) and the KLL coin flips."""
     x = (x + 0x9E3779B97F4A7C15) & _MASK
     x = ((x ^ (x >> 30)) * 0xBF58476D1CE4E5B9) & _MASK
     x = ((x ^ (x >> 27)) * 0x94D049BB133111EB) & _MASK

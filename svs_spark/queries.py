@@ -155,8 +155,9 @@ def register(
 # union of rounds covers every registered query. The green set is read
 # from the committed CORRECTNESS_r*.json artifacts (self-maintaining
 # round over round); every registered query also runs under the
-# identical local gate in tests/test_oracle_parity.py and
-# tools/parity_debug.py (exact values, no rounding) every round.
+# identical local gate in tests/test_oracle_parity.py (rows, types,
+# plan anti-patterns and non-emptiness on one build) and
+# tools/parity_debug.py (the same checks, exact values) every round.
 
 
 def _driver_green() -> frozenset[str]:

@@ -19,6 +19,24 @@ import os
 from pyspark.sql import SparkSession
 
 
+def driver_java_opts() -> str:
+    """The driver JVM flags every session starts with.
+
+    Bound the tiered-JIT compiler pool: a long-lived driver JVM that
+    plans/compiles hundreds of DISTINCT generated stages (the registry
+    is 218 queries) otherwise runs ~cores/3 background compiler threads
+    that compete with executor threads in local mode — measured round
+    10: 433 CPU-s of accumulated JIT time 9 minutes into a bench pass,
+    with not-yet-compiled codegen running interpreted (5-20x per-query
+    inflation). Four threads keep compile latency low without starving
+    execution; on a real cluster the driver runs no tasks, so the flag
+    is harmless there (executor JVMs are not touched). C1-only
+    (TieredStopAtLevel=1) was also measured and rejected: steady-state
+    code too slow. Override via ``SVS_DRIVER_JAVA_OPTS`` or extra_conf.
+    """
+    return os.environ.get("SVS_DRIVER_JAVA_OPTS", "-XX:CICompilerCount=4")
+
+
 def configure_builder(
     builder: SparkSession.Builder,
     shuffle_partitions: int | None = None,
@@ -45,21 +63,7 @@ def configure_builder(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.maxResultSize", "4g")
-        # Bound the tiered-JIT compiler pool: a long-lived driver JVM
-        # that plans/compiles hundreds of DISTINCT generated stages
-        # (the registry is 218 queries) otherwise runs ~cores/3
-        # background compiler threads that compete with executor
-        # threads in local mode — measured round 10: 433 CPU-s of
-        # accumulated JIT time 9 minutes into a bench pass, with
-        # not-yet-compiled codegen running interpreted (5-20x per-query
-        # inflation). Four threads keep compile latency low without
-        # starving execution; on a real cluster the driver runs no
-        # tasks, so the flag is harmless there (executor JVMs are not
-        # touched). Callers can override via extra_conf or env.
-        .config(
-            "spark.driver.extraJavaOptions",
-            os.environ.get("SVS_DRIVER_JAVA_OPTS", "-XX:CICompilerCount=4"),
-        )
+        .config("spark.driver.extraJavaOptions", driver_java_opts())
     )
 
 

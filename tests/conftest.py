@@ -8,11 +8,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 SF_DIR = os.environ.get("SVS_TEST_SF_DIR", "/root/testdata/sf0.001")
 SF_DIR_ORACLE = os.environ.get("SVS_ORACLE_SF_DIR", "/root/testdata/sf0.01")
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
-
 
 @pytest.fixture(scope="session")
 def spark():
@@ -27,12 +22,8 @@ def spark():
 
 @pytest.fixture(scope="session")
 def duck():
-    import duckdb
+    from tools.parity_debug import duck_views
 
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR_ORACLE}/{t}.parquet'"
-        )
+    con = duck_views(SF_DIR_ORACLE)
     yield con
     con.close()

@@ -1,4 +1,4 @@
-"""tools/cpu_profile.py reads container CPU time from cgroup v1, falls
+"""bench.cpu_ns reads container CPU time from cgroup v1, falls
 back to cgroup v2, and reports None when neither file is readable."""
 
 from __future__ import annotations
@@ -10,7 +10,7 @@ import pytest
 
 _TOOL = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "tools", "cpu_profile.py",
+    "bench.py",
 )
 
 

@@ -1,39 +1,28 @@
 """Replicates the driver's correctness gate locally: every queries() entry
-with an oracle is run on Spark AND DuckDB at sf0.01 and compared on
-row count, column names, and order-insensitive values.
+is built once at sf0.01 and every per-query check runs on that one
+DataFrame (tools/parity_debug.check):
+
+- plan anti-patterns, from the executed plan the collect then reuses;
+- row count, column names and order-insensitive values (floats at 6
+  places) against the DuckDB oracle;
+- output types, from the ``.types`` of the same DuckDB relation;
+- green-on-empty: an empty sf0.01 result must be non-empty at sf0.1
+  or be credited to a planted-truth pytest in PLANTED_TRUTH.
+
+A registry-wide check belongs here as one more per-query assertion,
+never as a separate sweep that builds every query again.
 """
 
 from __future__ import annotations
 
-import math
+import os
 
 import pytest
 
 from tests.conftest import SF_DIR_ORACLE
+from tools.parity_debug import PLANTED_TRUTH, check
 
-
-def _normalize(val):
-    if isinstance(val, float):
-        if math.isnan(val):
-            return "NaN"
-        return round(val, 6)
-    return val
-
-
-def _spark_rows(df):
-    cols = sorted(df.columns)
-    rows = [tuple(_normalize(r[c]) for c in cols) for r in df.collect()]
-    return cols, sorted(rows, key=repr)
-
-
-def _duck_rows(con, sql):
-    res = con.sql(sql)
-    cols = res.columns
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    rows = [
-        tuple(_normalize(row[i]) for i in order) for row in res.fetchall()
-    ]
-    return sorted(cols), sorted(rows, key=repr)
+SF01_DIR = os.path.join(os.path.dirname(SF_DIR_ORACLE), "sf0.1")
 
 
 def _all_pairs():
@@ -48,18 +37,13 @@ def _all_pairs():
     "name,fn,oracle", _all_pairs(), ids=[p[0] for p in _all_pairs()]
 )
 def test_oracle_parity(spark, duck, name, fn, oracle):
-    df = fn(spark, SF_DIR_ORACLE)
-    s_cols, s_rows = _spark_rows(df)
-    assert len(s_rows) >= 0
-    if oracle is None:
-        assert len(s_rows) > 0, f"{name}: rows-only query returned 0 rows"
-        return
-    d_cols, d_rows = _duck_rows(duck, oracle)
-    assert s_cols == d_cols, f"{name}: column mismatch {s_cols} vs {d_cols}"
-    assert len(s_rows) == len(d_rows), (
-        f"{name}: row count {len(s_rows)} vs {len(d_rows)}"
-    )
-    mismatches = [
-        (a, b) for a, b in zip(s_rows, d_rows) if a != b
-    ]
-    assert not mismatches, f"{name}: first mismatches {mismatches[:5]}"
+    rel = None if oracle is None else duck.sql(oracle)
+    rows, findings = check(name, fn(spark, SF_DIR_ORACLE), rel, digits=6)
+    if not rows:
+        if oracle is None:
+            findings.append("EMPTY rows-only query returned 0 rows")
+        elif name not in PLANTED_TRUTH and not fn(spark, SF01_DIR).head(1):
+            findings.append(
+                "EMPTY at sf0.01 and sf0.1 with no planted-truth pytest"
+            )
+    assert not findings, f"{name}: " + "; ".join(findings)

@@ -1,103 +1,31 @@
-"""Registry-wide audit gates, wrapping the standalone tools so drift is
-caught by `pytest` instead of a manual run:
+"""The registry-wide gates run per query inside
+tests/test_oracle_parity.py (tools/parity_debug.check). What is left
+here keeps their allowlists live and proves, on Spark alone, that the
+shared checks still catch the faults they exist for:
 
-- TYPE parity: every oracle output column's DuckDB type must map to the
-  Spark type exactly (a HUGEINT from sum(INTEGER) hash-mismatches in
-  the driver even when values are equal — caught live in round 5 on
-  temperature_resample's id_checksum).
-- PLAN anti-patterns: no CartesianProduct / BroadcastNestedLoopJoin
-  outside the documented 1-row-scalar-cross allowlist, and no
-  row-at-a-time Python UDF (BatchEvalPython) anywhere.
-- GREEN-ON-EMPTY: every registered query must return >= 1 row at
-  sf0.1 OR name the planted-truth pytest that exercises it on a
-  non-empty corpus (the bag-of-words / source_dup_overlap class of
-  silent pass, round-5 verdict ask #7).
+- PLANTED_TRUTH names a pytest that really exists;
+- every ONE_ROW_CROSS_OK entry is a registered query (a per-query
+  entry whose plan has no nested-loop/cross join is itself a plan
+  finding, so only a dangling name could outlive its query);
+- an unhinted crossJoin and a row-at-a-time UDF are plan findings, and
+  a DuckDB ``sum(INTEGER)`` (HUGEINT) against a Spark bigint is a type
+  finding.
 """
 
 from __future__ import annotations
 
 import os
-import sys
 
 import duckdb
-import pytest
+from pyspark.sql import functions as F
 
-sys.path.insert(
-    0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools")
+from tools.parity_debug import (
+    ONE_ROW_CROSS_OK,
+    PLANTED_TRUTH,
+    executed_plan,
+    plan_findings,
+    type_findings,
 )
-
-from tests.conftest import SF_DIR
-from svs_spark.queries import oracle_sql, queries
-
-
-@pytest.fixture(scope="module")
-def duck_views():
-    from type_audit import TABLES
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'"
-        )
-    return con
-
-
-def test_oracle_types_match_spark(spark, duck_views):
-    from type_audit import duck_type_to_spark
-
-    q, o = queries(), oracle_sql()
-    bad = {}
-    for name in sorted(o):
-        s_types = dict(q[name](spark, SF_DIR).dtypes)
-        d = duck_views.sql(f"DESCRIBE ({o[name]})").fetchall()
-        d_types = {row[0]: duck_type_to_spark(row[1]) for row in d}
-        if set(s_types) != set(d_types):
-            bad[name] = ("columns", sorted(s_types), sorted(d_types))
-            continue
-        mism = {
-            c: (s_types[c], d_types[c])
-            for c in s_types
-            if s_types[c] != d_types[c]
-        }
-        if mism:
-            bad[name] = mism
-    assert not bad, bad
-
-
-# Queries whose sf0.1 result is LEGITIMATELY empty (the synthetic
-# corpus lacks the phenomenon), each credited to the pytest that runs
-# it against planted non-empty truth. test_planted_truth_allowlist_is_live
-# asserts the referenced tests exist, so the allowlist cannot go stale.
-PLANTED_TRUTH = {
-    "dedup_bag_of_words":
-        "test_quality_ops.py::test_dedup_bag_of_words_planted_groups",
-    "source_dup_overlap":
-        "test_quality_ops.py::test_source_dup_overlap_planted_cross_source",
-}
-
-SF01_DIR = "/root/testdata/sf0.1"
-
-
-def test_no_green_on_empty(spark):
-    """Every registered query must prove it can produce rows: >= 1 row
-    on the sf0.1 corpus (falling back to the sf0.01 oracle corpus —
-    some thresholds legitimately cross zero in one direction, e.g.
-    tpch_q11ish's value-share cut yields 238 rows at sf0.01 and none
-    at sf0.1), or a planted-truth pytest in PLANTED_TRUTH."""
-    from tests.conftest import SF_DIR_ORACLE
-
-    bad = []
-    for name, fn in sorted(queries().items()):
-        if name in PLANTED_TRUTH:
-            continue
-        if not fn(spark, SF01_DIR).head(1) and not fn(
-            spark, SF_DIR_ORACLE
-        ).head(1):
-            bad.append(name)
-    assert not bad, (
-        f"queries empty at sf0.1 AND sf0.01 with no planted-truth "
-        f"pytest: {bad}"
-    )
 
 
 def test_planted_truth_allowlist_is_live():
@@ -110,22 +38,34 @@ def test_planted_truth_allowlist_is_live():
             assert f"def {func}(" in f.read(), (name, nodeid)
 
 
-def test_no_plan_antipatterns(spark):
-    from plan_audit import ONE_ROW_CROSS_OK
+def test_plan_allowlist_is_live():
+    from svs_spark.queries import queries
 
-    bad = {}
-    for name, fn in sorted(queries().items()):
-        plan = fn(spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
-        findings = []
-        if "CartesianProduct" in plan and name not in ONE_ROW_CROSS_OK:
-            findings.append("CartesianProduct")
-        if (
-            "BroadcastNestedLoopJoin" in plan
-            and name not in ONE_ROW_CROSS_OK
-        ):
-            findings.append("BroadcastNestedLoopJoin")
-        if "BatchEvalPython" in plan:
-            findings.append("row-at-a-time Python UDF")
-        if findings:
-            bad[name] = findings
-    assert not bad, bad
+    assert not ONE_ROW_CROSS_OK - set(queries())
+    # an allowlisted query whose plan lost its nested-loop join is flagged
+    assert plan_findings("tpch_q22ish", "Project\n+- Scan parquet")
+
+
+def test_unhinted_cross_join_is_flagged(spark):
+    a = spark.range(50)
+    b = spark.range(50).withColumnRenamed("id", "j")
+    findings = plan_findings("unregistered", executed_plan(a.crossJoin(b)))
+    assert findings and findings[0].startswith("PLAN "), findings
+    assert "NestedLoopJoin" in findings[0] or "Cartesian" in findings[0]
+
+
+def test_row_at_a_time_udf_is_flagged(spark):
+    plus_one = F.udf(lambda x: x + 1, "long")
+    df = spark.range(5).select(plus_one("id").alias("y"))
+    assert plan_findings("unregistered", executed_plan(df)) == [
+        "PLAN row-at-a-time Python UDF (BatchEvalPython)"
+    ]
+
+
+def test_hugeint_sum_is_a_type_mismatch(spark):
+    con = duckdb.connect()
+    rel = con.sql("SELECT sum(x) AS s FROM (VALUES (1::INTEGER)) t(x)")
+    df = spark.range(1).select(F.col("id").alias("s"))
+    assert type_findings(df, rel) == ["TYPES {'s': ('bigint', 'hugeint')}"]
+    ok = con.sql("SELECT CAST(sum(x) AS BIGINT) AS s FROM (VALUES (1)) t(x)")
+    assert type_findings(df, ok) == []

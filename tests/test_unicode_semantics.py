@@ -20,6 +20,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from svs_spark.operators.chunking import chunk_text_df
+from tools.parity_debug import duck_rows, row_findings, spark_rows
 
 # One string per script family; ALL of these hit a non-trivial unit
 # question: astral emoji are 2 UTF-16 units / 4 UTF-8 bytes, combining
@@ -54,6 +55,22 @@ def _duck_on(path):
         f"'{path}/documents.parquet/*.parquet'"
     )
     return con
+
+
+def _oracle_parity(spark, path, qname, digits=6):
+    """Run ``qname`` on the planted corpus in Spark and DuckDB, assert
+    cell agreement (floats at ``digits`` places, exact for None) with
+    the shared cross-engine compare, return the sorted columns and
+    rows."""
+    from svs_spark.queries import queries, oracle_sql
+
+    cols, got = spark_rows(queries()[qname](spark, path), digits)
+    con = _duck_on(path)  # a relation does not keep its connection open
+    findings = row_findings(
+        cols, got, *duck_rows(con.sql(oracle_sql()[qname]), digits)
+    )
+    assert not findings, (qname, findings)
+    return cols, got
 
 
 class TestEngineAgreement:
@@ -151,23 +168,11 @@ class TestChunkingMultilingual:
         """The registered query vs its own DuckDB oracle on a planted
         multilingual corpus — the agreement rag_chunk_materialized's
         docstring used to only claim for ASCII."""
-        from svs_spark.queries import queries, oracle_sql
-
         path = _plant(
             spark, tmp_path,
             [(i, (s + " ") * 40) for i, s in enumerate(MULTI.values())],
         )
-        df = queries()["rag_chunk_materialized"](spark, path)
-        cols = sorted(df.columns)
-        got = sorted(
-            tuple(r[c] for c in cols) for r in df.collect()
-        )
-        con = _duck_on(path)
-        res = con.sql(oracle_sql()["rag_chunk_materialized"])
-        order = sorted(range(len(res.columns)), key=lambda i: res.columns[i])
-        want = sorted(tuple(row[i] for i in order) for row in res.fetchall())
-        assert sorted(res.columns) == cols
-        assert got == want
+        _oracle_parity(spark, path, "rag_chunk_materialized", digits=None)
 
 
 class TestNgramAndSpanMultilingual:
@@ -175,35 +180,14 @@ class TestNgramAndSpanMultilingual:
         """Shingle COUNTS and pair intersections must agree between the
         Spark trigram index (split+transform, xxhash64'd) and the
         DuckDB string_split oracle on multilingual text."""
-        from svs_spark.queries import queries, oracle_sql
-
         texts = list(MULTI.values())
         # two near-dup CJK docs so the pair output is non-empty
         rows = [(i, t) for i, t in enumerate(texts)]
         rows.append((100, MULTI["cjk"] + " 额外 词语 三个"))
         rows.append((101, MULTI["mixed"]))
         path = _plant(spark, tmp_path, rows)
-        df = queries()["ngram_jaccard_pairs"](spark, path)
-        cols = sorted(df.columns)
-        got = sorted(
-            tuple(
-                round(r[c], 6) if isinstance(r[c], float) else r[c]
-                for c in cols
-            )
-            for r in df.collect()
-        )
+        _, got = _oracle_parity(spark, path, "ngram_jaccard_pairs")
         assert got, "planted near-dups must produce pairs"
-        con = _duck_on(path)
-        res = con.sql(oracle_sql()["ngram_jaccard_pairs"])
-        order = sorted(range(len(res.columns)), key=lambda i: res.columns[i])
-        want = sorted(
-            tuple(
-                round(v, 6) if isinstance(v, float) else v
-                for v in (row[i] for i in order)
-            )
-            for row in res.fetchall()
-        )
-        assert got == want
 
     def test_decontaminate_fuzzy_multilingual_leak(self, spark, tmp_path):
         """A CJK eval doc embedded in a much larger CJK train doc: the
@@ -233,8 +217,6 @@ class TestNgramAndSpanMultilingual:
         (Spark ascii ≡ DuckDB ord); a 64-codepoint CJK+emoji span
         planted in two docs must be found at the same pow2 length by
         both engines."""
-        from svs_spark.queries import queries, oracle_sql
-
         span = "".join(f"共{i:02d}享🎉" for i in range(13))  # 65 code points
         rows = [
             (1, "前缀 开头 " + span + " 后缀 文字 填充 一些 内容"),
@@ -243,15 +225,9 @@ class TestNgramAndSpanMultilingual:
             (4, MULTI["devanagari"]),
         ]
         path = _plant(spark, tmp_path, rows)
-        df = queries()["longest_dup_span"](spark, path)
-        cols = sorted(df.columns)
-        got = sorted(tuple(r[c] for c in cols) for r in df.collect())
-        con = _duck_on(path)
-        res = con.sql(oracle_sql()["longest_dup_span"])
-        order = sorted(range(len(res.columns)), key=lambda i: res.columns[i])
-        want = sorted(tuple(row[i] for i in order) for row in res.fetchall())
-        assert sorted(res.columns) == cols
-        assert got == want
+        cols, got = _oracle_parity(
+            spark, path, "longest_dup_span", digits=None
+        )
         by_doc = {t[cols.index("doc_id")]: t for t in got}
         li = cols.index("max_dup_len")
         assert by_doc[1][li] == 64 and by_doc[2][li] == 64
@@ -309,32 +285,10 @@ def test_script_mix_profile_multilingual(spark, tmp_path):
     multilingual corpus — every script class non-zero (the sf corpora
     are ASCII, so this is where the CJK/Arabic/Devanagari legs are
     load-bearing), plus hand-computed truth for one source."""
-    from svs_spark.queries import queries, oracle_sql
-
     rows = [(i, s) for i, s in enumerate(MULTI.values())]
     rows.append((50, "pure ascii doc"))
     path = _plant(spark, tmp_path, rows)
-    df = queries()["script_mix_profile"](spark, path)
-    cols = sorted(df.columns)
-    got = sorted(
-        tuple(
-            round(r[c], 6) if isinstance(r[c], float) else r[c]
-            for c in cols
-        )
-        for r in df.collect()
-    )
-    con = _duck_on(path)
-    res = con.sql(oracle_sql()["script_mix_profile"])
-    order = sorted(range(len(res.columns)), key=lambda i: res.columns[i])
-    want = sorted(
-        tuple(
-            round(v, 6) if isinstance(v, float) else v
-            for v in (row[i] for i in order)
-        )
-        for row in res.fetchall()
-    )
-    assert sorted(res.columns) == cols
-    assert got == want
+    cols, got = _oracle_parity(spark, path, "script_mix_profile")
     # hand truth: all planted docs share source='planted'
     row = {c: v for c, v in zip(cols, got[0])}
     texts = [t for _, t in rows]
@@ -364,8 +318,6 @@ def test_nfc_audit_multilingual(spark, tmp_path):
     many code points composition removes."""
     import unicodedata
 
-    from svs_spark.queries import queries, oracle_sql
-
     nfd = unicodedata.normalize("NFD", "café noël résumé")  # decomposed
     rows = [
         (1, nfd),                                  # NFD: 3 docs' worth of marks
@@ -375,15 +327,9 @@ def test_nfc_audit_multilingual(spark, tmp_path):
         (5, nfd + " " + MULTI["mixed"]),
     ]
     path = _plant(spark, tmp_path, rows)
-    df = queries()["nfc_normalization_audit"](spark, path)
-    cols = sorted(df.columns)
-    got = sorted(tuple(r[c] for c in cols) for r in df.collect())
-    con = _duck_on(path)
-    res = con.sql(oracle_sql()["nfc_normalization_audit"])
-    order = sorted(range(len(res.columns)), key=lambda i: res.columns[i])
-    want = sorted(tuple(row[i] for i in order) for row in res.fetchall())
-    assert sorted(res.columns) == cols
-    assert got == want
+    cols, got = _oracle_parity(
+        spark, path, "nfc_normalization_audit", digits=None
+    )
     row = {c: v for c, v in zip(cols, got[0])}
     texts = [t for _, t in rows]
     assert row["n_docs"] == 5
@@ -429,31 +375,8 @@ def test_hash_kernel_oracle_parity_multilingual(spark, tmp_path, qname):
     rows.append((103, long_cjk + " 结尾 专属 标记"))
     rows.append((104, long_cjk + " 另一 结尾 标志"))
     path = _plant(spark, tmp_path, rows)
-    got = _oracle_parity(spark, path, qname)
+    _, got = _oracle_parity(spark, path, qname)
     assert got, f"{qname}: planted corpus must produce rows"
-
-
-def _oracle_parity(spark, path, qname):
-    """Run ``qname`` on the planted corpus in Spark and DuckDB, assert
-    cell-exact agreement (floats at 6 places), return the sorted rows."""
-    from svs_spark.queries import queries, oracle_sql
-
-    df = queries()[qname](spark, path)
-    cols = sorted(df.columns)
-    norm = lambda v: round(v, 6) if isinstance(v, float) else v  # noqa: E731
-    got = sorted(
-        tuple(norm(r[c]) for c in cols) for r in df.collect()
-    )
-    con = _duck_on(path)
-    res = con.sql(oracle_sql()[qname])
-    order = sorted(range(len(res.columns)), key=lambda i: res.columns[i])
-    want = sorted(
-        tuple(norm(v) for v in (row[i] for i in order))
-        for row in res.fetchall()
-    )
-    assert sorted(res.columns) == cols, qname
-    assert got == want, (qname, got[:3], want[:3])
-    return got
 
 
 @pytest.mark.parametrize(
@@ -477,7 +400,7 @@ def test_null_text_oracle_parity(spark, tmp_path, qname):
         (6, "a b c d"),  # its 32 bit votes all tie or lose: signature 0
     ]
     path = _plant(spark, tmp_path, rows)
-    got = _oracle_parity(spark, path, qname)
+    _, got = _oracle_parity(spark, path, qname)
     assert got, f"{qname}: planted corpus must produce rows"
     if qname == "simhash_pairs":
         # (hamming, id_a, id_b): the null doc's 0 signature takes part
@@ -489,25 +412,11 @@ def test_tokenizer_fertility_multilingual(spark, tmp_path):
     every script class appears, the CASE tie-order matches between
     Java regex and RE2, and the CJK class shows the whitespace-
     tokenizer pathology (far more chars per token than latin)."""
-    from svs_spark.queries import queries, oracle_sql
-
     rows = [(i, t) for i, t in enumerate(MULTI.values())]
     rows.append((50, "plain ascii doc with several small words"))
     rows.append((51, "你好世界这是一个没有空格的长中文句子用来测试"))  # no spaces
     path = _plant(spark, tmp_path, rows)
-    df = queries()["tokenizer_fertility_by_script"](spark, path)
-    cols = sorted(df.columns)
-    norm = lambda v: round(v, 6) if isinstance(v, float) else v  # noqa: E731
-    got = sorted(tuple(norm(r[c]) for c in cols) for r in df.collect())
-    con = _duck_on(path)
-    res = con.sql(oracle_sql()["tokenizer_fertility_by_script"])
-    order = sorted(range(len(res.columns)), key=lambda i: res.columns[i])
-    want = sorted(
-        tuple(norm(v) for v in (row[i] for i in order))
-        for row in res.fetchall()
-    )
-    assert sorted(res.columns) == cols
-    assert got == want
+    cols, got = _oracle_parity(spark, path, "tokenizer_fertility_by_script")
     classes = {t[cols.index("script_class")] for t in got}
     assert classes == {"cjk", "arabic", "devanagari", "latin"}
     by_class = {t[cols.index("script_class")]: t for t in got}

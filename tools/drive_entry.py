@@ -7,7 +7,6 @@ Usage:
         python tools/drive_entry.py --counts-only
 """
 
-import math
 import os
 import sys
 
@@ -16,16 +15,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as E  # noqa: E402
 from pyspark.sql import SparkSession  # noqa: E402
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
-
-
-def norm(v):
-    if isinstance(v, float):
-        return "NaN" if math.isnan(v) else round(v, 6)
-    return v
+from tools.parity_debug import (  # noqa: E402
+    duck_rows,
+    duck_views,
+    row_findings,
+    spark_rows,
+)
 
 
 def main() -> int:
@@ -54,43 +49,21 @@ def main() -> int:
         spark.stop()
         return 0
 
-    import duckdb
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
-
+    con = duck_views(sf)
     for name, fn in sorted(qs.items()):
-        sdf = fn(spark, sf)
-        scols = sorted(sdf.columns)
-        srows = sorted(
-            [tuple(norm(r[c]) for c in scols) for r in sdf.collect()], key=repr
-        )
+        scols, srows = spark_rows(fn(spark, sf), digits=6)
         if name not in oracles:
             print(f"  {name}: rows-only {len(srows)} rows")
             if not srows:
                 fails += 1
                 print(f"  {name}: FAIL rows-only query returned 0 rows")
             continue
-        res = con.sql(oracles[name])
-        dcols_raw = res.columns
-        order = sorted(range(len(dcols_raw)), key=lambda i: dcols_raw[i])
-        drows = sorted(
-            [tuple(norm(row[i]) for i in order) for row in res.fetchall()],
-            key=repr,
+        findings = row_findings(
+            scols, srows, *duck_rows(con.sql(oracles[name]), digits=6)
         )
-        ok = scols == sorted(dcols_raw) and srows == drows
-        if not ok:
+        if findings:
             fails += 1
-            print(
-                f"  {name}: MISMATCH cols {scols} vs {sorted(dcols_raw)} "
-                f"rows {len(srows)} vs {len(drows)}"
-            )
-            shown = 0
-            for a, b in zip(srows, drows):
-                if a != b and shown < 3:
-                    print("    ", a, "!=", b)
-                    shown += 1
+            print(f"  {name}: MISMATCH {'; '.join(findings)}")
         else:
             print(f"  {name}: MATCH ({len(srows)} rows)")
     print("FAILURES:", fails)
