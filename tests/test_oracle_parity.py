@@ -22,6 +22,8 @@ import pytest
 from tests.conftest import SF_DIR_ORACLE
 from tools.parity_debug import PLANTED_TRUTH, check
 
+# The green-on-empty fallback corpus: the sf0.1 directory beside the
+# oracle one.
 SF01_DIR = os.path.join(os.path.dirname(SF_DIR_ORACLE), "sf0.1")
 
 
@@ -42,7 +44,14 @@ def test_oracle_parity(spark, duck, name, fn, oracle):
     if not rows:
         if oracle is None:
             findings.append("EMPTY rows-only query returned 0 rows")
-        elif name not in PLANTED_TRUTH and not fn(spark, SF01_DIR).head(1):
+        elif name in PLANTED_TRUTH:
+            pass
+        elif not os.path.isdir(SF01_DIR):
+            findings.append(
+                f"EMPTY at sf0.01 and no sf0.1 corpus at {SF01_DIR} to "
+                "confirm it is non-empty there"
+            )
+        elif not fn(spark, SF01_DIR).head(1):
             findings.append(
                 "EMPTY at sf0.01 and sf0.1 with no planted-truth pytest"
             )

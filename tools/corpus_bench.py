@@ -94,11 +94,14 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
-    from svs_spark.session import get_session
+    from svs_spark.session import driver_java_opts, get_session
 
     spark = get_session(
         "corpus_bench",
-        extra_conf={"spark.driver.extraJavaOptions": "-Xlog:disable"},
+        extra_conf={
+            "spark.driver.extraJavaOptions": "-Xlog:disable "
+            + driver_java_opts()
+        },
     )
     spark.sparkContext.setLogLevel("ERROR")
 

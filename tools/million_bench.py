@@ -126,7 +126,7 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
-    from svs_spark.session import get_session
+    from svs_spark.session import driver_java_opts, get_session
     from svs_spark.operators.similarity import (
         retrieve_topk, with_scores_batch,
     )
@@ -134,7 +134,10 @@ def main() -> None:
 
     spark = get_session(
         "million_bench",
-        extra_conf={"spark.driver.extraJavaOptions": "-Xlog:disable"},
+        extra_conf={
+            "spark.driver.extraJavaOptions": "-Xlog:disable "
+            + driver_java_opts()
+        },
     )
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -142,7 +142,7 @@ def duck_type_to_spark(t: str) -> str:
     return DUCK_TO_SPARK.get(t, f"?{t}?")
 
 
-def duck_views(sf_dir: str = SF_DIR):
+def duck_views(sf_dir: str):
     """A DuckDB connection with one view per testdata table."""
     import duckdb
 
@@ -177,7 +177,7 @@ def duck_rows(rel, digits: int | None = None):
     return sorted(cols), sorted(rows, key=repr)
 
 
-def row_findings(s_cols, s, d_cols, d, shown: int = 3) -> list[str]:
+def row_findings(s_cols, s, d_cols, d) -> list[str]:
     """Column set, row count and first differing cells, Spark vs DuckDB."""
     if s_cols != d_cols:
         return [f"COLS {s_cols} vs {d_cols}"]
@@ -188,7 +188,7 @@ def row_findings(s_cols, s, d_cols, d, shown: int = 3) -> list[str]:
         return []
     cells = [
         f"\n    col {c}: spark={x!r} duck={y!r}"
-        for a, b in diffs[:shown]
+        for a, b in diffs[:3]
         for c, x, y in zip(s_cols, a, b)
         if x != y
     ]

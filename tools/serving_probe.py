@@ -75,7 +75,7 @@ def main() -> None:
     n = int(sys.argv[2]) if len(sys.argv) > 2 else 1_000_000
     dim = int(sys.argv[3]) if len(sys.argv) > 3 else 1536
 
-    from svs_spark.session import get_session
+    from svs_spark.session import driver_java_opts, get_session
     from tools.million_bench import make_query, synth_corpus
 
     from bench import _calibration_spin, _host_provenance
@@ -84,7 +84,10 @@ def main() -> None:
     host_start = _host_provenance(_calibration_spin())
     spark = get_session(
         "serving_probe",
-        extra_conf={"spark.driver.extraJavaOptions": "-Xlog:disable"},
+        extra_conf={
+            "spark.driver.extraJavaOptions": "-Xlog:disable "
+            + driver_java_opts()
+        },
     )
     spark.sparkContext.setLogLevel("ERROR")
     emb = synth_corpus(spark, n, dim)
