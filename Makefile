@@ -16,9 +16,11 @@ test:
 	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
 # the driver-style correctness gate in a fresh process (entry +
-# all registered queries vs DuckDB at sf0.01)
+# all registered queries vs DuckDB at sf0.01), started from a directory
+# outside the checkout: a Python worker that imports svs_spark instead
+# of receiving it pickled by value fails here
 verify:
-	python tools/drive_entry.py
+	cd "$$(mktemp -d)" && python $(CURDIR)/tools/drive_entry.py
 
 bench:
 	python bench.py

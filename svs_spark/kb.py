@@ -20,8 +20,14 @@ asyncio lock           Spark's distributed execution (the reference's
 
 Bulk contexts commit as one atomic table swap each — the moral
 equivalent of the reference's BEGIN/COMMIT transaction per bulk
-(``kb.py:794-829``). The async/sync API duality is deliberately not
-ported (no query semantics in it; SURVEY.md §7).
+(``kb.py:794-829``). Calls whose rows the driver holds or finds by
+bucket key (single-doc adds, reads and updates, keyval, edge commits)
+read and commit their buckets in the driver with pyarrow
+(``Warehouse.read_arrow`` and a Table commit) and run no Spark job, as
+a reference call is one SQLite transaction; DataFrame ingest and
+non-key predicates (children, levels, retrieve, the edge-key probe,
+cascade search) run on Spark. The async/sync API duality is
+deliberately not ported (no query semantics in it; SURVEY.md §7).
 """
 
 from __future__ import annotations
@@ -36,6 +42,8 @@ from contextlib import contextmanager
 from typing import Any, Iterator, List, Optional
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Row, SparkSession, functions as F
 from pyspark.sql.types import (
     ArrayType, BooleanType, DoubleType, FloatType, IntegerType, LongType,
@@ -49,7 +57,6 @@ from svs_spark.functions.embeddings import (
     make_embeddings_func,
     with_magnitude_check,
 )
-from svs_spark.functions.vector import array_lit
 from svs_spark.sources.warehouse import Warehouse, resolve_location
 
 SCHEMA_VERSION = 1  # kb.py:64
@@ -117,6 +124,12 @@ def _encode_val(val: Any) -> tuple[str, str]:
     raise ValueError(f"unsupported keyval type: {type(val)!r}")
 
 
+def _encode_kv(kv: dict) -> dict:
+    """Each value's (type tag, encoding): equal encodings mean an equal
+    stored table (``1`` and ``1.0`` compare equal, their rows do not)."""
+    return {k: _encode_val(v) for k, v in kv.items()}
+
+
 def _decode_val(val_type: str, val: str) -> Any:
     if val_type == "int":
         return int(val)
@@ -164,12 +177,8 @@ class KnowledgeBase:
         embedding_func: Optional[EmbeddingFunc],
         embedding_params: Optional[dict],
     ) -> None:
-        meta = {}
-        if self.wh.exists("_meta"):
-            meta = {
-                r["key"]: _decode_val(r["val_type"], r["val"])
-                for r in self.wh.read("_meta").collect()
-            }
+        meta = self._read_kv("_meta") if self.wh.exists("_meta") else {}
+        if meta:
             stored_version = meta.get("schema_version")
             if stored_version != SCHEMA_VERSION:
                 raise RuntimeError(
@@ -203,33 +212,32 @@ class KnowledgeBase:
             raise ValueError(
                 "no embedding function given and none stored in the KB"
             )
-        if not meta:
-            meta = {
-                "schema_version": SCHEMA_VERSION,
-                "created_datetime": datetime.datetime.now(
-                    datetime.timezone.utc
-                ).isoformat(),
-            }
-        meta["embedding_func_params"] = json.dumps(params_to_store)
-        self._write_kv("_meta", meta)
-        for table, schema in (
-            ("docs", DOCS_SCHEMA),
-            ("edges", EDGES_SCHEMA),
-            ("keyval", KEYVAL_SCHEMA),
-        ):
+        new_meta = dict(meta) or {
+            "schema_version": SCHEMA_VERSION,
+            "created_datetime": datetime.datetime.now(
+                datetime.timezone.utc
+            ).isoformat(),
+        }
+        new_meta["embedding_func_params"] = json.dumps(params_to_store)
+        if _encode_kv(new_meta) != _encode_kv(meta):
+            self._write_kv("_meta", new_meta)
+        for table in ("docs", "edges", "keyval"):
             if not self.wh.exists(table):
-                self.wh.write(
-                    table, self.spark.createDataFrame([], schema)
-                )
+                stamp = self.wh.write(table, self.wh.arrow_table(table, []))
+                if table in BUCKET_KEYS:
+                    # an empty table's next id needs no max() scan
+                    self._next_ids[table] = (stamp, 1)
+
+    def _read_kv(self, table: str) -> dict:
+        return {
+            r["key"]: _decode_val(r["val_type"], r["val"])
+            for r in self.wh.read_arrow(table).to_pylist()
+        }
 
     def _write_kv(self, table: str, kv: dict) -> None:
-        rows = []
-        for k, v in kv.items():
-            t, enc = _encode_val(v)
-            rows.append((k, t, enc))
-        self.wh.write(
-            table, self.spark.createDataFrame(rows, KEYVAL_SCHEMA)
-        )
+        self.wh.write(table, self.wh.arrow_table(
+            table, [(k, *tv) for k, tv in _encode_kv(kv).items()]
+        ))
 
     def close(self, vacuum: bool = False, also_gzip: bool = False) -> None:
         """kb.py:1437-1464: optional VACUUM (compaction) + gzip export."""
@@ -265,16 +273,15 @@ class KnowledgeBase:
             self._loaded.unpersist()
         self._loaded = None
 
-    def _by_key(self, table: str, keys) -> DataFrame:
-        """``table`` pruned to the buckets that can hold ``keys`` (values
-        of its bucket key); the whole table when it is not bucketed."""
-        bmeta = self.wh.bucket_meta(table)
-        if bmeta is None:
-            return self.wh.read(table)
-        nb = bmeta["n_buckets"]
-        return self.wh.read_buckets(
-            table, sorted({Warehouse.bucket_of(k, nb) for k in keys})
-        )
+    def _find(self, table: str, keys) -> pa.Table:
+        """The rows of ``table`` whose bucket key is in ``keys``, read
+        in the driver from only the buckets that can hold them."""
+        keys = list(keys)
+        if not keys:
+            return self.wh.arrow_schema(table).empty_table()
+        rows = self.wh.read_arrow(table, keys)
+        col = rows.column(BUCKET_KEYS[table][0])
+        return rows.filter(pc.is_in(col, value_set=pa.array(keys, col.type)))
 
     # -- id allocation: max(id) + 1, cached per table version ----------------
 
@@ -316,45 +323,57 @@ class KnowledgeBase:
 
     def _rewrite(self, table: str, keys, patch):
         """Commit ``patch(rows)`` in place of the rows of the buckets that
-        can hold ``keys`` (values of the bucket key), reading and
-        rewriting only those buckets; returns the stamp after the swap.
-        A table not yet bucketed (plain and empty at init) is rewritten
+        can hold ``keys`` (values of the bucket key), read and written
+        in the driver as pyarrow Tables under the table's writer lock;
+        returns the stamp after the swap. A table not yet bucketed
+        (plain and empty at init, or a legacy plain table) is rewritten
         whole into the bucketed layout, so every later rewrite touches
         only its own buckets — a single add_doc touches ONE bucket."""
-        bmeta = self.wh.bucket_meta(table)
-        if bmeta is None:
-            key_col, nb = BUCKET_KEYS[table]
-            post = patch(self.wh.read(table))
-            return self.wh.write_bucketed(table, post, key_col, nb)
-        nb = bmeta["n_buckets"]
-        pbs = sorted({Warehouse.bucket_of(k, nb) for k in keys})
-        post = patch(self.wh.read_buckets(table, pbs))
-        return self.wh.overwrite_buckets(table, pbs, post)
+        keys = list(keys)
+        with self.wh.write_lock(table):
+            bmeta = self.wh.bucket_meta(table)
+            post = patch(self.wh.read_arrow(table, keys))
+            if bmeta is None:
+                key_col, nb = BUCKET_KEYS[table]
+                return self.wh.write_bucketed(table, post, key_col, nb)
+            nb = bmeta["n_buckets"]
+            pbs = sorted({Warehouse.bucket_of(k, nb) for k in keys})
+            return self.wh.overwrite_buckets(table, pbs, post)
 
-    def _append_docs(self, new_df: DataFrame, ids=None):
-        """Append new doc rows touching only their hash buckets. The
-        buckets come from ``ids`` when the driver holds them, else from
-        a distinct-bucket probe that collects ≤ n_buckets rows, never
+    def _append_docs(self, new_df: DataFrame):
+        """Append a DataFrame of doc rows (the distributed ingest paths)
+        with Spark, touching only their hash buckets, found by a
+        distinct-bucket probe that collects ≤ n_buckets rows, never
         data."""
         self._invalidate()
         bmeta = self.wh.bucket_meta("docs")
-        if ids is None and bmeta is not None:
-            nb = F.lit(bmeta["n_buckets"])
-            # bucket numbers: each is its own key, as pmod(b, n) = b
-            ids = [r[0] for r in new_df.select(
-                F.pmod(F.col("id"), nb).cast("int")
-            ).distinct().collect()]
-        return self._rewrite("docs", ids or [], lambda d: d.unionByName(new_df))
+        if bmeta is None:
+            key_col, nb = BUCKET_KEYS["docs"]
+            return self.wh.write_bucketed(
+                "docs", self.docs.unionByName(new_df), key_col, nb
+            )
+        nb = F.lit(bmeta["n_buckets"])
+        pbs = sorted(r[0] for r in new_df.select(
+            F.pmod(F.col("id"), nb).cast("int")
+        ).distinct().collect())
+        if pbs:
+            self.wh.overwrite_buckets(
+                "docs", pbs,
+                self.wh.read_buckets("docs", pbs).unionByName(new_df),
+            )
 
     def _point_update_docs(self, doc_id: int, column: str, value) -> None:
         """Rewrite exactly one doc's column, touching only its bucket."""
 
-        def patch(rows: DataFrame) -> DataFrame:
-            if rows.filter(F.col("id") == doc_id).first() is None:
+        def patch(rows: pa.Table) -> pa.Table:
+            hit = pc.equal(rows.column("id"), doc_id)
+            if not pc.any(hit).as_py():
                 raise ValueError(f"no such doc: {doc_id}")
-            return rows.withColumn(column, F.when(
-                F.col("id") == doc_id, value
-            ).otherwise(F.col(column)))
+            i = rows.schema.get_field_index(column)
+            col = rows.column(i)
+            return rows.set_column(i, rows.field(i), pc.if_else(
+                hit, pa.scalar(value, col.type), col
+            ))
 
         self._invalidate()
         self._commit("docs", lambda: self._rewrite("docs", [doc_id], patch))
@@ -433,14 +452,17 @@ class KnowledgeBase:
                 texts[i:i + BULK_EMBEDDING_CHUNK_SIZE]
             )
         ])
-        rows = [
+        new_rows = self.wh.arrow_table("docs", [
             (i, pid, level, text, None if skip else next(vecs), enc)
             for i, pid, level, text, enc, skip in pending
-        ]
-        new_rows = self.spark.createDataFrame(rows, DOCS_SCHEMA)
+        ])
+        self._invalidate()
         self._commit(
             "docs",
-            lambda: self._append_docs(new_rows, [r[0] for r in rows]),
+            lambda: self._rewrite(
+                "docs", [p[0] for p in pending],
+                lambda cur: pa.concat_tables([cur, new_rows]),
+            ),
             next_id=counter[0],
         )
 
@@ -595,12 +617,13 @@ class KnowledgeBase:
         still has a child at that point in the sequence raises; edges
         touching a deleted doc (as src, dst, or rel) cascade.
 
-        Scale note: the two collects below are bounded by the *deletion
-        batch* (ids filtered by IN-list, children filtered by parent IN
-        deleted-ids — pushdown predicates, results ≤ batch × fan-out),
-        never by table size; the guard itself is inherently sequential
-        (delete order matters), which is why it runs on the driver over
-        that bounded set."""
+        Scale note: both lookups below are bounded by the *deletion
+        batch*, never by table size: the ids are read in the driver from
+        only their buckets, and the children collect filters parent IN
+        deleted-ids (a pushdown predicate, results ≤ batch × fan-out);
+        the guard itself is inherently sequential (delete order
+        matters), which is why it runs on the driver over that bounded
+        set."""
         deletions: list[int] = []
 
         def del_doc(doc_id: int) -> None:
@@ -611,11 +634,7 @@ class KnowledgeBase:
         if not deletions:
             return
         ids = set(deletions)
-        existing = {
-            r["id"]
-            for r in self._by_key("docs", ids).filter(F.col("id").isin(list(ids)))
-            .select("id").collect()
-        }
+        existing = set(self._find("docs", ids).column("id").to_pylist())
         children = (
             self.docs.filter(F.col("parent_id").isin(list(ids)))
             .select("id", "parent_id")
@@ -635,29 +654,35 @@ class KnowledgeBase:
                 )
             removed.add(doc_id)
         id_list = list(removed)
-        # rewrite only the deleted ids' buckets (1..k of n, pruned read)
-        self._rewrite("docs", id_list, lambda d: d.filter(~F.col("id").isin(id_list)))
-        cascade_pred = (
+        gone = pa.array(id_list, pa.int64())
+        # rewrite only the deleted ids' buckets (1..k of n)
+        self._invalidate()
+        self._rewrite("docs", id_list, lambda d: d.filter(
+            pc.invert(pc.is_in(d.column("id"), value_set=gone))
+        ))
+        # the cascade predicate keys on src/dst/rel, not the bucket key,
+        # so finding victims is a Spark scan — but the WRITE isn't: it
+        # collects the (≤ n_buckets) distinct bucket numbers (each its own
+        # key) of matching edges and rewrites only those buckets. A delete
+        # with no incident edges rewrites nothing.
+        ebmeta = self.wh.bucket_meta("edges")
+        nb = ebmeta["n_buckets"] if ebmeta else EDGES_BUCKETS
+        touched = [r[0] for r in self.edges.filter(
             F.col("src").isin(id_list)
             | F.col("dst").isin(id_list)
             | F.col("rel").isin(id_list)
-        )
-        ebmeta = self.wh.bucket_meta("edges")
-        touched = []
-        if ebmeta is not None:
-            # the cascade predicate keys on src/dst/rel, not the bucket
-            # key, so finding victims needs a full scan — but the WRITE
-            # doesn't: collect the (≤ n_buckets) distinct bucket numbers
-            # (each its own key) of matching edges and rewrite only
-            # those buckets. A delete with no incident edges rewrites
-            # nothing.
-            nb = F.lit(ebmeta["n_buckets"])
-            touched = [r[0] for r in self.edges.filter(cascade_pred).select(
-                F.pmod(F.col("edge_id"), nb).cast("int")
-            ).distinct().collect()]
-        if touched or ebmeta is None:
-            self._rewrite("edges", touched, lambda d: d.filter(~cascade_pred))
-        self._invalidate()
+        ).select(F.pmod(F.col("edge_id"), F.lit(nb)).cast("int"))
+            .distinct().collect()]
+
+        def cascade(e: pa.Table) -> pa.Table:
+            hit = functools.reduce(pc.or_, [
+                pc.is_in(e.column(c), value_set=gone)
+                for c in ("src", "dst", "rel")
+            ])
+            return e.filter(pc.invert(hit))
+
+        if touched:
+            self._rewrite("edges", touched, cascade)
 
     def del_doc(self, doc_id: int) -> None:
         with self.bulk_del_docs() as dd:
@@ -670,26 +695,23 @@ class KnowledgeBase:
         rewrites only the doc's hash bucket (1/DOCS_BUCKETS of the
         table), not the whole table."""
         enc = json.dumps(new_meta) if new_meta is not None else None
-        self._point_update_docs(doc_id, "meta", F.lit(enc))
+        self._point_update_docs(doc_id, "meta", enc)
 
     def set_doc_embedding(
         self, doc_id: int, embedding: Optional[List[float]]
     ) -> None:
         """kb.py:526-571: replace one doc's vector — bucket-local
         rewrite like update_doc_meta."""
-        lit = (
-            array_lit([float(x) for x in embedding]).cast(
-                ArrayType(FloatType())
-            )
-            if embedding is not None
-            else F.lit(None).cast(ArrayType(FloatType()))
+        vec = (
+            [float(x) for x in embedding] if embedding is not None else None
         )
-        self._point_update_docs(doc_id, "embedding", lit)
+        self._point_update_docs(doc_id, "embedding", vec)
 
     # -- queries (Q2-Q6) --------------------------------------------------------
 
     @staticmethod
-    def _to_record(row: Row, include_embedding: bool) -> dict:
+    def _to_record(row, include_embedding: bool) -> dict:
+        """One doc row (a Spark Row or an Arrow row dict) as a record."""
         emb: Any
         if include_embedding:
             emb = list(row["embedding"]) if row["embedding"] is not None else None
@@ -704,12 +726,11 @@ class KnowledgeBase:
             "meta": json.loads(row["meta"]) if row["meta"] is not None else None,
         }
 
-    def _point_read(self, doc_id: int):
-        """Point lookup routed through the bucketed layout: the partition
-        filter prunes the scan to 1/DOCS_BUCKETS of the table (plus
-        parquet row-group min/max pruning on id inside the bucket)."""
-        src = self._by_key("docs", [doc_id])
-        return src.filter(F.col("id") == doc_id).first()
+    def _point_read(self, doc_id: int) -> Optional[dict]:
+        """Point lookup of one doc row, read in the driver from the one
+        bucket that can hold it (1/DOCS_BUCKETS of the table)."""
+        rows = self._find("docs", [doc_id]).slice(0, 1).to_pylist()
+        return rows[0] if rows else None
 
     def query_doc(self, doc_id: int, include_embedding: bool = False) -> dict:
         row = self._point_read(doc_id)
@@ -833,25 +854,24 @@ class KnowledgeBase:
 
     # -- graph (G1-G6) ---------------------------------------------------------
 
-    def _collect_found(self, df: DataFrame, cols: list, values: list) -> set:
-        """One bounded job: which of ``values`` (tuples over ``cols``)
-        exist in ``df``. ≤64 values go through a filter that pushes to
-        the parquet scan (an ``isin``, or an OR of key conjunctions);
-        larger batches broadcast-semi-join a local DataFrame (an
-        ``isin`` of 100k ids is a 100k-node expression tree, and the
-        broadcast costs a job of its own)."""
-        if not values:
+    def _stored_edge_keys(self, keys: list) -> set:
+        """One bounded job: which (src, dst, rel) ``keys`` the stored
+        edges hold — the uniqueness probe, whose key is not the bucket
+        key. ≤64 keys go through an OR of key conjunctions that pushes
+        to the parquet scan; larger batches broadcast-semi-join a local
+        DataFrame (an expression over 100k keys is a 100k-node tree, and
+        the broadcast costs a job of its own)."""
+        if not keys:
             return set()
-        if len(values) > 64:
-            probe = self.spark.createDataFrame(values, cols)
+        cols = ["src", "dst", "rel"]
+        df = self.edges
+        if len(keys) > 64:
+            probe = self.spark.createDataFrame(keys, cols)
             df = df.join(F.broadcast(probe), on=cols, how="left_semi")
-        elif len(cols) == 1:
-            df = df.filter(F.col(cols[0]).isin([v[0] for v in values]))
         else:
             df = df.filter(functools.reduce(operator.or_, [
-                functools.reduce(operator.and_, [
-                    F.col(c) == x for c, x in zip(cols, v)
-                ]) for v in values
+                (F.col("src") == s) & (F.col("dst") == d) & (F.col("rel") == r)
+                for s, d, r in keys
             ]))
         # no distinct(): the set dedups on the driver, without a shuffle
         return {tuple(r) for r in df.select(*cols).collect()}
@@ -873,7 +893,8 @@ class KnowledgeBase:
         errors to skip bad edges and keep the rest must pass
         ``eager_validation=True``: every call then validates against
         persisted state immediately (reference-parity semantics, at the
-        cost of per-call lookup jobs — use only for small bulks).
+        cost of one edge-key probe job per call — use only for small
+        bulks).
         "First violation wins" is exact under eager validation; under
         deferred validation the commit REPLAYS the calls in order (so
         among staged ops the earliest violation raises first), with one
@@ -884,16 +905,17 @@ class KnowledgeBase:
         Scale shape: calls only stage ops in a driver-side buffer (the
         single per-call check — duplicate key within this bulk — is
         pure memory); ALL persisted-state validation happens once at
-        commit with three bounded jobs (edge-key lookup, bucket-pruned
-        doc-FK lookup, bucket-pruned del-id lookup), then the original
-        sequential semantics are REPLAYED in memory against the
-        prefetched answers — first violation wins, exactly as if each
-        call had validated eagerly (including adds later rolled back by
-        an in-bulk del: sequential execution errors before the del can
-        save them). A 100k-edge bulk is 3 validation jobs, not 100k
-        per-edge ``isEmpty`` jobs (round-3 verdict #1). The commit
-        itself is a single del-filter + union write (atomic via the
-        warehouse swap); on any validation error nothing is written.
+        commit: one bounded job (the edge-key probe) and two driver
+        reads of the buckets that can hold the ids (doc FKs, del ids),
+        then the original sequential semantics are REPLAYED in memory
+        against the prefetched answers — first violation wins, exactly
+        as if each call had validated eagerly (including adds later
+        rolled back by an in-bulk del: sequential execution errors
+        before the del can save them). A 100k-edge bulk is 1 validation
+        job, not 100k per-edge ``isEmpty`` jobs (round-3 verdict #1).
+        The commit itself is a single del-filter + append of the touched
+        buckets, written from the driver (atomic via the warehouse
+        swap); on any validation error nothing is written.
         """
         start_eid = self._next_id("edges", "edge_id")
         counter = [start_eid]
@@ -917,14 +939,10 @@ class KnowledgeBase:
             if eager_validation:
                 for i in (src, dst, rel):
                     if i not in eager_docs_ok:
-                        if not self._collect_found(
-                            self._by_key("docs", [i]), ["id"], [(i,)]
-                        ):
+                        if self._point_read(i) is None:
                             raise ValueError(f"no such doc: {i}")
                         eager_docs_ok.add(i)
-                if key not in eager_del_keys and self._collect_found(
-                    self.edges, ["src", "dst", "rel"], [key]
-                ):
+                if key not in eager_del_keys and self._stored_edge_keys([key]):
                     raise RuntimeError(
                         f"edge ({src}, {dst}, {rel}) already exists"
                     )
@@ -947,16 +965,13 @@ class KnowledgeBase:
                 else:
                     if edge_id in eager_dels:
                         raise ValueError(f"no such edge: [{edge_id}]")
-                    row = (
-                        self._by_key("edges", [edge_id])
-                        .filter(F.col("edge_id") == edge_id)
-                        .select("src", "dst", "rel")
-                        .first()
-                    )
-                    if row is None:
+                    rows = self._find("edges", [edge_id]).to_pylist()
+                    if not rows:
                         raise ValueError(f"no such edge: [{edge_id}]")
                     eager_dels.add(edge_id)
-                    eager_del_keys.add((row["src"], row["dst"], row["rel"]))
+                    eager_del_keys.add(
+                        (rows[0]["src"], rows[0]["dst"], rows[0]["rel"])
+                    )
             for key, eid in list(batch_keys.items()):
                 if eid == edge_id:
                     del batch_keys[key]
@@ -981,42 +996,22 @@ class KnowledgeBase:
         if not ops:
             return
 
-        # -- batched prefetch: three bounded jobs ----------------------
+        # -- batched prefetch: one job, two driver reads ----------------
         need_keys = sorted(
             {(op[2], op[3], op[4]) for op in ops if op[0] == "add"}
         )
         need_docs = sorted(
             {i for op in ops if op[0] == "add" for i in op[2:5]}
         )
-        persisted_keys = self._collect_found(
-            self.edges, ["src", "dst", "rel"], need_keys
-        )
-        found_docs = {
-            t[0]
-            for t in self._collect_found(
-                self._by_key("docs", need_docs), ["id"],
-                [(i,) for i in need_docs],
-            )
-        }
+        persisted_keys = self._stored_edge_keys(need_keys)
+        found_docs = set(self._find("docs", need_docs).column("id").to_pylist())
         persisted_del_ids = sorted(
             {op[1] for op in ops if op[0] == "del" and op[1] < start_eid}
         )
-        del_map = (
-            {
-                r["edge_id"]: (r["src"], r["dst"], r["rel"])
-                for r in self._by_key("edges", persisted_del_ids).join(
-                    F.broadcast(
-                        self.spark.createDataFrame(
-                            [(e,) for e in persisted_del_ids], ["edge_id"]
-                        )
-                    ),
-                    "edge_id",
-                    "inner",
-                ).select("edge_id", "src", "dst", "rel").collect()
-            }
-            if persisted_del_ids
-            else {}
-        )
+        del_map = {
+            r["edge_id"]: (r["src"], r["dst"], r["rel"])
+            for r in self._find("edges", persisted_del_ids).to_pylist()
+        }
 
         # -- sequential replay (first violation wins) ------------------
         adds: list[tuple] = []
@@ -1056,14 +1051,15 @@ class KnowledgeBase:
 
         if not adds and not dels:
             return
-        adds_df = (
-            self.spark.createDataFrame(adds, EDGES_SCHEMA) if adds else None
-        )
+        added = self.wh.arrow_table("edges", adds)
 
-        def patch(post: DataFrame) -> DataFrame:
+        def patch(post: pa.Table) -> pa.Table:
             if dels:
-                post = post.filter(~F.col("edge_id").isin(list(dels)))
-            return post if adds_df is None else post.unionByName(adds_df)
+                post = post.filter(pc.invert(pc.is_in(
+                    post.column("edge_id"),
+                    value_set=pa.array(list(dels), pa.int64()),
+                )))
+            return pa.concat_tables([post, added])
 
         def write():
             keys = [a[0] for a in adds] + list(dels)
@@ -1125,20 +1121,16 @@ class KnowledgeBase:
 
     # -- key/value (K1-K5) --------------------------------------------------------
 
-    def _kv_all(self) -> dict:
-        return {
-            r["key"]: _decode_val(r["val_type"], r["val"])
-            for r in self.wh.read("keyval").collect()
-        }
-
     @contextmanager
     def bulk_keyval_update(self):
         """kb.py:1731-1795: dict-like KV ops committed atomically.
         get() default semantics (kb.py:1746-1756): missing key raises
         KeyError; an Exception-subclass default is raised; any other
-        default is returned."""
-        state = self._kv_all()
-        kb = self
+        default is returned. The table is read and, when the block
+        changed it, rewritten in the driver: a read-only block commits
+        nothing."""
+        state = self._read_kv("keyval")
+        before = _encode_kv(state)
 
         class KV:
             def get(self, key: str, default: Any = _MISSING) -> Any:
@@ -1186,7 +1178,8 @@ class KnowledgeBase:
                 return iter(sorted(state))
 
         yield KV()
-        self._write_kv("keyval", state)
+        if _encode_kv(state) != before:
+            self._write_kv("keyval", state)
 
 
 def _kb_register_views(self: KnowledgeBase, prefix: str = "kb") -> None:

@@ -1836,15 +1836,15 @@ def q_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     MinHash signature kernel and the join shape is unchanged."""
     docs = load(spark, sf_dir, "documents")
     k, w = _WINNOW_K, _WINNOW_W
+    # bound here, not imported in the worker: the closure then pickles
+    # them by value, so workers need no importable svs_spark
+    shingle_hash_many = T.shingle_hash_many
+    tokenize_many = T.tokenize_many
+    window_starts = T.window_starts
 
     def kernel(batches):
         import numpy as np
         import pandas as pd
-        from svs_spark.functions.text import (
-            shingle_hash_many,
-            tokenize_many,
-            window_starts,
-        )
 
         # shingle hashes by polynomial decomposition over the batch's
         # distinct tokens (functions/text.py), then the w-window minima
@@ -1935,10 +1935,10 @@ def q_embed_and_retrieve(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math as _math
 
     docs = load(spark, sf_dir, "documents")
+    poly_hash_many = T.poly_hash_many  # pickled by value with the closure
 
     def kernel(batches):
         import pandas as pd
-        from svs_spark.functions.text import poly_hash_many
 
         for pdf in batches:
             # the raw/norm floats keep the per-doc Python order so

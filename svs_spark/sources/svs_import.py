@@ -17,7 +17,9 @@ runs against. Schema mapping (reference ``src/svs/kb.py:66-113``):
 
 Reads stream in chunks through sqlite3 (stdlib) on the driver — the
 SQLite file is single-node by construction, so driver-side reading is
-not a scale concern; the *write* side produces distributed parquet.
+not a scale concern. The driver already holds every row, so the tables
+are committed from the driver as pyarrow Tables (no Spark job), docs
+and edges in the bucketed layout the KnowledgeBase's point writes use.
 """
 
 from __future__ import annotations
@@ -33,9 +35,7 @@ from typing import Iterator
 
 from pyspark.sql import SparkSession
 
-from svs_spark.kb import (
-    DOCS_SCHEMA, EDGES_SCHEMA, KEYVAL_SCHEMA, _encode_val,
-)
+from svs_spark.kb import BUCKET_KEYS, TABLE_SCHEMAS, _encode_val
 from svs_spark.sources.warehouse import Warehouse, resolve_location
 
 _CHUNK = 50_000
@@ -77,7 +77,7 @@ def import_svs_sqlite(
     db_file = _resolve_sqlite(sqlite_path_or_url)
     con = sqlite3.connect(db_file)
     con.row_factory = sqlite3.Row
-    wh = Warehouse(spark, warehouse_path)
+    wh = Warehouse(spark, warehouse_path, schemas=TABLE_SCHEMAS)
     wh.drop_all()
 
     # docs ⋈ embeddings with BLOB → float32 list
@@ -102,15 +102,11 @@ def import_svs_sqlite(
                 (r["id"], r["parent_id"], r["level"], r["text"], vec,
                  r["meta"])
             )
-    docs_df = spark.createDataFrame(doc_rows, DOCS_SCHEMA)
-    if doc_rows:
-        # imported KBs get the bucketed layout up front so point DML is
-        # bucket-local from the first mutation (kb.DOCS_BUCKETS)
-        from svs_spark.kb import DOCS_BUCKETS
-
-        wh.write_bucketed("docs", docs_df, "id", DOCS_BUCKETS)
-    else:
-        wh.write("docs", docs_df)
+    # imported KBs get the bucketed layout up front so point DML is
+    # bucket-local from the first mutation (an empty table stays plain)
+    wh.write_bucketed(
+        "docs", wh.arrow_table("docs", doc_rows), *BUCKET_KEYS["docs"]
+    )
 
     cur = con.execute("SELECT id, a, b, r, w, d FROM edges ORDER BY id")
     edge_rows = [
@@ -118,7 +114,9 @@ def import_svs_sqlite(
         for chunk in _chunks(cur)
         for r in chunk
     ]
-    wh.write("edges", spark.createDataFrame(edge_rows, EDGES_SCHEMA))
+    wh.write_bucketed(
+        "edges", wh.arrow_table("edges", edge_rows), *BUCKET_KEYS["edges"]
+    )
 
     def kv_rows(table: str) -> list[tuple]:
         out = []
@@ -127,8 +125,8 @@ def import_svs_sqlite(
             out.append((r["key"], t, enc))
         return out
 
-    wh.write("keyval", spark.createDataFrame(kv_rows("keyval_user"), KEYVAL_SCHEMA))
-    wh.write("_meta", spark.createDataFrame(kv_rows("keyval"), KEYVAL_SCHEMA))
+    wh.write("keyval", wh.arrow_table("keyval", kv_rows("keyval_user")))
+    wh.write("_meta", wh.arrow_table("_meta", kv_rows("keyval")))
     con.close()
 
 

@@ -17,6 +17,18 @@ Delta/Iceberg MERGE does (rewrite only the files containing matched
 rows); ``merge_supported()`` probes for delta-spark so a real ACID
 MERGE can slot into the same call sites when the package is present.
 
+Driver/Spark commit split: ``write``, ``write_bucketed`` and
+``overwrite_buckets`` take either a Spark DataFrame or a
+``pyarrow.Table``. A DataFrame's staging files are written by a Spark
+job; a Table's (one file per touched bucket) are written from the
+driver by ``pyarrow.parquet`` — no job. Both go through the same
+writer lock, staging-directory rename swap and returned stamp, and
+both produce the layout Spark reads back. ``read_arrow`` is the
+matching driver read: the bucket files that can hold a set of keys,
+cast to the table's fixed schema. Rows the caller already holds or
+finds by bucket key take the Arrow pair (the KnowledgeBase's single-doc
+calls); distributed inputs and non-key predicates stay on Spark.
+
 Remote open parity (``src/svs/util.py:97-187``): ``http(s)://`` KBs are
 downloaded once into a local cache keyed by URL sha256; ``file://`` and
 plain paths are used directly. ``.gz`` single-file exports are
@@ -34,12 +46,77 @@ import time
 import urllib.request
 import warnings
 from contextlib import contextmanager
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import IntegerType, StructField, StructType
 
 REMOTE_CACHE_DIR = ".remote_cache"
 BUCKET_META_FILE = "_buckets.json"
 WRITER_LOCK_SUFFIX = ".writer.lock"
+# the one data file a driver-side (pyarrow) write puts in each directory
+ARROW_PART_FILE = "part-00000.parquet"
+
+
+def _data_files(d: str) -> list[str]:
+    """Parquet data files directly in directory ``d``, skipped the way
+    Spark skips them: ``_``/``.``-prefixed names are markers and
+    checksums. Empty when ``d`` does not exist (an emptied bucket)."""
+    try:
+        names = os.listdir(d)
+    except FileNotFoundError:
+        return []
+    return sorted(
+        os.path.join(d, f) for f in names
+        if f.endswith(".parquet") and not f.startswith(("_", "."))
+    )
+
+
+def _empty(data):
+    """``data`` with no rows, same schema."""
+    return data.slice(0, 0) if isinstance(data, pa.Table) else data.limit(0)
+
+
+def _stage(staging: str, data, key_col: str | None = None,
+           n_buckets: int = 0) -> None:
+    """Write ``data`` into the fresh directory ``staging``, partitioned
+    as ``_pb=pmod(key_col, n_buckets)`` when ``key_col`` is given. A
+    DataFrame is written by one Spark job; a pyarrow Table from the
+    driver, one file per directory — per bucket when partitioned. The
+    partition column lives in the directory name only, as Spark's
+    ``partitionBy`` leaves it."""
+    if os.path.exists(staging):
+        shutil.rmtree(staging)
+    if isinstance(data, pa.Table):
+        os.makedirs(staging)
+        if key_col is None:
+            pq.write_table(data, os.path.join(staging, ARROW_PART_FILE))
+            return
+        # numpy's mod takes the divisor's sign: pmod for negative ids too
+        pb = np.mod(data.column(key_col).to_numpy(), n_buckets)
+        for b in np.unique(pb).tolist():
+            part = os.path.join(staging, f"_pb={b}")
+            os.makedirs(part)
+            pq.write_table(
+                data.take(np.flatnonzero(pb == b)),
+                os.path.join(part, ARROW_PART_FILE),
+            )
+        return
+    if key_col is None:
+        data.write.mode("overwrite").parquet(staging)
+        return
+    (
+        data.withColumn(
+            "_pb", F.pmod(F.col(key_col), F.lit(n_buckets)).cast("int")
+        )
+        .repartition(F.col("_pb"))
+        .write.mode("overwrite")
+        .partitionBy("_pb")
+        .parquet(staging)
+    )
 
 
 def _start_lock_heartbeat(lp: str, token: bytes, stale_after_s: float):
@@ -276,14 +353,41 @@ class Warehouse:
 
     def stamp(self, name: str) -> tuple[int, int] | None:
         """Version stamp of table ``name``: the ``(inode, mtime_ns)`` of
-        its directory. A whole-table swap gives a new inode and a bucket
-        swap renames entries in the directory, so every commit below
-        changes it. None when the table does not exist."""
+        its directory. A whole-table swap gives a new directory and a
+        bucket swap renames entries inside it; either way every commit
+        below ends in :meth:`_advance`, which sets the mtime past the
+        stamp the commit replaced, so the stamp moves even when two
+        driver-side commits land within one tick of the file clock.
+        None when the table does not exist."""
         try:
             st = os.stat(self.table_path(name))
         except OSError:
             return None
         return st.st_ino, st.st_mtime_ns
+
+    def _advance(self, name: str, before: tuple | None) -> tuple[int, int]:
+        """End a commit of ``name``: set its directory mtime to one
+        nanosecond past both its current mtime and the replaced
+        version's, and return the new stamp. Commits are serialized by
+        the writer lock, so successive versions get strictly increasing
+        mtimes and no version's stamp equals an earlier one's."""
+        path = self.table_path(name)
+        st = os.stat(path)
+        floor = before[1] if before is not None else 0
+        os.utime(path, ns=(st.st_atime_ns, max(st.st_mtime_ns, floor) + 1))
+        return self.stamp(name)
+
+    def _swap(self, name: str, staging: str) -> tuple[int, int]:
+        """Rename the staged directory into place of table ``name``."""
+        path = self.table_path(name)
+        old = path + ".old"
+        before = self.stamp(name)
+        if os.path.exists(path):
+            os.rename(path, old)
+        os.rename(staging, path)
+        if os.path.exists(old):
+            shutil.rmtree(old)
+        return self._advance(name, before)
 
     def _scan(self, name: str) -> tuple:
         """(stamp, scan with _pb, scan without _pb) of the current table
@@ -309,6 +413,45 @@ class Warehouse:
     def read(self, name: str) -> DataFrame:
         return self._scan(name)[2]
 
+    def arrow_schema(self, name: str) -> pa.Schema:
+        """Table ``name``'s fixed schema as an Arrow schema."""
+        return to_arrow_schema(self.schemas[name])
+
+    def arrow_table(self, name: str, rows: list[tuple]) -> pa.Table:
+        """``rows`` (tuples in column order) as a pyarrow Table in table
+        ``name``'s fixed schema, ready for a driver-side commit."""
+        schema = self.arrow_schema(name)
+        cols = list(zip(*rows)) or [()] * len(schema)
+        return pa.Table.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(cols, schema)],
+            schema=schema,
+        )
+
+    def read_arrow(self, name: str, keys=()) -> pa.Table:
+        """The rows of the bucket files that can hold ``keys`` (values
+        of the bucket key), read in the driver by pyarrow — no Spark
+        job. A table that is not bucketed is read whole. Every file is
+        cast to the table's fixed schema, so files written by Spark and
+        by pyarrow read alike. Callers that rewrite what they read hold
+        the table's writer lock across both."""
+        schema = self.arrow_schema(name)
+        path = self.table_path(name)
+        meta = self.bucket_meta(name)
+        if meta is None:
+            dirs = [path]
+        else:
+            nb = meta["n_buckets"]
+            dirs = [
+                os.path.join(path, f"_pb={b}")
+                for b in sorted({self.bucket_of(k, nb) for k in keys})
+            ]
+        parts = []
+        for d in dirs:
+            for f in _data_files(d):
+                with pq.ParquetFile(f) as pf:
+                    parts.append(pf.read().select(schema.names).cast(schema))
+        return pa.concat_tables(parts) if parts else schema.empty_table()
+
     # -- bucketed layout: point mutations touch 1/n of the table ----------
 
     def bucket_meta(self, name: str) -> dict | None:
@@ -325,45 +468,29 @@ class Warehouse:
         return key % n_buckets if key >= 0 else (key % n_buckets + n_buckets) % n_buckets
 
     def write_bucketed(
-        self, name: str, df: DataFrame, key_col: str, n_buckets: int
+        self, name: str, data, key_col: str, n_buckets: int
     ) -> tuple[int, int]:
-        """Atomically (re)write ``name`` partitioned by
-        ``_pb = pmod(key_col, n_buckets)``.  Bulk rewrites stay atomic
-        via the same staging+swap as ``write``; the payoff is that
-        subsequent POINT mutations go through ``overwrite_buckets`` and
-        touch only their own partitions. Like every commit here, returns
-        the table's stamp read under the writer lock after the swap."""
+        """Atomically (re)write ``name`` (a DataFrame or a pyarrow Table)
+        partitioned by ``_pb = pmod(key_col, n_buckets)``.  Bulk rewrites
+        stay atomic via the same staging+swap as ``write``; the payoff is
+        that subsequent POINT mutations go through ``overwrite_buckets``
+        and touch only their own partitions. Like every commit here,
+        returns the table's stamp read under the writer lock after the
+        swap."""
         with self.write_lock(name):
-            path = self.table_path(name)
-            staging = path + ".staging"
-            old = path + ".old"
-            if os.path.exists(staging):
-                shutil.rmtree(staging)
-            bucketed = df.withColumn(
-                "_pb", F.pmod(F.col(key_col), F.lit(n_buckets)).cast("int")
-            )
-            (
-                bucketed.repartition(F.col("_pb"))
-                .write.mode("overwrite")
-                .partitionBy("_pb")
-                .parquet(staging)
-            )
+            staging = self.table_path(name) + ".staging"
+            _stage(staging, data, key_col, n_buckets)
             if not any(
                 d.startswith("_pb=") for d in os.listdir(staging)
             ):
-                # empty df: a partitioned write leaves no readable files, so
+                # no rows: a partitioned write leaves no readable files, so
                 # degrade to a plain empty table (same as overwrite_buckets
-                # when every bucket empties); schema is preserved from df
+                # when every bucket empties); schema is preserved from data
                 shutil.rmtree(staging)
-                return self.write(name, df.limit(0))
+                return self.write(name, _empty(data))
             with open(os.path.join(staging, BUCKET_META_FILE), "w") as f:
                 json.dump({"key_col": key_col, "n_buckets": n_buckets}, f)
-            if os.path.exists(path):
-                os.rename(path, old)
-            os.rename(staging, path)
-            if os.path.exists(old):
-                shutil.rmtree(old)
-            return self.stamp(name)
+            return self._swap(name, staging)
 
     def read_buckets(self, name: str, buckets: list[int]) -> DataFrame:
         """Rows of the given buckets only — the ``_pb IN (...)`` filter
@@ -373,33 +500,22 @@ class Warehouse:
         return raw.filter(F.col("_pb").isin(buckets)).drop("_pb")
 
     def overwrite_buckets(
-        self, name: str, buckets: list[int], df: DataFrame
+        self, name: str, buckets: list[int], data
     ) -> tuple[int, int]:
-        """Replace the given buckets' contents with ``df`` (which must
-        hold exactly those buckets' post-state, without ``_pb``).  Each
-        bucket stages fully before an atomic per-partition dir swap, so
-        a failed job never corrupts the table — the touched-files-only
-        behavior of a lakehouse MERGE, minus cross-bucket transaction
-        isolation (documented tradeoff; see merge_supported())."""
+        """Replace the given buckets' contents with ``data`` (a DataFrame
+        or a pyarrow Table holding exactly those buckets' post-state,
+        without ``_pb``).  Each bucket stages fully before an atomic
+        per-partition dir swap, so a failed write never corrupts the
+        table — the touched-files-only behavior of a lakehouse MERGE,
+        minus cross-bucket transaction isolation (documented tradeoff;
+        see merge_supported())."""
         with self.write_lock(name):
             meta = self.bucket_meta(name)
             assert meta is not None, f"{name} is not bucketed"
             path = self.table_path(name)
             staging = path + ".bucket_staging"
-            if os.path.exists(staging):
-                shutil.rmtree(staging)
-            bucketed = df.withColumn(
-                "_pb",
-                F.pmod(F.col(meta["key_col"]), F.lit(meta["n_buckets"])).cast(
-                    "int"
-                ),
-            )
-            (
-                bucketed.repartition(F.col("_pb"))
-                .write.mode("overwrite")
-                .partitionBy("_pb")
-                .parquet(staging)
-            )
+            before = self.stamp(name)
+            _stage(staging, data, meta["key_col"], meta["n_buckets"])
             for pb in buckets:
                 part = os.path.join(path, f"_pb={pb}")
                 newpart = os.path.join(staging, f"_pb={pb}")
@@ -415,9 +531,9 @@ class Warehouse:
             shutil.rmtree(staging)
             if not any(d.startswith("_pb=") for d in os.listdir(path)):
                 # every bucket emptied: degrade to a plain empty table so
-                # reads keep working (schema preserved from df)
-                return self.write(name, df.limit(0))
-            return self.stamp(name)
+                # reads keep working (schema preserved from data)
+                return self.write(name, _empty(data))
+            return self._advance(name, before)
 
     def merge_into(
         self,
@@ -460,26 +576,18 @@ class Warehouse:
             self.overwrite_buckets(name, touched, post)
             return {"buckets": touched, "rows_written": rows}
 
-    def write(self, name: str, df: DataFrame) -> tuple[int, int]:
-        """Atomically replace table ``name`` with ``df``.
+    def write(self, name: str, data) -> tuple[int, int]:
+        """Atomically replace table ``name`` with ``data`` (a DataFrame
+        or a pyarrow Table).
 
         The new contents are fully materialized to <name>.staging before
-        the swap, so a failed job never corrupts the current table
+        the swap, so a failed write never corrupts the current table
         (rollback-on-exception parity, kb.py:804-821).
         """
         with self.write_lock(name):
-            path = self.table_path(name)
-            staging = path + ".staging"
-            old = path + ".old"
-            if os.path.exists(staging):
-                shutil.rmtree(staging)
-            df.write.mode("overwrite").parquet(staging)
-            if os.path.exists(path):
-                os.rename(path, old)
-            os.rename(staging, path)
-            if os.path.exists(old):
-                shutil.rmtree(old)
-            return self.stamp(name)
+            staging = self.table_path(name) + ".staging"
+            _stage(staging, data)
+            return self._swap(name, staging)
 
     def drop_all(self) -> None:
         """force_fresh_db parity (kb.py:951-952): delete + recreate."""
