@@ -2,7 +2,7 @@
 # discipline, re-expressed for the Spark engine; no mypy in this
 # container, so the typed gate is the cross-engine output-type check).
 
-.PHONY: check test verify bench
+.PHONY: check test kb verify bench
 
 # the full local gate: unit/property/plan suites. The oracle-parity
 # suite checks every registered query's rows, output types (DuckDB vs
@@ -14,6 +14,11 @@ check: test
 # test session otherwise defaults to local[8]) and the 2670 s window
 test:
 	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
+
+# the KnowledgeBase suites under the Tier-1 environment (about 2.5 min
+# on 4 cores): the quick gate for changes to the KB façade or warehouse
+kb:
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; timeout -k 10 2670 python -m pytest tests/test_kb.py tests/test_kb_async.py tests/test_svs_import.py tests/test_chunking.py -q --continue-on-collection-errors -p no:cacheprovider
 
 # the driver-style correctness gate in a fresh process (entry +
 # all registered queries vs DuckDB at sf0.01), started from a directory

@@ -17,6 +17,8 @@ approximately equal — it is used for benchmarks, not the correctness gate.
 The NumPy helpers (``stack_rows``, ``unpack_rows``, ``topk_ties``,
 ``quantize_int8_many``) are the per-batch steps every Arrow GEMM operator
 shares: one decode, one local top-k selection, one int8 quantization.
+``dot_many`` is the NumPy twin of ``dot`` for driver-side scoring that
+must equal the Column form bit for bit.
 """
 
 from __future__ import annotations
@@ -148,6 +150,20 @@ def unpack_rows(values, dtype):
     return np.frombuffer(b"".join(values), dtype=dtype).reshape(
         len(values), -1
     )
+
+
+def dot_many(mat, q):
+    """``dot`` of each row of the (n × d) matrix ``mat`` with the vector
+    ``q``, as the Column form computes it: float64 products summed left
+    to right from 0.0. ``np.cumsum`` is sequential (``np.sum`` is
+    pairwise), and adding 0.0 at the end turns a ``-0.0`` sum into
+    the fold's ``+0.0``, so every score is bit-equal to ``dot``'s."""
+    import numpy as np
+
+    prod = np.multiply(mat, q, dtype=np.float64)
+    if prod.shape[1] == 0:
+        return np.zeros(len(prod))
+    return np.cumsum(prod, axis=1)[:, -1] + 0.0
 
 
 def topk_ties(scores, k: int, axis: int = 0):

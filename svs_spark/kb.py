@@ -13,21 +13,30 @@ embeddings table+FK    nullable embedding column on docs (the FK
                        existed only for no-vector rows + matrix scans)
 edges table            edges: edge_id, src, dst, rel, weight, directed
 keyval/keyval_user     keyval: key, plus typed value columns
-NumPy matrix cache     persist() on the docs DataFrame, after load()
+NumPy matrix cache     retrieve() scoring one parquet file's
+                       vectors at a time in the driver
 asyncio lock           Spark's distributed execution (the reference's
                        serial lock is its scalability ceiling, §4)
 =====================  =========================================
 
 Bulk contexts commit as one atomic table swap each — the moral
 equivalent of the reference's BEGIN/COMMIT transaction per bulk
-(``kb.py:794-829``). Calls whose rows the driver holds or finds by
-bucket key (single-doc adds, reads and updates, keyval, edge commits)
-read and commit their buckets in the driver with pyarrow
-(``Warehouse.read_arrow`` and a Table commit) and run no Spark job, as
-a reference call is one SQLite transaction; DataFrame ingest and
-non-key predicates (children, levels, retrieve, the edge-key probe,
-cascade search) run on Spark. The async/sync API duality is
-deliberately not ported (no query semantics in it; SURVEY.md §7).
+(``kb.py:794-829``). Every call that takes Python values reads and
+commits in the driver with pyarrow and runs no Spark job, as a
+reference call is one SQLite transaction: keyed calls (single-doc
+adds, reads and updates, keyval, edge commits) touch only the buckets
+that can hold their keys (``Warehouse.read_arrow`` and a Table
+commit), and predicate reads (children, levels, counts, the next id,
+the edge-key probe, the delete guard and cascade search) read the
+columns they test from the whole table. ``retrieve`` scores one file's
+vectors at a time with the same float64 fold as
+``functions.vector.dot`` — the analogue of the reference's RAM matrix
+(``kb.py:856-893``). Spark keeps DataFrame inputs
+(``add_documents_df``, ``add_chunked_documents_df``, ``merge_into``,
+``compact``, export), whole-table algorithms (``dfs_traversal``,
+``document_top_pairwise_scores``, ``build_networkx_graph``) and the
+SQL views. The async/sync API duality is deliberately not ported (no
+query semantics in it; SURVEY.md §7).
 """
 
 from __future__ import annotations
@@ -36,7 +45,6 @@ import base64
 import datetime
 import functools
 import json
-import operator
 import warnings
 from contextlib import contextmanager
 from typing import Any, Iterator, List, Optional
@@ -44,7 +52,7 @@ from typing import Any, Iterator, List, Optional
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame, Row, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
     ArrayType, BooleanType, DoubleType, FloatType, IntegerType, LongType,
     StringType, StructField, StructType,
@@ -57,6 +65,7 @@ from svs_spark.functions.embeddings import (
     make_embeddings_func,
     with_magnitude_check,
 )
+from svs_spark.functions.vector import dot_many, topk_ties
 from svs_spark.sources.warehouse import Warehouse, resolve_location
 
 SCHEMA_VERSION = 1  # kb.py:64
@@ -69,8 +78,8 @@ DOCS_BUCKETS = 16
 
 # same point-update locality for the edges table: keyed by edge_id, so a
 # point del_edge/add_edge rewrites 1/EDGES_BUCKETS of the table. The
-# (src, dst, rel) uniqueness probe stays a pushed-down predicate scan
-# (its key is not the bucket key), which is bounded work either way.
+# (src, dst, rel) uniqueness probe is not keyed by the bucket key: it
+# reads the src, dst and rel columns of every bucket in the driver.
 EDGES_BUCKETS = 16
 
 DOCS_SCHEMA = StructType([
@@ -140,6 +149,38 @@ def _decode_val(val_type: str, val: str) -> Any:
     if val_type == "bytes":
         return base64.b64decode(val)
     raise ValueError(f"unknown keyval type tag: {val_type!r}")
+
+
+def _retrieve_candidates(part: pa.Table, q: np.ndarray, n: int) -> tuple:
+    """``(ids, rank, scores)`` of the rows of one docs file (``id``,
+    ``embedding``) that can be in a top ``n`` against the query ``q``.
+    Scores are ``functions.vector.dot_many``'s, bit-equal to the Spark
+    ``dot`` fold. ``rank`` orders before the score, the way Spark's
+    descending sort places the values: 2 for a NaN score (first), 1 for
+    a number, 0 for a null score (last) — a vector whose length differs
+    from the query's, or that holds a null. Docs without a vector are
+    not candidates. Finite scores are pruned with ``topk_ties``; the
+    rare others are all kept."""
+    part = part.filter(pc.is_valid(part.column("embedding")))
+    ids = part.column("id").to_numpy()
+    emb = part.column("embedding").combine_chunks()
+    lens = pc.list_value_length(emb).to_numpy()
+    flat = emb.flatten()
+    ok = lens == len(q)
+    ok[np.repeat(np.arange(len(ids)), lens)[
+        flat.is_null().to_numpy(zero_copy_only=False)
+    ]] = False
+    scores = np.zeros(len(ids))
+    vals = flat.to_numpy(zero_copy_only=False)[np.repeat(ok, lens)]
+    scores[ok] = dot_many(vals.reshape(int(ok.sum()), len(q)), q)
+    rank = ok.astype(np.int8)
+    rank[ok & np.isnan(scores)] = 2
+    scores[rank != 1] = 0.0
+    finite = (rank == 1) & np.isfinite(scores)
+    pick = np.flatnonzero(finite)
+    [top] = topk_ties(scores[pick], n)
+    keep = np.concatenate([pick[top], np.flatnonzero(~finite)])
+    return ids[keep], rank[keep], scores[keep]
 
 
 class KnowledgeBase:
@@ -249,9 +290,12 @@ class KnowledgeBase:
         self._invalidate()
 
     def load(self) -> None:
-        """Warm the vector cache (kb.py:964-967): persist + materialize —
-        Spark's columnar cache replaces the reference's RAM matrix. It
-        holds until this instance's next commit."""
+        """Warm the Spark-side cache (kb.py:964-967): persist and
+        materialize the docs DataFrame that the whole-table calls
+        (``dfs_traversal``, ``document_top_pairwise_scores``,
+        ``build_networkx_graph``) and the SQL views scan. It holds until
+        this instance's next commit. ``retrieve`` and the other driver
+        reads do not use it: they read the parquet files directly."""
         self._invalidate()
         self._loaded = self.docs.persist()
         self._loaded.count()
@@ -289,8 +333,8 @@ class KnowledgeBase:
         stamp = self.wh.stamp(table)
         hit = self._next_ids.get(table)
         if hit is None or hit[0] != stamp:
-            [top] = self.wh.read(table).agg(F.max(col)).first()
-            hit = self._next_ids[table] = (stamp, (top or 0) + 1)
+            top = pc.max(self.wh.read_arrow(table, None, [col]).column(col))
+            hit = self._next_ids[table] = (stamp, (top.as_py() or 0) + 1)
         return hit[1]
 
     def _commit(self, table: str, write, next_id: Optional[int] = None):
@@ -310,14 +354,19 @@ class KnowledgeBase:
 
     # -- counts (Q1) ----------------------------------------------------------
 
+    def _count(self, table: str) -> int:
+        """Rows of ``table``, counted on its bucket-key column."""
+        key_col = BUCKET_KEYS[table][0]
+        return self.wh.read_arrow(table, None, [key_col]).num_rows
+
     def count(self) -> int:
-        return self.docs.count()
+        return self._count("docs")
 
     def __len__(self) -> int:
         return self.count()
 
     def count_edges(self) -> int:
-        return self.edges.count()
+        return self._count("edges")
 
     # -- docs write paths: bucketed point-update locality ---------------------
 
@@ -617,13 +666,14 @@ class KnowledgeBase:
         still has a child at that point in the sequence raises; edges
         touching a deleted doc (as src, dst, or rel) cascade.
 
-        Scale note: both lookups below are bounded by the *deletion
-        batch*, never by table size: the ids are read in the driver from
-        only their buckets, and the children collect filters parent IN
-        deleted-ids (a pushdown predicate, results ≤ batch × fan-out);
-        the guard itself is inherently sequential (delete order
-        matters), which is why it runs on the driver over that bounded
-        set."""
+        Every read runs in the driver, with no Spark job: the existence
+        check and the children guard from the ``id`` and ``parent_id``
+        columns of the whole table (kept: the deleted ids and their
+        children, ≤ batch × fan-out rows), and the cascade search from
+        the edges' ``edge_id``, ``src``, ``dst`` and ``rel`` columns.
+        The guard is inherently sequential (delete order matters). The
+        rewrites touch only the deleted ids' doc buckets and the
+        buckets of the incident edges."""
         deletions: list[int] = []
 
         def del_doc(doc_id: int) -> None:
@@ -633,16 +683,16 @@ class KnowledgeBase:
 
         if not deletions:
             return
-        ids = set(deletions)
-        existing = set(self._find("docs", ids).column("id").to_pylist())
-        children = (
-            self.docs.filter(F.col("parent_id").isin(list(ids)))
-            .select("id", "parent_id")
-            .collect()
-        )
+        gone = pa.array(list(set(deletions)), pa.int64())
+        links = self.wh.read_arrow("docs", None, ["id", "parent_id"])
+        existing = set(links.column("id").filter(
+            pc.is_in(links.column("id"), value_set=gone)
+        ).to_pylist())
+        kids = links.filter(pc.is_in(links.column("parent_id"), value_set=gone))
         kids_by_parent: dict[int, set] = {}
-        for r in children:
-            kids_by_parent.setdefault(r["parent_id"], set()).add(r["id"])
+        for kid, parent in zip(kids.column("id").to_pylist(),
+                               kids.column("parent_id").to_pylist()):
+            kids_by_parent.setdefault(parent, set()).add(kid)
         removed: set = set()
         for doc_id in deletions:
             if doc_id not in existing or doc_id in removed:
@@ -653,36 +703,30 @@ class KnowledgeBase:
                     f"cannot delete doc {doc_id}: it is a parent of {sorted(live_kids)}"
                 )
             removed.add(doc_id)
-        id_list = list(removed)
-        gone = pa.array(id_list, pa.int64())
-        # rewrite only the deleted ids' buckets (1..k of n)
+        # every id passed the guard: ``gone`` is the removed set.
+        # Rewrite only the deleted ids' buckets (1..k of n)
         self._invalidate()
-        self._rewrite("docs", id_list, lambda d: d.filter(
+        self._rewrite("docs", gone.to_pylist(), lambda d: d.filter(
             pc.invert(pc.is_in(d.column("id"), value_set=gone))
         ))
-        # the cascade predicate keys on src/dst/rel, not the bucket key,
-        # so finding victims is a Spark scan — but the WRITE isn't: it
-        # collects the (≤ n_buckets) distinct bucket numbers (each its own
-        # key) of matching edges and rewrites only those buckets. A delete
-        # with no incident edges rewrites nothing.
-        ebmeta = self.wh.bucket_meta("edges")
-        nb = ebmeta["n_buckets"] if ebmeta else EDGES_BUCKETS
-        touched = [r[0] for r in self.edges.filter(
-            F.col("src").isin(id_list)
-            | F.col("dst").isin(id_list)
-            | F.col("rel").isin(id_list)
-        ).select(F.pmod(F.col("edge_id"), F.lit(nb)).cast("int"))
-            .distinct().collect()]
-
-        def cascade(e: pa.Table) -> pa.Table:
-            hit = functools.reduce(pc.or_, [
+        # the cascade predicate keys on src/dst/rel, not the bucket key:
+        # the victims are found in those columns of every edges file, and
+        # only their buckets are rewritten. A delete with no incident
+        # edges rewrites nothing.
+        def incident(e: pa.Table):
+            return functools.reduce(pc.or_, [
                 pc.is_in(e.column(c), value_set=gone)
                 for c in ("src", "dst", "rel")
             ])
-            return e.filter(pc.invert(hit))
 
-        if touched:
-            self._rewrite("edges", touched, cascade)
+        probe = self.wh.read_arrow(
+            "edges", None, ["edge_id", "src", "dst", "rel"]
+        )
+        victims = probe.filter(incident(probe)).column("edge_id").to_pylist()
+        if victims:
+            self._rewrite(
+                "edges", victims, lambda e: e.filter(pc.invert(incident(e)))
+            )
 
     def del_doc(self, doc_id: int) -> None:
         with self.bulk_del_docs() as dd:
@@ -738,19 +782,24 @@ class KnowledgeBase:
             raise KeyError(f"no such doc: {doc_id}")
         return self._to_record(row, include_embedding)
 
+    def _docs_where(self, col: str, value, include_embedding: bool) -> List[dict]:
+        """Records of the docs whose ``col`` equals ``value``, by id: the
+        ``id`` and ``col`` columns of the whole table are read and
+        filtered in the driver, then the matches' buckets are read."""
+        links = self.wh.read_arrow("docs", None, ["id", col])
+        ids = links.filter(pc.equal(links.column(col), value)).column("id")
+        rows = self._find("docs", ids.to_pylist()).sort_by("id")
+        return [self._to_record(r, include_embedding) for r in rows.to_pylist()]
+
     def query_children(
         self, doc_id: int, include_embedding: bool = False
     ) -> List[dict]:
-        rows = self.docs.filter(F.col("parent_id") == doc_id).collect()
-        rows.sort(key=lambda r: r["id"])
-        return [self._to_record(r, include_embedding) for r in rows]
+        return self._docs_where("parent_id", doc_id, include_embedding)
 
     def query_level(
         self, level: int, include_embedding: bool = False
     ) -> List[dict]:
-        rows = self.docs.filter(F.col("level") == level).collect()
-        rows.sort(key=lambda r: r["id"])
-        return [self._to_record(r, include_embedding) for r in rows]
+        return self._docs_where("level", level, include_embedding)
 
     @staticmethod
     def _ord_id(col: F.Column) -> F.Column:
@@ -810,23 +859,36 @@ class KnowledgeBase:
     # -- similarity (V1-V4) -------------------------------------------------------
 
     def retrieve(self, query: str, n: int) -> List[dict]:
-        """kb.py:1608-1640: embed query → brute-force cosine top-n of
-        the docs, which carry their own fields: one scan + bounded heaps,
-        collected in (score, id) DESC order (see
-        operators.similarity.retrieve_topk scale notes)."""
-        from svs_spark.operators.similarity import retrieve_topk
-
-        qvec = self.embedding_func([query])[0]
-        emb = self.docs.filter(F.col("embedding").isNotNull())
-        rows = retrieve_topk(
-            emb, qvec, n, id_col="id", vec_col="embedding",
-            extra_cols=("parent_id", "level", "text", "meta"),
-        ).collect()
-        # every scored doc has a vector: its tri-state embedding is True
+        """kb.py:1608-1640: embed the query, then the exact brute-force
+        top-n of the docs that have a vector, in (score desc, id desc)
+        order — bit for bit what ``operators.similarity.retrieve_topk``
+        returns on ``docs``. The driver reads ``id`` and ``embedding``
+        one parquet file at a time (the reference's RAM matrix, one file
+        of it in memory at once), keeps a running top-n of the
+        candidates :func:`_retrieve_candidates` leaves, then reads the
+        winners' fields from their buckets. Large-corpus retrieval is
+        ``operators.similarity.knn_join_batch`` and the IVF operators."""
+        q = np.asarray(self.embedding_func([query])[0], dtype=np.float64)
+        if n <= 0:
+            return []  # reference get_top_k clamps k<=0 to [] (util.py:190-203)
+        ids = np.empty(0, np.int64)
+        rank = np.empty(0, np.int8)
+        scores = np.empty(0)
+        for part in self.wh.arrow_files("docs", None, ["id", "embedding"]):
+            more = _retrieve_candidates(part, q, n)
+            ids, rank, scores = (
+                np.concatenate([a, b]) for a, b in zip((ids, rank, scores), more)
+            )
+            # ids are unique, so this order is total: a file's top n
+            # merged with the running top n is the top n of both
+            top = np.lexsort((ids, scores, rank))[::-1][:n]
+            ids, rank, scores = ids[top], rank[top], scores[top]
+        rows = {r["id"]: r for r in self._find("docs", ids.tolist()).to_pylist()}
         return [
-            {"score": r["score"],
-             "doc": self._to_record(Row(**r.asDict(), embedding=True), False)}
-            for r in rows
+            {"score": float(s) if c else None,
+             "doc": self._to_record(rows[i], False)}
+            for i, c, s in zip(ids.tolist(), rank.tolist(), scores.tolist())
+            if i in rows  # unless a concurrent commit deleted it since
         ]
 
     def document_top_pairwise_scores(
@@ -855,26 +917,23 @@ class KnowledgeBase:
     # -- graph (G1-G6) ---------------------------------------------------------
 
     def _stored_edge_keys(self, keys: list) -> set:
-        """One bounded job: which (src, dst, rel) ``keys`` the stored
-        edges hold — the uniqueness probe, whose key is not the bucket
-        key. ≤64 keys go through an OR of key conjunctions that pushes
-        to the parquet scan; larger batches broadcast-semi-join a local
-        DataFrame (an expression over 100k keys is a 100k-node tree, and
-        the broadcast costs a job of its own)."""
+        """Which (src, dst, rel) ``keys`` the stored edges hold — the
+        uniqueness probe, whose key is not the bucket key. The driver
+        reads the ``src``, ``dst`` and ``rel`` columns of every edges
+        file, keeps the rows whose ``src`` is a probed one, and matches
+        those against the exact tuples."""
         if not keys:
             return set()
         cols = ["src", "dst", "rel"]
-        df = self.edges
-        if len(keys) > 64:
-            probe = self.spark.createDataFrame(keys, cols)
-            df = df.join(F.broadcast(probe), on=cols, how="left_semi")
-        else:
-            df = df.filter(functools.reduce(operator.or_, [
-                (F.col("src") == s) & (F.col("dst") == d) & (F.col("rel") == r)
-                for s, d, r in keys
-            ]))
-        # no distinct(): the set dedups on the driver, without a shuffle
-        return {tuple(r) for r in df.select(*cols).collect()}
+        e = self.wh.read_arrow("edges", None, cols)
+        e = e.filter(pc.is_in(e.column("src"), value_set=pa.array(
+            list({k[0] for k in keys}), pa.int64()
+        )))
+        want = set(keys)
+        return {
+            k for k in zip(*(e.column(c).to_pylist() for c in cols))
+            if k in want
+        }
 
     @contextmanager
     def bulk_graph_update(self, eager_validation: bool = False):
@@ -893,8 +952,8 @@ class KnowledgeBase:
         errors to skip bad edges and keep the rest must pass
         ``eager_validation=True``: every call then validates against
         persisted state immediately (reference-parity semantics, at the
-        cost of one edge-key probe job per call — use only for small
-        bulks).
+        cost of one driver read of the edges' key columns per call — use
+        only for small bulks).
         "First violation wins" is exact under eager validation; under
         deferred validation the commit REPLAYS the calls in order (so
         among staged ops the earliest violation raises first), with one
@@ -905,14 +964,15 @@ class KnowledgeBase:
         Scale shape: calls only stage ops in a driver-side buffer (the
         single per-call check — duplicate key within this bulk — is
         pure memory); ALL persisted-state validation happens once at
-        commit: one bounded job (the edge-key probe) and two driver
-        reads of the buckets that can hold the ids (doc FKs, del ids),
-        then the original sequential semantics are REPLAYED in memory
+        commit, in the driver with no Spark job: one read of the edges'
+        key columns (the edge-key probe) and two reads of the buckets
+        that can hold the ids (doc FKs, del ids), then the original
+        sequential semantics are REPLAYED in memory
         against the prefetched answers — first violation wins, exactly
         as if each call had validated eagerly (including adds later
         rolled back by an in-bulk del: sequential execution errors
-        before the del can save them). A 100k-edge bulk is 1 validation
-        job, not 100k per-edge ``isEmpty`` jobs (round-3 verdict #1).
+        before the del can save them). A 100k-edge bulk is 3 validation
+        reads, not 100k per-edge ``isEmpty`` jobs (round-3 verdict #1).
         The commit itself is a single del-filter + append of the touched
         buckets, written from the driver (atomic via the warehouse
         swap); on any validation error nothing is written.
@@ -996,7 +1056,7 @@ class KnowledgeBase:
         if not ops:
             return
 
-        # -- batched prefetch: one job, two driver reads ----------------
+        # -- batched prefetch: three driver reads -----------------------
         need_keys = sorted(
             {(op[2], op[3], op[4]) for op in ops if op[0] == "add"}
         )

@@ -23,11 +23,14 @@ Driver/Spark commit split: ``write``, ``write_bucketed`` and
 job; a Table's (one file per touched bucket) are written from the
 driver by ``pyarrow.parquet`` — no job. Both go through the same
 writer lock, staging-directory rename swap and returned stamp, and
-both produce the layout Spark reads back. ``read_arrow`` is the
-matching driver read: the bucket files that can hold a set of keys,
-cast to the table's fixed schema. Rows the caller already holds or
-finds by bucket key take the Arrow pair (the KnowledgeBase's single-doc
-calls); distributed inputs and non-key predicates stay on Spark.
+both produce the layout Spark reads back. ``read_arrow`` (and
+``arrow_files``, the same read one file at a time) is the matching
+driver read, cast to the table's fixed schema: the bucket files that
+can hold a set of keys, or every ``_pb=<k>`` bucket when no keys are
+given, optionally projected to the columns a predicate tests. Every
+KnowledgeBase call that takes Python values — keyed or predicate —
+takes the Arrow pair; DataFrame inputs, whole-table algorithms and the
+SQL views stay on Spark.
 
 Remote open parity (``src/svs/util.py:97-187``): ``http(s)://`` KBs are
 downloaded once into a local cache keyed by URL sha256; ``file://`` and
@@ -427,30 +430,55 @@ class Warehouse:
             schema=schema,
         )
 
-    def read_arrow(self, name: str, keys=()) -> pa.Table:
-        """The rows of the bucket files that can hold ``keys`` (values
-        of the bucket key), read in the driver by pyarrow — no Spark
-        job. A table that is not bucketed is read whole. Every file is
-        cast to the table's fixed schema, so files written by Spark and
-        by pyarrow read alike. Callers that rewrite what they read hold
-        the table's writer lock across both."""
-        schema = self.arrow_schema(name)
+    def _arrow_dirs(self, name: str, keys) -> list[str]:
+        """Directories whose files can hold ``keys`` (values of the
+        bucket key); every bucket directory when ``keys`` is None. A
+        plain table is its one directory. Only ``_pb=<k>`` names count:
+        the ``_pb=<k>.old`` a concurrent bucket swap leaves for a moment
+        holds the replaced rows."""
         path = self.table_path(name)
         meta = self.bucket_meta(name)
         if meta is None:
-            dirs = [path]
-        else:
-            nb = meta["n_buckets"]
-            dirs = [
-                os.path.join(path, f"_pb={b}")
-                for b in sorted({self.bucket_of(k, nb) for k in keys})
+            return [path]
+        if keys is None:
+            return [
+                os.path.join(path, d) for d in sorted(os.listdir(path))
+                if d.startswith("_pb=") and d[4:].isdigit()
             ]
-        parts = []
-        for d in dirs:
+        nb = meta["n_buckets"]
+        return [
+            os.path.join(path, f"_pb={b}")
+            for b in sorted({self.bucket_of(k, nb) for k in keys})
+        ]
+
+    def _arrow_schema(self, name: str, columns) -> pa.Schema:
+        schema = self.arrow_schema(name)
+        if columns is None:
+            return schema
+        return pa.schema([schema.field(c) for c in columns])
+
+    def arrow_files(self, name: str, keys=None, columns=None):
+        """Yield the rows of table ``name`` one data file at a time, read
+        in the driver by pyarrow — no Spark job: the files of the
+        buckets that can hold ``keys`` (values of the bucket key), or of
+        the whole table when ``keys`` is None. ``columns`` projects the
+        read. Every file is cast to the table's fixed schema, so files
+        written by Spark and by pyarrow read alike. Callers that rewrite
+        what they read hold the table's writer lock across both."""
+        schema = self._arrow_schema(name, columns)
+        for d in self._arrow_dirs(name, keys):
             for f in _data_files(d):
                 with pq.ParquetFile(f) as pf:
-                    parts.append(pf.read().select(schema.names).cast(schema))
-        return pa.concat_tables(parts) if parts else schema.empty_table()
+                    part = pf.read(columns=schema.names).cast(schema)
+                yield part
+
+    def read_arrow(self, name: str, keys=None, columns=None) -> pa.Table:
+        """:meth:`arrow_files` as one Table: the bucket files that can
+        hold ``keys``, or the whole table when ``keys`` is None."""
+        parts = list(self.arrow_files(name, keys, columns))
+        if parts:
+            return pa.concat_tables(parts)
+        return self._arrow_schema(name, columns).empty_table()
 
     # -- bucketed layout: point mutations touch 1/n of the table ----------
 

@@ -191,6 +191,62 @@ class TestRetrieval:
         pairs = kw_kb.document_top_pairwise_scores(2)
         assert [(p[1]["id"], p[2]["id"]) for p in pairs] == [(1, 2), (2, 3)]
 
+    def test_retrieve_matches_retrieve_topk(self, spark, tmp_path):
+        """The driver-side retrieve returns exactly the ids, order and
+        scores of ``retrieve_topk`` over ``docs``: tied vectors (id desc
+        breaks the tie), negative xxhash64 ids, a doc with no vector,
+        and vectors whose length differs from the query's (a null score
+        in Spark, ranked after every number)."""
+        import zlib
+
+        import numpy as np
+        from pyspark.sql import functions as F
+
+        from svs_spark.operators.similarity import retrieve_topk
+
+        def provider(texts):
+            # the vector depends on the text's last word only: docs that
+            # share it have identical vectors, so their scores tie
+            out = []
+            for t in texts:
+                rng = np.random.default_rng(zlib.crc32(t.split()[-1].encode()))
+                v = rng.standard_normal(8)
+                out.append((v / np.linalg.norm(v)).tolist())
+            return out
+
+        kb = KnowledgeBase(spark, str(tmp_path / "parity"),
+                           embedding_func=provider, force_fresh_db=True)
+        with kb.bulk_add_docs() as add:
+            for i in range(40):
+                add(f"doc {i} g{i % 6}", no_embedding=i == 13)
+        kb.add_documents_df(
+            spark.createDataFrame(
+                [(f"ingested {i} g{i % 4}",) for i in range(20)], "text string"
+            ),
+            id_col=None,
+        )
+        ids = [r["id"] for r in kb.docs.select("id").collect()]
+        assert min(ids) < 0 < max(ids)  # xxhash64(text) ids of both signs
+        kb.set_doc_embedding(5, [0.6, 0.8])  # shorter than the query
+        kb.set_doc_embedding(7, [0.5] * 9)  # longer than the query
+        n_scored = len(ids) - 1
+        emb = kb.docs.filter(F.col("embedding").isNotNull())
+        for text in ("q g0", "q g3", "q other"):
+            qvec = provider([text])[0]
+            for n in (1, 4, 7, 20, n_scored - 2, n_scored, n_scored + 5, 0, -1):
+                want = [(r["id"], r["score"]) for r in retrieve_topk(
+                    emb, qvec, n, id_col="id", vec_col="embedding"
+                ).collect()]
+                got = [(r["doc"]["id"], r["score"])
+                       for r in kb.retrieve(text, n)]
+                assert got == want, (text, n)
+            assert len(got) == 0
+        full = kb.retrieve("q g0", n_scored + 5)
+        assert len(full) == n_scored
+        assert [r["doc"]["id"] for r in full[-2:]] == [7, 5]
+        assert [r["score"] for r in full[-2:]] == [None, None]
+        assert all(r["doc"]["embedding"] is True for r in full)
+
     def test_magnitude_guard(self, spark, tmp_path):
         # reference test_kb.py:1321-1346
         def too_big(texts):
@@ -366,10 +422,10 @@ class TestGraph:
         assert kb.count_edges() == 1
 
     def test_bulk_job_count_is_constant(self, spark, kb):
-        """The round-3 scale fix: a bulk of N adds must run O(1) Spark
-        jobs (one batched edge-key probe; doc and del-id lookups and the
-        commit run in the driver), never a per-edge isEmpty/collect —
-        100k edges was ~100k driver-dispatched jobs before."""
+        """The round-3 scale fix: a bulk of N adds runs no Spark job —
+        the batched edge-key probe, the doc and del-id lookups and the
+        commit all run in the driver — never a per-edge isEmpty/collect
+        (100k edges was ~100k driver-dispatched jobs before)."""
         self._setup(kb)
         sc = spark.sparkContext
         sc.setJobGroup("bulk-graph-gate", "bulk job-count gate")
@@ -382,8 +438,67 @@ class TestGraph:
         finally:
             sc.setJobGroup("bulk-graph-gate-done", "")
         jobs = sc.statusTracker().getJobIdsForGroup("bulk-graph-gate")
+        assert len(jobs) == 0, f"{len(jobs)} jobs for a 105-edge bulk"
         assert kb.count_edges() == 105
-        assert 0 < len(jobs) <= 30, f"{len(jobs)} jobs for a 105-edge bulk"
+        assert {(r["src"], r["dst"], r["rel"]) for r in kb.edges.collect()} == {
+            (i, j, rel) for i in range(1, 7) for j in range(i + 1, 8)
+            for rel in (1, 2, 3, 4, 5)
+        }
+
+    def test_edge_probe_over_many_keys(self, spark, kb, monkeypatch):
+        """The edge-key probe with more than 64 keys in one bulk: a
+        stored key repeated raises and writes nothing, a stored key
+        deleted and re-added in the same bulk commits, and a read made
+        while another Warehouse swaps an edges bucket sees only the
+        live ``_pb=<k>`` directories, never the replaced ``_pb=<k>.old``."""
+        import os
+        import shutil
+
+        from svs_spark.kb import TABLE_SCHEMAS
+        from svs_spark.sources.warehouse import Warehouse
+
+        self._setup(kb)
+        stored = kb.add_edge(1, 2, 3)
+        keys = [(i, j, rel) for i in range(1, 8) for j in range(1, 8)
+                for rel in range(1, 8) if (i, j, rel) != (1, 2, 3)][:99]
+        before = sorted(kb.edges.collect())
+        with pytest.raises(RuntimeError, match=r"edge \(1, 2, 3\) already"):
+            with kb.bulk_graph_update() as g:
+                for key in keys[:60]:
+                    g.add_edge(*key)
+                g.add_edge(1, 2, 3)
+                for key in keys[60:]:
+                    g.add_edge(*key)
+        assert sorted(kb.edges.collect()) == before
+
+        with kb.bulk_graph_update() as g:
+            g.del_edge(stored)
+            readded = g.add_edge(1, 2, 3)
+            for key in keys:
+                g.add_edge(*key)
+        got = {(r["src"], r["dst"], r["rel"]): r["edge_id"]
+               for r in kb.edges.collect()}
+        assert len(got) == 100 and kb.count_edges() == 100
+        assert got[(1, 2, 3)] == readded != stored
+
+        other = Warehouse(spark, kb.wh.root, schemas=TABLE_SCHEMAS)
+        rmtree, seen = shutil.rmtree, []
+
+        def read_mid_swap(path, *a, **k):
+            if path.endswith(".old"):
+                # the new bucket is in place, the old one not yet removed
+                assert os.path.basename(path) in os.listdir(kb.wh.table_path("edges"))
+                seen.append(other.read_arrow("edges"))
+            return rmtree(path, *a, **k)
+
+        monkeypatch.setattr(shutil, "rmtree", read_mid_swap)
+        added = kb.add_edge(7, 7, 7)
+        monkeypatch.undo()
+        assert len(seen) == 1
+        mid = sorted(zip(seen[0].column("edge_id").to_pylist(),
+                         seen[0].column("src").to_pylist()))
+        assert mid == sorted((r["edge_id"], r["src"]) for r in kb.edges.collect())
+        assert len(mid) == 101 and (added, 7) in mid
 
 
 class TestKeyval:
@@ -808,39 +923,43 @@ class TestCallCost:
         both_see(5, [2, 3])
 
     def test_warm_call_job_budget(self, spark, kb):
-        """Each call runs only the jobs its answer needs: calls that read
-        or commit rows by bucket key run none (pyarrow in the driver);
-        a non-key predicate (children, retrieve, the edge-key probe) is
-        one job, with no schema inference, max(id) scan or sort."""
+        """A call that takes Python values runs no Spark job: keyed calls
+        read and commit their buckets in the driver with pyarrow, and
+        predicate reads (children, levels, retrieve, counts, the
+        edge-key probe, the delete guard and cascade, the next id after
+        a delete) read the columns they test from the whole table."""
         with kb.bulk_add_docs() as add:
             roots = [add(f"doc {i}") for i in range(8)]
             for i in range(8):
                 add(f"child {i}", parent_id=roots[i % 3])
+            spare = [add(f"spare {i}") for i in range(2)]
+        for s in spare:  # each del_doc below cascades one edge
+            kb.add_edge(s, roots[0], roots[1])
 
         def kv_set():
             with kb.bulk_keyval_update() as kv:
                 kv.set("key", 1)
 
-        budgets = {
-            "query_doc": (0, lambda p: kb.query_doc(roots[1])),
-            "query_children": (1, lambda p: kb.query_children(roots[0])),
-            "retrieve": (1, lambda p: kb.retrieve("doc", 5)),
-            "add_doc": (0, lambda p: kb.add_doc("new", parent_id=roots[2])),
-            "update_doc_meta": (
-                0, lambda p: kb.update_doc_meta(roots[3], {"pass": p})
-            ),
-            "add_edge": (1, lambda p: kb.add_edge(roots[0], roots[1], roots[p])),
-            "keyval_set": (0, lambda p: kv_set()),
+        # del_doc drops the cached next id, so add_doc after it reads max(id)
+        calls = {
+            "query_doc": lambda p: kb.query_doc(roots[1]),
+            "query_children": lambda p: kb.query_children(roots[0]),
+            "query_level": lambda p: kb.query_level(1),
+            "retrieve": lambda p: kb.retrieve("doc", 5),
+            "count": lambda p: kb.count(),
+            "del_doc": lambda p: kb.del_doc(spare[p]),
+            "add_doc": lambda p: kb.add_doc("new", parent_id=roots[2]),
+            "update_doc_meta": lambda p: kb.update_doc_meta(roots[3], {"pass": p}),
+            "add_edge": lambda p: kb.add_edge(roots[0], roots[1], roots[p]),
+            "keyval_set": lambda p: kv_set(),
         }
         for p in (0, 1):  # pass 0 warms the KB: bucketed tables, id counters
-            for name, (budget, call) in budgets.items():
+            for name, call in calls.items():
                 jobs = _jobs_in(spark, f"kb-budget-{name}-{p}", lambda: call(p))
-                if p == 0:
-                    continue
-                if budget == 0:
+                if p == 1:
                     assert jobs == 0, f"{name}: {jobs} jobs"
-                else:  # a call that still runs Spark really does
-                    assert 0 < jobs <= budget, f"{name}: {jobs} jobs"
+        assert kb.count() == 8 + 8 + 2
+        assert kb.count_edges() == 2
 
     def test_id_allocation_is_max_plus_one(self, kb):
         """Cached id counters give exactly the ids max(id) + 1 gives,

@@ -300,6 +300,45 @@ def test_int8_quantization_error_bound(vec):
 
 @given(st.data())
 @settings(max_examples=300, deadline=None)
+def test_dot_many_equals_sequential_fold(data):
+    """``dot_many`` scores each row bit for bit as ``functions.vector.dot``
+    folds it: float32 components widened to float64, multiplied by the
+    float64 query, summed left to right from 0.0 (so a row of ``-0.0``
+    products scores ``+0.0``)."""
+    import struct
+
+    import numpy as np
+
+    from svs_spark.functions.vector import dot_many
+
+    d = data.draw(st.integers(0, 24), label="d")
+    rows = data.draw(st.integers(0, 6), label="rows")
+    cell = st.one_of(
+        st.sampled_from([0.0, -0.0, 1e-30, -1e30]),
+        st.floats(min_value=-1.0, max_value=1.0, width=32),
+    )
+    mat = np.asarray(
+        data.draw(st.lists(cell, min_size=rows * d, max_size=rows * d)),
+        dtype=np.float32,
+    ).reshape(rows, d)
+    q = np.asarray(
+        data.draw(st.lists(cell, min_size=d, max_size=d)), dtype=np.float64
+    )
+
+    def fold(row):
+        acc = 0.0
+        for x, y in zip(row.tolist(), q.tolist()):
+            acc = acc + x * y
+        return acc
+
+    got = dot_many(mat, q)
+    assert got.shape == (rows,)
+    for row, g in zip(mat, got.tolist()):
+        assert struct.pack("<d", g) == struct.pack("<d", fold(row))
+
+
+@given(st.data())
+@settings(max_examples=300, deadline=None)
 def test_topk_ties_then_global_order_equals_full_lexsort(data):
     """The local top-k selection keeps every entry tied with the k-th
     and drops the -inf mask, so ranking its survivors by (score desc,
