@@ -15,10 +15,11 @@ check: test
 test:
 	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
-# the KnowledgeBase suites under the Tier-1 environment (about 2.5 min
-# on 4 cores): the quick gate for changes to the KB façade or warehouse
+# the KnowledgeBase and warehouse suites under the Tier-1 environment
+# (about 3 min on 4 cores): the quick gate for changes to the KB façade
+# or warehouse
 kb:
-	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; timeout -k 10 2670 python -m pytest tests/test_kb.py tests/test_kb_async.py tests/test_svs_import.py tests/test_chunking.py -q --continue-on-collection-errors -p no:cacheprovider
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; timeout -k 10 2670 python -m pytest tests/test_kb.py tests/test_kb_async.py tests/test_svs_import.py tests/test_chunking.py tests/test_writer_lock.py tests/test_sources.py -q --continue-on-collection-errors -p no:cacheprovider
 
 # the driver-style correctness gate in a fresh process (entry +
 # all registered queries vs DuckDB at sf0.01), started from a directory

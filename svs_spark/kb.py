@@ -31,12 +31,19 @@ the edge-key probe, the delete guard and cascade search) read the
 columns they test from the whole table. ``retrieve`` scores one file's
 vectors at a time with the same float64 fold as
 ``functions.vector.dot`` — the analogue of the reference's RAM matrix
-(``kb.py:856-893``). Spark keeps DataFrame inputs
-(``add_documents_df``, ``add_chunked_documents_df``, ``merge_into``,
-``compact``, export), whole-table algorithms (``dfs_traversal``,
-``document_top_pairwise_scores``, ``build_networkx_graph``) and the
-SQL views. The async/sync API duality is deliberately not ported (no
-query semantics in it; SURVEY.md §7).
+(``kb.py:856-893``). The whole-table calls collect their whole answer,
+so they read in the driver too: ``dfs_traversal`` walks the ``id``,
+``parent_id`` columns and ``build_networkx_graph`` the edges table.
+Spark keeps DataFrame inputs (``add_documents_df``,
+``add_chunked_documents_df``, ``compact``, export), the pairwise
+block GEMM of ``document_top_pairwise_scores`` and the SQL views.
+
+A KB's state is its files only: ``docs`` and ``edges`` are bucketed
+from creation (a plain table from an older version is rewritten
+bucketed once, at open), and nothing is cached across calls except
+what is keyed by a table's stamp, so every commit, by any instance or
+process, is seen by the next read. The async/sync API duality is
+deliberately not ported (no query semantics in it; SURVEY.md §7).
 """
 
 from __future__ import annotations
@@ -108,7 +115,7 @@ KEYVAL_SCHEMA = StructType([
     StructField("val", StringType(), False),
 ])
 
-# bucket key and bucket count a table gets at its first point rewrite
+# bucket key and bucket count of the bucketed tables
 BUCKET_KEYS = {"docs": ("id", DOCS_BUCKETS), "edges": ("edge_id", EDGES_BUCKETS)}
 
 TABLE_SCHEMAS = {
@@ -206,7 +213,6 @@ class KnowledgeBase:
         self.wh = Warehouse(spark, root, schemas=TABLE_SCHEMAS)
         if force_fresh_db:
             self.wh.drop_all()
-        self._loaded: Optional[DataFrame] = None
         # table -> (stamp, next id): max(id) + 1 of that table version
         self._next_ids: dict[str, tuple] = {}
         self._init_meta(embedding_func, embedding_params)
@@ -262,12 +268,27 @@ class KnowledgeBase:
         new_meta["embedding_func_params"] = json.dumps(params_to_store)
         if _encode_kv(new_meta) != _encode_kv(meta):
             self._write_kv("_meta", new_meta)
-        for table in ("docs", "edges", "keyval"):
+        if not self.wh.exists("keyval"):
+            self._write_kv("keyval", {})
+        for table in BUCKET_KEYS:
+            if self.wh.bucket_meta(table) is None:
+                self._bucket(table)
+
+    def _bucket(self, table: str) -> None:
+        """Create ``table`` empty and bucketed, or rewrite a plain one
+        (as older versions wrote them) bucketed, under its writer lock:
+        every later call reads and commits buckets."""
+        with self.wh.write_lock(table):
             if not self.wh.exists(table):
-                stamp = self.wh.write(table, self.wh.arrow_table(table, []))
-                if table in BUCKET_KEYS:
-                    # an empty table's next id needs no max() scan
-                    self._next_ids[table] = (stamp, 1)
+                stamp = self.wh.write_bucketed(
+                    table, self.wh.arrow_table(table, []), *BUCKET_KEYS[table]
+                )
+                # an empty table's next id needs no max() scan
+                self._next_ids[table] = (stamp, 1)
+            elif self.wh.bucket_meta(table) is None:
+                self.wh.write_bucketed(
+                    table, self.wh.read_arrow(table), *BUCKET_KEYS[table]
+                )
 
     def _read_kv(self, table: str) -> dict:
         return {
@@ -287,18 +308,14 @@ class KnowledgeBase:
                 self.wh.compact(t)
         if also_gzip:
             self.wh.export_gzip(self.wh.root + "_gzip_export")
-        self._invalidate()
 
     def load(self) -> None:
-        """Warm the Spark-side cache (kb.py:964-967): persist and
-        materialize the docs DataFrame that the whole-table calls
-        (``dfs_traversal``, ``document_top_pairwise_scores``,
-        ``build_networkx_graph``) and the SQL views scan. It holds until
-        this instance's next commit. ``retrieve`` and the other driver
-        reads do not use it: they read the parquet files directly."""
-        self._invalidate()
-        self._loaded = self.docs.persist()
-        self._loaded.count()
+        """kb.py:964-967 parity: a no-op. svs warms its RAM matrix here;
+        every call here reads the table files as they are, in the
+        driver, so there is nothing to warm — and a persisted Spark
+        DataFrame would be served, by Spark's session-wide cache, to
+        every later read of the same files after a commit had replaced
+        them."""
 
     # -- table views (the _EmbeddingsMatrix analogue, kb.py:856-893) ---------
 
@@ -311,11 +328,6 @@ class KnowledgeBase:
     @property
     def edges(self) -> DataFrame:
         return self.wh.read("edges")
-
-    def _invalidate(self) -> None:
-        if self._loaded is not None:
-            self._loaded.unpersist()
-        self._loaded = None
 
     def _find(self, table: str, keys) -> pa.Table:
         """The rows of ``table`` whose bucket key is in ``keys``, read
@@ -374,18 +386,12 @@ class KnowledgeBase:
         """Commit ``patch(rows)`` in place of the rows of the buckets that
         can hold ``keys`` (values of the bucket key), read and written
         in the driver as pyarrow Tables under the table's writer lock;
-        returns the stamp after the swap. A table not yet bucketed
-        (plain and empty at init, or a legacy plain table) is rewritten
-        whole into the bucketed layout, so every later rewrite touches
-        only its own buckets — a single add_doc touches ONE bucket."""
+        returns the stamp after the swap. A single add_doc touches ONE
+        bucket."""
         keys = list(keys)
         with self.wh.write_lock(table):
-            bmeta = self.wh.bucket_meta(table)
             post = patch(self.wh.read_arrow(table, keys))
-            if bmeta is None:
-                key_col, nb = BUCKET_KEYS[table]
-                return self.wh.write_bucketed(table, post, key_col, nb)
-            nb = bmeta["n_buckets"]
+            nb = self.wh.bucket_meta(table)["n_buckets"]
             pbs = sorted({Warehouse.bucket_of(k, nb) for k in keys})
             return self.wh.overwrite_buckets(table, pbs, post)
 
@@ -394,14 +400,7 @@ class KnowledgeBase:
         with Spark, touching only their hash buckets, found by a
         distinct-bucket probe that collects ≤ n_buckets rows, never
         data."""
-        self._invalidate()
-        bmeta = self.wh.bucket_meta("docs")
-        if bmeta is None:
-            key_col, nb = BUCKET_KEYS["docs"]
-            return self.wh.write_bucketed(
-                "docs", self.docs.unionByName(new_df), key_col, nb
-            )
-        nb = F.lit(bmeta["n_buckets"])
+        nb = F.lit(self.wh.bucket_meta("docs")["n_buckets"])
         pbs = sorted(r[0] for r in new_df.select(
             F.pmod(F.col("id"), nb).cast("int")
         ).distinct().collect())
@@ -424,7 +423,6 @@ class KnowledgeBase:
                 hit, pa.scalar(value, col.type), col
             ))
 
-        self._invalidate()
         self._commit("docs", lambda: self._rewrite("docs", [doc_id], patch))
 
     def _append_embedded(
@@ -505,7 +503,6 @@ class KnowledgeBase:
             (i, pid, level, text, None if skip else next(vecs), enc)
             for i, pid, level, text, enc, skip in pending
         ])
-        self._invalidate()
         self._commit(
             "docs",
             lambda: self._rewrite(
@@ -705,7 +702,6 @@ class KnowledgeBase:
             removed.add(doc_id)
         # every id passed the guard: ``gone`` is the removed set.
         # Rewrite only the deleted ids' buckets (1..k of n)
-        self._invalidate()
         self._rewrite("docs", gone.to_pylist(), lambda d: d.filter(
             pc.invert(pc.is_in(d.column("id"), value_set=gone))
         ))
@@ -801,55 +797,27 @@ class KnowledgeBase:
     ) -> List[dict]:
         return self._docs_where("level", level, include_embedding)
 
-    @staticmethod
-    def _ord_id(col: F.Column) -> F.Column:
-        """Order-preserving string form of a signed 64-bit id: id + 2^63
-        in DECIMAL(20,0), zero-padded to 20 digits — lexicographic order
-        equals numeric order for EVERY long, including the negative
-        xxhash64 ids produced by add_documents_df/corpus ingest.  (A
-        plain lpad(id, 12) truncates >12-digit ids and sorts negatives
-        after positives — ADVICE r1.)"""
-        import decimal
-
-        shifted = col.cast("decimal(20,0)") + F.lit(decimal.Decimal(2**63))
-        return F.lpad(shifted.cast("decimal(20,0)").cast("string"), 20, "0")
-
     def dfs_traversal(self, include_embedding: bool = False) -> List[dict]:
         """kb.py:1580-1593 golden order (tests/test_kb.py:1117-1153):
-        roots ascending, children ascending, depth-first. Iterative
-        frontier expansion building a zero-padded path, then one sort."""
-        frontier = self.docs.filter(F.col("parent_id").isNull()).select(
-            F.col("id").alias("cur"),
-            self._ord_id(F.col("id")).alias("path"),
-        )
-        # localCheckpoint per level: truncates the iterated lineage so
-        # deep hierarchies don't nest plans exponentially (same fix as
-        # operators.dedup.connected_components)
-        frontier = frontier.localCheckpoint()
-        paths = frontier
-        while frontier.limit(1).count() > 0:
-            frontier = (
-                self.docs.alias("d")
-                .join(frontier.alias("f"), F.col("d.parent_id") == F.col("f.cur"))
-                .select(
-                    F.col("d.id").alias("cur"),
-                    F.concat_ws(
-                        "/",
-                        F.col("f.path"),
-                        self._ord_id(F.col("d.id")),
-                    ).alias("path"),
-                )
-                .localCheckpoint()
-            )
-            paths = paths.unionByName(frontier)
-        ordered = (
-            self.docs.alias("d")
-            .join(paths.alias("p"), F.col("d.id") == F.col("p.cur"))
-            .orderBy("p.path")
-            .select("d.*")
-            .collect()
-        )
-        return [self._to_record(r, include_embedding) for r in ordered]
+        roots ascending, children ascending, depth-first, by signed id.
+        The driver reads the ``id``, ``parent_id`` columns, walks them
+        with a stack, then reads the rows of the docs it reached."""
+        links = self.wh.read_arrow("docs", None, ["id", "parent_id"])
+        kids: dict = {}
+        for i, parent in sorted(zip(links.column("id").to_pylist(),
+                                    links.column("parent_id").to_pylist()),
+                                reverse=True):
+            kids.setdefault(parent, []).append(i)
+        order: list = []
+        stack = list(kids.get(None, []))  # descending: pops ascending
+        while stack:
+            order.append(stack.pop())
+            stack.extend(kids.get(order[-1], []))
+        rows = {r["id"]: r for r in self._find("docs", order).to_pylist()}
+        return [
+            self._to_record(rows[i], include_embedding)
+            for i in order if i in rows  # unless a concurrent commit deleted it
+        ]
 
     def fetch_doc_with_emb_id(self, doc_id: int) -> dict:
         """Q5 reverse-FK parity (kb.py:511-524) — with the vector stored
@@ -903,11 +871,9 @@ class KnowledgeBase:
         ).collect()
         docs_by_id = {
             r["id"]: self._to_record(r, False)
-            for r in self.docs.filter(
-                F.col("id").isin(
-                    [p["id_a"] for p in pairs] + [p["id_b"] for p in pairs]
-                )
-            ).collect()
+            for r in self._find(
+                "docs", {p[k] for p in pairs for k in ("id_a", "id_b")}
+            ).to_pylist()
         }
         return [
             (p["score"], docs_by_id[p["id_a"]], docs_by_id[p["id_b"]])
@@ -1154,7 +1120,7 @@ class KnowledgeBase:
         except ImportError as e:  # pragma: no cover
             raise RuntimeError("networkx is not installed") from e
 
-        edge_rows = self.edges.collect()
+        edge_rows = self.wh.read_arrow("edges").sort_by("edge_id").to_pylist()
         any_directed = any(r["directed"] for r in edge_rows)
         if any_directed:
             g = nx.MultiDiGraph() if multigraph else nx.DiGraph()
@@ -1166,7 +1132,7 @@ class KnowledgeBase:
         )
         recs = {
             r["id"]: self._to_record(r, False)
-            for r in self.docs.filter(F.col("id").isin(needed)).collect()
+            for r in self._find("docs", needed).to_pylist()
         }
         for r in edge_rows:
             attrs = {"edge_doc": recs[r["rel"]]}

@@ -1543,7 +1543,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_descendants_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Subtree traversal via Spark 4's recursive CTE — the SQL-surface
-    twin of KnowledgeBase.dfs_traversal's frontier expansion."""
+    twin of KnowledgeBase.dfs_traversal's walk."""
     h = _hierarchy(spark, sf_dir)
     h.createOrReplaceTempView("h_rec")
     return spark.sql("""
@@ -3792,7 +3792,7 @@ def q_kb_lifecycle_reload(spark: SparkSession, sf_dir: str) -> DataFrame:
     embedding params (provider=mock), ingest 120 docs, close(vacuum) —
     compaction must preserve content — then REOPEN with no embedding
     func (exercising the stored-params rebuild path, reference
-    kb.py:896-922) and warm-load.  Returns (id, level, text length) of
+    kb.py:896-922) and load().  Returns (id, level, text length) of
     every stored doc; the oracle reads the same slice of documents."""
     from svs_spark.kb import KnowledgeBase
 

@@ -102,8 +102,8 @@ def import_svs_sqlite(
                 (r["id"], r["parent_id"], r["level"], r["text"], vec,
                  r["meta"])
             )
-    # imported KBs get the bucketed layout up front so point DML is
-    # bucket-local from the first mutation (an empty table stays plain)
+    # docs and edges are bucketed, as a KnowledgeBase creates them, so
+    # point DML is bucket-local from the first mutation
     wh.write_bucketed(
         "docs", wh.arrow_table("docs", doc_rows), *BUCKET_KEYS["docs"]
     )
@@ -187,7 +187,9 @@ def export_svs_sqlite(
         CREATE INDEX idx_edges_d ON edges(d);
         """
     )
-    wh = Warehouse(spark, warehouse_path)
+    # the fixed schemas read an empty bucketed table, which has no data
+    # file to infer a schema from
+    wh = Warehouse(spark, warehouse_path, schemas=TABLE_SCHEMAS)
 
     emb_id = 0
     for row in wh.read("docs").orderBy("id").toLocalIterator():

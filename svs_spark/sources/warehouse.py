@@ -7,15 +7,15 @@ parquet is immutable, so each committed mutation writes a fresh table
 directory and renames it into place (the moral equivalent of svs's
 single-transaction bulk writes, ``kb.py:794-829``).
 
-Point-update scale path: a table may be *bucketed* — laid out as
-``<table>/_pb=<k>/`` partitions keyed by ``pmod(key, n_buckets)``. A
-point mutation (update one doc's meta/vector, delete a handful of ids)
-then reads and rewrites ONLY the touched buckets — 1/n of the table,
-with the read side pruned by the partition filter — instead of a full
-table rewrite.  This is the dependency-free analogue of what
-Delta/Iceberg MERGE does (rewrite only the files containing matched
-rows); ``merge_supported()`` probes for delta-spark so a real ACID
-MERGE can slot into the same call sites when the package is present.
+Point-update scale path: the KnowledgeBase's ``docs`` and ``edges``
+are *bucketed* from creation — laid out as ``<table>/_pb=<k>/``
+partitions keyed by ``pmod(key, n_buckets)``, with the key and count
+in ``_buckets.json``. A point mutation (update one doc's meta/vector,
+delete a handful of ids) then reads and rewrites ONLY the touched
+buckets — 1/n of the table — instead of a full table rewrite: the
+dependency-free analogue of a lakehouse MERGE rewriting only the files
+that hold matched rows. A bucketed table has a fixed schema, so even
+an empty one (no data file to infer a schema from) reads back.
 
 Driver/Spark commit split: ``write``, ``write_bucketed`` and
 ``overwrite_buckets`` take either a Spark DataFrame or a
@@ -24,13 +24,15 @@ job; a Table's (one file per touched bucket) are written from the
 driver by ``pyarrow.parquet`` — no job. Both go through the same
 writer lock, staging-directory rename swap and returned stamp, and
 both produce the layout Spark reads back. ``read_arrow`` (and
-``arrow_files``, the same read one file at a time) is the matching
-driver read, cast to the table's fixed schema: the bucket files that
-can hold a set of keys, or every ``_pb=<k>`` bucket when no keys are
-given, optionally projected to the columns a predicate tests. Every
-KnowledgeBase call that takes Python values — keyed or predicate —
-takes the Arrow pair; DataFrame inputs, whole-table algorithms and the
-SQL views stay on Spark.
+``arrow_files``, the same read one bucket directory at a time) is the
+matching driver read, cast to the table's fixed schema: the bucket
+files that can hold a set of keys, or every ``_pb=<k>`` bucket when no
+keys are given, optionally projected to the columns a predicate tests.
+A bucket swap renames ``_pb=<k>`` away before renaming its new
+contents in; readers that do not hold the writer lock wait for such a
+swap to land rather than miss the bucket (``_live_buckets``). Every
+KnowledgeBase call that takes Python values takes the Arrow pair;
+DataFrame inputs, compaction, export and the SQL views stay on Spark.
 
 Remote open parity (``src/svs/util.py:97-187``): ``http(s)://`` KBs are
 downloaded once into a local cache keyed by URL sha256; ``file://`` and
@@ -59,28 +61,24 @@ from pyspark.sql.types import IntegerType, StructField, StructType
 
 REMOTE_CACHE_DIR = ".remote_cache"
 BUCKET_META_FILE = "_buckets.json"
+# how long a reader waits for a bucket swap it caught mid-way to land
+SWAP_WAIT_S = 5.0
 WRITER_LOCK_SUFFIX = ".writer.lock"
 # the one data file a driver-side (pyarrow) write puts in each directory
 ARROW_PART_FILE = "part-00000.parquet"
 
 
-def _data_files(d: str) -> list[str]:
-    """Parquet data files directly in directory ``d``, skipped the way
-    Spark skips them: ``_``/``.``-prefixed names are markers and
-    checksums. Empty when ``d`` does not exist (an emptied bucket)."""
-    try:
-        names = os.listdir(d)
-    except FileNotFoundError:
-        return []
-    return sorted(
-        os.path.join(d, f) for f in names
-        if f.endswith(".parquet") and not f.startswith(("_", "."))
-    )
-
-
-def _empty(data):
-    """``data`` with no rows, same schema."""
-    return data.slice(0, 0) if isinstance(data, pa.Table) else data.limit(0)
+def _read_dir(d: str, schema: pa.Schema) -> list[pa.Table]:
+    """The parquet data files directly in directory ``d``, each read by
+    pyarrow and cast to ``schema``; files are skipped the way Spark
+    skips them (``_``/``.``-prefixed names are markers and checksums).
+    FileNotFoundError when ``d`` moved away."""
+    parts = []
+    for f in sorted(os.listdir(d)):
+        if f.endswith(".parquet") and not f.startswith(("_", ".")):
+            with pq.ParquetFile(os.path.join(d, f)) as pf:
+                parts.append(pf.read(columns=schema.names).cast(schema))
+    return parts
 
 
 def _stage(staging: str, data, key_col: str | None = None,
@@ -255,18 +253,6 @@ def path_writer_lock(
             pass
 
 
-def merge_supported() -> bool:
-    """True when delta-spark is importable — the ACID MERGE upgrade path
-    for the bucket-overwrite mutation strategy (absent in this
-    container; the call sites are shaped so MERGE slots in)."""
-    try:
-        import importlib.util
-
-        return importlib.util.find_spec("delta") is not None
-    except Exception:  # pragma: no cover
-        return False
-
-
 def resolve_location(path_or_url: str, cache_root: str = ".") -> str:
     """Resolve a KB location to a local directory path.
 
@@ -332,8 +318,8 @@ class Warehouse:
         on POSIX; on object stores the same role is played by a
         put-if-absent, which is the upgrade path when this directory
         layout moves off a filesystem. Re-entrant within one Warehouse
-        instance (merge_into holds the lock across its read-modify-
-        write and the inner overwrite_buckets acquire is then a no-op).
+        instance (a caller holds the lock across its read-modify-write
+        and the inner overwrite_buckets acquire is then a no-op).
         While held, a heartbeat thread refreshes the lock mtime, so a
         lock older than ``stale_after_s`` means the holder PROCESS is
         dead (crashed writer), not merely slow — a multi-hour rollup
@@ -404,6 +390,7 @@ class Warehouse:
         schema = self.schemas.get(name)
         if schema is not None:
             if self.bucket_meta(name) is not None:
+                self._live_buckets(name)  # Spark lists after any swap lands
                 schema = StructType(
                     schema.fields + [StructField("_pb", IntegerType())]
                 )
@@ -430,26 +417,47 @@ class Warehouse:
             schema=schema,
         )
 
+    def _live_buckets(self, name: str) -> list[str]:
+        """Names of bucketed table ``name``'s ``_pb=<k>`` directories.
+        ``overwrite_buckets`` renames ``_pb=<k>`` to ``_pb=<k>.old``
+        before renaming the new bucket in, so a listing that holds
+        ``_pb=<k>.old`` without ``_pb=<k>`` caught a swap in flight and
+        would miss bucket k: list again until the swap lands, for at
+        most ``SWAP_WAIT_S``, then raise TimeoutError naming the table
+        (its writer died between the renames)."""
+        path = self.table_path(name)
+        deadline = time.monotonic() + SWAP_WAIT_S
+        while True:
+            names = os.listdir(path)
+            live = sorted(
+                d for d in names if d.startswith("_pb=") and d[4:].isdigit()
+            )
+            if not any(
+                d.startswith("_pb=") and d.endswith(".old")
+                and d[:-4] not in live for d in names
+            ):
+                return live
+            if time.monotonic() >= deadline:
+                raise TimeoutError(
+                    f"table {name}: a bucket swap left {path} without "
+                    f"one of its buckets for {SWAP_WAIT_S:.0f}s"
+                )
+            time.sleep(0.01)
+
     def _arrow_dirs(self, name: str, keys) -> list[str]:
         """Directories whose files can hold ``keys`` (values of the
         bucket key); every bucket directory when ``keys`` is None. A
-        plain table is its one directory. Only ``_pb=<k>`` names count:
-        the ``_pb=<k>.old`` a concurrent bucket swap leaves for a moment
-        holds the replaced rows."""
+        plain table is its one directory."""
         path = self.table_path(name)
         meta = self.bucket_meta(name)
         if meta is None:
             return [path]
-        if keys is None:
-            return [
-                os.path.join(path, d) for d in sorted(os.listdir(path))
-                if d.startswith("_pb=") and d[4:].isdigit()
-            ]
-        nb = meta["n_buckets"]
-        return [
-            os.path.join(path, f"_pb={b}")
-            for b in sorted({self.bucket_of(k, nb) for k in keys})
-        ]
+        live = self._live_buckets(name)
+        if keys is not None:
+            nb = meta["n_buckets"]
+            want = {f"_pb={self.bucket_of(k, nb)}" for k in keys}
+            live = [d for d in live if d in want]
+        return [os.path.join(path, d) for d in live]
 
     def _arrow_schema(self, name: str, columns) -> pa.Schema:
         schema = self.arrow_schema(name)
@@ -463,14 +471,22 @@ class Warehouse:
         buckets that can hold ``keys`` (values of the bucket key), or of
         the whole table when ``keys`` is None. ``columns`` projects the
         read. Every file is cast to the table's fixed schema, so files
-        written by Spark and by pyarrow read alike. Callers that rewrite
-        what they read hold the table's writer lock across both."""
+        written by Spark and by pyarrow read alike. A bucket is read
+        whole before its files are yielded: one that a swap moves away
+        after the listing is read again from where the swap leaves it.
+        Callers that rewrite what they read hold the table's writer
+        lock across both."""
         schema = self._arrow_schema(name, columns)
         for d in self._arrow_dirs(name, keys):
-            for f in _data_files(d):
-                with pq.ParquetFile(f) as pf:
-                    part = pf.read(columns=schema.names).cast(schema)
-                yield part
+            try:
+                parts = _read_dir(d, schema)
+            except FileNotFoundError:
+                live = self._live_buckets(name)
+                parts = (
+                    _read_dir(d, schema) if os.path.basename(d) in live
+                    else []  # the swap emptied the bucket
+                )
+            yield from parts
 
     def read_arrow(self, name: str, keys=None, columns=None) -> pa.Table:
         """:meth:`arrow_files` as one Table: the bucket files that can
@@ -502,20 +518,14 @@ class Warehouse:
         partitioned by ``_pb = pmod(key_col, n_buckets)``.  Bulk rewrites
         stay atomic via the same staging+swap as ``write``; the payoff is
         that subsequent POINT mutations go through ``overwrite_buckets``
-        and touch only their own partitions. Like every commit here,
-        returns the table's stamp read under the writer lock after the
-        swap."""
+        and touch only their own partitions. The table needs a fixed
+        schema in ``schemas``: with no rows it has no data file to infer
+        one from. Like every commit here, returns the table's stamp read
+        under the writer lock after the swap."""
+        assert name in self.schemas, f"bucketed table {name} needs a schema"
         with self.write_lock(name):
             staging = self.table_path(name) + ".staging"
             _stage(staging, data, key_col, n_buckets)
-            if not any(
-                d.startswith("_pb=") for d in os.listdir(staging)
-            ):
-                # no rows: a partitioned write leaves no readable files, so
-                # degrade to a plain empty table (same as overwrite_buckets
-                # when every bucket empties); schema is preserved from data
-                shutil.rmtree(staging)
-                return self.write(name, _empty(data))
             with open(os.path.join(staging, BUCKET_META_FILE), "w") as f:
                 json.dump({"key_col": key_col, "n_buckets": n_buckets}, f)
             return self._swap(name, staging)
@@ -535,8 +545,9 @@ class Warehouse:
         without ``_pb``).  Each bucket stages fully before an atomic
         per-partition dir swap, so a failed write never corrupts the
         table — the touched-files-only behavior of a lakehouse MERGE,
-        minus cross-bucket transaction isolation (documented tradeoff;
-        see merge_supported())."""
+        minus cross-bucket transaction isolation (documented tradeoff).
+        A bucket whose post-state has no rows is removed; a table with
+        every bucket removed stays bucketed and reads empty."""
         with self.write_lock(name):
             meta = self.bucket_meta(name)
             assert meta is not None, f"{name} is not bucketed"
@@ -557,52 +568,7 @@ class Warehouse:
                 if os.path.exists(oldpart):
                     shutil.rmtree(oldpart)
             shutil.rmtree(staging)
-            if not any(d.startswith("_pb=") for d in os.listdir(path)):
-                # every bucket emptied: degrade to a plain empty table so
-                # reads keep working (schema preserved from data)
-                return self.write(name, _empty(data))
             return self._advance(name, before)
-
-    def merge_into(
-        self,
-        name: str,
-        updates: DataFrame,
-        delete: bool = False,
-    ) -> dict:
-        """Generic bucket-pruned MERGE on a bucketed table: upsert
-        ``updates`` by the table's bucket key (replace matched rows,
-        insert unmatched), or with ``delete=True`` remove the keys in
-        ``updates``. Only the buckets actually present in ``updates``
-        are read and rewritten — the WHEN MATCHED/NOT MATCHED core of a
-        lakehouse MERGE, minus cross-bucket snapshot isolation (see
-        merge_supported() for the delta-spark upgrade path).
-
-        Scale shape: the touched-bucket set is a distinct over
-        ``pmod(key)`` — executor-side, collect bounded by n_buckets;
-        the anti-join runs only over those buckets' rows, and both its
-        sides hash-partition on the same key.
-        """
-        with self.write_lock(name):
-            meta = self.bucket_meta(name)
-            assert meta is not None, f"{name} is not bucketed"
-            key, nb = meta["key_col"], meta["n_buckets"]
-            pb = F.pmod(F.col(key), F.lit(nb)).cast("int")
-            touched = sorted(
-                r[0]
-                for r in updates.select(pb.alias("b")).distinct().collect()
-            )
-            if not touched:
-                return {"buckets": [], "rows_written": 0}
-            cur = self.read_buckets(name, touched)
-            kept = cur.join(updates.select(key), key, "left_anti")
-            post = kept if delete else kept.unionByName(
-                updates.select(*cur.columns)
-            )
-            # count BEFORE the swap: post's lineage reads the pre-merge
-            # files, which overwrite_buckets deletes
-            rows = post.count()
-            self.overwrite_buckets(name, touched, post)
-            return {"buckets": touched, "rows_written": rows}
 
     def write(self, name: str, data) -> tuple[int, int]:
         """Atomically replace table ``name`` with ``data`` (a DataFrame

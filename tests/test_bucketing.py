@@ -62,62 +62,3 @@ def test_bucketed_aggregation_no_shuffle(spark, bucketed_tables):
     assert join_is_shuffle_free(agg), (
         agg._jdf.queryExecution().executedPlan().toString()[:2000]
     )
-
-
-class TestMergeInto:
-    def _wh(self, spark, tmp_path):
-        from svs_spark.sources.warehouse import Warehouse
-
-        wh = Warehouse(spark, str(tmp_path / "wh"))
-        base = spark.createDataFrame(
-            [(i, f"v{i}") for i in range(40)], "k long, payload string"
-        )
-        wh.write_bucketed("t", base, "k", 8)
-        return wh
-
-    def test_upsert_replaces_and_inserts(self, spark, tmp_path):
-        wh = self._wh(spark, tmp_path)
-        updates = spark.createDataFrame(
-            [(3, "NEW3"), (11, "NEW11"), (100, "NEW100")],
-            "k long, payload string",
-        )
-        stats = wh.merge_into("t", updates)
-        assert stats["buckets"] == [3, 4]  # pmod(3)=3, pmod(11)=3, pmod(100)=4
-        got = {r.k: r.payload for r in wh.read("t").collect()}
-        assert len(got) == 41
-        assert got[3] == "NEW3" and got[11] == "NEW11"
-        assert got[100] == "NEW100"
-        assert got[5] == "v5"  # untouched row intact
-
-    def test_delete_removes_only_given_keys(self, spark, tmp_path):
-        wh = self._wh(spark, tmp_path)
-        dels = spark.createDataFrame([(7,), (15,)], "k long")
-        wh.merge_into("t", dels, delete=True)
-        ks = {r.k for r in wh.read("t").collect()}
-        assert 7 not in ks and 15 not in ks and len(ks) == 38
-
-    def test_merge_touches_only_matched_buckets(self, spark, tmp_path):
-        import os
-
-        wh = self._wh(spark, tmp_path)
-        path = wh.table_path("t")
-
-        def inventory():
-            out = {}
-            for d in os.listdir(path):
-                if d.startswith("_pb="):
-                    sub = os.path.join(path, d)
-                    out[d] = {
-                        (f, os.stat(os.path.join(sub, f)).st_mtime_ns)
-                        for f in os.listdir(sub)
-                    }
-            return out
-
-        before = inventory()
-        updates = spark.createDataFrame([(9, "X")], "k long, payload string")
-        wh.merge_into("t", updates)
-        after = inventory()
-        assert after["_pb=1"] != before["_pb=1"]
-        for d in before:
-            if d != "_pb=1":
-                assert after[d] == before[d], f"{d} must stay byte-identical"

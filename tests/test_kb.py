@@ -735,6 +735,55 @@ class TestBucketedDml:
         assert kb2.query_doc(3)["meta"] == {"ok": 1}
 
 
+class TestEmptyKb:
+    """A KB with no docs and no edges — fresh, or with every doc deleted
+    — answers every call: its bucketed tables read empty through the
+    driver, through Spark and through a SQLite export."""
+
+    @pytest.fixture(params=["fresh", "emptied"])
+    def empty_kb(self, request, kb):
+        if request.param == "emptied":
+            _add_fixture_docs(kb)
+            kb.add_edge(1, 3, 2)
+            with kb.bulk_del_docs() as dd:
+                for doc_id in (5, 4, 3, 2, 1):
+                    dd(doc_id)
+        return kb
+
+    @staticmethod
+    def _check_empty(kb):
+        import os
+
+        for table in ("docs", "edges"):
+            assert "_buckets.json" in os.listdir(kb.wh.table_path(table))
+        assert kb.count() == 0 and kb.count_edges() == 0
+        assert kb.retrieve("first doc", 3) == []
+        assert kb.query_children(1) == []
+        assert kb.dfs_traversal() == []
+        assert kb.build_networkx_graph().number_of_nodes() == 0
+        assert kb.document_top_pairwise_scores(3) == []
+        assert kb.docs.count() == 0 and kb.edges.count() == 0
+        assert kb.sql("select count(*) c from kb_docs").first()["c"] == 0
+
+    def test_every_call_answers_empty(self, spark, empty_kb, tmp_path):
+        from svs_spark.sources.svs_import import (
+            export_svs_sqlite, import_svs_sqlite,
+        )
+
+        self._check_empty(empty_kb)
+        empty_kb.close(vacuum=True)
+        reopened = KnowledgeBase(spark, empty_kb.wh.root)
+        self._check_empty(reopened)
+        db = str(tmp_path / "empty.db")
+        export_svs_sqlite(spark, reopened.wh.root, db)
+        imported = str(tmp_path / "imported")
+        import_svs_sqlite(spark, db, imported)
+        back = KnowledgeBase(spark, imported)
+        self._check_empty(back)
+        assert back.add_doc("first doc") == 1
+        assert [r["id"] for r in back.dfs_traversal()] == [1]
+
+
 def _jobs_in(spark, group: str, fn) -> int:
     """Spark jobs ``fn`` runs, counted through its own job group."""
     sc = spark.sparkContext
@@ -864,8 +913,8 @@ class TestDriverCommits:
         self, spark, tmp_path
     ):
         """A docs table written plain by Spark (as older KBs were) is
-        read whole by the driver on its first point write and committed
-        in the bucketed layout."""
+        read whole by the driver at the next open and committed in the
+        bucketed layout, before the first point write."""
         from svs_spark.kb import DOCS_BUCKETS, DOCS_SCHEMA
 
         path = str(tmp_path / "legacy")
@@ -876,8 +925,8 @@ class TestDriverCommits:
         kb.wh.write("docs", spark.createDataFrame(rows, DOCS_SCHEMA).repartition(3))
         assert kb.wh.bucket_meta("docs") is None
         kb = KnowledgeBase(spark, path)
-        assert kb.add_doc("fresh", parent_id=4, no_embedding=True) == 21
         assert kb.wh.bucket_meta("docs") == {"key_col": "id", "n_buckets": DOCS_BUCKETS}
+        assert kb.add_doc("fresh", parent_id=4, no_embedding=True) == 21
         got = {r["id"]: r for r in kb.docs.collect()}
         assert sorted(got) == list(range(1, 22))
         for i, parent, level, text, emb, meta in rows:
@@ -927,7 +976,9 @@ class TestCallCost:
         read and commit their buckets in the driver with pyarrow, and
         predicate reads (children, levels, retrieve, counts, the
         edge-key probe, the delete guard and cascade, the next id after
-        a delete) read the columns they test from the whole table."""
+        a delete) read the columns they test from the whole table. The
+        whole-table calls that collect their answer (DFS, the networkx
+        graph) read in the driver too, and load() has nothing to warm."""
         with kb.bulk_add_docs() as add:
             roots = [add(f"doc {i}") for i in range(8)]
             for i in range(8):
@@ -952,14 +1003,36 @@ class TestCallCost:
             "update_doc_meta": lambda p: kb.update_doc_meta(roots[3], {"pass": p}),
             "add_edge": lambda p: kb.add_edge(roots[0], roots[1], roots[p]),
             "keyval_set": lambda p: kv_set(),
+            "dfs_traversal": lambda p: kb.dfs_traversal(),
+            "build_networkx_graph": lambda p: kb.build_networkx_graph(),
+            "load": lambda p: kb.load(),
         }
-        for p in (0, 1):  # pass 0 warms the KB: bucketed tables, id counters
+        for p in (0, 1):  # pass 0 warms the KB's id counters
             for name, call in calls.items():
                 jobs = _jobs_in(spark, f"kb-budget-{name}-{p}", lambda: call(p))
                 if p == 1:
                     assert jobs == 0, f"{name}: {jobs} jobs"
         assert kb.count() == 8 + 8 + 2
         assert kb.count_edges() == 2
+
+    def test_commit_after_load_is_seen_by_every_instance(self, spark, kb):
+        """load() pins nothing: after instance A loads and instance B
+        commits an add and a meta update, A's and B's Spark reads, SQL
+        views and pairwise scores all see B's commit."""
+        _add_fixture_docs(kb)
+        kb.load()
+        other = KnowledgeBase(spark, kb.wh.root)
+        new = other.add_doc("sixth doc", parent_id=1)
+        other.update_doc_meta(1, {"by": "other"})
+        for x in (kb, other):
+            assert x.docs.count() == 6
+            assert x.sql("select count(*) c from kb_docs").first()["c"] == 6
+            assert json.loads(
+                x.docs.filter("id = 1").first()["meta"]) == {"by": "other"}
+            pairs = x.document_top_pairwise_scores(10)  # all 5 vectors
+            assert len(pairs) == 10
+            seen = {d["id"]: d for p in pairs for d in p[1:]}
+            assert new in seen and seen[1]["meta"] == {"by": "other"}
 
     def test_id_allocation_is_max_plus_one(self, kb):
         """Cached id counters give exactly the ids max(id) + 1 gives,

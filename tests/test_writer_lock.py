@@ -1,8 +1,10 @@
 """Cross-process writer guard (Warehouse.write_lock): a second writer
 fails fast instead of interleaving read-modify-write cycles; stale
 locks from crashed writers are broken; the lock is re-entrant within
-one Warehouse instance so merge_into's inner overwrite_buckets acquire
-is a no-op."""
+one Warehouse instance, so a caller holding it across a read-modify-
+write can commit through overwrite_buckets. Readers take no lock: one
+that lists a bucketed table while a bucket swap is between its two
+renames waits for the swap to land instead of missing the bucket."""
 
 from __future__ import annotations
 
@@ -51,17 +53,157 @@ def test_stale_lock_is_broken_with_warning(spark, wh):
     assert not os.path.exists(lock)  # released after the write
 
 
-def test_lock_released_after_write_and_reentrant_merge(spark, wh):
+def _bucketed_wh(spark, root):
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    schema = StructType([StructField("id", LongType(), False),
+                         StructField("v", StringType(), True)])
+    return Warehouse(spark, root, schemas={"b": schema})
+
+
+def test_lock_released_after_write_and_reentrant_merge(spark, tmp_path):
+    wh = _bucketed_wh(spark, str(tmp_path / "wh"))
     wh.write_bucketed("b", _df(spark, [(1, "a"), (2, "b")]), "id", 4)
     lock = wh.table_path("b") + WRITER_LOCK_SUFFIX
     assert not os.path.exists(lock)
-    # merge_into holds the lock across its read-modify-write; the
-    # nested overwrite_buckets acquire must not deadlock
-    out = wh.merge_into("b", _df(spark, [(2, "B"), (5, "e")]))
-    assert out["rows_written"] == 3
+    # a read-modify-write holds the lock across both; the nested
+    # overwrite_buckets acquire must not deadlock
+    with wh.write_lock("b"):
+        cur = wh.read_arrow("b", [2, 6])  # buckets 2 (ids 2, 6)
+        assert cur.column("id").to_pylist() == [2]
+        wh.overwrite_buckets(
+            "b", [2], wh.arrow_table("b", [(2, "B"), (6, "f")])
+        )
+        assert os.path.exists(lock)
     got = {(r["id"], r["v"]) for r in wh.read("b").collect()}
-    assert got == {(1, "a"), (2, "B"), (5, "e")}
+    assert got == {(1, "a"), (2, "B"), (6, "f")}
     assert not os.path.exists(lock)
+
+
+def _pause_between_bucket_renames(monkeypatch):
+    """Make the next overwrite_buckets stop after its first rename (of
+    ``_pb=<k>`` to ``_pb=<k>.old``) until ``go`` is set."""
+    import threading
+
+    paused, go = threading.Event(), threading.Event()
+    rename = os.rename
+
+    def hooked(src, dst, *a, **k):
+        rename(src, dst, *a, **k)
+        if dst.endswith(".old") and "_pb=" in os.path.basename(dst):
+            paused.set()
+            assert go.wait(30)
+
+    monkeypatch.setattr(os, "rename", hooked)
+    return paused, go
+
+
+def test_reader_waits_for_a_bucket_swap_in_flight(spark, tmp_path, monkeypatch):
+    """A second Warehouse that lists while a writer is paused between a
+    bucket swap's two renames neither misses the bucket nor blocks for
+    good: the driver read and the Spark read both return every row,
+    once the swap lands."""
+    import threading
+
+    root = str(tmp_path / "wh")
+    wh, other = _bucketed_wh(spark, root), _bucketed_wh(spark, root)
+    rows = [(i, f"v{i}") for i in range(32)]
+    wh.write_bucketed("b", wh.arrow_table("b", rows), "id", 4)
+    post = [(i, f"new{i}") for i in range(32) if i % 4 == 1]
+    paused, go = _pause_between_bucket_renames(monkeypatch)
+    writer = threading.Thread(target=wh.overwrite_buckets,
+                              args=("b", [1], wh.arrow_table("b", post)))
+    writer.start()
+    got: dict = {}
+    try:
+        assert paused.wait(30)
+        assert "_pb=1" not in os.listdir(wh.table_path("b"))
+        readers = [
+            threading.Thread(target=lambda: got.update(
+                arrow=other.read_arrow("b").num_rows)),
+            threading.Thread(target=lambda: got.update(
+                keyed=other.read_arrow("b", [5]).column("v").to_pylist())),
+        ]
+        for r in readers:
+            r.start()
+        time.sleep(0.3)
+        assert got == {}  # both wait for the swap
+        go.set()
+        for r in readers:
+            r.join(30)
+    finally:
+        go.set()
+        writer.join(30)
+        monkeypatch.undo()
+    assert got["arrow"] == 32
+    assert got["keyed"] == [f"new{i}" for i in range(1, 32, 4)]  # bucket 1
+    assert other.read("b").count() == 32
+
+
+def test_bucket_moved_after_the_listing_is_read_again(
+    spark, tmp_path, monkeypatch
+):
+    """A swap that starts after the reader listed the table, but before
+    it opened bucket 1, is read from the bucket the swap leaves."""
+    import threading
+
+    from svs_spark.sources import warehouse
+
+    root = str(tmp_path / "wh")
+    wh, other = _bucketed_wh(spark, root), _bucketed_wh(spark, root)
+    wh.write_bucketed("b", wh.arrow_table("b", [(i, "old") for i in range(8)]),
+                      "id", 4)
+    paused, go = _pause_between_bucket_renames(monkeypatch)
+    read_dir = warehouse._read_dir
+    writers = []
+
+    def swap_first(d, schema):
+        if d.endswith("_pb=1") and not writers:
+            writers.append(threading.Thread(
+                target=wh.overwrite_buckets,
+                args=("b", [1], wh.arrow_table("b", [(1, "new"), (5, "new")]))))
+            writers[0].start()
+            assert paused.wait(30)
+            threading.Timer(0.2, go.set).start()
+        return read_dir(d, schema)
+
+    monkeypatch.setattr(warehouse, "_read_dir", swap_first)
+    try:
+        got = other.read_arrow("b")
+    finally:
+        go.set()
+        for w in writers:
+            w.join(30)
+    assert len(writers) == 1
+    assert sorted(zip(got.column("id").to_pylist(), got.column("v").to_pylist())
+                  ) == [(i, "new" if i % 4 == 1 else "old") for i in range(8)]
+
+
+def test_swap_that_never_lands_raises_naming_the_table(
+    spark, tmp_path, monkeypatch
+):
+    import threading
+
+    from svs_spark.sources import warehouse
+
+    root = str(tmp_path / "wh")
+    wh, other = _bucketed_wh(spark, root), _bucketed_wh(spark, root)
+    wh.write_bucketed("b", wh.arrow_table("b", [(1, "a"), (2, "b")]), "id", 4)
+    monkeypatch.setattr(warehouse, "SWAP_WAIT_S", 0.3)
+    paused, go = _pause_between_bucket_renames(monkeypatch)
+    writer = threading.Thread(target=wh.overwrite_buckets,
+                              args=("b", [1], wh.arrow_table("b", [])))
+    writer.start()
+    try:
+        assert paused.wait(30)
+        with pytest.raises(TimeoutError, match="table b"):
+            other.read_arrow("b")
+        with pytest.raises(TimeoutError, match="table b"):
+            other.read("b")
+    finally:
+        go.set()
+        writer.join(30)
+    assert other.read_arrow("b").column("id").to_pylist() == [2]
 
 
 _HOLDER_SCRIPT = """
