@@ -28,6 +28,8 @@ import urllib.request
 from functools import lru_cache
 from typing import Callable, Iterator, List, Optional
 
+from svs_spark.session import drop_zip_importers
+
 EmbeddingFunc = Callable[[List[str]], List[List[float]]]
 
 BULK_EMBEDDING_CHUNK_SIZE = 200  # kb.py:52
@@ -222,6 +224,7 @@ def embed_df(df, func: EmbeddingFunc, text_col: str = "text",
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         for pdf in batches:
             texts = pdf[text_col].tolist()
             vecs: List[List[float]] = []

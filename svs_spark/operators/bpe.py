@@ -37,6 +37,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 
+from svs_spark.session import drop_zip_importers
+
 END = "</w>"
 
 _PAIRS_EXPR = (
@@ -179,6 +181,7 @@ def encode_df(df: DataFrame, text_col: str, merges: list[tuple[str, str]]) -> Da
     mg = list(merges)
 
     def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         cache: dict[str, list[str]] = {"": []}
         for pdf in batches:
             n = len(pdf)

@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from svs_spark.functions.vector import stack_rows
 from svs_spark.operators.similarity import centroid_assign
+from svs_spark.session import drop_zip_importers
 
 _NANO = 1_000_000_000
 
@@ -325,6 +326,7 @@ def within_cluster_pairs(
             )
 
     def pairs(pdf: pd.DataFrame) -> pd.DataFrame:
+        drop_zip_importers()
         order = np.argsort(pdf[id_col].to_numpy(), kind="stable")
         ids = pdf[id_col].to_numpy()[order]
         mat = stack_rows(pdf[vec_col].to_numpy()[order], np.float64)
@@ -395,6 +397,7 @@ def semdedup_recall_probe(
     s_mat = stack_rows([r[vec_col] for r in samp_rows], np.float64)
 
     def truth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         for pdf in batches:
             if len(pdf) == 0:
                 continue

@@ -33,6 +33,7 @@ from svs_spark.functions.text import (
 from svs_spark.functions.vector import stack_rows
 from svs_spark.operators.similarity import block_matrix, block_pairs
 from svs_spark.operators.sketch import _splitmix64
+from svs_spark.session import drop_zip_importers
 
 MINHASH_PRIME = 2_147_483_647  # 2^31 - 1
 SIMHASH_BITS = 32
@@ -139,6 +140,7 @@ def _signature_batch_kernel(
     k = shingle_size
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         for pdf in batches:
             keep_pos, n_tok, TID, uh, ul = tokenize_many(pdf[text_col], k)
             if not keep_pos:
@@ -474,6 +476,7 @@ def _simhash_batch_kernel(id_col: str, text_col: str, bits: int):
     weights = (np.uint64(1) << i_arr.astype(np.uint64)).view(np.int64)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         for pdf in batches:
             if not len(pdf):
                 continue
@@ -671,6 +674,7 @@ def embedding_near_dup_pairs(
     pairs = block_pairs(embeddings, id_col, vec_col, block_size)
 
     def score_blocks(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         for pdf in it:
             for items_a, items_b in zip(pdf["items_a"], pdf["items_b"]):
                 ia, ma = block_matrix(items_a)
@@ -866,6 +870,7 @@ def embedding_near_dup_lsh_pairs(
     weights = (2 ** np.arange(nbits, dtype=np.int64)).reshape(1, 1, nbits)
 
     def bucketize(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         for pdf in it:
             if not len(pdf):
                 continue
@@ -922,6 +927,7 @@ def embedding_near_dup_lsh_pairs(
     pairs = cand.join(va, "id_a").join(vb, "id_b")
 
     def score(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         for pdf in it:
             if not len(pdf):
                 continue

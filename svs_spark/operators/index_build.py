@@ -32,6 +32,7 @@ from svs_spark.functions.vector import (
     topk_ties,
     unpack_rows,
 )
+from svs_spark.session import drop_zip_importers
 
 
 def build_lsh_index(
@@ -269,6 +270,7 @@ def _write_ivf_layout(
     bc = embeddings.sparkSession.sparkContext.broadcast(cent)
 
     def assign_quantize(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         c = bc.value
         for pdf in it:
             if not len(pdf):
@@ -431,6 +433,7 @@ def search_ivf_index(
     qq = (quantize_int8_many(q) if use_int8 else q).astype(np.float64)
 
     def score(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         for pdf in it:
             if not len(pdf):
                 continue
@@ -489,6 +492,7 @@ def _rerank_exact(df: DataFrame, probe_labels, cand: DataFrame, q, k: int):
     ).select("vec_id", "femb")
 
     def rescore(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         for pdf in it:
             if not len(pdf):
                 continue
@@ -528,6 +532,7 @@ def ivf_assigned_frame(spark, index_path: str) -> "DataFrame":
     idx = spark.read.parquet(index_path).select("vec_id", "label", "femb")
 
     def unpack(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         for pdf in it:
             if not len(pdf):
                 continue
@@ -793,6 +798,7 @@ def pq_encode_df(
     bc = embeddings.sparkSession.sparkContext.broadcast(books)
 
     def encode(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         bks = bc.value
         for pdf in it:
             if not len(pdf):
@@ -861,6 +867,7 @@ def pq_adc_topk(
     cols = ["vec_id", "code"] + (["label"] if consts is not None else [])
 
     def score(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         tbl, cst = bc.value
         for pdf in it:
             if not len(pdf):
@@ -918,6 +925,7 @@ def build_pq_index(
     bc_b = spark.sparkContext.broadcast(books)
 
     def assign_encode(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         c, bks = bc_c.value, bc_b.value
         for pdf in it:
             if not len(pdf):

@@ -32,12 +32,14 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from svs_spark.functions.vector import array_lit
+from svs_spark.session import drop_zip_importers
 
 
 def _partial_newton(w: np.ndarray, dim: int):
     wl = w.copy()
 
     def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         g = np.zeros(dim + 1, dtype=np.float64)  # [+ intercept]
         h = np.zeros((dim + 1, dim + 1), dtype=np.float64)
         loss = 0.0

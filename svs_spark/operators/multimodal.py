@@ -32,6 +32,8 @@ from pyspark.sql.types import (
     ArrayType, DoubleType, LongType, StringType, StructField, StructType,
 )
 
+from svs_spark.session import drop_zip_importers
+
 
 def with_media_metadata(
     df: DataFrame, content_col: str = "content", kind: str = "image"
@@ -104,6 +106,7 @@ def extract_features(
     distributed plumbing around the (stubbed) decode kernel."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         for pdf in batches:
             contents = pdf[content_col]
             yield pd.DataFrame(
@@ -134,6 +137,7 @@ def frame_sample(
     ffmpeg-based sampler produces."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         for pdf in batches:
             ids, idxs, frames = [], [], []
             for aid, content in zip(pdf[id_col], pdf[content_col]):
@@ -174,6 +178,7 @@ def resize_stub(
     import numpy as np
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         for pdf in batches:
             ids, outs, sums = [], [], []
             for aid, content in zip(pdf[id_col], pdf[content_col]):
@@ -235,6 +240,7 @@ def audio_window_features(
     import numpy as np
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         for pdf in batches:
             ids, idxs, energy, zc, peak = [], [], [], [], []
             for aid, content in zip(pdf[id_col], pdf[content_col]):

@@ -33,10 +33,12 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from svs_spark.functions.vector import array_lit
+from svs_spark.session import drop_zip_importers
 
 
 def _partial_moments(dim: int):
     def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         n = 0
         s = np.zeros(dim, dtype=np.float64)
         g = np.zeros((dim, dim), dtype=np.float64)

@@ -38,6 +38,7 @@ from svs_spark.functions.vector import (
     stack_rows,
     topk_ties,
 )
+from svs_spark.session import drop_zip_importers
 
 
 def _label_values(pdf: pd.DataFrame, label_col: str):
@@ -140,6 +141,7 @@ def _query_block_join(
     tagged = roles[0][0] is not None
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         qmat = np.asarray(qmat_list, dtype=np.float64).T  # (d, q)
         qid_arr = np.asarray(qids, dtype=np.int64)
         qlab_arr = np.asarray(qlabels, dtype=np.int64)
@@ -215,6 +217,7 @@ def with_scores_batch(
     schema = f"{id_col} long, {score_col} double"
 
     def score_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         nonlocal q
         if q is None:
             q = np.asarray(qlist, dtype=np.float64)
@@ -343,6 +346,7 @@ def block_pairwise_topk(
     )
 
     def score_blocks(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         for pdf in it:
             for items_a, items_b in zip(pdf["items_a"], pdf["items_b"]):
                 ia, ma = block_matrix(items_a)
@@ -449,6 +453,7 @@ def knn_join_multiwidth(
         )
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         qmat = np.asarray(qmat_list, dtype=np.float64).T  # (d, q)
         qid_arr = np.asarray(qids, dtype=np.int64)
         for pdf in batches:
@@ -573,6 +578,7 @@ def self_knn(
         return ids_q[rows], ids_c[cols], gram[rows, cols]
 
     def score_blocks(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         for pdf in it:
             for items_a, items_b in zip(pdf["items_a"], pdf["items_b"]):
                 ia, ma = block_matrix(items_a)
@@ -629,6 +635,7 @@ def centroid_assign(
     cmat_list = [v for _, v in cents]
 
     def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         cmat = np.asarray(cmat_list, dtype=np.float64).T  # (d, k)
         cids = np.asarray(cid_list, dtype=np.int64)
         for pdf in batches:

@@ -40,6 +40,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from svs_spark.functions.text import poly_hash_many
+from svs_spark.session import drop_zip_importers
 
 __all__ = [
     "KLL",
@@ -197,6 +198,7 @@ def _partial_sketches(
     value_col: str, key_col: str | None, k: int
 ):
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         sketches: dict[str, KLL] = {}
         for pdf in batches:
             if len(pdf) == 0:
@@ -228,6 +230,7 @@ def _merge_and_query(probs: Sequence[float], k: int):
     cols = ["key", "n"] + [f"q{i}" for i in range(len(probs))]
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        drop_zip_importers()
         if len(pdf) == 0:
             return pd.DataFrame(columns=cols)
         merged: KLL | None = None
@@ -328,6 +331,7 @@ def frequent_items(
     """
 
     def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         counts: dict = {}
         n = 0
         for pdf in batches:
@@ -459,6 +463,7 @@ def count_min(
     """
 
     def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         import numpy as np
 
         table = np.zeros((depth, width), dtype=np.int64)

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from svs_spark.session import drop_zip_importers
+
 
 def asof_join(
     left: DataFrame,
@@ -237,6 +239,7 @@ def ewma_anomalies(
     zt = float(z_threshold)
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
+        drop_zip_importers()
         pdf = pdf.sort_values(ts_col, kind="mergesort").reset_index(
             drop=True
         )
@@ -310,6 +313,7 @@ def holt_winters(
     a, b, g, m = float(alpha), float(beta), float(gamma), int(season_length)
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
+        drop_zip_importers()
         pdf = pdf.sort_values(ts_col, kind="mergesort").reset_index(
             drop=True
         )

@@ -22,6 +22,7 @@ from svs_spark.queries import (
 )
 from svs_spark.operators import similarity as sim
 from svs_spark.functions import vector as V
+from svs_spark.session import drop_zip_importers
 
 QVEC = fixed_query_vec(64)
 QVEC_SQL = vec_sql_literal(QVEC)
@@ -1843,6 +1844,7 @@ def q_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     window_starts = T.window_starts
 
     def kernel(batches):
+        drop_zip_importers()
         import numpy as np
         import pandas as pd
 
@@ -1938,6 +1940,7 @@ def q_embed_and_retrieve(spark: SparkSession, sf_dir: str) -> DataFrame:
     poly_hash_many = T.poly_hash_many  # pickled by value with the closure
 
     def kernel(batches):
+        drop_zip_importers()
         import pandas as pd
 
         for pdf in batches:
@@ -11465,6 +11468,7 @@ def q_nfc_normalization_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents", spread=False).select("source", "text")
 
     def audit(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         import unicodedata
 
         for pdf in it:

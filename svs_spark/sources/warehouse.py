@@ -28,9 +28,12 @@ both produce the layout Spark reads back. ``read_arrow`` (and
 matching driver read, cast to the table's fixed schema: the bucket
 files that can hold a set of keys, or every ``_pb=<k>`` bucket when no
 keys are given, optionally projected to the columns a predicate tests.
-A bucket swap renames ``_pb=<k>`` away before renaming its new
-contents in; readers that do not hold the writer lock wait for such a
-swap to land rather than miss the bucket (``_live_buckets``). Every
+A swap renames the table directory (or a ``_pb=<k>`` bucket) to
+``.old`` before renaming its new contents in; readers that do not hold
+the writer lock wait for such a swap to land rather than miss the
+table or bucket (``_listing``), and the first writer-lock acquire (or
+an open) after a writer that died between the renames puts the last
+committed version back (``_repair``). Every
 KnowledgeBase call that takes Python values takes the Arrow pair;
 DataFrame inputs, compaction, export and the SQL views stay on Spark.
 
@@ -79,6 +82,30 @@ def _read_dir(d: str, schema: pa.Schema) -> list[pa.Table]:
             with pq.ParquetFile(os.path.join(d, f)) as pf:
                 parts.append(pf.read(columns=schema.names).cast(schema))
     return parts
+
+def _is_bucket(d: str) -> bool:
+    """Whether directory entry ``d`` is a live ``_pb=<k>`` bucket."""
+    return d.startswith("_pb=") and d[4:].isdigit()
+
+
+def _holds_old(path: str) -> bool:
+    """Whether directory ``path`` holds an ``.old`` entry (False for a
+    file, or a directory a swap moved away since it was listed)."""
+    try:
+        return any(e.endswith(".old") for e in os.listdir(path))
+    except OSError:
+        return False
+
+
+def _settle_old(live: str) -> None:
+    """Rename ``<live>.old`` back to ``live`` when ``live`` is missing,
+    or delete it when ``live`` is there (see ``Warehouse._repair``)."""
+    old = live + ".old"
+    if os.path.exists(old):
+        if os.path.exists(live):
+            shutil.rmtree(old)
+        else:
+            os.rename(old, live)
 
 
 def _stage(staging: str, data, key_col: str | None = None,
@@ -298,6 +325,7 @@ class Warehouse:
         self._handles: dict[str, tuple] = {}
         self._held_locks: set[str] = set()
         os.makedirs(root, exist_ok=True)
+        self.recover()
 
     # -- cross-process writer guard ---------------------------------------
 
@@ -327,18 +355,48 @@ class Warehouse:
         with a warning via single-winner atomic rename
         (:func:`_break_stale_lock`); safe because every commit below
         is staging+atomic-rename, so the table itself is never left
-        mid-write; only the ADVISORY exclusion needs recovering."""
+        mid-write. A writer that died between a swap's two renames is
+        finished by the first acquire after it (:meth:`_repair`)."""
+        first = self.table_path(name) not in self._held_locks
         with path_writer_lock(
             self.table_path(name), timeout_s, stale_after_s,
             held=self._held_locks,
         ):
+            if first:
+                self._repair(name)
             yield
+
+    def _repair(self, name: str) -> None:
+        """Finish what a writer that died between a swap's two renames
+        left of table ``name``; the caller holds its writer lock, so no
+        swap is in flight. An ``X.old`` (the table's directory, or a
+        ``_pb=<k>`` bucket in it) without its live twin ``X`` is the
+        only copy of the last committed version: rename it back. One
+        beside its twin is a version already replaced: delete it."""
+        path = self.table_path(name)
+        _settle_old(path)
+        if os.path.isdir(path):
+            for d in os.listdir(path):
+                if d.endswith(".old") and _is_bucket(d[:-4]):
+                    _settle_old(os.path.join(path, d[:-4]))
+
+    def recover(self) -> None:
+        """Repair every table a dead writer left between a swap's two
+        renames (:meth:`_repair`, run by the first acquire of a writer
+        lock), locking only a table where a listing shows an ``.old``:
+        runs when the warehouse is opened, so its readers find every
+        row again."""
+        for d in os.listdir(self.root):
+            name = d[:-4] if d.endswith(".old") else d
+            if name != d or _holds_old(os.path.join(self.root, d)):
+                with self.write_lock(name):
+                    pass
 
     def table_path(self, name: str) -> str:
         return os.path.join(self.root, name)
 
     def exists(self, name: str) -> bool:
-        return os.path.exists(self.table_path(name))
+        return self.stamp(name) is not None
 
     def stamp(self, name: str) -> tuple[int, int] | None:
         """Version stamp of table ``name``: the ``(inode, mtime_ns)`` of
@@ -351,7 +409,11 @@ class Warehouse:
         try:
             st = os.stat(self.table_path(name))
         except OSError:
-            return None
+            self._await_table(name)
+            try:
+                st = os.stat(self.table_path(name))
+            except OSError:
+                return None
         return st.st_ino, st.st_mtime_ns
 
     def _advance(self, name: str, before: tuple | None) -> tuple[int, int]:
@@ -417,32 +479,50 @@ class Warehouse:
             schema=schema,
         )
 
-    def _live_buckets(self, name: str) -> list[str]:
-        """Names of bucketed table ``name``'s ``_pb=<k>`` directories.
-        ``overwrite_buckets`` renames ``_pb=<k>`` to ``_pb=<k>.old``
-        before renaming the new bucket in, so a listing that holds
-        ``_pb=<k>.old`` without ``_pb=<k>`` caught a swap in flight and
-        would miss bucket k: list again until the swap lands, for at
-        most ``SWAP_WAIT_S``, then raise TimeoutError naming the table
-        (its writer died between the renames)."""
-        path = self.table_path(name)
+    def _listing(self, name: str, parent: str, swapped) -> list[str]:
+        """``os.listdir(parent)`` once no swap in it is caught between
+        its two renames. A swap renames an entry ``X`` to ``X.old``
+        before renaming the new ``X`` in (``_swap`` a whole table in the
+        root, ``overwrite_buckets`` a ``_pb=<k>`` bucket in its table),
+        so a listing that holds ``X.old`` without ``X``, for an ``X``
+        that ``swapped`` selects, would miss ``X``: list again until the
+        swap lands, for at most ``SWAP_WAIT_S``, then raise TimeoutError
+        naming the table (its writer died between the renames; the next
+        writer or open repairs it, see :meth:`_repair`)."""
         deadline = time.monotonic() + SWAP_WAIT_S
         while True:
-            names = os.listdir(path)
-            live = sorted(
-                d for d in names if d.startswith("_pb=") and d[4:].isdigit()
-            )
-            if not any(
-                d.startswith("_pb=") and d.endswith(".old")
-                and d[:-4] not in live for d in names
-            ):
-                return live
+            names = os.listdir(parent)
+            present = set(names)
+            gone = [
+                d[:-4] for d in names
+                if d.endswith(".old") and swapped(d[:-4])
+                and d[:-4] not in present
+            ]
+            if not gone:
+                return names
             if time.monotonic() >= deadline:
                 raise TimeoutError(
-                    f"table {name}: a bucket swap left {path} without "
-                    f"one of its buckets for {SWAP_WAIT_S:.0f}s"
+                    f"table {name}: a swap left {parent} without "
+                    f"{gone[0]} for {SWAP_WAIT_S:.0f}s"
                 )
             time.sleep(0.01)
+
+    def _await_table(self, name: str) -> None:
+        """Wait for a whole-table swap of ``name`` caught between its
+        two renames to land (:meth:`_listing` of the root)."""
+        self._listing(name, self.root, lambda d: d == name)
+
+    def _live_buckets(self, name: str) -> list[str]:
+        """Names of bucketed table ``name``'s ``_pb=<k>`` directories,
+        once no bucket swap (or swap of the whole table) is caught
+        between its two renames (:meth:`_listing`)."""
+        path = self.table_path(name)
+        try:
+            names = self._listing(name, path, _is_bucket)
+        except FileNotFoundError:
+            self._await_table(name)
+            names = self._listing(name, path, _is_bucket)
+        return sorted(d for d in names if _is_bucket(d))
 
     def _arrow_dirs(self, name: str, keys) -> list[str]:
         """Directories whose files can hold ``keys`` (values of the
@@ -481,11 +561,13 @@ class Warehouse:
             try:
                 parts = _read_dir(d, schema)
             except FileNotFoundError:
-                live = self._live_buckets(name)
-                parts = (
-                    _read_dir(d, schema) if os.path.basename(d) in live
-                    else []  # the swap emptied the bucket
-                )
+                if d == self.table_path(name):  # a plain table swapped whole
+                    self._await_table(name)
+                    parts = _read_dir(d, schema)
+                elif os.path.basename(d) in self._live_buckets(name):
+                    parts = _read_dir(d, schema)
+                else:
+                    parts = []  # the swap emptied the bucket
             yield from parts
 
     def read_arrow(self, name: str, keys=None, columns=None) -> pa.Table:
@@ -499,11 +581,17 @@ class Warehouse:
     # -- bucketed layout: point mutations touch 1/n of the table ----------
 
     def bucket_meta(self, name: str) -> dict | None:
-        p = os.path.join(self.table_path(name), BUCKET_META_FILE)
-        if not os.path.exists(p):
-            return None
-        with open(p) as f:
-            return json.load(f)
+        """The bucket key and count of table ``name``; None for a plain
+        table or none. A whole-table swap caught between its renames is
+        waited out, not taken for a missing table."""
+        path = self.table_path(name)
+        while True:
+            try:
+                with open(os.path.join(path, BUCKET_META_FILE)) as f:
+                    return json.load(f)
+            except FileNotFoundError:
+                if os.path.isdir(path) or self.stamp(name) is None:
+                    return None
 
     @staticmethod
     def bucket_of(key: int, n_buckets: int) -> int:

@@ -39,6 +39,8 @@ from pyspark.sql.types import (
     ArrayType, DoubleType, LongType, StringType, StructField, StructType,
 )
 
+from svs_spark.session import drop_zip_importers
+
 _STATE_SCHEMA = StructType([
     StructField("n", LongType()),
     StructField("mean", DoubleType()),
@@ -63,6 +65,7 @@ def zscore_outlier_stream(events: DataFrame, k: float = 3.0) -> DataFrame:
         pdfs: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         import numpy as np
 
         (event_type,) = key
@@ -272,6 +275,7 @@ def robust_outlier_stream(events: DataFrame, k: float = 3.0) -> DataFrame:
         pdfs: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         import numpy as np
 
         (event_type,) = key
@@ -392,6 +396,7 @@ def cusum_changepoint_stream(
         pdfs: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         import numpy as np
 
         (event_type,) = key
@@ -501,6 +506,7 @@ def kll_quantile_stream(
         pdfs: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         (event_type,) = key
         if state.exists:
             n, levels = state.get

@@ -32,6 +32,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
 from svs_spark.operators.sketch import _cm_positions, _cm_positions_many
+from svs_spark.session import drop_zip_importers
 
 
 def _positions_udf(width: int, depth: int):
@@ -40,6 +41,7 @@ def _positions_udf(width: int, depth: int):
     one call (value_counts-style corpora repeat items heavily)."""
 
     def kernel(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
+        drop_zip_importers()
         for s in batches:
             codes, uniq = pd.factorize(s.astype(str))
             pos = _cm_positions_many(uniq, width, depth)

@@ -35,6 +35,7 @@ from pyspark.sql.types import (
 )
 
 from svs_spark.operators.sketch import _mg_reduce
+from svs_spark.session import drop_zip_importers
 
 _STATE_SCHEMA = StructType([
     StructField("items", ArrayType(StringType())),
@@ -68,6 +69,7 @@ def heavy_hitters_stream(
         pdfs: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         (group_key,) = key
         if state.exists:
             items, counts, n = state.get
@@ -155,6 +157,7 @@ def decayed_heavy_hitters_stream(
         pdfs: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         import numpy as np
 
         (group_key,) = key

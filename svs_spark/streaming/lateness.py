@@ -48,6 +48,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from svs_spark.session import drop_zip_importers
+
 _STATE_SCHEMA = StructType([StructField("hwm_us", LongType())])
 
 _OUT_SCHEMA = StructType([
@@ -70,6 +72,7 @@ def lateness_stream(events: DataFrame) -> DataFrame:
         pdfs: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         import numpy as np
 
         (event_type,) = key

@@ -33,6 +33,8 @@ from pyspark.sql.types import (
     DoubleType, LongType, StructField, StructType,
 )
 
+from svs_spark.session import drop_zip_importers
+
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over the events parquet with a proper event-time
@@ -122,6 +124,7 @@ def running_user_totals(events: DataFrame, timeout_ms: int = 0) -> DataFrame:
         pdfs: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         (user_id,) = key
         if state.exists:
             n, total = state.get

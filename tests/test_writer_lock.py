@@ -3,12 +3,14 @@ fails fast instead of interleaving read-modify-write cycles; stale
 locks from crashed writers are broken; the lock is re-entrant within
 one Warehouse instance, so a caller holding it across a read-modify-
 write can commit through overwrite_buckets. Readers take no lock: one
-that lists a bucketed table while a bucket swap is between its two
-renames waits for the swap to land instead of missing the bucket."""
+that lists while a bucket swap or a whole-table swap is between its two
+renames waits for the swap to land instead of missing the bucket or the
+table, and a reopen puts back what a writer that died there left."""
 
 from __future__ import annotations
 
 import os
+import shutil
 import time
 
 import pytest
@@ -80,9 +82,10 @@ def test_lock_released_after_write_and_reentrant_merge(spark, tmp_path):
     assert not os.path.exists(lock)
 
 
-def _pause_between_bucket_renames(monkeypatch):
-    """Make the next overwrite_buckets stop after its first rename (of
-    ``_pb=<k>`` to ``_pb=<k>.old``) until ``go`` is set."""
+def _pause_between_renames(monkeypatch, entry="_pb="):
+    """Make the next swap whose first rename moves an entry named like
+    ``entry`` (a ``_pb=<k>`` bucket by default) to ``<entry>.old`` stop
+    after that rename until ``go`` is set."""
     import threading
 
     paused, go = threading.Event(), threading.Event()
@@ -90,12 +93,25 @@ def _pause_between_bucket_renames(monkeypatch):
 
     def hooked(src, dst, *a, **k):
         rename(src, dst, *a, **k)
-        if dst.endswith(".old") and "_pb=" in os.path.basename(dst):
+        if dst.endswith(".old") and entry in os.path.basename(dst):
             paused.set()
             assert go.wait(30)
 
     monkeypatch.setattr(os, "rename", hooked)
     return paused, go
+
+
+def _die_after_first_rename(monkeypatch):
+    """Make the next swap raise right after its first rename, as a
+    writer killed between the two renames leaves the table."""
+    rename = os.rename
+
+    def hooked(src, dst, *a, **k):
+        rename(src, dst, *a, **k)
+        if dst.endswith(".old"):
+            raise RuntimeError("writer died between the renames")
+
+    monkeypatch.setattr(os, "rename", hooked)
 
 
 def test_reader_waits_for_a_bucket_swap_in_flight(spark, tmp_path, monkeypatch):
@@ -110,7 +126,7 @@ def test_reader_waits_for_a_bucket_swap_in_flight(spark, tmp_path, monkeypatch):
     rows = [(i, f"v{i}") for i in range(32)]
     wh.write_bucketed("b", wh.arrow_table("b", rows), "id", 4)
     post = [(i, f"new{i}") for i in range(32) if i % 4 == 1]
-    paused, go = _pause_between_bucket_renames(monkeypatch)
+    paused, go = _pause_between_renames(monkeypatch)
     writer = threading.Thread(target=wh.overwrite_buckets,
                               args=("b", [1], wh.arrow_table("b", post)))
     writer.start()
@@ -140,6 +156,54 @@ def test_reader_waits_for_a_bucket_swap_in_flight(spark, tmp_path, monkeypatch):
     assert other.read("b").count() == 32
 
 
+def test_reader_waits_for_a_whole_table_swap_in_flight(
+    spark, tmp_path, monkeypatch
+):
+    """A second KnowledgeBase that reads the keyval table while a keyval
+    commit is paused between its whole-table swap's two renames (the
+    table directory is gone) waits for the swap and reads the new
+    value, instead of raising FileNotFoundError."""
+    import threading
+
+    from svs_spark.functions.embeddings import make_mock_embeddings_func
+    from svs_spark.kb import KnowledgeBase
+
+    path = str(tmp_path / "kb")
+    kb = KnowledgeBase(spark, path, embedding_func=make_mock_embeddings_func(),
+                       embedding_params={"provider": "mock"}, force_fresh_db=True)
+    with kb.bulk_keyval_update() as kv:
+        kv["a"] = 1
+    other = KnowledgeBase(spark, path)
+    got: dict = {}
+
+    def set_a():
+        with kb.bulk_keyval_update() as kv:
+            kv["a"] = 2
+
+    def read_a():
+        with other.bulk_keyval_update() as kv:
+            got["a"] = kv["a"]
+
+    paused, go = _pause_between_renames(monkeypatch, "keyval")
+    writer = threading.Thread(target=set_a)
+    writer.start()
+    try:
+        assert paused.wait(30)
+        assert not os.path.exists(kb.wh.table_path("keyval"))
+        reader = threading.Thread(target=read_a)
+        reader.start()
+        time.sleep(0.3)
+        assert got == {}  # waits for the swap
+        go.set()
+        reader.join(30)
+    finally:
+        go.set()
+        writer.join(30)
+        monkeypatch.undo()
+    assert not writer.is_alive() and not reader.is_alive()
+    assert got == {"a": 2}
+
+
 def test_bucket_moved_after_the_listing_is_read_again(
     spark, tmp_path, monkeypatch
 ):
@@ -153,7 +217,7 @@ def test_bucket_moved_after_the_listing_is_read_again(
     wh, other = _bucketed_wh(spark, root), _bucketed_wh(spark, root)
     wh.write_bucketed("b", wh.arrow_table("b", [(i, "old") for i in range(8)]),
                       "id", 4)
-    paused, go = _pause_between_bucket_renames(monkeypatch)
+    paused, go = _pause_between_renames(monkeypatch)
     read_dir = warehouse._read_dir
     writers = []
 
@@ -182,28 +246,61 @@ def test_bucket_moved_after_the_listing_is_read_again(
 def test_swap_that_never_lands_raises_naming_the_table(
     spark, tmp_path, monkeypatch
 ):
-    import threading
-
+    """A writer that dies between a bucket swap's renames leaves
+    ``_pb=1.old`` as the only copy of bucket 1: readers raise naming the
+    table instead of missing it, and a reopen renames it back, so every
+    row reads again and the next write to bucket 1 commits."""
     from svs_spark.sources import warehouse
 
     root = str(tmp_path / "wh")
     wh, other = _bucketed_wh(spark, root), _bucketed_wh(spark, root)
     wh.write_bucketed("b", wh.arrow_table("b", [(1, "a"), (2, "b")]), "id", 4)
     monkeypatch.setattr(warehouse, "SWAP_WAIT_S", 0.3)
-    paused, go = _pause_between_bucket_renames(monkeypatch)
-    writer = threading.Thread(target=wh.overwrite_buckets,
-                              args=("b", [1], wh.arrow_table("b", [])))
-    writer.start()
-    try:
-        assert paused.wait(30)
-        with pytest.raises(TimeoutError, match="table b"):
-            other.read_arrow("b")
-        with pytest.raises(TimeoutError, match="table b"):
-            other.read("b")
-    finally:
-        go.set()
-        writer.join(30)
-    assert other.read_arrow("b").column("id").to_pylist() == [2]
+    rename = os.rename
+    _die_after_first_rename(monkeypatch)
+    with pytest.raises(RuntimeError, match="writer died"):
+        wh.overwrite_buckets("b", [1], wh.arrow_table("b", []))
+    monkeypatch.setattr(os, "rename", rename)
+    assert sorted(os.listdir(wh.table_path("b")))[:2] == ["_buckets.json", "_pb=1.old"]
+    with pytest.raises(TimeoutError, match="table b"):
+        other.read_arrow("b")
+    with pytest.raises(TimeoutError, match="table b"):
+        other.read("b")
+    again = _bucketed_wh(spark, root)
+    for w in (again, other):
+        assert sorted(w.read_arrow("b").column("id").to_pylist()) == [1, 2]
+    assert other.read("b").count() == 2
+    again.overwrite_buckets("b", [1], again.arrow_table("b", [(1, "z"), (5, "y")]))
+    got = other.read_arrow("b")
+    assert sorted(zip(got.column("id").to_pylist(), got.column("v").to_pylist())
+                  ) == [(1, "z"), (2, "b"), (5, "y")]
+
+
+def test_reopen_repairs_a_whole_table_swap_cut_short(spark, tmp_path, monkeypatch):
+    """A whole-table swap cut between its renames leaves ``b.old`` and no
+    ``b``; a replaced version left beside its successor is deleted. A
+    reopen restores the last committed version in both cases."""
+    from svs_spark.sources import warehouse
+
+    root = str(tmp_path / "wh")
+    wh = _bucketed_wh(spark, root)
+    wh.write_bucketed("b", wh.arrow_table("b", [(1, "a"), (2, "b")]), "id", 4)
+    monkeypatch.setattr(warehouse, "SWAP_WAIT_S", 0.3)
+    rename = os.rename
+    _die_after_first_rename(monkeypatch)
+    with pytest.raises(RuntimeError, match="writer died"):
+        wh.write_bucketed("b", wh.arrow_table("b", [(3, "c")]), "id", 4)
+    monkeypatch.setattr(os, "rename", rename)
+    with pytest.raises(TimeoutError, match="table b"):
+        wh.stamp("b")
+    shutil.copytree(os.path.join(root, "b.old", "_pb=2"),
+                    os.path.join(root, "b.old", "_pb=1.old"))  # a stale twin
+    again = _bucketed_wh(spark, root)
+    assert sorted(os.listdir(root)) == ["b", "b.staging"]
+    assert "_pb=1.old" not in os.listdir(again.table_path("b"))
+    assert sorted(again.read_arrow("b").column("id").to_pylist()) == [1, 2]
+    again.write_bucketed("b", again.arrow_table("b", [(3, "c")]), "id", 4)
+    assert wh.read_arrow("b").column("id").to_pylist() == [3]
 
 
 _HOLDER_SCRIPT = """
