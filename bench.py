@@ -249,16 +249,21 @@ def _lcg_spin(steps: int) -> int:
     return x
 
 
-def _calibration_spin_allcore(workers: int = 16) -> float:
+def _calibration_spin_allcore(workers: int | None = None) -> float:
     """Wall time for ``workers`` PROCESSES each running a 2.5M-step LCG
-    concurrently. The single-core spin recovers instantly after load,
-    but round-8's corpus bench measured 1.2-2.6x op inflation WITH a
-    clean single-core calib — the degradation shows only in ALL-CORE
-    throughput (reduced all-core turbo / steal). On a healthy
-    32-thread host this lands near the single-core spin's time for
-    half the per-worker steps; a throttled host inflates it."""
+    concurrently; by default half the cores this process may run on
+    (at least 1), which is 16 on the 32-thread host the 0.50 s
+    reference was taken on. The single-core spin recovers instantly
+    after load, but round-8's corpus bench measured 1.2-2.6x op
+    inflation WITH a clean single-core calib — the degradation shows
+    only in ALL-CORE throughput (reduced all-core turbo / steal). On a
+    healthy host this lands near the single-core spin's time for half
+    the per-worker steps; a throttled host inflates it. A fixed 16
+    workers could not: on 4 cores they queue four deep."""
     import concurrent.futures as cf
 
+    if workers is None:
+        workers = max(len(os.sched_getaffinity(0)) // 2, 1)
     t0 = time.perf_counter()
     try:
         with cf.ProcessPoolExecutor(max_workers=workers) as ex:

@@ -13,8 +13,8 @@ embeddings table+FK    nullable embedding column on docs (the FK
                        existed only for no-vector rows + matrix scans)
 edges table            edges: edge_id, src, dst, rel, weight, directed
 keyval/keyval_user     keyval: key, plus typed value columns
-NumPy matrix cache     retrieve() scoring one parquet file's
-                       vectors at a time in the driver
+NumPy matrix cache     retrieve() scoring each docs file's vectors,
+                       decoded once per file version, in the driver
 asyncio lock           Spark's distributed execution (the reference's
                        serial lock is its scalability ceiling, §4)
 =====================  =========================================
@@ -28,12 +28,16 @@ adds, reads and updates, keyval, edge commits) touch only the buckets
 that can hold their keys (``Warehouse.read_arrow`` and a Table
 commit), and predicate reads (children, levels, counts, the next id,
 the edge-key probe, the delete guard and cascade search) read the
-columns they test from the whole table. ``retrieve`` scores one file's
-vectors at a time with the same float64 fold as
+columns they test from the whole table. The warehouse decodes each
+data file once and serves it again until a commit replaces it, so a
+call pays for listing the table and for the files changed since the
+last read. ``retrieve`` scores each file's vectors, kept decoded on the
+file's cache entry, with the same float64 fold as
 ``functions.vector.dot`` — the analogue of the reference's RAM matrix
-(``kb.py:856-893``). The whole-table calls collect their whole answer,
-so they read in the driver too: ``dfs_traversal`` walks the ``id``,
-``parent_id`` columns and ``build_networkx_graph`` the edges table.
+(``kb.py:856-893``), rebuilt per file only after a write. The
+whole-table calls collect their whole answer, so they read in the
+driver too: ``dfs_traversal`` walks the ``id``, ``parent_id`` columns
+and ``build_networkx_graph`` the edges table.
 Spark keeps DataFrame inputs (``add_documents_df``,
 ``add_chunked_documents_df``, ``compact``, export), the pairwise
 block GEMM of ``document_top_pairwise_scores`` and the SQL views.
@@ -41,9 +45,10 @@ block GEMM of ``document_top_pairwise_scores`` and the SQL views.
 A KB's state is its files only: ``docs`` and ``edges`` are bucketed
 from creation (a plain table from an older version is rewritten
 bucketed once, at open), and nothing is cached across calls except
-what is keyed by a table's stamp, so every commit, by any instance or
-process, is seen by the next read. The async/sync API duality is
-deliberately not ported (no query semantics in it; SURVEY.md §7).
+what is keyed by a table's stamp or by a data file that no commit
+replaced, so every commit, by any instance or process, is seen by the
+next read. The async/sync API duality is deliberately not ported (no
+query semantics in it; SURVEY.md §7).
 """
 
 from __future__ import annotations
@@ -158,27 +163,39 @@ def _decode_val(val_type: str, val: str) -> Any:
     raise ValueError(f"unknown keyval type tag: {val_type!r}")
 
 
-def _retrieve_candidates(part: pa.Table, q: np.ndarray, n: int) -> tuple:
-    """``(ids, rank, scores)`` of the rows of one docs file (``id``,
-    ``embedding``) that can be in a top ``n`` against the query ``q``.
-    Scores are ``functions.vector.dot_many``'s, bit-equal to the Spark
-    ``dot`` fold. ``rank`` orders before the score, the way Spark's
-    descending sort places the values: 2 for a NaN score (first), 1 for
-    a number, 0 for a null score (last) — a vector whose length differs
-    from the query's, or that holds a null. Docs without a vector are
-    not candidates. Finite scores are pruned with ``topk_ties``; the
-    rare others are all kept."""
+def _retrieve_decode(part: pa.Table) -> tuple:
+    """``(ids, lens, bad, flat)`` of the rows of one docs file that have
+    a vector: their ids, vector lengths, whether a vector holds a null,
+    and every vector's values end to end. It depends on the file only,
+    so the warehouse keeps it on the file's cache entry
+    (``Warehouse.map_files``)."""
     part = part.filter(pc.is_valid(part.column("embedding")))
     ids = part.column("id").to_numpy()
     emb = part.column("embedding").combine_chunks()
     lens = pc.list_value_length(emb).to_numpy()
     flat = emb.flatten()
-    ok = lens == len(q)
-    ok[np.repeat(np.arange(len(ids)), lens)[
+    bad = np.zeros(len(ids), dtype=bool)
+    bad[np.repeat(np.arange(len(ids)), lens)[
         flat.is_null().to_numpy(zero_copy_only=False)
-    ]] = False
+    ]] = True
+    return ids, lens, bad, flat.to_numpy(zero_copy_only=False)
+
+
+def _retrieve_candidates(decoded: tuple, q: np.ndarray, n: int) -> tuple:
+    """``(ids, rank, scores)`` of the rows of one docs file (its
+    :func:`_retrieve_decode`) that can be in a top ``n`` against the
+    query ``q``. Scores are ``functions.vector.dot_many``'s, bit-equal
+    to the Spark ``dot`` fold. ``rank`` orders before the score, the
+    way Spark's descending sort places the values: 2 for a NaN score
+    (first), 1 for a number, 0 for a null score (last) — a vector whose
+    length differs from the query's, or that holds a null. Docs without
+    a vector are not candidates. Finite scores are pruned with
+    ``topk_ties``; the rare others are all kept."""
+    ids, lens, bad, flat = decoded
+    ok = (lens == len(q)) & ~bad
     scores = np.zeros(len(ids))
-    vals = flat.to_numpy(zero_copy_only=False)[np.repeat(ok, lens)]
+    # every vector scored: the decoded values are the matrix as they lie
+    vals = flat if ok.all() else flat[np.repeat(ok, lens)]
     scores[ok] = dot_many(vals.reshape(int(ok.sum()), len(q)), q)
     rank = ok.astype(np.int8)
     rank[ok & np.isnan(scores)] = 2
@@ -302,20 +319,26 @@ class KnowledgeBase:
         ))
 
     def close(self, vacuum: bool = False, also_gzip: bool = False) -> None:
-        """kb.py:1437-1464: optional VACUUM (compaction) + gzip export."""
+        """kb.py:1437-1464: optional VACUUM (compaction) + gzip export,
+        then the decoded data files are let go, as svs frees its RAM
+        matrix; a later call decodes what it reads again."""
         if vacuum:
             for t in ("docs", "edges", "keyval", "_meta"):
                 self.wh.compact(t)
         if also_gzip:
             self.wh.export_gzip(self.wh.root + "_gzip_export")
+        self.wh.clear_decoded()
 
     def load(self) -> None:
-        """kb.py:964-967 parity: a no-op. svs warms its RAM matrix here;
-        every call here reads the table files as they are, in the
-        driver, so there is nothing to warm — and a persisted Spark
-        DataFrame would be served, by Spark's session-wide cache, to
-        every later read of the same files after a commit had replaced
-        them."""
+        """kb.py:964-967 parity: warm the RAM matrix. The driver decodes
+        every docs file and the vectors ``retrieve`` scores, with no
+        Spark job; a file a later commit replaces is decoded again by
+        the next read, so nothing here can be served stale. Nothing is
+        persisted in Spark: its session-wide cache would serve a
+        persisted DataFrame to every later read of the same files after
+        a commit had replaced them."""
+        for _ in self.wh.map_files("docs", _retrieve_decode):
+            pass
 
     # -- table views (the _EmbeddingsMatrix analogue, kb.py:856-893) ---------
 
@@ -830,27 +853,25 @@ class KnowledgeBase:
         """kb.py:1608-1640: embed the query, then the exact brute-force
         top-n of the docs that have a vector, in (score desc, id desc)
         order — bit for bit what ``operators.similarity.retrieve_topk``
-        returns on ``docs``. The driver reads ``id`` and ``embedding``
-        one parquet file at a time (the reference's RAM matrix, one file
-        of it in memory at once), keeps a running top-n of the
-        candidates :func:`_retrieve_candidates` leaves, then reads the
-        winners' fields from their buckets. Large-corpus retrieval is
-        ``operators.similarity.knn_join_batch`` and the IVF operators."""
+        returns on ``docs``. The driver scores each docs file's vectors
+        (the reference's RAM matrix: decoded once per file and kept
+        until a commit replaces the file, see ``load``), takes the top
+        n of the candidates :func:`_retrieve_candidates` leaves of each
+        file, then reads the winners' fields from their buckets.
+        Large-corpus retrieval is ``operators.similarity.knn_join_batch``
+        and the IVF operators."""
         q = np.asarray(self.embedding_func([query])[0], dtype=np.float64)
         if n <= 0:
             return []  # reference get_top_k clamps k<=0 to [] (util.py:190-203)
-        ids = np.empty(0, np.int64)
-        rank = np.empty(0, np.int8)
-        scores = np.empty(0)
-        for part in self.wh.arrow_files("docs", None, ["id", "embedding"]):
-            more = _retrieve_candidates(part, q, n)
-            ids, rank, scores = (
-                np.concatenate([a, b]) for a, b in zip((ids, rank, scores), more)
-            )
-            # ids are unique, so this order is total: a file's top n
-            # merged with the running top n is the top n of both
-            top = np.lexsort((ids, scores, rank))[::-1][:n]
-            ids, rank, scores = ids[top], rank[top], scores[top]
+        ids, rank, scores = (np.concatenate(c) for c in zip(
+            (np.empty(0, np.int64), np.empty(0, np.int8), np.empty(0)),
+            *(_retrieve_candidates(decoded, q, n)
+              for decoded in self.wh.map_files("docs", _retrieve_decode)),
+        ))
+        # ids are unique, so this order is total: the top n of every
+        # file's candidates together is the top n of the table
+        top = np.lexsort((ids, scores, rank))[::-1][:n]
+        ids, rank, scores = ids[top], rank[top], scores[top]
         rows = {r["id"]: r for r in self._find("docs", ids.tolist()).to_pylist()}
         return [
             {"score": float(s) if c else None,

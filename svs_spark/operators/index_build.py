@@ -34,6 +34,10 @@ from svs_spark.functions.vector import (
 )
 from svs_spark.session import drop_zip_importers
 
+# a build_ivf_index layout as Spark reads it back: the data files' columns,
+# then the ``label=<c>`` partition column
+IVF_LAYOUT_SCHEMA = "vec_id long, qemb binary, femb binary, label int"
+
 
 def build_lsh_index(
     embeddings: DataFrame,
@@ -181,8 +185,16 @@ def train_centroids_sample(
     # different samples (observed: a k-means cell empty in one run and
     # populated in the next). sample(seed) alone is deterministic for a
     # fixed file layout; truncate driver-side in stable collect order.
-    sample = embeddings.select(vec_col).sample(frac, seed=seed).collect()
-    mat = np.asarray([r[0] for r in sample], dtype=np.float32)[:sample_rows]
+    # The fraction is passed by keyword: a positional float is taken as
+    # withReplacement, and the seed is then read from the missing
+    # fraction, i.e. drawn at random.
+    vecs = (
+        embeddings.select(vec_col).sample(fraction=frac, seed=seed)
+        .toArrow().column(0).combine_chunks()
+    )
+    mat = vecs.flatten().to_numpy(zero_copy_only=False).astype(
+        np.float32
+    ).reshape(len(vecs), -1)[:sample_rows]
     rng = np.random.default_rng(seed)
     # kmeans++-style init (D² sampling on 1-cos distance): random init
     # frequently merges neighboring true clusters, which directly costs
@@ -529,7 +541,12 @@ def ivf_assigned_frame(spark, index_path: str) -> "DataFrame":
     import pandas as pd
     from typing import Iterator
 
-    idx = spark.read.parquet(index_path).select("vec_id", "label", "femb")
+    # the layout's known schema (``label`` is the partition column):
+    # no footer-reading inference job per call
+    idx = (
+        spark.read.schema(IVF_LAYOUT_SCHEMA).parquet(index_path)
+        .select("vec_id", "label", "femb")
+    )
 
     def unpack(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         drop_zip_importers()

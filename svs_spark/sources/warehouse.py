@@ -20,22 +20,30 @@ an empty one (no data file to infer a schema from) reads back.
 Driver/Spark commit split: ``write``, ``write_bucketed`` and
 ``overwrite_buckets`` take either a Spark DataFrame or a
 ``pyarrow.Table``. A DataFrame's staging files are written by a Spark
-job; a Table's (one file per touched bucket) are written from the
-driver by ``pyarrow.parquet`` — no job. Both go through the same
-writer lock, staging-directory rename swap and returned stamp, and
-both produce the layout Spark reads back. ``read_arrow`` (and
-``arrow_files``, the same read one bucket directory at a time) is the
-matching driver read, cast to the table's fixed schema: the bucket
-files that can hold a set of keys, or every ``_pb=<k>`` bucket when no
-keys are given, optionally projected to the columns a predicate tests.
+job; a Table's (one file per touched bucket, under a name never used
+before) are written from the driver by ``pyarrow.parquet`` — no job.
+Both go through the same writer lock, staging-directory rename swap
+and returned stamp, and both produce the layout Spark reads back.
+``read_arrow`` is the matching driver read, cast to the table's fixed
+schema: the bucket files that can hold a set of keys, or every
+``_pb=<k>`` bucket when no keys are given, optionally projected to the
+columns a predicate tests. Each ``Warehouse`` decodes a data file
+once: every read still lists the directories it reads, but a listed
+file whose cached entry holds its ``(inode, size, mtime)`` is served
+without opening it, and ``map_files`` keeps what a caller derives from
+a file on the same entry (``KnowledgeBase.retrieve``'s vectors). Data
+files are never rewritten in place and no name is reused, so a path
+names one content for good; the stat check covers files an older
+version wrote under its one fixed name.
+
 A swap renames the table directory (or a ``_pb=<k>`` bucket) to
 ``.old`` before renaming its new contents in; readers that do not hold
 the writer lock wait for such a swap to land rather than miss the
 table or bucket (``_listing``), and the first writer-lock acquire (or
 an open) after a writer that died between the renames puts the last
-committed version back (``_repair``). Every
-KnowledgeBase call that takes Python values takes the Arrow pair;
-DataFrame inputs, compaction, export and the SQL views stay on Spark.
+committed version back (``_repair``). Every KnowledgeBase call that
+takes Python values takes the Arrow pair; DataFrame inputs,
+compaction, export and the SQL views stay on Spark.
 
 Remote open parity (``src/svs/util.py:97-187``): ``http(s)://`` KBs are
 downloaded once into a local cache keyed by URL sha256; ``file://`` and
@@ -52,6 +60,7 @@ import os
 import shutil
 import time
 import urllib.request
+import uuid
 import warnings
 from contextlib import contextmanager
 
@@ -67,21 +76,49 @@ BUCKET_META_FILE = "_buckets.json"
 # how long a reader waits for a bucket swap it caught mid-way to land
 SWAP_WAIT_S = 5.0
 WRITER_LOCK_SUFFIX = ".writer.lock"
-# the one data file a driver-side (pyarrow) write puts in each directory
-ARROW_PART_FILE = "part-00000.parquet"
 
 
-def _read_dir(d: str, schema: pa.Schema) -> list[pa.Table]:
-    """The parquet data files directly in directory ``d``, each read by
-    pyarrow and cast to ``schema``; files are skipped the way Spark
-    skips them (``_``/``.``-prefixed names are markers and checksums).
-    FileNotFoundError when ``d`` moved away."""
-    parts = []
+class _Decoded:
+    """One data file as read: its ``(st_ino, st_size, st_mtime_ns)``, its
+    rows as a pyarrow Table in the table's fixed schema, and what
+    :meth:`Warehouse.map_files` derived from them, by function."""
+
+    __slots__ = ("key", "table", "memo")
+
+    def __init__(self, key: tuple, table: pa.Table):
+        self.key, self.table, self.memo = key, table, {}
+
+
+def _read_dir(d: str, schema: pa.Schema, cache: dict) -> list[_Decoded]:
+    """The parquet data files directly in directory ``d``, skipped the
+    way Spark skips them (``_``/``.``-prefixed names are markers and
+    checksums). A file is served from ``cache[d]`` when its entry still
+    holds the file's ``(st_ino, st_size, st_mtime_ns)``, and is else
+    read by pyarrow with every column of ``schema``, cast to it, and
+    entered; the listing then replaces ``cache[d]``, which drops the
+    files no longer listed. FileNotFoundError when ``d`` moved away."""
+    known = cache.get(d, {})
+    fresh = {}
     for f in sorted(os.listdir(d)):
         if f.endswith(".parquet") and not f.startswith(("_", ".")):
-            with pq.ParquetFile(os.path.join(d, f)) as pf:
-                parts.append(pf.read(columns=schema.names).cast(schema))
-    return parts
+            path = os.path.join(d, f)
+            st = os.stat(path)
+            key = (st.st_ino, st.st_size, st.st_mtime_ns)
+            hit = known.get(f)
+            if hit is None or hit.key != key:
+                with pq.ParquetFile(path) as pf:
+                    hit = _Decoded(key, pf.read(columns=schema.names).cast(schema))
+            fresh[f] = hit
+    cache[d] = fresh
+    return list(fresh.values())
+
+
+def _part_file() -> str:
+    """A new data-file name for a driver-side (pyarrow) write: unique,
+    as Spark's writer makes its own, so no path ever names two
+    contents and a decoded file is never served for a later one."""
+    return f"part-00000-{uuid.uuid4().hex}.parquet"
+
 
 def _is_bucket(d: str) -> bool:
     """Whether directory entry ``d`` is a live ``_pb=<k>`` bucket."""
@@ -121,7 +158,7 @@ def _stage(staging: str, data, key_col: str | None = None,
     if isinstance(data, pa.Table):
         os.makedirs(staging)
         if key_col is None:
-            pq.write_table(data, os.path.join(staging, ARROW_PART_FILE))
+            pq.write_table(data, os.path.join(staging, _part_file()))
             return
         # numpy's mod takes the divisor's sign: pmod for negative ids too
         pb = np.mod(data.column(key_col).to_numpy(), n_buckets)
@@ -130,7 +167,7 @@ def _stage(staging: str, data, key_col: str | None = None,
             os.makedirs(part)
             pq.write_table(
                 data.take(np.flatnonzero(pb == b)),
-                os.path.join(part, ARROW_PART_FILE),
+                os.path.join(part, _part_file()),
             )
         return
     if key_col is None:
@@ -310,7 +347,12 @@ class Warehouse:
     ``schemas`` maps a table name to its fixed schema: reads of those
     tables skip the parquet footer-inference job. Read handles are
     cached per table under its :meth:`stamp`, so a handle never outlives
-    the table version whose files it lists."""
+    the table version whose files it lists. Driver reads decode each
+    data file once: the decoded files are cached by path (no path is
+    ever given to a second file, see :func:`_part_file`), checked
+    against one ``os.stat`` per listed file, and dropped when a listing
+    no longer holds them, so the cache holds at most the live files
+    read."""
 
     def __init__(
         self,
@@ -323,6 +365,8 @@ class Warehouse:
         self.schemas = schemas or {}
         # name -> (stamp, scan with _pb, scan without _pb)
         self._handles: dict[str, tuple] = {}
+        # name -> data directory -> file name -> _Decoded
+        self._decoded: dict[str, dict[str, dict[str, _Decoded]]] = {}
         self._held_locks: set[str] = set()
         os.makedirs(root, exist_ok=True)
         self.recover()
@@ -524,20 +568,25 @@ class Warehouse:
             names = self._listing(name, path, _is_bucket)
         return sorted(d for d in names if _is_bucket(d))
 
-    def _arrow_dirs(self, name: str, keys) -> list[str]:
+    def _arrow_dirs(self, name: str, keys, cache: dict) -> list[str]:
         """Directories whose files can hold ``keys`` (values of the
         bucket key); every bucket directory when ``keys`` is None. A
-        plain table is its one directory."""
+        plain table is its one directory. The decoded files of a bucket
+        that is no longer listed (a commit emptied it) leave ``cache``."""
         path = self.table_path(name)
         meta = self.bucket_meta(name)
         if meta is None:
             return [path]
-        live = self._live_buckets(name)
+        live = [os.path.join(path, d) for d in self._live_buckets(name)]
+        for d in set(cache).difference(live):
+            cache.pop(d, None)
         if keys is not None:
             nb = meta["n_buckets"]
-            want = {f"_pb={self.bucket_of(k, nb)}" for k in keys}
+            want = {
+                os.path.join(path, f"_pb={self.bucket_of(k, nb)}") for k in keys
+            }
             live = [d for d in live if d in want]
-        return [os.path.join(path, d) for d in live]
+        return live
 
     def _arrow_schema(self, name: str, columns) -> pa.Schema:
         schema = self.arrow_schema(name)
@@ -545,38 +594,60 @@ class Warehouse:
             return schema
         return pa.schema([schema.field(c) for c in columns])
 
-    def arrow_files(self, name: str, keys=None, columns=None):
-        """Yield the rows of table ``name`` one data file at a time, read
-        in the driver by pyarrow — no Spark job: the files of the
-        buckets that can hold ``keys`` (values of the bucket key), or of
-        the whole table when ``keys`` is None. ``columns`` projects the
-        read. Every file is cast to the table's fixed schema, so files
-        written by Spark and by pyarrow read alike. A bucket is read
+    def _files(self, name: str, keys):
+        """The decoded data files of table ``name``: those of the buckets
+        that can hold ``keys`` (values of the bucket key), or of the
+        whole table when ``keys`` is None. A bucket is listed and read
         whole before its files are yielded: one that a swap moves away
-        after the listing is read again from where the swap leaves it.
-        Callers that rewrite what they read hold the table's writer
-        lock across both."""
-        schema = self._arrow_schema(name, columns)
-        for d in self._arrow_dirs(name, keys):
+        after the listing is read again from where the swap leaves it."""
+        schema = self.arrow_schema(name)
+        cache = self._decoded.setdefault(name, {})
+        for d in self._arrow_dirs(name, keys, cache):
             try:
-                parts = _read_dir(d, schema)
+                parts = _read_dir(d, schema, cache)
             except FileNotFoundError:
                 if d == self.table_path(name):  # a plain table swapped whole
                     self._await_table(name)
-                    parts = _read_dir(d, schema)
+                    parts = _read_dir(d, schema, cache)
                 elif os.path.basename(d) in self._live_buckets(name):
-                    parts = _read_dir(d, schema)
+                    parts = _read_dir(d, schema, cache)
                 else:
+                    cache.pop(d, None)
                     parts = []  # the swap emptied the bucket
             yield from parts
 
     def read_arrow(self, name: str, keys=None, columns=None) -> pa.Table:
-        """:meth:`arrow_files` as one Table: the bucket files that can
-        hold ``keys``, or the whole table when ``keys`` is None."""
-        parts = list(self.arrow_files(name, keys, columns))
+        """The rows of table ``name``, read in the driver by pyarrow — no
+        Spark job: the files of the buckets that can hold ``keys``
+        (values of the bucket key), or of the whole table when ``keys``
+        is None. ``columns`` projects the read. Every file is cast to
+        the table's fixed schema, so files written by Spark and by
+        pyarrow read alike, and is decoded once: a listed file whose
+        cached entry still holds its inode, size and mtime is served
+        without opening it. Callers that rewrite what they read hold
+        the table's writer lock across both."""
+        parts = [
+            p.table if columns is None else p.table.select(columns)
+            for p in self._files(name, keys)
+        ]
         if parts:
             return pa.concat_tables(parts)
         return self._arrow_schema(name, columns).empty_table()
+
+    def map_files(self, name: str, fn, keys=None):
+        """Yield ``fn(rows)`` for each data file :meth:`read_arrow` reads
+        (``rows`` in the table's fixed schema, every column), computed
+        once per file and kept on its cached entry, so it lives exactly
+        as long as the decoded file. ``fn`` must depend on ``rows``
+        only, and callers must not change what it returns."""
+        for part in self._files(name, keys):
+            if fn not in part.memo:
+                part.memo[fn] = fn(part.table)
+            yield part.memo[fn]
+
+    def clear_decoded(self) -> None:
+        """Forget every decoded data file: the next read decodes again."""
+        self._decoded.clear()
 
     # -- bucketed layout: point mutations touch 1/n of the table ----------
 
@@ -673,6 +744,7 @@ class Warehouse:
 
     def drop_all(self) -> None:
         """force_fresh_db parity (kb.py:951-952): delete + recreate."""
+        self.clear_decoded()
         if os.path.exists(self.root):
             shutil.rmtree(self.root)
         os.makedirs(self.root, exist_ok=True)

@@ -143,6 +143,18 @@ class TestIvfInt8Index:
         IX.build_ivf_index(df, path, cent)
         return path
 
+    def test_train_sample_is_seeded(self, clustered):
+        """With ``sample_rows`` under the row count the sample is a
+        fraction of the rows, drawn with the given seed: two calls train
+        the same centroids (the seed was once dropped, and each call drew
+        its own random sample)."""
+        import numpy as np
+
+        df, _ = clustered
+        a, b = (IX.train_centroids_sample(df, n_clusters=8, sample_rows=200,
+                                          iters=3, seed=1) for _ in range(2))
+        assert np.array_equal(a, b)
+
     def test_layout_and_meta(self, ivf_path):
         labels = [d for d in os.listdir(ivf_path) if d.startswith("label=")]
         assert len(labels) >= 6  # kmeans occasionally merges tiny clusters
@@ -428,6 +440,23 @@ class TestIvfAssignedFrame:
         want = {r["vec_id"]: r["embedding"] for r in df.collect()}
         assert set(got) == set(want)
         assert all(got[v] == want[v] for v in want)  # float32 exact
+
+    def test_frame_reads_with_the_layout_schema(self, spark, built):
+        """Building the frame runs no Spark job (no footer-inference
+        read), and the layout reads back with the types inference
+        finds."""
+        _, _, path = built
+        sc = spark.sparkContext
+        sc.setJobGroup("ivf-assigned-frame", "ivf-assigned-frame")
+        try:
+            frame = IX.ivf_assigned_frame(spark, path)
+        finally:
+            sc.setJobGroup("ivf-assigned-frame-done", "")
+        assert sc.statusTracker().getJobIdsForGroup("ivf-assigned-frame") == []
+        assert frame.columns == ["vec_id", "cluster_id", "embedding"]
+        inferred = spark.read.parquet(path)
+        assert sorted(inferred.dtypes) == sorted(
+            spark.read.schema(IX.IVF_LAYOUT_SCHEMA).parquet(path).dtypes)
 
     def test_assignment_matches_centroid_assign(self, spark, built):
         from svs_spark.operators.similarity import centroid_assign

@@ -1099,3 +1099,206 @@ class TestCallCost:
                 r["embedding"], dtype=np.float32
             ).tobytes()
         assert sum(v is None for v in stored.values()) == 9
+
+
+def _decoded_files(kb: KnowledgeBase) -> int:
+    """Data files the KB's warehouse holds decoded."""
+    return sum(len(files) for dirs in kb.wh._decoded.values()
+               for files in dirs.values())
+
+
+def _live_files(kb: KnowledgeBase) -> int:
+    """Data files of the KB's live tables, as a reader lists them."""
+    import os
+
+    n = 0
+    for dirpath, dirs, files in os.walk(kb.wh.root):
+        dirs[:] = [d for d in dirs if not d.endswith((".old", ".staging"))]
+        n += sum(f.endswith(".parquet") and f[0] not in "._" for f in files)
+    return n
+
+
+class TestDecodeCache:
+    """Each Warehouse decodes a data file once and serves it until a
+    commit replaces the file; no data-file name is ever reused, and the
+    cache holds no file that is no longer listed."""
+
+    @staticmethod
+    def _provider(texts):
+        """The vector depends on the text's last word only."""
+        import zlib
+
+        import numpy as np
+
+        out = []
+        for t in texts:
+            rng = np.random.default_rng(zlib.crc32(t.split()[-1].encode()))
+            v = rng.standard_normal(6)
+            out.append((v / np.linalg.norm(v)).tolist())
+        return out
+
+    def _kb(self, spark, path, n_docs=20):
+        kb = KnowledgeBase(spark, path, embedding_func=self._provider,
+                           force_fresh_db=True)
+        with kb.bulk_add_docs() as add:
+            for i in range(n_docs):
+                add(f"doc {i} w{i % 7}", parent_id=1 if i == 9 else None)
+        return kb
+
+    def _reopen(self, spark, kb):
+        """A second instance over ``kb``'s warehouse."""
+        with pytest.warns(UserWarning, match="overrides stored params"):
+            return KnowledgeBase(spark, kb.wh.root, embedding_func=self._provider)
+
+    def test_commit_by_another_instance_is_read(self, spark, tmp_path):
+        """Instance A has read (and decoded) bucket 2 of docs and the
+        keyval table; B commits a meta update and an add to that bucket
+        and a keyval set; A's next query_doc, retrieve and keyval read
+        return B's commits."""
+        import os
+
+        from svs_spark.kb import DOCS_BUCKETS
+
+        a = self._kb(spark, str(tmp_path / "kb"), n_docs=17)
+        b = self._reopen(spark, a)
+        with a.bulk_keyval_update() as kv:
+            kv["k"] = 1
+        assert a.query_doc(2)["meta"] is None
+        assert a.retrieve("q fresh", 1)[0]["doc"]["id"] != 18
+        with a.bulk_keyval_update() as kv:
+            assert kv["k"] == 1
+        bucket = os.path.join(a.wh.table_path("docs"), f"_pb={2 % DOCS_BUCKETS}")
+        assert bucket in a.wh._decoded["docs"]  # A holds bucket 2 decoded
+
+        b.update_doc_meta(2, {"by": "b"})
+        assert b.add_doc("new fresh") == 18  # 18 lands in bucket 2 too
+        with b.bulk_keyval_update() as kv:
+            kv["k"] = 2
+        assert a.query_doc(2)["meta"] == {"by": "b"}
+        top = a.retrieve("q fresh", 2)
+        assert top[0]["doc"]["id"] == 18 and top[0]["doc"]["text"] == "new fresh"
+        assert a.query_doc(18)["text"] == "new fresh"
+        with a.bulk_keyval_update() as kv:
+            assert kv["k"] == 2
+
+    def test_driver_commits_never_reuse_a_file_name(self, spark, tmp_path):
+        """Two driver commits to one docs bucket, and two keyval
+        commits, each leave a data file under a new name."""
+        import os
+
+        kb = self._kb(spark, str(tmp_path / "kb"))
+        bucket = os.path.join(kb.wh.table_path("docs"), "_pb=3")
+        keyval = kb.wh.table_path("keyval")
+
+        def data_files(d):
+            return {f for f in os.listdir(d)
+                    if f.endswith(".parquet") and f[0] not in "._"}
+
+        seen_bucket, seen_kv = [data_files(bucket)], [data_files(keyval)]
+        for i in range(2):
+            kb.update_doc_meta(3, {"i": i})
+            with kb.bulk_keyval_update() as kv:
+                kv["k"] = i
+            seen_bucket.append(data_files(bucket))
+            seen_kv.append(data_files(keyval))
+        for seen in (seen_bucket, seen_kv):
+            assert all(len(files) == 1 for files in seen)
+            assert len(set.union(*seen)) == len(seen), seen
+
+    def test_cache_holds_only_listed_files(self, spark, tmp_path):
+        """After 200 meta updates interleaved with reads, and a delete
+        that empties a bucket, the cache holds no more decoded files
+        than the live tables have data files."""
+        import os
+
+        kb = self._kb(spark, str(tmp_path / "kb"))
+        for i in range(200):
+            kb.update_doc_meta(2 + i % 7, {"i": i})
+            if i % 5 == 0:
+                kb.retrieve("q w3", 3)
+                kb.query_children(1)
+        with kb.bulk_keyval_update() as kv:
+            kv["k"] = 1
+        kb.del_doc(15)  # alone in bucket 15: the bucket goes
+        assert kb.count() == 19
+        assert kb.query_doc(3)["meta"] == {"i": 197}
+        docs = kb.wh._decoded["docs"]
+        assert os.path.join(kb.wh.table_path("docs"), "_pb=15") not in docs
+        assert 0 < _decoded_files(kb) <= _live_files(kb)
+        assert len(docs) == 15  # every other docs bucket, once
+
+    def test_retrieve_equals_retrieve_topk_across_writes(self, spark, tmp_path):
+        """retrieve stays bit-equal to ``retrieve_topk`` over ``docs``
+        while another instance adds, deletes, re-embeds (null, short
+        and long vectors) and updates docs between the calls."""
+        from pyspark.sql import functions as F
+
+        from svs_spark.operators.similarity import retrieve_topk
+
+        kb = self._kb(spark, str(tmp_path / "kb"))
+        other = self._reopen(spark, kb)
+        writes = [
+            lambda: other.add_doc("late w3"),
+            lambda: other.set_doc_embedding(4, None),
+            lambda: other.set_doc_embedding(5, [0.6, 0.8]),  # short
+            lambda: kb.del_doc(8),
+            lambda: other.set_doc_embedding(6, [0.5] * 9),  # long
+            lambda: other.update_doc_meta(3, {"m": 1}),
+            lambda: other.del_doc(2),
+            lambda: kb.add_doc("later w0", no_embedding=True),
+            lambda: other.set_doc_embedding(4, self._provider(["x w5"])[0]),
+        ]
+        for step, write in enumerate(writes):
+            write()
+            emb = kb.docs.filter(F.col("embedding").isNotNull())
+            for text, n in (("q w3", 4), ("q w5", 30)):
+                want = [(r["id"], r["score"]) for r in retrieve_topk(
+                    emb, self._provider([text])[0], n, id_col="id",
+                    vec_col="embedding").collect()]
+                got = [(r["doc"]["id"], r["score"]) for r in kb.retrieve(text, n)]
+                assert got == want, (step, text)
+
+    def test_warm_reads_decode_only_replaced_files(self, spark, tmp_path,
+                                                   monkeypatch):
+        """Once every file is decoded, a read opens no parquet file, and
+        after a single-doc commit the next whole-table read opens only
+        the one file the commit wrote."""
+        import pyarrow.parquet as pq
+
+        kb = self._kb(spark, str(tmp_path / "kb"))
+        kb.retrieve("q w1", 3)
+        opened = []
+        parquet_file = pq.ParquetFile
+
+        def counting(path, *a, **k):
+            opened.append(path)
+            return parquet_file(path, *a, **k)
+
+        monkeypatch.setattr(pq, "ParquetFile", counting)
+        first = kb.retrieve("q w1", 3)
+        kb.query_children(1)
+        assert opened == []
+        kb.update_doc_meta(5, {"x": 1})
+        again = kb.retrieve("q w1", 3)
+        assert len(opened) == 1 and "_pb=5" in opened[0]
+        assert [(r["doc"]["id"], r["score"]) for r in again] == [
+            (r["doc"]["id"], r["score"]) for r in first]
+
+    def test_load_warms_and_close_empties(self, spark, tmp_path):
+        """load() decodes every docs file and its vectors with no Spark
+        job; close() lets every decoded file go, and the next call
+        decodes again."""
+        from svs_spark.kb import _retrieve_decode
+
+        kb = self._kb(spark, str(tmp_path / "kb"))
+        kb.close()
+        assert kb.wh._decoded == {}
+        assert _jobs_in(spark, "decode-cache-load", kb.load) == 0
+        docs = kb.wh._decoded["docs"]
+        assert len(docs) == 16
+        assert all(_retrieve_decode in e.memo
+                   for files in docs.values() for e in files.values())
+        kb.close()
+        assert _decoded_files(kb) == 0
+        assert kb.query_doc(4)["text"] == "doc 3 w3"
+        assert _decoded_files(kb) == 1

@@ -221,7 +221,7 @@ def test_bucket_moved_after_the_listing_is_read_again(
     read_dir = warehouse._read_dir
     writers = []
 
-    def swap_first(d, schema):
+    def swap_first(d, *args):
         if d.endswith("_pb=1") and not writers:
             writers.append(threading.Thread(
                 target=wh.overwrite_buckets,
@@ -229,7 +229,7 @@ def test_bucket_moved_after_the_listing_is_read_again(
             writers[0].start()
             assert paused.wait(30)
             threading.Timer(0.2, go.set).start()
-        return read_dir(d, schema)
+        return read_dir(d, *args)
 
     monkeypatch.setattr(warehouse, "_read_dir", swap_first)
     try:
