@@ -17,9 +17,10 @@ test:
 
 # the KnowledgeBase and warehouse suites under the Tier-1 environment
 # (about 3 min on 4 cores): the quick gate for changes to the KB façade
-# or warehouse
+# or warehouse. The streaming test is the one that commits into a KB,
+# through the DataFrame append path.
 kb:
-	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; timeout -k 10 2670 python -m pytest tests/test_kb.py tests/test_kb_async.py tests/test_svs_import.py tests/test_chunking.py tests/test_writer_lock.py tests/test_sources.py -q --continue-on-collection-errors -p no:cacheprovider
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; timeout -k 10 2670 python -m pytest tests/test_kb.py tests/test_kb_async.py tests/test_svs_import.py tests/test_chunking.py tests/test_writer_lock.py tests/test_sources.py tests/test_streaming.py::test_streaming_ingest_into_kb -q --continue-on-collection-errors -p no:cacheprovider
 
 # the operator suites whose Python kernels run in the workers (Arrow
 # mapInPandas/applyInPandas, stateful streaming, the scalar pandas_udf)

@@ -19,19 +19,22 @@ asyncio lock           Spark's distributed execution (the reference's
                        serial lock is its scalability ceiling, §4)
 =====================  =========================================
 
-Bulk contexts commit as one atomic table swap each — the moral
-equivalent of the reference's BEGIN/COMMIT transaction per bulk
-(``kb.py:794-829``). Every call that takes Python values reads and
-commits in the driver with pyarrow and runs no Spark job, as a
-reference call is one SQLite transaction: keyed calls (single-doc
-adds, reads and updates, keyval, edge commits) touch only the buckets
-that can hold their keys (``Warehouse.read_arrow`` and a Table
-commit), and predicate reads (children, levels, counts, the next id,
-the edge-key probe, the delete guard and cascade search) read the
-columns they test from the whole table. The warehouse decodes each
-data file once and serves it again until a commit replaces it, so a
-call pays for listing the table and for the files changed since the
-last read. ``retrieve`` scores each file's vectors, kept decoded on the
+Each bulk context holds its table's writer lock from entry to its
+commit, and the commit is one replace of the table's manifest (see
+``sources/warehouse.py``): the equivalent of the reference's
+BEGIN/COMMIT transaction per bulk (``kb.py:794-829``), so a second
+writer waits for it, and readers and crashes see all of a bulk or none
+of it. Every call that takes Python values reads and commits in the
+driver with pyarrow and runs no Spark job, as a reference call is one
+SQLite transaction: keyed calls (single-doc adds, reads and updates,
+keyval, edge commits) touch only the buckets that can hold their keys
+(``Warehouse.read_arrow`` and a Table commit), and predicate reads
+(children, levels, counts, the next id, the edge-key probe, the delete
+guard and cascade search) read the columns they test from the whole
+table. The warehouse decodes each data file once and serves it again
+while the manifest lists it, so a call pays for reading the table's
+manifest and for the files changed since the last read. ``retrieve``
+scores each file's vectors, kept decoded on the
 file's cache entry, with the same float64 fold as
 ``functions.vector.dot`` — the analogue of the reference's RAM matrix
 (``kb.py:856-893``), rebuilt per file only after a write. The
@@ -374,13 +377,13 @@ class KnowledgeBase:
 
     def _commit(self, table: str, write, next_id: Optional[int] = None):
         """Run ``write`` (a read-modify-write of ``table`` returning the
-        stamp after its swap) under the table's writer lock. The cached
-        next id survives only if it described the version this commit
-        replaced: unchanged, or ``next_id`` when the commit added ids.
-        Commits made any other way move the stamp and so drop it."""
-        with self.wh.write_lock(table):
-            before = self.wh.stamp(table)
-            after = write()
+        stamp after its commit); the caller holds the table's writer
+        lock. The cached next id survives only if it described the
+        version this commit replaced: unchanged, or ``next_id`` when the
+        commit added ids. Commits made any other way move the stamp and
+        so drop it."""
+        before = self.wh.stamp(table)
+        after = write()
         hit = self._next_ids.get(table)
         if hit is not None and hit[0] == before:
             self._next_ids[table] = (
@@ -409,7 +412,7 @@ class KnowledgeBase:
         """Commit ``patch(rows)`` in place of the rows of the buckets that
         can hold ``keys`` (values of the bucket key), read and written
         in the driver as pyarrow Tables under the table's writer lock;
-        returns the stamp after the swap. A single add_doc touches ONE
+        returns the stamp after the commit. A single add_doc touches ONE
         bucket."""
         keys = list(keys)
         with self.wh.write_lock(table):
@@ -417,21 +420,6 @@ class KnowledgeBase:
             nb = self.wh.bucket_meta(table)["n_buckets"]
             pbs = sorted({Warehouse.bucket_of(k, nb) for k in keys})
             return self.wh.overwrite_buckets(table, pbs, post)
-
-    def _append_docs(self, new_df: DataFrame):
-        """Append a DataFrame of doc rows (the distributed ingest paths)
-        with Spark, touching only their hash buckets, found by a
-        distinct-bucket probe that collects ≤ n_buckets rows, never
-        data."""
-        nb = F.lit(self.wh.bucket_meta("docs")["n_buckets"])
-        pbs = sorted(r[0] for r in new_df.select(
-            F.pmod(F.col("id"), nb).cast("int")
-        ).distinct().collect())
-        if pbs:
-            self.wh.overwrite_buckets(
-                "docs", pbs,
-                self.wh.read_buckets("docs", pbs).unionByName(new_df),
-            )
 
     def _point_update_docs(self, doc_id: int, column: str, value) -> None:
         """Rewrite exactly one doc's column, touching only its bucket."""
@@ -446,15 +434,17 @@ class KnowledgeBase:
                 hit, pa.scalar(value, col.type), col
             ))
 
-        self._commit("docs", lambda: self._rewrite("docs", [doc_id], patch))
+        with self.wh.write_lock("docs"):
+            self._commit("docs", lambda: self._rewrite("docs", [doc_id], patch))
 
     def _append_embedded(
-        self, df: DataFrame, no_embedding: bool, head: Optional[DataFrame] = None
+        self, df: DataFrame, head: Optional[DataFrame] = None
     ) -> None:
         """Append ``head`` (already in docs shape) plus ``df`` with its
-        embedding cast to the docs column. ``_append_docs`` runs ≥2
-        actions (bucket probe + write), so an embedded frame is persisted
-        first: the provider runs exactly once per doc."""
+        embedding cast to the docs column (the distributed ingest paths):
+        one Spark job writes the new files into their hash buckets, so
+        the provider runs once per doc, and the commit adds them to the
+        docs manifest beside the files already there."""
         staged = df.select(
             "id", "parent_id", "level", "text",
             F.col("embedding").cast(ArrayType(FloatType())).alias("embedding"),
@@ -462,15 +452,7 @@ class KnowledgeBase:
         )
         if head is not None:
             staged = head.unionByName(staged)
-        if no_embedding:
-            self._append_docs(staged)
-            return
-        staged = staged.persist()
-        try:
-            staged.count()
-            self._append_docs(staged)
-        finally:
-            staged.unpersist()
+        self.wh.append("docs", staged)
 
     # -- DML: bulk add (M1) ---------------------------------------------------
 
@@ -480,60 +462,64 @@ class KnowledgeBase:
         from the parent (pending or stored), embeddings computed on exit
         by calling the provider on the driver in BULK_EMBEDDING_CHUNK_SIZE
         chunks (kb.py:1516-1521), the whole context committed as ONE
-        atomic write. ``add_documents_df`` is the distributed path."""
-        pending: list[tuple] = []
-        known_levels: dict[int, int] = {}
-        counter = [self._next_id("docs", "id")]
+        atomic write. The docs writer lock is held from entry to the
+        commit, as a SQLite transaction holds its write lock: a second
+        writer's bulk waits, then takes the ids after this one's.
+        ``add_documents_df`` is the distributed path."""
+        with self.wh.write_lock("docs"):
+            pending: list[tuple] = []
+            known_levels: dict[int, int] = {}
+            counter = [self._next_id("docs", "id")]
 
-        def add_doc(
-            text: str,
-            parent_id: Optional[int] = None,
-            meta: Optional[dict] = None,
-            no_embedding: bool = False,
-        ) -> int:
-            if parent_id is None:
-                level = 0
-            elif parent_id in known_levels:
-                level = known_levels[parent_id] + 1
-            else:
-                row = self._point_read(parent_id)
-                if row is None:
-                    raise ValueError(f"invalid parent_id: {parent_id}")
-                known_levels[parent_id] = row["level"]
-                level = row["level"] + 1
-            doc_id = counter[0]
-            counter[0] += 1
-            known_levels[doc_id] = level
-            enc = json.dumps(meta) if meta is not None else None
-            pending.append((doc_id, parent_id, level, text, enc, no_embedding))
-            return doc_id
+            def add_doc(
+                text: str,
+                parent_id: Optional[int] = None,
+                meta: Optional[dict] = None,
+                no_embedding: bool = False,
+            ) -> int:
+                if parent_id is None:
+                    level = 0
+                elif parent_id in known_levels:
+                    level = known_levels[parent_id] + 1
+                else:
+                    row = self._point_read(parent_id)
+                    if row is None:
+                        raise ValueError(f"invalid parent_id: {parent_id}")
+                    known_levels[parent_id] = row["level"]
+                    level = row["level"] + 1
+                doc_id = counter[0]
+                counter[0] += 1
+                known_levels[doc_id] = level
+                enc = json.dumps(meta) if meta is not None else None
+                pending.append((doc_id, parent_id, level, text, enc, no_embedding))
+                return doc_id
 
-        yield add_doc
+            yield add_doc
 
-        if not pending:
-            return
-        texts = [p[3] for p in pending if not p[5]]
-        # the magnitude-checked provider, in the reference's chunks; the
-        # float32 rounding is the one embed_df's Arrow column applies
-        vecs = iter([
-            np.asarray(v, dtype=np.float32).tolist()
-            for i in range(0, len(texts), BULK_EMBEDDING_CHUNK_SIZE)
-            for v in self.embedding_func(
-                texts[i:i + BULK_EMBEDDING_CHUNK_SIZE]
+            if not pending:
+                return
+            texts = [p[3] for p in pending if not p[5]]
+            # the magnitude-checked provider, in the reference's chunks; the
+            # float32 rounding is the one embed_df's Arrow column applies
+            vecs = iter([
+                np.asarray(v, dtype=np.float32).tolist()
+                for i in range(0, len(texts), BULK_EMBEDDING_CHUNK_SIZE)
+                for v in self.embedding_func(
+                    texts[i:i + BULK_EMBEDDING_CHUNK_SIZE]
+                )
+            ])
+            new_rows = self.wh.arrow_table("docs", [
+                (i, pid, level, text, None if skip else next(vecs), enc)
+                for i, pid, level, text, enc, skip in pending
+            ])
+            self._commit(
+                "docs",
+                lambda: self._rewrite(
+                    "docs", [p[0] for p in pending],
+                    lambda cur: pa.concat_tables([cur, new_rows]),
+                ),
+                next_id=counter[0],
             )
-        ])
-        new_rows = self.wh.arrow_table("docs", [
-            (i, pid, level, text, None if skip else next(vecs), enc)
-            for i, pid, level, text, enc, skip in pending
-        ])
-        self._commit(
-            "docs",
-            lambda: self._rewrite(
-                "docs", [p[0] for p in pending],
-                lambda cur: pa.concat_tables([cur, new_rows]),
-            ),
-            next_id=counter[0],
-        )
 
     def add_doc(self, text: str, parent_id: Optional[int] = None,
                 meta: Optional[dict] = None, no_embedding: bool = False) -> int:
@@ -594,7 +580,7 @@ class KnowledgeBase:
             )
         else:
             staged = embed_df(new_rows, self.embedding_func, check=False)
-        self._append_embedded(staged, no_embedding)
+        self._append_embedded(staged)
         return n_new
 
     def add_chunked_documents_df(
@@ -674,7 +660,7 @@ class KnowledgeBase:
             )
         else:
             chunks = embed_df(chunks_pre, self.embedding_func, check=False)
-        self._append_embedded(chunks, no_embedding, parents)
+        self._append_embedded(chunks, parents)
         return n_parents, n_chunks
 
     # -- DML: bulk delete (M2) -------------------------------------------------
@@ -962,160 +948,164 @@ class KnowledgeBase:
         reads, not 100k per-edge ``isEmpty`` jobs (round-3 verdict #1).
         The commit itself is a single del-filter + append of the touched
         buckets, written from the driver (atomic via the warehouse
-        swap); on any validation error nothing is written.
+        manifest); on any validation error nothing is written. The edges
+        writer lock is held from entry to the commit, so the edge ids
+        handed out at call time stay free and the probe's answers stay
+        true until the commit.
         """
-        start_eid = self._next_id("edges", "edge_id")
-        counter = [start_eid]
-        # ops replayed at commit: ("add", eid, src, dst, rel, w, directed)
-        # or ("del", edge_id)
-        ops: list[tuple] = []
-        batch_keys: dict[tuple, int] = {}  # live in-bulk adds, call-time dup gate
-        # eager-mode state: docs verified present, keys of persisted
-        # edges deleted in this bulk, persisted ids already deleted
-        eager_docs_ok: set[int] = set()
-        eager_del_keys: set[tuple] = set()
-        eager_dels: set[int] = set()
+        with self.wh.write_lock("edges"):
+            start_eid = self._next_id("edges", "edge_id")
+            counter = [start_eid]
+            # ops replayed at commit: ("add", eid, src, dst, rel, w, directed)
+            # or ("del", edge_id)
+            ops: list[tuple] = []
+            batch_keys: dict[tuple, int] = {}  # live in-bulk adds, call-time dup gate
+            # eager-mode state: docs verified present, keys of persisted
+            # edges deleted in this bulk, persisted ids already deleted
+            eager_docs_ok: set[int] = set()
+            eager_del_keys: set[tuple] = set()
+            eager_dels: set[int] = set()
 
-        def _add(src: int, dst: int, rel: int, weight: Optional[float],
-                 directed: bool) -> int:
-            key = (src, dst, rel)
-            if key in batch_keys:
-                raise RuntimeError(
-                    f"edge ({src}, {dst}, {rel}) already exists"
-                )
-            if eager_validation:
-                for i in (src, dst, rel):
-                    if i not in eager_docs_ok:
-                        if self._point_read(i) is None:
-                            raise ValueError(f"no such doc: {i}")
-                        eager_docs_ok.add(i)
-                if key not in eager_del_keys and self._stored_edge_keys([key]):
-                    raise RuntimeError(
-                        f"edge ({src}, {dst}, {rel}) already exists"
-                    )
-                eager_del_keys.discard(key)
-            eid = counter[0]
-            counter[0] += 1
-            batch_keys[key] = eid
-            ops.append(("add", eid, src, dst, rel, weight, directed))
-            return eid
-
-        def _del(edge_id: int) -> None:
-            # rolling back an in-bulk add frees its key for later adds
-            # in THIS bulk; the op itself still replays (a rolled-back
-            # add must still fail validation the way sequential
-            # execution would have)
-            if eager_validation:
-                if edge_id >= start_eid:
-                    if edge_id not in batch_keys.values():
-                        raise ValueError(f"no such edge: [{edge_id}]")
-                else:
-                    if edge_id in eager_dels:
-                        raise ValueError(f"no such edge: [{edge_id}]")
-                    rows = self._find("edges", [edge_id]).to_pylist()
-                    if not rows:
-                        raise ValueError(f"no such edge: [{edge_id}]")
-                    eager_dels.add(edge_id)
-                    eager_del_keys.add(
-                        (rows[0]["src"], rows[0]["dst"], rows[0]["rel"])
-                    )
-            for key, eid in list(batch_keys.items()):
-                if eid == edge_id:
-                    del batch_keys[key]
-                    break
-            ops.append(("del", edge_id))
-
-        class GraphUpdater:
-            def add_edge(self, doc1: int, doc2: int, relationship: int,
-                         weight: Optional[float] = None) -> int:
-                return _add(doc1, doc2, relationship, weight, False)
-
-            def add_directed_edge(self, from_doc: int, to_doc: int,
-                                  relationship: int,
-                                  weight: Optional[float] = None) -> int:
-                return _add(from_doc, to_doc, relationship, weight, True)
-
-            def del_edge(self, edge_id: int) -> None:
-                _del(edge_id)
-
-        yield GraphUpdater()
-
-        if not ops:
-            return
-
-        # -- batched prefetch: three driver reads -----------------------
-        need_keys = sorted(
-            {(op[2], op[3], op[4]) for op in ops if op[0] == "add"}
-        )
-        need_docs = sorted(
-            {i for op in ops if op[0] == "add" for i in op[2:5]}
-        )
-        persisted_keys = self._stored_edge_keys(need_keys)
-        found_docs = set(self._find("docs", need_docs).column("id").to_pylist())
-        persisted_del_ids = sorted(
-            {op[1] for op in ops if op[0] == "del" and op[1] < start_eid}
-        )
-        del_map = {
-            r["edge_id"]: (r["src"], r["dst"], r["rel"])
-            for r in self._find("edges", persisted_del_ids).to_pylist()
-        }
-
-        # -- sequential replay (first violation wins) ------------------
-        adds: list[tuple] = []
-        dels: set[int] = set()
-        sim_keys: dict[tuple, int] = {}
-        del_keys: set[tuple] = set()
-        for op in ops:
-            if op[0] == "add":
-                _, eid, src, dst, rel, weight, directed = op
-                for i in (src, dst, rel):
-                    if i not in found_docs:
-                        raise ValueError(f"no such doc: {i}")
+            def _add(src: int, dst: int, rel: int, weight: Optional[float],
+                     directed: bool) -> int:
                 key = (src, dst, rel)
-                if key in sim_keys or (
-                    key not in del_keys and key in persisted_keys
-                ):
+                if key in batch_keys:
                     raise RuntimeError(
                         f"edge ({src}, {dst}, {rel}) already exists"
                     )
-                del_keys.discard(key)
-                sim_keys[key] = eid
-                adds.append((eid, src, dst, rel, weight, directed))
-            else:
-                edge_id = op[1]
-                rolled_back = next(
-                    (k for k, e in sim_keys.items() if e == edge_id), None
-                )
-                if rolled_back is not None:
-                    del sim_keys[rolled_back]
-                    adds[:] = [a for a in adds if a[0] != edge_id]
-                    continue
-                row_key = del_map.get(edge_id)
-                if row_key is None or edge_id in dels:
-                    raise ValueError(f"no such edge: [{edge_id}]")
-                dels.add(edge_id)
-                del_keys.add(row_key)
+                if eager_validation:
+                    for i in (src, dst, rel):
+                        if i not in eager_docs_ok:
+                            if self._point_read(i) is None:
+                                raise ValueError(f"no such doc: {i}")
+                            eager_docs_ok.add(i)
+                    if key not in eager_del_keys and self._stored_edge_keys([key]):
+                        raise RuntimeError(
+                            f"edge ({src}, {dst}, {rel}) already exists"
+                        )
+                    eager_del_keys.discard(key)
+                eid = counter[0]
+                counter[0] += 1
+                batch_keys[key] = eid
+                ops.append(("add", eid, src, dst, rel, weight, directed))
+                return eid
 
-        if not adds and not dels:
-            return
-        added = self.wh.arrow_table("edges", adds)
+            def _del(edge_id: int) -> None:
+                # rolling back an in-bulk add frees its key for later adds
+                # in THIS bulk; the op itself still replays (a rolled-back
+                # add must still fail validation the way sequential
+                # execution would have)
+                if eager_validation:
+                    if edge_id >= start_eid:
+                        if edge_id not in batch_keys.values():
+                            raise ValueError(f"no such edge: [{edge_id}]")
+                    else:
+                        if edge_id in eager_dels:
+                            raise ValueError(f"no such edge: [{edge_id}]")
+                        rows = self._find("edges", [edge_id]).to_pylist()
+                        if not rows:
+                            raise ValueError(f"no such edge: [{edge_id}]")
+                        eager_dels.add(edge_id)
+                        eager_del_keys.add(
+                            (rows[0]["src"], rows[0]["dst"], rows[0]["rel"])
+                        )
+                for key, eid in list(batch_keys.items()):
+                    if eid == edge_id:
+                        del batch_keys[key]
+                        break
+                ops.append(("del", edge_id))
 
-        def patch(post: pa.Table) -> pa.Table:
+            class GraphUpdater:
+                def add_edge(self, doc1: int, doc2: int, relationship: int,
+                             weight: Optional[float] = None) -> int:
+                    return _add(doc1, doc2, relationship, weight, False)
+
+                def add_directed_edge(self, from_doc: int, to_doc: int,
+                                      relationship: int,
+                                      weight: Optional[float] = None) -> int:
+                    return _add(from_doc, to_doc, relationship, weight, True)
+
+                def del_edge(self, edge_id: int) -> None:
+                    _del(edge_id)
+
+            yield GraphUpdater()
+
+            if not ops:
+                return
+
+            # -- batched prefetch: three driver reads -----------------------
+            need_keys = sorted(
+                {(op[2], op[3], op[4]) for op in ops if op[0] == "add"}
+            )
+            need_docs = sorted(
+                {i for op in ops if op[0] == "add" for i in op[2:5]}
+            )
+            persisted_keys = self._stored_edge_keys(need_keys)
+            found_docs = set(self._find("docs", need_docs).column("id").to_pylist())
+            persisted_del_ids = sorted(
+                {op[1] for op in ops if op[0] == "del" and op[1] < start_eid}
+            )
+            del_map = {
+                r["edge_id"]: (r["src"], r["dst"], r["rel"])
+                for r in self._find("edges", persisted_del_ids).to_pylist()
+            }
+
+            # -- sequential replay (first violation wins) ------------------
+            adds: list[tuple] = []
+            dels: set[int] = set()
+            sim_keys: dict[tuple, int] = {}
+            del_keys: set[tuple] = set()
+            for op in ops:
+                if op[0] == "add":
+                    _, eid, src, dst, rel, weight, directed = op
+                    for i in (src, dst, rel):
+                        if i not in found_docs:
+                            raise ValueError(f"no such doc: {i}")
+                    key = (src, dst, rel)
+                    if key in sim_keys or (
+                        key not in del_keys and key in persisted_keys
+                    ):
+                        raise RuntimeError(
+                            f"edge ({src}, {dst}, {rel}) already exists"
+                        )
+                    del_keys.discard(key)
+                    sim_keys[key] = eid
+                    adds.append((eid, src, dst, rel, weight, directed))
+                else:
+                    edge_id = op[1]
+                    rolled_back = next(
+                        (k for k, e in sim_keys.items() if e == edge_id), None
+                    )
+                    if rolled_back is not None:
+                        del sim_keys[rolled_back]
+                        adds[:] = [a for a in adds if a[0] != edge_id]
+                        continue
+                    row_key = del_map.get(edge_id)
+                    if row_key is None or edge_id in dels:
+                        raise ValueError(f"no such edge: [{edge_id}]")
+                    dels.add(edge_id)
+                    del_keys.add(row_key)
+
+            if not adds and not dels:
+                return
+            added = self.wh.arrow_table("edges", adds)
+
+            def patch(post: pa.Table) -> pa.Table:
+                if dels:
+                    post = post.filter(pc.invert(pc.is_in(
+                        post.column("edge_id"),
+                        value_set=pa.array(list(dels), pa.int64()),
+                    )))
+                return pa.concat_tables([post, added])
+
+            def write():
+                keys = [a[0] for a in adds] + list(dels)
+                return self._rewrite("edges", keys, patch)
+
             if dels:
-                post = post.filter(pc.invert(pc.is_in(
-                    post.column("edge_id"),
-                    value_set=pa.array(list(dels), pa.int64()),
-                )))
-            return pa.concat_tables([post, added])
-
-        def write():
-            keys = [a[0] for a in adds] + list(dels)
-            return self._rewrite("edges", keys, patch)
-
-        if dels:
-            write()  # a delete may lower max(edge_id): the stamp drops it
-        else:
-            self._commit("edges", write, next_id=max(a[0] for a in adds) + 1)
+                write()  # a delete may lower max(edge_id): the stamp drops it
+            else:
+                self._commit("edges", write, next_id=max(a[0] for a in adds) + 1)
 
     def add_edge(self, doc1: int, doc2: int, relationship: int,
                  weight: Optional[float] = None) -> int:
@@ -1175,58 +1165,60 @@ class KnowledgeBase:
         KeyError; an Exception-subclass default is raised; any other
         default is returned. The table is read and, when the block
         changed it, rewritten in the driver: a read-only block commits
-        nothing."""
-        state = self._read_kv("keyval")
-        before = _encode_kv(state)
+        nothing. The keyval writer lock is held from the read to the
+        commit, so no other writer's key is lost."""
+        with self.wh.write_lock("keyval"):
+            state = self._read_kv("keyval")
+            before = _encode_kv(state)
 
-        class KV:
-            def get(self, key: str, default: Any = _MISSING) -> Any:
-                if key in state:
-                    return state[key]
-                if default is _MISSING:
-                    raise KeyError(key)
-                if isinstance(default, type) and issubclass(default, Exception):
-                    raise default(key)
-                if isinstance(default, Exception):
-                    raise default
-                return default
+            class KV:
+                def get(self, key: str, default: Any = _MISSING) -> Any:
+                    if key in state:
+                        return state[key]
+                    if default is _MISSING:
+                        raise KeyError(key)
+                    if isinstance(default, type) and issubclass(default, Exception):
+                        raise default(key)
+                    if isinstance(default, Exception):
+                        raise default
+                    return default
 
-            def set(self, key: str, val: Any) -> None:
-                _encode_val(val)  # validate type early
-                state[key] = val
+                def set(self, key: str, val: Any) -> None:
+                    _encode_val(val)  # validate type early
+                    state[key] = val
 
-            def remove(self, key: str) -> None:
-                if key not in state:
-                    raise KeyError(key)
-                del state[key]
+                def remove(self, key: str) -> None:
+                    if key not in state:
+                        raise KeyError(key)
+                    del state[key]
 
-            def has(self, key: str) -> bool:
-                return key in state
+                def has(self, key: str) -> bool:
+                    return key in state
 
-            def count(self) -> int:
-                return len(state)
+                def count(self) -> int:
+                    return len(state)
 
-            def items(self) -> List[tuple]:
-                return sorted(state.items())
+                def items(self) -> List[tuple]:
+                    return sorted(state.items())
 
-            __contains__ = has
-            __len__ = count
+                __contains__ = has
+                __len__ = count
 
-            def __getitem__(self, key: str) -> Any:
-                return self.get(key)
+                def __getitem__(self, key: str) -> Any:
+                    return self.get(key)
 
-            def __setitem__(self, key: str, val: Any) -> None:
-                self.set(key, val)
+                def __setitem__(self, key: str, val: Any) -> None:
+                    self.set(key, val)
 
-            def __delitem__(self, key: str) -> None:
-                self.remove(key)
+                def __delitem__(self, key: str) -> None:
+                    self.remove(key)
 
-            def __iter__(self) -> Iterator[str]:
-                return iter(sorted(state))
+                def __iter__(self) -> Iterator[str]:
+                    return iter(sorted(state))
 
-        yield KV()
-        if _encode_kv(state) != before:
-            self._write_kv("keyval", state)
+            yield KV()
+            if _encode_kv(state) != before:
+                self._write_kv("keyval", state)
 
 
 def _kb_register_views(self: KnowledgeBase, prefix: str = "kb") -> None:

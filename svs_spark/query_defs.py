@@ -3694,7 +3694,7 @@ def _kb_tmp(name: str, sf_dir: str) -> str:
 
     # pid in the name: two gate processes running the same KB query
     # concurrently (drive_entry next to pytest) must not share a
-    # warehouse — the bucket-staging rename races otherwise
+    # warehouse — each would drop and rebuild the other's tables
     h = hashlib.md5(f"{name}:{sf_dir}".encode()).hexdigest()[:10]
     return os.path.join(
         tempfile.gettempdir(), f"svs_kbq_{name}_{h}_{os.getpid()}"

@@ -2,48 +2,46 @@
 (parity with "one SQLite file = one KB", reference ``src/svs/kb.py:66-113``),
 holding one parquet table per svs table (docs, edges, keyval, _meta).
 
-Mutation model: read-modify-write with an atomic directory swap —
-parquet is immutable, so each committed mutation writes a fresh table
-directory and renames it into place (the moral equivalent of svs's
-single-transaction bulk writes, ``kb.py:794-829``).
+Commit model: a table directory holds immutable data files and one
+``_manifest.json`` that names the live ones, with a version counter and
+the table's bucketing: the lakehouse commit (Delta Lake, VLDB 2020).
+Every commit, under the table's writer lock, writes its new files under
+names never used before, then ``os.replace``s a new manifest over the
+old one, and only then unlinks the files it replaced. That one rename
+is the commit: a reader, or a writer killed at any point, sees all of a
+commit or none of it, however many buckets it touches (svs's
+single-transaction bulk writes, ``kb.py:794-829``). A whole-table write
+also unlinks every data file its manifest does not list, which sweeps
+the files of a writer that died before its rename.
 
 Point-update scale path: the KnowledgeBase's ``docs`` and ``edges``
-are *bucketed* from creation — laid out as ``<table>/_pb=<k>/``
-partitions keyed by ``pmod(key, n_buckets)``, with the key and count
-in ``_buckets.json``. A point mutation (update one doc's meta/vector,
-delete a handful of ids) then reads and rewrites ONLY the touched
-buckets — 1/n of the table — instead of a full table rewrite: the
-dependency-free analogue of a lakehouse MERGE rewriting only the files
-that hold matched rows. A bucketed table has a fixed schema, so even
-an empty one (no data file to infer a schema from) reads back.
+are *bucketed* from creation: their files lie in ``<table>/_pb=<k>/``
+directories keyed by ``pmod(key, n_buckets)``, with the key and count in
+the manifest. A point mutation (update one doc's meta/vector, delete a
+handful of ids) then reads and replaces ONLY the touched buckets' files
+(1/n of the table) instead of the whole table: the dependency-free
+analogue of a lakehouse MERGE rewriting only the files that hold
+matched rows. A bucketed table has a fixed schema, so even an empty one
+(no data file to infer a schema from) reads back.
 
-Driver/Spark commit split: ``write``, ``write_bucketed`` and
-``overwrite_buckets`` take either a Spark DataFrame or a
-``pyarrow.Table``. A DataFrame's staging files are written by a Spark
-job; a Table's (one file per touched bucket, under a name never used
-before) are written from the driver by ``pyarrow.parquet`` — no job.
-Both go through the same writer lock, staging-directory rename swap
-and returned stamp, and both produce the layout Spark reads back.
-``read_arrow`` is the matching driver read, cast to the table's fixed
-schema: the bucket files that can hold a set of keys, or every
-``_pb=<k>`` bucket when no keys are given, optionally projected to the
-columns a predicate tests. Each ``Warehouse`` decodes a data file
-once: every read still lists the directories it reads, but a listed
-file whose cached entry holds its ``(inode, size, mtime)`` is served
-without opening it, and ``map_files`` keeps what a caller derives from
-a file on the same entry (``KnowledgeBase.retrieve``'s vectors). Data
-files are never rewritten in place and no name is reused, so a path
-names one content for good; the stat check covers files an older
-version wrote under its one fixed name.
+Driver/Spark split: ``write``, ``write_bucketed``, ``overwrite_buckets``
+and ``append`` take either a Spark DataFrame or a ``pyarrow.Table``. A
+DataFrame's files are written by a Spark job into a hidden staging
+directory and renamed in; a Table's (one file per touched bucket) are
+written from the driver by ``pyarrow.parquet``, with no job. Spark reads
+get the manifest's file list. ``read_arrow`` is the matching driver
+read, cast to the table's fixed schema: the listed files of the buckets
+that can hold a set of keys, or every listed file, optionally projected
+to the columns a predicate tests. Each ``Warehouse`` decodes a data
+file once: listed files never change and no name is reused, so a decode
+kept under the file's path stays valid while the manifest lists it, and
+``map_files`` keeps what a caller derives from a file on the same entry
+(``KnowledgeBase.retrieve``'s vectors). Every KnowledgeBase call that
+takes Python values takes the Arrow pair; DataFrame inputs, compaction,
+export and the SQL views stay on Spark.
 
-A swap renames the table directory (or a ``_pb=<k>`` bucket) to
-``.old`` before renaming its new contents in; readers that do not hold
-the writer lock wait for such a swap to land rather than miss the
-table or bucket (``_listing``), and the first writer-lock acquire (or
-an open) after a writer that died between the renames puts the last
-committed version back (``_repair``). Every KnowledgeBase call that
-takes Python values takes the Arrow pair; DataFrame inputs,
-compaction, export and the SQL views stay on Spark.
+A table directory of the earlier layout (no manifest; ``_buckets.json``
+and bucket swaps through ``.old`` renames) is adopted once, at open.
 
 Remote open parity (``src/svs/util.py:97-187``): ``http(s)://`` KBs are
 downloaded once into a local cache keyed by URL sha256; ``file://`` and
@@ -62,7 +60,7 @@ import time
 import urllib.request
 import uuid
 import warnings
-from contextlib import contextmanager
+from contextlib import contextmanager, suppress
 
 import numpy as np
 import pyarrow as pa
@@ -72,71 +70,52 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import IntegerType, StructField, StructType
 
 REMOTE_CACHE_DIR = ".remote_cache"
+MANIFEST_FILE = "_manifest.json"
+# the earlier layout's bucket key and count, read only to adopt a table
 BUCKET_META_FILE = "_buckets.json"
-# how long a reader waits for a bucket swap it caught mid-way to land
-SWAP_WAIT_S = 5.0
 WRITER_LOCK_SUFFIX = ".writer.lock"
 
 
 class _Decoded:
-    """One data file as read: its ``(st_ino, st_size, st_mtime_ns)``, its
-    rows as a pyarrow Table in the table's fixed schema, and what
-    :meth:`Warehouse.map_files` derived from them, by function."""
+    """One data file as read: its rows as a pyarrow Table in the table's
+    fixed schema, and what :meth:`Warehouse.map_files` derived from
+    them, by function."""
 
-    __slots__ = ("key", "table", "memo")
+    __slots__ = ("table", "memo")
 
-    def __init__(self, key: tuple, table: pa.Table):
-        self.key, self.table, self.memo = key, table, {}
+    def __init__(self, table: pa.Table):
+        self.table, self.memo = table, {}
 
 
-def _read_dir(d: str, schema: pa.Schema, cache: dict) -> list[_Decoded]:
-    """The parquet data files directly in directory ``d``, skipped the
-    way Spark skips them (``_``/``.``-prefixed names are markers and
-    checksums). A file is served from ``cache[d]`` when its entry still
-    holds the file's ``(st_ino, st_size, st_mtime_ns)``, and is else
-    read by pyarrow with every column of ``schema``, cast to it, and
-    entered; the listing then replaces ``cache[d]``, which drops the
-    files no longer listed. FileNotFoundError when ``d`` moved away."""
-    known = cache.get(d, {})
-    fresh = {}
-    for f in sorted(os.listdir(d)):
-        if f.endswith(".parquet") and not f.startswith(("_", ".")):
-            path = os.path.join(d, f)
-            st = os.stat(path)
-            key = (st.st_ino, st.st_size, st.st_mtime_ns)
-            hit = known.get(f)
-            if hit is None or hit.key != key:
-                with pq.ParquetFile(path) as pf:
-                    hit = _Decoded(key, pf.read(columns=schema.names).cast(schema))
-            fresh[f] = hit
-    cache[d] = fresh
-    return list(fresh.values())
+def _decode(path: str, schema: pa.Schema) -> _Decoded:
+    """Data file ``path`` read by pyarrow with every column of
+    ``schema``, cast to it. FileNotFoundError when a commit unlinked it."""
+    with pq.ParquetFile(path) as pf:
+        return _Decoded(pf.read(columns=schema.names).cast(schema))
 
 
 def _part_file() -> str:
-    """A new data-file name for a driver-side (pyarrow) write: unique,
-    as Spark's writer makes its own, so no path ever names two
-    contents and a decoded file is never served for a later one."""
+    """A new data-file name: unique, as Spark's writer makes its own, so
+    no path ever names two contents and a decoded file is never served
+    for a later one."""
     return f"part-00000-{uuid.uuid4().hex}.parquet"
 
 
 def _is_bucket(d: str) -> bool:
-    """Whether directory entry ``d`` is a live ``_pb=<k>`` bucket."""
+    """Whether directory entry ``d`` is a ``_pb=<k>`` bucket."""
     return d.startswith("_pb=") and d[4:].isdigit()
 
 
-def _holds_old(path: str) -> bool:
-    """Whether directory ``path`` holds an ``.old`` entry (False for a
-    file, or a directory a swap moved away since it was listed)."""
-    try:
-        return any(e.endswith(".old") for e in os.listdir(path))
-    except OSError:
-        return False
+def _is_data(f: str) -> bool:
+    """Whether file ``f`` is a data file; ``_``/``.``-prefixed names are
+    markers and checksums, as Spark skips them."""
+    return f.endswith(".parquet") and not f.startswith(("_", "."))
 
 
 def _settle_old(live: str) -> None:
-    """Rename ``<live>.old`` back to ``live`` when ``live`` is missing,
-    or delete it when ``live`` is there (see ``Warehouse._repair``)."""
+    """The earlier layout's swap repair: rename ``<live>.old`` back to
+    ``live`` when ``live`` is missing (its writer died between a swap's
+    two renames), or delete it when ``live`` is there."""
     old = live + ".old"
     if os.path.exists(old):
         if os.path.exists(live):
@@ -145,43 +124,55 @@ def _settle_old(live: str) -> None:
             os.rename(old, live)
 
 
-def _stage(staging: str, data, key_col: str | None = None,
-           n_buckets: int = 0) -> None:
-    """Write ``data`` into the fresh directory ``staging``, partitioned
-    as ``_pb=pmod(key_col, n_buckets)`` when ``key_col`` is given. A
-    DataFrame is written by one Spark job; a pyarrow Table from the
-    driver, one file per directory — per bucket when partitioned. The
-    partition column lives in the directory name only, as Spark's
-    ``partitionBy`` leaves it."""
-    if os.path.exists(staging):
-        shutil.rmtree(staging)
+def _write_files(d: str, data, bucketing: dict | None) -> dict:
+    """Write ``data`` into table directory ``d`` under fresh names,
+    straight into its ``_pb=<k>`` directories when ``bucketing`` is
+    given (the bucket column lives in the directory name only, as
+    Spark's ``partitionBy`` leaves it). Returns each new file's path
+    relative to ``d``, mapped to the pyarrow Table written there, or to
+    None for a file Spark wrote. A pyarrow Table is written from the
+    driver, one file per directory; a DataFrame by one Spark job into a
+    hidden ``.staging-<uuid>`` directory whose files are then renamed
+    in."""
     if isinstance(data, pa.Table):
-        os.makedirs(staging)
-        if key_col is None:
-            pq.write_table(data, os.path.join(staging, _part_file()))
-            return
-        # numpy's mod takes the divisor's sign: pmod for negative ids too
-        pb = np.mod(data.column(key_col).to_numpy(), n_buckets)
-        for b in np.unique(pb).tolist():
-            part = os.path.join(staging, f"_pb={b}")
-            os.makedirs(part)
-            pq.write_table(
-                data.take(np.flatnonzero(pb == b)),
-                os.path.join(part, _part_file()),
+        parts = {"": data}
+        if bucketing is not None:
+            # numpy's mod takes the divisor's sign: pmod for negative ids too
+            pb = np.mod(data.column(bucketing["key_col"]).to_numpy(),
+                        bucketing["n_buckets"])
+            parts = {f"_pb={b}": data.take(np.flatnonzero(pb == b))
+                     for b in np.unique(pb).tolist()}
+        written = {}
+        for sub, rows in parts.items():
+            os.makedirs(os.path.join(d, sub), exist_ok=True)
+            rel = os.path.join(sub, _part_file())
+            pq.write_table(rows, os.path.join(d, rel))
+            written[rel] = rows
+        return written
+    staging = os.path.join(d, f".staging-{uuid.uuid4().hex}")
+    try:
+        if bucketing is None:
+            data.write.parquet(staging)
+        else:
+            (
+                data.withColumn("_pb", F.pmod(
+                    F.col(bucketing["key_col"]), F.lit(bucketing["n_buckets"])
+                ).cast("int"))
+                .repartition(F.col("_pb"))
+                .write.partitionBy("_pb")
+                .parquet(staging)
             )
-        return
-    if key_col is None:
-        data.write.mode("overwrite").parquet(staging)
-        return
-    (
-        data.withColumn(
-            "_pb", F.pmod(F.col(key_col), F.lit(n_buckets)).cast("int")
-        )
-        .repartition(F.col("_pb"))
-        .write.mode("overwrite")
-        .partitionBy("_pb")
-        .parquet(staging)
-    )
+        written = {}
+        for top, _dirs, files in os.walk(staging):
+            sub = "" if top == staging else os.path.relpath(top, staging)
+            for f in filter(_is_data, files):
+                os.makedirs(os.path.join(d, sub), exist_ok=True)
+                rel = os.path.join(sub, _part_file())
+                os.rename(os.path.join(top, f), os.path.join(d, rel))
+                written[rel] = None
+        return written
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)
 
 
 def _start_lock_heartbeat(lp: str, token: bytes, stale_after_s: float):
@@ -342,17 +333,18 @@ def resolve_location(path_or_url: str, cache_root: str = ".") -> str:
 
 
 class Warehouse:
-    """Directory of parquet tables with atomic-swap rewrites.
+    """Directory of parquet tables, each a set of immutable data files
+    listed by its manifest and committed by one ``os.replace``.
 
     ``schemas`` maps a table name to its fixed schema: reads of those
     tables skip the parquet footer-inference job. Read handles are
     cached per table under its :meth:`stamp`, so a handle never outlives
-    the table version whose files it lists. Driver reads decode each
-    data file once: the decoded files are cached by path (no path is
-    ever given to a second file, see :func:`_part_file`), checked
-    against one ``os.stat`` per listed file, and dropped when a listing
-    no longer holds them, so the cache holds at most the live files
-    read."""
+    the version whose files it lists. Driver reads decode each data file
+    once: the decoded files are cached by path (a listed file never
+    changes, and no path is ever given to a second file, see
+    :func:`_part_file`), a commit enters the pyarrow Tables it wrote,
+    and a file leaves the cache when a manifest no longer lists it, so
+    the cache holds at most the live files."""
 
     def __init__(
         self,
@@ -365,11 +357,11 @@ class Warehouse:
         self.schemas = schemas or {}
         # name -> (stamp, scan with _pb, scan without _pb)
         self._handles: dict[str, tuple] = {}
-        # name -> data directory -> file name -> _Decoded
-        self._decoded: dict[str, dict[str, dict[str, _Decoded]]] = {}
+        # name -> data-file path relative to the table -> _Decoded
+        self._decoded: dict[str, dict[str, _Decoded]] = {}
         self._held_locks: set[str] = set()
         os.makedirs(root, exist_ok=True)
-        self.recover()
+        self._adopt()
 
     # -- cross-process writer guard ---------------------------------------
 
@@ -398,110 +390,198 @@ class Warehouse:
         overwrite keeps its lock alive. Dead-holder locks are broken
         with a warning via single-winner atomic rename
         (:func:`_break_stale_lock`); safe because every commit below
-        is staging+atomic-rename, so the table itself is never left
-        mid-write. A writer that died between a swap's two renames is
-        finished by the first acquire after it (:meth:`_repair`)."""
-        first = self.table_path(name) not in self._held_locks
+        is one ``os.replace`` of the manifest, so the table itself is
+        never left mid-write."""
         with path_writer_lock(
             self.table_path(name), timeout_s, stale_after_s,
             held=self._held_locks,
         ):
-            if first:
-                self._repair(name)
             yield
 
-    def _repair(self, name: str) -> None:
-        """Finish what a writer that died between a swap's two renames
-        left of table ``name``; the caller holds its writer lock, so no
-        swap is in flight. An ``X.old`` (the table's directory, or a
-        ``_pb=<k>`` bucket in it) without its live twin ``X`` is the
-        only copy of the last committed version: rename it back. One
-        beside its twin is a version already replaced: delete it."""
-        path = self.table_path(name)
-        _settle_old(path)
-        if os.path.isdir(path):
-            for d in os.listdir(path):
-                if d.endswith(".old") and _is_bucket(d[:-4]):
-                    _settle_old(os.path.join(path, d[:-4]))
-
-    def recover(self) -> None:
-        """Repair every table a dead writer left between a swap's two
-        renames (:meth:`_repair`, run by the first acquire of a writer
-        lock), locking only a table where a listing shows an ``.old``:
-        runs when the warehouse is opened, so its readers find every
-        row again."""
-        for d in os.listdir(self.root):
+    def _adopt(self) -> None:
+        """Give each table directory of the earlier layout (no manifest)
+        its manifest, under the table's writer lock: first that layout's
+        swap repair (:func:`_settle_old` on the table and on each
+        ``_pb=<k>`` bucket) and the removal of its staging directories,
+        then a manifest listing the data files found, with the bucketing
+        of its ``_buckets.json``. Runs when the warehouse is opened."""
+        for d in sorted(os.listdir(self.root)):
             name = d[:-4] if d.endswith(".old") else d
-            if name != d or _holds_old(os.path.join(self.root, d)):
-                with self.write_lock(name):
-                    pass
+            if (d.startswith(".") or name.endswith((".staging", "_staging"))
+                    or not os.path.isdir(os.path.join(self.root, d))
+                    or self.exists(name)):
+                continue
+            with self.write_lock(name):
+                if self.exists(name):
+                    continue
+                path = self.table_path(name)
+                _settle_old(path)
+                for staging in (".staging", ".bucket_staging"):
+                    shutil.rmtree(path + staging, ignore_errors=True)
+                for b in os.listdir(path):
+                    if b.endswith(".old") and _is_bucket(b[:-4]):
+                        _settle_old(os.path.join(path, b[:-4]))
+                bucketing, files = None, []
+                for e in sorted(os.listdir(path)):
+                    if e == BUCKET_META_FILE:
+                        with open(os.path.join(path, e)) as f:
+                            bucketing = json.load(f)
+                    elif _is_bucket(e):
+                        files += [f"{e}/{f}" for f in
+                                  os.listdir(os.path.join(path, e)) if _is_data(f)]
+                    elif _is_data(e):
+                        files.append(e)
+                self._publish(path, None, bucketing, files)
 
     def table_path(self, name: str) -> str:
         return os.path.join(self.root, name)
 
-    def exists(self, name: str) -> bool:
-        return self.stamp(name) is not None
-
-    def stamp(self, name: str) -> tuple[int, int] | None:
-        """Version stamp of table ``name``: the ``(inode, mtime_ns)`` of
-        its directory. A whole-table swap gives a new directory and a
-        bucket swap renames entries inside it; either way every commit
-        below ends in :meth:`_advance`, which sets the mtime past the
-        stamp the commit replaced, so the stamp moves even when two
-        driver-side commits land within one tick of the file clock.
-        None when the table does not exist."""
+    def _manifest(self, name: str) -> dict | None:
+        """Table ``name``'s current manifest; None when there is no such
+        table."""
         try:
-            st = os.stat(self.table_path(name))
-        except OSError:
-            self._await_table(name)
+            with open(os.path.join(self.table_path(name), MANIFEST_FILE)) as f:
+                return json.load(f)
+        except FileNotFoundError:
+            return None
+
+    def _live(self, name: str) -> dict:
+        """Table ``name``'s current manifest; FileNotFoundError when there
+        is no such table."""
+        m = self._manifest(name)
+        if m is None:
+            raise FileNotFoundError(f"no table {name} in {self.root}")
+        return m
+
+    def exists(self, name: str) -> bool:
+        return self._manifest(name) is not None
+
+    def stamp(self, name: str) -> tuple[str, int] | None:
+        """Version stamp of table ``name``: the id its manifest got when
+        the table was created and the manifest's version counter. Every
+        commit replaces the manifest with the next version, so the stamp
+        moves on each, and the id keeps a re-created table's versions
+        apart from the old one's. None when the table does not exist."""
+        m = self._manifest(name)
+        return None if m is None else (m["id"], m["version"])
+
+    @staticmethod
+    def _publish(path: str, prev: dict | None, bucketing: dict | None,
+                 files) -> tuple[str, int]:
+        """Make the version of the table at ``path`` that lists ``files``
+        (paths relative to ``path``) with ``bucketing`` current: write
+        its manifest under a hidden temporary name and ``os.replace`` it
+        over ``prev``, the manifest it follows (None for a new table).
+        That rename is the commit. Returns the new stamp."""
+        m = {
+            "id": uuid.uuid4().hex if prev is None else prev["id"],
+            "version": 1 if prev is None else prev["version"] + 1,
+            "bucketing": bucketing,
+            "files": sorted(files),
+        }
+        tmp = os.path.join(path, f".manifest-{uuid.uuid4().hex}")
+        with open(tmp, "w") as f:
+            json.dump(m, f)
+        os.replace(tmp, os.path.join(path, MANIFEST_FILE))
+        return m["id"], m["version"]
+
+    def _unlink(self, name: str, files) -> None:
+        """Unlink ``files`` (paths relative to table ``name``) that no
+        manifest lists any more, with their cache entries and the bucket
+        directories they leave empty."""
+        path = self.table_path(name)
+        cache = self._decoded.get(name, {})
+        for f in files:
+            cache.pop(f, None)
+            with suppress(FileNotFoundError):
+                os.unlink(os.path.join(path, f))
+        for sub in {os.path.dirname(f) for f in files} - {""}:
+            with suppress(OSError):  # still holds a file
+                os.rmdir(os.path.join(path, sub))
+
+    def _cache(self, name: str, written: dict) -> None:
+        """Enter the pyarrow Tables a commit wrote as the decoded files
+        under their paths: the committing instance never reads back what
+        it has just written."""
+        if name not in self.schemas:
+            return
+        schema = self.arrow_schema(name)
+        cache = self._decoded.setdefault(name, {})
+        for rel, rows in written.items():
+            if rows is not None:
+                cache[rel] = _Decoded(rows.select(schema.names).cast(schema))
+
+    def _replace(self, name: str, data, bucketing: dict | None):
+        """Commit ``data`` as the whole of table ``name`` (the caller
+        holds its writer lock), then unlink every other data file in the
+        table directory: the replaced version's, and those of writers
+        that died before their ``os.replace``. A new table is written
+        into a hidden directory and renamed into place with its first
+        manifest, so a table directory without a manifest is always one
+        of the earlier layout."""
+        path = self.table_path(name)
+        prev = self._manifest(name)
+        if prev is None:
+            tmp = os.path.join(self.root, f".{name}-{uuid.uuid4().hex}")
+            os.makedirs(tmp)
             try:
-                st = os.stat(self.table_path(name))
-            except OSError:
-                return None
-        return st.st_ino, st.st_mtime_ns
+                written = _write_files(tmp, data, bucketing)
+                stamp = self._publish(tmp, None, bucketing, written)
+                os.rename(tmp, path)
+            except BaseException:
+                shutil.rmtree(tmp, ignore_errors=True)
+                raise
+        else:
+            written = _write_files(path, data, bucketing)
+            stamp = self._publish(path, prev, bucketing, written)
+            stale = []
+            for e in os.listdir(path):
+                if _is_bucket(e):
+                    stale += [f"{e}/{f}" for f in os.listdir(os.path.join(path, e))]
+                elif os.path.isdir(os.path.join(path, e)):
+                    shutil.rmtree(os.path.join(path, e))  # dead staging
+                elif e != MANIFEST_FILE:
+                    stale.append(e)
+            self._decoded.pop(name, None)
+            self._unlink(name, [f for f in stale if f not in written])
+        self._cache(name, written)
+        return stamp
 
-    def _advance(self, name: str, before: tuple | None) -> tuple[int, int]:
-        """End a commit of ``name``: set its directory mtime to one
-        nanosecond past both its current mtime and the replaced
-        version's, and return the new stamp. Commits are serialized by
-        the writer lock, so successive versions get strictly increasing
-        mtimes and no version's stamp equals an earlier one's."""
+    def _add(self, name: str, data, replaced: list[str]):
+        """Commit the current version of table ``name`` with ``data``'s
+        files added and the ``replaced`` ones taken out (the caller
+        holds its writer lock), then unlink those."""
         path = self.table_path(name)
-        st = os.stat(path)
-        floor = before[1] if before is not None else 0
-        os.utime(path, ns=(st.st_atime_ns, max(st.st_mtime_ns, floor) + 1))
-        return self.stamp(name)
-
-    def _swap(self, name: str, staging: str) -> tuple[int, int]:
-        """Rename the staged directory into place of table ``name``."""
-        path = self.table_path(name)
-        old = path + ".old"
-        before = self.stamp(name)
-        if os.path.exists(path):
-            os.rename(path, old)
-        os.rename(staging, path)
-        if os.path.exists(old):
-            shutil.rmtree(old)
-        return self._advance(name, before)
+        m = self._live(name)
+        written = _write_files(path, data, m["bucketing"])
+        kept = set(m["files"]).difference(replaced)
+        stamp = self._publish(path, m, m["bucketing"], [*kept, *written])
+        self._unlink(name, replaced)
+        self._cache(name, written)
+        return stamp
 
     def _scan(self, name: str) -> tuple:
         """(stamp, scan with _pb, scan without _pb) of the current table
-        version. The stamp is taken before the listing, so a commit that
-        races the read leaves a handle whose stamp is already stale."""
-        stamp = self.stamp(name)
+        version: Spark reads the files its manifest lists, and an empty
+        table reads as an empty frame in the fixed schema."""
+        m = self._live(name)
+        stamp = (m["id"], m["version"])
         hit = self._handles.get(name)
         if hit is not None and hit[0] == stamp:
             return hit
-        reader = self.spark.read
+        path = self.table_path(name)
         schema = self.schemas.get(name)
-        if schema is not None:
-            if self.bucket_meta(name) is not None:
-                self._live_buckets(name)  # Spark lists after any swap lands
-                schema = StructType(
-                    schema.fields + [StructField("_pb", IntegerType())]
-                )
-            reader = reader.schema(schema)
-        raw = reader.parquet(self.table_path(name))
+        if schema is not None and m["bucketing"] is not None:
+            schema = StructType(
+                schema.fields + [StructField("_pb", IntegerType())]
+            )
+        if m["files"]:
+            reader = self.spark.read.option("basePath", path)
+            if schema is not None:
+                reader = reader.schema(schema)
+            raw = reader.parquet(*(os.path.join(path, f) for f in m["files"]))
+        else:
+            raw = self.spark.createDataFrame([], schema or StructType())
         view = raw.drop("_pb") if "_pb" in raw.columns else raw
         self._handles[name] = (stamp, raw, view)
         return self._handles[name]
@@ -523,109 +603,53 @@ class Warehouse:
             schema=schema,
         )
 
-    def _listing(self, name: str, parent: str, swapped) -> list[str]:
-        """``os.listdir(parent)`` once no swap in it is caught between
-        its two renames. A swap renames an entry ``X`` to ``X.old``
-        before renaming the new ``X`` in (``_swap`` a whole table in the
-        root, ``overwrite_buckets`` a ``_pb=<k>`` bucket in its table),
-        so a listing that holds ``X.old`` without ``X``, for an ``X``
-        that ``swapped`` selects, would miss ``X``: list again until the
-        swap lands, for at most ``SWAP_WAIT_S``, then raise TimeoutError
-        naming the table (its writer died between the renames; the next
-        writer or open repairs it, see :meth:`_repair`)."""
-        deadline = time.monotonic() + SWAP_WAIT_S
-        while True:
-            names = os.listdir(parent)
-            present = set(names)
-            gone = [
-                d[:-4] for d in names
-                if d.endswith(".old") and swapped(d[:-4])
-                and d[:-4] not in present
-            ]
-            if not gone:
-                return names
-            if time.monotonic() >= deadline:
-                raise TimeoutError(
-                    f"table {name}: a swap left {parent} without "
-                    f"{gone[0]} for {SWAP_WAIT_S:.0f}s"
-                )
-            time.sleep(0.01)
-
-    def _await_table(self, name: str) -> None:
-        """Wait for a whole-table swap of ``name`` caught between its
-        two renames to land (:meth:`_listing` of the root)."""
-        self._listing(name, self.root, lambda d: d == name)
-
-    def _live_buckets(self, name: str) -> list[str]:
-        """Names of bucketed table ``name``'s ``_pb=<k>`` directories,
-        once no bucket swap (or swap of the whole table) is caught
-        between its two renames (:meth:`_listing`)."""
-        path = self.table_path(name)
-        try:
-            names = self._listing(name, path, _is_bucket)
-        except FileNotFoundError:
-            self._await_table(name)
-            names = self._listing(name, path, _is_bucket)
-        return sorted(d for d in names if _is_bucket(d))
-
-    def _arrow_dirs(self, name: str, keys, cache: dict) -> list[str]:
-        """Directories whose files can hold ``keys`` (values of the
-        bucket key); every bucket directory when ``keys`` is None. A
-        plain table is its one directory. The decoded files of a bucket
-        that is no longer listed (a commit emptied it) leave ``cache``."""
-        path = self.table_path(name)
-        meta = self.bucket_meta(name)
-        if meta is None:
-            return [path]
-        live = [os.path.join(path, d) for d in self._live_buckets(name)]
-        for d in set(cache).difference(live):
-            cache.pop(d, None)
-        if keys is not None:
-            nb = meta["n_buckets"]
-            want = {
-                os.path.join(path, f"_pb={self.bucket_of(k, nb)}") for k in keys
-            }
-            live = [d for d in live if d in want]
-        return live
-
     def _arrow_schema(self, name: str, columns) -> pa.Schema:
         schema = self.arrow_schema(name)
         if columns is None:
             return schema
         return pa.schema([schema.field(c) for c in columns])
 
-    def _files(self, name: str, keys):
-        """The decoded data files of table ``name``: those of the buckets
-        that can hold ``keys`` (values of the bucket key), or of the
-        whole table when ``keys`` is None. A bucket is listed and read
-        whole before its files are yielded: one that a swap moves away
-        after the listing is read again from where the swap leaves it."""
+    def _files(self, name: str, keys) -> list[_Decoded]:
+        """The decoded data files that one version of table ``name``
+        lists: those of the buckets that can hold ``keys`` (values of the
+        bucket key), or every one when ``keys`` is None. The manifest is
+        read once; files it no longer lists leave the cache, and a listed
+        file not in it is decoded and entered. A file that a later commit
+        unlinked before it was opened makes the read start again from the
+        new manifest, keeping what it decoded meanwhile."""
         schema = self.arrow_schema(name)
+        path = self.table_path(name)
         cache = self._decoded.setdefault(name, {})
-        for d in self._arrow_dirs(name, keys, cache):
+        while True:
+            m = self._live(name)
+            for f in set(cache).difference(m["files"]):
+                cache.pop(f, None)
+            files = m["files"]
+            if keys is not None and m["bucketing"] is not None:
+                nb = m["bucketing"]["n_buckets"]
+                want = {f"_pb={self.bucket_of(k, nb)}" for k in keys}
+                files = [f for f in files if f.split("/")[0] in want]
+            parts = []
             try:
-                parts = _read_dir(d, schema, cache)
+                for f in files:
+                    hit = cache.get(f)
+                    if hit is None:
+                        hit = cache[f] = _decode(os.path.join(path, f), schema)
+                    parts.append(hit)
+                return parts
             except FileNotFoundError:
-                if d == self.table_path(name):  # a plain table swapped whole
-                    self._await_table(name)
-                    parts = _read_dir(d, schema, cache)
-                elif os.path.basename(d) in self._live_buckets(name):
-                    parts = _read_dir(d, schema, cache)
-                else:
-                    cache.pop(d, None)
-                    parts = []  # the swap emptied the bucket
-            yield from parts
+                if self._manifest(name) == m:
+                    raise  # a listed file is gone, and no commit took it
 
     def read_arrow(self, name: str, keys=None, columns=None) -> pa.Table:
         """The rows of table ``name``, read in the driver by pyarrow — no
         Spark job: the files of the buckets that can hold ``keys``
         (values of the bucket key), or of the whole table when ``keys``
-        is None. ``columns`` projects the read. Every file is cast to
-        the table's fixed schema, so files written by Spark and by
-        pyarrow read alike, and is decoded once: a listed file whose
-        cached entry still holds its inode, size and mtime is served
-        without opening it. Callers that rewrite what they read hold
-        the table's writer lock across both."""
+        is None, all of one version. ``columns`` projects the read.
+        Every file is cast to the table's fixed schema, so files written
+        by Spark and by pyarrow read alike, and is decoded once (see
+        :meth:`_files`). Callers that rewrite what they read hold the
+        table's writer lock across both."""
         parts = [
             p.table if columns is None else p.table.select(columns)
             for p in self._files(name, keys)
@@ -653,16 +677,9 @@ class Warehouse:
 
     def bucket_meta(self, name: str) -> dict | None:
         """The bucket key and count of table ``name``; None for a plain
-        table or none. A whole-table swap caught between its renames is
-        waited out, not taken for a missing table."""
-        path = self.table_path(name)
-        while True:
-            try:
-                with open(os.path.join(path, BUCKET_META_FILE)) as f:
-                    return json.load(f)
-            except FileNotFoundError:
-                if os.path.isdir(path) or self.stamp(name) is None:
-                    return None
+        table or none."""
+        m = self._manifest(name)
+        return None if m is None else m["bucketing"]
 
     @staticmethod
     def bucket_of(key: int, n_buckets: int) -> int:
@@ -672,22 +689,19 @@ class Warehouse:
 
     def write_bucketed(
         self, name: str, data, key_col: str, n_buckets: int
-    ) -> tuple[int, int]:
+    ) -> tuple[str, int]:
         """Atomically (re)write ``name`` (a DataFrame or a pyarrow Table)
-        partitioned by ``_pb = pmod(key_col, n_buckets)``.  Bulk rewrites
-        stay atomic via the same staging+swap as ``write``; the payoff is
-        that subsequent POINT mutations go through ``overwrite_buckets``
-        and touch only their own partitions. The table needs a fixed
+        with its files in ``_pb = pmod(key_col, n_buckets)`` buckets, so
+        that later POINT mutations go through ``overwrite_buckets`` and
+        touch only their own buckets' files. The table needs a fixed
         schema in ``schemas``: with no rows it has no data file to infer
-        one from. Like every commit here, returns the table's stamp read
-        under the writer lock after the swap."""
+        one from. Like every commit here, returns the table's stamp
+        after the commit."""
         assert name in self.schemas, f"bucketed table {name} needs a schema"
         with self.write_lock(name):
-            staging = self.table_path(name) + ".staging"
-            _stage(staging, data, key_col, n_buckets)
-            with open(os.path.join(staging, BUCKET_META_FILE), "w") as f:
-                json.dump({"key_col": key_col, "n_buckets": n_buckets}, f)
-            return self._swap(name, staging)
+            return self._replace(
+                name, data, {"key_col": key_col, "n_buckets": n_buckets}
+            )
 
     def read_buckets(self, name: str, buckets: list[int]) -> DataFrame:
         """Rows of the given buckets only — the ``_pb IN (...)`` filter
@@ -698,49 +712,37 @@ class Warehouse:
 
     def overwrite_buckets(
         self, name: str, buckets: list[int], data
-    ) -> tuple[int, int]:
+    ) -> tuple[str, int]:
         """Replace the given buckets' contents with ``data`` (a DataFrame
         or a pyarrow Table holding exactly those buckets' post-state,
-        without ``_pb``).  Each bucket stages fully before an atomic
-        per-partition dir swap, so a failed write never corrupts the
-        table — the touched-files-only behavior of a lakehouse MERGE,
-        minus cross-bucket transaction isolation (documented tradeoff).
-        A bucket whose post-state has no rows is removed; a table with
-        every bucket removed stays bucketed and reads empty."""
+        without ``_pb``): one commit takes out every file those buckets
+        list and adds ``data``'s, so readers see all of the buckets
+        change at once, and a failed write changes nothing. A bucket
+        whose post-state has no rows is left with no file; a table with
+        every bucket emptied stays bucketed and reads empty."""
         with self.write_lock(name):
-            meta = self.bucket_meta(name)
-            assert meta is not None, f"{name} is not bucketed"
-            path = self.table_path(name)
-            staging = path + ".bucket_staging"
-            before = self.stamp(name)
-            _stage(staging, data, meta["key_col"], meta["n_buckets"])
-            for pb in buckets:
-                part = os.path.join(path, f"_pb={pb}")
-                newpart = os.path.join(staging, f"_pb={pb}")
-                oldpart = part + ".old"
-                if os.path.exists(oldpart):
-                    shutil.rmtree(oldpart)
-                if os.path.exists(part):
-                    os.rename(part, oldpart)
-                if os.path.exists(newpart):
-                    os.rename(newpart, part)
-                if os.path.exists(oldpart):
-                    shutil.rmtree(oldpart)
-            shutil.rmtree(staging)
-            return self._advance(name, before)
+            m = self._live(name)
+            assert m["bucketing"] is not None, f"{name} is not bucketed"
+            dirs = {f"_pb={b}" for b in buckets}
+            return self._add(name, data, [
+                f for f in m["files"] if f.split("/")[0] in dirs
+            ])
 
-    def write(self, name: str, data) -> tuple[int, int]:
+    def append(self, name: str, data) -> tuple[str, int]:
+        """Add the rows of ``data`` (a DataFrame or a pyarrow Table) to
+        table ``name``: the commit lists the new files beside the current
+        ones and replaces none."""
+        with self.write_lock(name):
+            return self._add(name, data, [])
+
+    def write(self, name: str, data) -> tuple[str, int]:
         """Atomically replace table ``name`` with ``data`` (a DataFrame
-        or a pyarrow Table).
-
-        The new contents are fully materialized to <name>.staging before
-        the swap, so a failed write never corrupts the current table
-        (rollback-on-exception parity, kb.py:804-821).
+        or a pyarrow Table). Nothing is seen of the new contents until
+        the manifest is replaced, so a failed write leaves the current
+        table as it was (rollback-on-exception parity, kb.py:804-821).
         """
         with self.write_lock(name):
-            staging = self.table_path(name) + ".staging"
-            _stage(staging, data)
-            return self._swap(name, staging)
+            return self._replace(name, data, None)
 
     def drop_all(self) -> None:
         """force_fresh_db parity (kb.py:951-952): delete + recreate."""
@@ -753,23 +755,21 @@ class Warehouse:
         """VACUUM-ish (kb.py:831-834): rewrite small-file debris away.
         Bucketed tables recompact to one file per bucket, keeping the
         point-update layout; plain tables coalesce to a single file."""
-        if not self.exists(name):
-            return
-        meta = self.bucket_meta(name)
-        if meta is not None:
-            self.write_bucketed(
-                name, self.read(name), meta["key_col"], meta["n_buckets"]
-            )
-        else:
-            self.write(name, self.read(name).coalesce(1))
+        with self.write_lock(name):
+            m = self._manifest(name)
+            if m is None:
+                return
+            if m["bucketing"] is not None:
+                self.write_bucketed(name, self.read(name), **m["bucketing"])
+            else:
+                self.write(name, self.read(name).coalesce(1))
 
     def export_gzip(self, out_dir: str) -> None:
         """close(also_gzip=True) parity (kb.py:969-995): write a
         gzip-compressed parquet export of every table."""
         os.makedirs(out_dir, exist_ok=True)
         for name in sorted(os.listdir(self.root)):
-            src = self.table_path(name)
-            if not os.path.isdir(src):
+            if not os.path.isdir(self.table_path(name)) or not self.exists(name):
                 continue
             self.read(name).write.mode("overwrite").option(
                 "compression", "gzip"

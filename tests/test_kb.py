@@ -448,11 +448,11 @@ class TestGraph:
     def test_edge_probe_over_many_keys(self, spark, kb, monkeypatch):
         """The edge-key probe with more than 64 keys in one bulk: a
         stored key repeated raises and writes nothing, a stored key
-        deleted and re-added in the same bulk commits, and a read made
-        while another Warehouse swaps an edges bucket sees only the
-        live ``_pb=<k>`` directories, never the replaced ``_pb=<k>.old``."""
+        deleted and re-added in the same bulk commits, and a read that
+        another Warehouse makes after an edges commit replaced the
+        manifest, but before it unlinked the replaced bucket file, reads
+        the new version, not the replaced file beside it."""
         import os
-        import shutil
 
         from svs_spark.kb import TABLE_SCHEMAS
         from svs_spark.sources.warehouse import Warehouse
@@ -482,16 +482,16 @@ class TestGraph:
         assert got[(1, 2, 3)] == readded != stored
 
         other = Warehouse(spark, kb.wh.root, schemas=TABLE_SCHEMAS)
-        rmtree, seen = shutil.rmtree, []
+        unlink, seen = os.unlink, []
 
-        def read_mid_swap(path, *a, **k):
-            if path.endswith(".old"):
-                # the new bucket is in place, the old one not yet removed
-                assert os.path.basename(path) in os.listdir(kb.wh.table_path("edges"))
+        def read_mid_commit(path, *a, **k):
+            if path.endswith(".parquet"):
+                # the new manifest is in place, the replaced file still there
+                assert os.path.exists(path)
                 seen.append(other.read_arrow("edges"))
-            return rmtree(path, *a, **k)
+            return unlink(path, *a, **k)
 
-        monkeypatch.setattr(shutil, "rmtree", read_mid_swap)
+        monkeypatch.setattr(os, "unlink", read_mid_commit)
         added = kb.add_edge(7, 7, 7)
         monkeypatch.undo()
         assert len(seen) == 1
@@ -752,10 +752,8 @@ class TestEmptyKb:
 
     @staticmethod
     def _check_empty(kb):
-        import os
-
         for table in ("docs", "edges"):
-            assert "_buckets.json" in os.listdir(kb.wh.table_path(table))
+            assert kb.wh.bucket_meta(table) is not None
         assert kb.count() == 0 and kb.count_edges() == 0
         assert kb.retrieve("first doc", 3) == []
         assert kb.query_children(1) == []
@@ -971,6 +969,72 @@ class TestCallCost:
         assert other.query_doc(5)["level"] == 3
         both_see(5, [2, 3])
 
+    def test_bulk_contexts_lock_from_entry(self, spark, kb):
+        """bulk_add_docs, bulk_graph_update and bulk_keyval_update hold
+        their table's writer lock from entry to commit, as a SQLite
+        transaction does: a second instance's call, made in a thread
+        while the first block is open, waits for its commit, then takes
+        the next doc or edge id, or keeps the first block's key."""
+        import threading
+        import time
+
+        other = KnowledgeBase(spark, kb.wh.root)
+        _add_fixture_docs(kb)
+
+        def while_open(block, call):
+            got: list = []
+            with block() as b:
+                first = call(kb, b)
+                t = threading.Thread(target=lambda: got.append(call(other)))
+                t.start()
+                time.sleep(0.5)
+                assert got == []  # waits for the first block's commit
+            t.join(30)
+            return first, got
+
+        def add_doc(x, add=None):
+            return (add or x.add_doc)("another doc")
+
+        def add_edge(x, g=None):
+            return (g or x).add_edge(1, 3 + (g is None), 2)
+
+        def set_key(x, kv=None):
+            if kv is None:
+                with x.bulk_keyval_update() as kv:
+                    kv["b"] = 2
+            else:
+                kv["a"] = 1
+
+        assert while_open(kb.bulk_add_docs, add_doc) == (6, [7])
+        assert while_open(kb.bulk_graph_update, add_edge) == (1, [2])
+        while_open(kb.bulk_keyval_update, set_key)
+        for x in (kb, other):
+            assert x.count() == 7 and x.count_edges() == 2
+            with x.bulk_keyval_update() as kv:
+                assert kv.items() == [("a", 1), ("b", 2)]
+
+    def test_add_documents_df_job_count(self, spark, kb):
+        """On a warm KB, add_documents_df runs the jobs of its id-clash
+        check, of its count of new docs and of the one write of the new
+        files, embedded or not: the commit only adds those files to the
+        docs manifest, with no bucket probe, no re-read of the touched
+        buckets and no persist before the write."""
+        with kb.bulk_add_docs() as add:
+            for i in range(8):
+                add(f"doc {i}")
+
+        def ingest(p, **kw):
+            df = spark.createDataFrame(
+                [(1000 + 10 * p + i, f"bulk {p} {i}") for i in range(4)],
+                "doc_id long, text string",
+            )
+            return lambda: kb.add_documents_df(df, **kw)
+
+        _jobs_in(spark, "add-df-warm", ingest(0))
+        assert _jobs_in(spark, "add-df", ingest(1)) == 11
+        assert _jobs_in(spark, "add-df-bare", ingest(2, no_embedding=True)) == 11
+        assert kb.count() == 8 + 3 * 4
+
     def test_warm_call_job_budget(self, spark, kb):
         """A call that takes Python values runs no Spark job: keyed calls
         read and commit their buckets in the driver with pyarrow, and
@@ -1103,19 +1167,20 @@ class TestCallCost:
 
 def _decoded_files(kb: KnowledgeBase) -> int:
     """Data files the KB's warehouse holds decoded."""
-    return sum(len(files) for dirs in kb.wh._decoded.values()
-               for files in dirs.values())
+    return sum(len(files) for files in kb.wh._decoded.values())
+
+
+def _decoded_in(kb: KnowledgeBase, bucket: int) -> int:
+    """Files of docs bucket ``bucket`` the KB's warehouse holds decoded."""
+    return sum(f.startswith(f"_pb={bucket}/") for f in kb.wh._decoded["docs"])
 
 
 def _live_files(kb: KnowledgeBase) -> int:
-    """Data files of the KB's live tables, as a reader lists them."""
+    """Data files in the KB's table directories."""
     import os
 
-    n = 0
-    for dirpath, dirs, files in os.walk(kb.wh.root):
-        dirs[:] = [d for d in dirs if not d.endswith((".old", ".staging"))]
-        n += sum(f.endswith(".parquet") and f[0] not in "._" for f in files)
-    return n
+    return sum(f.endswith(".parquet") and f[0] not in "._"
+               for _dir, _sub, files in os.walk(kb.wh.root) for f in files)
 
 
 class TestDecodeCache:
@@ -1155,8 +1220,6 @@ class TestDecodeCache:
         keyval table; B commits a meta update and an add to that bucket
         and a keyval set; A's next query_doc, retrieve and keyval read
         return B's commits."""
-        import os
-
         from svs_spark.kb import DOCS_BUCKETS
 
         a = self._kb(spark, str(tmp_path / "kb"), n_docs=17)
@@ -1167,8 +1230,7 @@ class TestDecodeCache:
         assert a.retrieve("q fresh", 1)[0]["doc"]["id"] != 18
         with a.bulk_keyval_update() as kv:
             assert kv["k"] == 1
-        bucket = os.path.join(a.wh.table_path("docs"), f"_pb={2 % DOCS_BUCKETS}")
-        assert bucket in a.wh._decoded["docs"]  # A holds bucket 2 decoded
+        assert _decoded_in(a, 2 % DOCS_BUCKETS) == 1  # A holds bucket 2 decoded
 
         b.update_doc_meta(2, {"by": "b"})
         assert b.add_doc("new fresh") == 18  # 18 lands in bucket 2 too
@@ -1209,8 +1271,6 @@ class TestDecodeCache:
         """After 200 meta updates interleaved with reads, and a delete
         that empties a bucket, the cache holds no more decoded files
         than the live tables have data files."""
-        import os
-
         kb = self._kb(spark, str(tmp_path / "kb"))
         for i in range(200):
             kb.update_doc_meta(2 + i % 7, {"i": i})
@@ -1222,10 +1282,9 @@ class TestDecodeCache:
         kb.del_doc(15)  # alone in bucket 15: the bucket goes
         assert kb.count() == 19
         assert kb.query_doc(3)["meta"] == {"i": 197}
-        docs = kb.wh._decoded["docs"]
-        assert os.path.join(kb.wh.table_path("docs"), "_pb=15") not in docs
+        assert _decoded_in(kb, 15) == 0
         assert 0 < _decoded_files(kb) <= _live_files(kb)
-        assert len(docs) == 15  # every other docs bucket, once
+        assert len(kb.wh._decoded["docs"]) == 15  # every other docs bucket, once
 
     def test_retrieve_equals_retrieve_topk_across_writes(self, spark, tmp_path):
         """retrieve stays bit-equal to ``retrieve_topk`` over ``docs``
@@ -1261,8 +1320,8 @@ class TestDecodeCache:
     def test_warm_reads_decode_only_replaced_files(self, spark, tmp_path,
                                                    monkeypatch):
         """Once every file is decoded, a read opens no parquet file, and
-        after a single-doc commit the next whole-table read opens only
-        the one file the commit wrote."""
+        after a single-doc commit neither does the next whole-table
+        read: the commit entered the file it wrote as decoded."""
         import pyarrow.parquet as pq
 
         kb = self._kb(spark, str(tmp_path / "kb"))
@@ -1280,7 +1339,7 @@ class TestDecodeCache:
         assert opened == []
         kb.update_doc_meta(5, {"x": 1})
         again = kb.retrieve("q w1", 3)
-        assert len(opened) == 1 and "_pb=5" in opened[0]
+        assert opened == []
         assert [(r["doc"]["id"], r["score"]) for r in again] == [
             (r["doc"]["id"], r["score"]) for r in first]
 
@@ -1296,8 +1355,7 @@ class TestDecodeCache:
         assert _jobs_in(spark, "decode-cache-load", kb.load) == 0
         docs = kb.wh._decoded["docs"]
         assert len(docs) == 16
-        assert all(_retrieve_decode in e.memo
-                   for files in docs.values() for e in files.values())
+        assert all(_retrieve_decode in e.memo for e in docs.values())
         kb.close()
         assert _decoded_files(kb) == 0
         assert kb.query_doc(4)["text"] == "doc 3 w3"

@@ -2,20 +2,23 @@
 fails fast instead of interleaving read-modify-write cycles; stale
 locks from crashed writers are broken; the lock is re-entrant within
 one Warehouse instance, so a caller holding it across a read-modify-
-write can commit through overwrite_buckets. Readers take no lock: one
-that lists while a bucket swap or a whole-table swap is between its two
-renames waits for the swap to land instead of missing the bucket or the
-table, and a reopen puts back what a writer that died there left."""
+write can commit through overwrite_buckets. Readers take no lock: a
+commit is one ``os.replace`` of the table's manifest, so a reader sees
+one version whole, before or after any commit, a writer killed at any
+point leaves exactly one version, and a table of the earlier layout is
+adopted at open."""
 
 from __future__ import annotations
 
 import os
-import shutil
 import time
 
 import pytest
 
 from svs_spark.sources.warehouse import WRITER_LOCK_SUFFIX, Warehouse
+
+# the checkout, where the writer subprocesses import svs_spark from
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @pytest.fixture()
@@ -79,228 +82,201 @@ def test_lock_released_after_write_and_reentrant_merge(spark, tmp_path):
         assert os.path.exists(lock)
     got = {(r["id"], r["v"]) for r in wh.read("b").collect()}
     assert got == {(1, "a"), (2, "B"), (6, "f")}
+    assert {r["id"] for r in wh.read_buckets("b", [2]).collect()} == {2, 6}
     assert not os.path.exists(lock)
 
 
-def _pause_between_renames(monkeypatch, entry="_pb="):
-    """Make the next swap whose first rename moves an entry named like
-    ``entry`` (a ``_pb=<k>`` bucket by default) to ``<entry>.old`` stop
-    after that rename until ``go`` is set."""
-    import threading
+def _hook_renames(monkeypatch, before, after):
+    """Call ``before(dst)`` and ``after(dst)`` around every ``os.rename``
+    and ``os.replace`` this process makes: a commit's renames are where
+    readers and crashes could catch it half done."""
+    for fn in ("rename", "replace"):
+        real = getattr(os, fn)
 
-    paused, go = threading.Event(), threading.Event()
-    rename = os.rename
+        def hooked(src, dst, *a, _real=real, **k):
+            before(dst)
+            _real(src, dst, *a, **k)
+            after(dst)
 
-    def hooked(src, dst, *a, **k):
-        rename(src, dst, *a, **k)
-        if dst.endswith(".old") and entry in os.path.basename(dst):
-            paused.set()
-            assert go.wait(30)
-
-    monkeypatch.setattr(os, "rename", hooked)
-    return paused, go
+        monkeypatch.setattr(os, fn, hooked)
 
 
-def _die_after_first_rename(monkeypatch):
-    """Make the next swap raise right after its first rename, as a
-    writer killed between the two renames leaves the table."""
-    rename = os.rename
-
-    def hooked(src, dst, *a, **k):
-        rename(src, dst, *a, **k)
-        if dst.endswith(".old"):
-            raise RuntimeError("writer died between the renames")
-
-    monkeypatch.setattr(os, "rename", hooked)
-
-
-def test_reader_waits_for_a_bucket_swap_in_flight(spark, tmp_path, monkeypatch):
-    """A second Warehouse that lists while a writer is paused between a
-    bucket swap's two renames neither misses the bucket nor blocks for
-    good: the driver read and the Spark read both return every row,
-    once the swap lands."""
-    import threading
-
+@pytest.mark.parametrize("commit", ["arrow", "spark", "whole"])
+def test_readers_see_one_version_around_a_commit(
+    spark, tmp_path, monkeypatch, commit
+):
+    """A commit of 32 new rows into all 16 buckets of a 32-row table (a
+    driver-side or a Spark bucket commit, or a whole-table rewrite),
+    read by a second Warehouse just before and just after each rename
+    the commit makes (with the manifest, its one ``os.replace``): the
+    driver read, the keyed read and the Spark read each return exactly
+    the old or the new version, never a mix."""
     root = str(tmp_path / "wh")
     wh, other = _bucketed_wh(spark, root), _bucketed_wh(spark, root)
-    rows = [(i, f"v{i}") for i in range(32)]
-    wh.write_bucketed("b", wh.arrow_table("b", rows), "id", 4)
-    post = [(i, f"new{i}") for i in range(32) if i % 4 == 1]
-    paused, go = _pause_between_renames(monkeypatch)
-    writer = threading.Thread(target=wh.overwrite_buckets,
-                              args=("b", [1], wh.arrow_table("b", post)))
-    writer.start()
-    got: dict = {}
+    old = [(i, "old") for i in range(32)]
+    new = [(i, "new" if i % 3 else "old") for i in range(64)]
+    wh.write_bucketed("b", wh.arrow_table("b", old), "id", 16)
+    versions = (set(old), set(new))
+    seen = []
+
+    def rows(t):
+        return set(zip(t.column("id").to_pylist(), t.column("v").to_pylist()))
+
+    def check(dst):
+        seen.append(dst)
+        for got in (rows(other.read_arrow("b")),
+                    rows(other.read_arrow("b", range(64))),
+                    {tuple(r) for r in other.read("b").collect()}):
+            assert got in versions, (os.path.basename(dst), len(got))
+
+    data = wh.arrow_table("b", new)
+    if commit == "spark":
+        data = spark.createDataFrame(new, "id long, v string")
+    _hook_renames(monkeypatch, check, check)
+    if commit == "whole":
+        wh.write_bucketed("b", data, "id", 16)
+    else:
+        wh.overwrite_buckets("b", list(range(16)), data)
+    monkeypatch.undo()
+    assert seen
+    assert rows(other.read_arrow("b")) == set(new)
+
+
+_KILLED_WRITER = """
+import os, sys, time
+from svs_spark.sources.warehouse import Warehouse
+from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+root, at, when, ready = sys.argv[1], int(sys.argv[2]), sys.argv[3], sys.argv[4]
+schema = StructType([StructField("id", LongType(), False),
+                     StructField("v", StringType(), True)])
+wh = Warehouse(None, root, schemas={"b": schema})
+calls = []
+
+def stop(point):
+    if point == when and len(calls) == at:
+        open(ready, "w").close()
+        time.sleep(600)
+
+for fn in ("rename", "replace"):
+    def hooked(src, dst, *a, _real=getattr(os, fn), **k):
+        calls.append(dst)
+        stop("before")
+        _real(src, dst, *a, **k)
+        stop("after")
+    setattr(os, fn, hooked)
+new = [(i, "new") for i in range(64)]
+wh.overwrite_buckets("b", list(range(16)), wh.arrow_table("b", new))
+"""
+
+
+@pytest.mark.parametrize("at,when", [(1, "before"), (1, "after"), (4, "after")])
+def test_killed_writer_leaves_one_version(spark, tmp_path, at, when):
+    """A writer process SIGKILLed just before or just after the
+    ``at``-th rename of a 16-bucket commit (with the manifest, its one
+    ``os.replace``; a commit that makes fewer renames finishes) leaves
+    exactly one version: the next open reads all 32 old rows or all 64
+    new ones. The files it wrote or replaced and no manifest lists are
+    swept by the next whole-table write."""
+    import signal
+    import subprocess
+    import sys
+    import warnings
+
+    root = str(tmp_path / "wh")
+    wh = _bucketed_wh(spark, root)
+    old = [(i, "old") for i in range(32)]
+    wh.write_bucketed("b", wh.arrow_table("b", old), "id", 16)
+    ready = str(tmp_path / "ready")
+    writer = subprocess.Popen(
+        [sys.executable, "-c", _KILLED_WRITER, root, str(at), when, ready],
+        cwd=_REPO,
+    )
     try:
-        assert paused.wait(30)
-        assert "_pb=1" not in os.listdir(wh.table_path("b"))
-        readers = [
-            threading.Thread(target=lambda: got.update(
-                arrow=other.read_arrow("b").num_rows)),
-            threading.Thread(target=lambda: got.update(
-                keyed=other.read_arrow("b", [5]).column("v").to_pylist())),
-        ]
-        for r in readers:
-            r.start()
-        time.sleep(0.3)
-        assert got == {}  # both wait for the swap
-        go.set()
-        for r in readers:
-            r.join(30)
+        _wait_for(lambda: os.path.exists(ready) or writer.poll() is not None,
+                  timeout_s=60, msg="the writer to reach its kill point")
+        writer.send_signal(signal.SIGKILL)
+        writer.wait(timeout=10)
     finally:
-        go.set()
-        writer.join(30)
-        monkeypatch.undo()
-    assert got["arrow"] == 32
-    assert got["keyed"] == [f"new{i}" for i in range(1, 32, 4)]  # bucket 1
-    assert other.read("b").count() == 32
+        if writer.poll() is None:
+            writer.kill()
+    again = _bucketed_wh(spark, root)
+    got = again.read_arrow("b")
+    rows = set(zip(got.column("id").to_pylist(), got.column("v").to_pylist()))
+    assert rows in (set(old), {(i, "new") for i in range(64)}), len(rows)
+    assert {tuple(r) for r in again.read("b").collect()} == rows
+    # the killed writer's lock goes stale once its heartbeat has stopped
+    with warnings.catch_warnings(record=True):
+        with again.write_lock("b", stale_after_s=1.0):
+            again.write_bucketed("b", again.arrow_table("b", sorted(rows)), "id", 16)
+    files = [os.path.relpath(os.path.join(d, f), root)
+             for d, _sub, fs in os.walk(root) for f in fs if f.endswith(".parquet")]
+    assert len(files) == 16 and all(f.startswith("b/_pb=") for f in files), files
 
 
-def test_reader_waits_for_a_whole_table_swap_in_flight(
+def test_file_unlinked_after_the_manifest_was_read_is_read_again(
     spark, tmp_path, monkeypatch
 ):
-    """A second KnowledgeBase that reads the keyval table while a keyval
-    commit is paused between its whole-table swap's two renames (the
-    table directory is gone) waits for the swap and reads the new
-    value, instead of raising FileNotFoundError."""
-    import threading
-
-    from svs_spark.functions.embeddings import make_mock_embeddings_func
-    from svs_spark.kb import KnowledgeBase
-
-    path = str(tmp_path / "kb")
-    kb = KnowledgeBase(spark, path, embedding_func=make_mock_embeddings_func(),
-                       embedding_params={"provider": "mock"}, force_fresh_db=True)
-    with kb.bulk_keyval_update() as kv:
-        kv["a"] = 1
-    other = KnowledgeBase(spark, path)
-    got: dict = {}
-
-    def set_a():
-        with kb.bulk_keyval_update() as kv:
-            kv["a"] = 2
-
-    def read_a():
-        with other.bulk_keyval_update() as kv:
-            got["a"] = kv["a"]
-
-    paused, go = _pause_between_renames(monkeypatch, "keyval")
-    writer = threading.Thread(target=set_a)
-    writer.start()
-    try:
-        assert paused.wait(30)
-        assert not os.path.exists(kb.wh.table_path("keyval"))
-        reader = threading.Thread(target=read_a)
-        reader.start()
-        time.sleep(0.3)
-        assert got == {}  # waits for the swap
-        go.set()
-        reader.join(30)
-    finally:
-        go.set()
-        writer.join(30)
-        monkeypatch.undo()
-    assert not writer.is_alive() and not reader.is_alive()
-    assert got == {"a": 2}
-
-
-def test_bucket_moved_after_the_listing_is_read_again(
-    spark, tmp_path, monkeypatch
-):
-    """A swap that starts after the reader listed the table, but before
-    it opened bucket 1, is read from the bucket the swap leaves."""
-    import threading
-
+    """A commit that replaces bucket 1 after a reader read the manifest,
+    but before it opened bucket 1's file, makes the reader start again
+    from the new manifest: it returns the new version whole."""
     from svs_spark.sources import warehouse
 
     root = str(tmp_path / "wh")
     wh, other = _bucketed_wh(spark, root), _bucketed_wh(spark, root)
     wh.write_bucketed("b", wh.arrow_table("b", [(i, "old") for i in range(8)]),
                       "id", 4)
-    paused, go = _pause_between_renames(monkeypatch)
-    read_dir = warehouse._read_dir
-    writers = []
+    decode, commits = warehouse._decode, []
 
-    def swap_first(d, *args):
-        if d.endswith("_pb=1") and not writers:
-            writers.append(threading.Thread(
-                target=wh.overwrite_buckets,
-                args=("b", [1], wh.arrow_table("b", [(1, "new"), (5, "new")]))))
-            writers[0].start()
-            assert paused.wait(30)
-            threading.Timer(0.2, go.set).start()
-        return read_dir(d, *args)
+    def commit_first(path, *args):
+        if "_pb=1" in path and not commits:
+            commits.append(wh.overwrite_buckets(
+                "b", [1], wh.arrow_table("b", [(1, "new"), (5, "new")])))
+        return decode(path, *args)
 
-    monkeypatch.setattr(warehouse, "_read_dir", swap_first)
-    try:
-        got = other.read_arrow("b")
-    finally:
-        go.set()
-        for w in writers:
-            w.join(30)
-    assert len(writers) == 1
+    monkeypatch.setattr(warehouse, "_decode", commit_first)
+    got = other.read_arrow("b")
+    assert len(commits) == 1
     assert sorted(zip(got.column("id").to_pylist(), got.column("v").to_pylist())
                   ) == [(i, "new" if i % 4 == 1 else "old") for i in range(8)]
 
 
-def test_swap_that_never_lands_raises_naming_the_table(
-    spark, tmp_path, monkeypatch
-):
-    """A writer that dies between a bucket swap's renames leaves
-    ``_pb=1.old`` as the only copy of bucket 1: readers raise naming the
-    table instead of missing it, and a reopen renames it back, so every
-    row reads again and the next write to bucket 1 commits."""
-    from svs_spark.sources import warehouse
+def test_open_adopts_a_table_of_the_earlier_layout(spark, tmp_path):
+    """A bucketed table in the earlier layout (``_buckets.json``,
+    ``_pb=<k>/part-00000.parquet`` files, and the ``.old`` bucket a
+    writer that died between a swap's renames left) gets a manifest at
+    open: the stranded ``_pb=2.old`` is renamed back, a stale ``.old``
+    beside its live bucket goes, the manifest lists every data file,
+    and the table reads and commits as any other."""
+    import json
+
+    import pyarrow.parquet as pq
 
     root = str(tmp_path / "wh")
-    wh, other = _bucketed_wh(spark, root), _bucketed_wh(spark, root)
-    wh.write_bucketed("b", wh.arrow_table("b", [(1, "a"), (2, "b")]), "id", 4)
-    monkeypatch.setattr(warehouse, "SWAP_WAIT_S", 0.3)
-    rename = os.rename
-    _die_after_first_rename(monkeypatch)
-    with pytest.raises(RuntimeError, match="writer died"):
-        wh.overwrite_buckets("b", [1], wh.arrow_table("b", []))
-    monkeypatch.setattr(os, "rename", rename)
-    assert sorted(os.listdir(wh.table_path("b")))[:2] == ["_buckets.json", "_pb=1.old"]
-    with pytest.raises(TimeoutError, match="table b"):
-        other.read_arrow("b")
-    with pytest.raises(TimeoutError, match="table b"):
-        other.read("b")
-    again = _bucketed_wh(spark, root)
-    for w in (again, other):
-        assert sorted(w.read_arrow("b").column("id").to_pylist()) == [1, 2]
-    assert other.read("b").count() == 2
-    again.overwrite_buckets("b", [1], again.arrow_table("b", [(1, "z"), (5, "y")]))
-    got = other.read_arrow("b")
-    assert sorted(zip(got.column("id").to_pylist(), got.column("v").to_pylist())
-                  ) == [(1, "z"), (2, "b"), (5, "y")]
+    path = os.path.join(root, "b")
+    wh = _bucketed_wh(spark, str(tmp_path / "scratch"))
+    for d, ids in (("_pb=0", [0, 4]), ("_pb=1", [1, 5]), ("_pb=2.old", [2, 6]),
+                   ("_pb=3", [3]), ("_pb=3.old", [7])):
+        os.makedirs(os.path.join(path, d))
+        pq.write_table(wh.arrow_table("b", [(i, d) for i in ids]),
+                       os.path.join(path, d, "part-00000.parquet"))
+    with open(os.path.join(path, "_buckets.json"), "w") as f:
+        json.dump({"key_col": "id", "n_buckets": 4}, f)
 
-
-def test_reopen_repairs_a_whole_table_swap_cut_short(spark, tmp_path, monkeypatch):
-    """A whole-table swap cut between its renames leaves ``b.old`` and no
-    ``b``; a replaced version left beside its successor is deleted. A
-    reopen restores the last committed version in both cases."""
-    from svs_spark.sources import warehouse
-
-    root = str(tmp_path / "wh")
-    wh = _bucketed_wh(spark, root)
-    wh.write_bucketed("b", wh.arrow_table("b", [(1, "a"), (2, "b")]), "id", 4)
-    monkeypatch.setattr(warehouse, "SWAP_WAIT_S", 0.3)
-    rename = os.rename
-    _die_after_first_rename(monkeypatch)
-    with pytest.raises(RuntimeError, match="writer died"):
-        wh.write_bucketed("b", wh.arrow_table("b", [(3, "c")]), "id", 4)
-    monkeypatch.setattr(os, "rename", rename)
-    with pytest.raises(TimeoutError, match="table b"):
-        wh.stamp("b")
-    shutil.copytree(os.path.join(root, "b.old", "_pb=2"),
-                    os.path.join(root, "b.old", "_pb=1.old"))  # a stale twin
-    again = _bucketed_wh(spark, root)
-    assert sorted(os.listdir(root)) == ["b", "b.staging"]
-    assert "_pb=1.old" not in os.listdir(again.table_path("b"))
-    assert sorted(again.read_arrow("b").column("id").to_pylist()) == [1, 2]
-    again.write_bucketed("b", again.arrow_table("b", [(3, "c")]), "id", 4)
-    assert wh.read_arrow("b").column("id").to_pylist() == [3]
+    adopted = _bucketed_wh(spark, root)
+    with open(os.path.join(path, "_manifest.json")) as f:
+        assert json.load(f)["files"] == [
+            f"_pb={k}/part-00000.parquet" for k in range(4)]
+    assert not any(d.endswith(".old") for d in os.listdir(path))
+    want = {(0, "_pb=0"), (4, "_pb=0"), (1, "_pb=1"), (5, "_pb=1"),
+            (2, "_pb=2.old"), (6, "_pb=2.old"), (3, "_pb=3")}
+    got = adopted.read_arrow("b")
+    assert set(zip(got.column("id").to_pylist(), got.column("v").to_pylist())) == want
+    assert {tuple(r) for r in adopted.read("b").collect()} == want
+    assert adopted.bucket_meta("b") == {"key_col": "id", "n_buckets": 4}
+    adopted.overwrite_buckets("b", [2], adopted.arrow_table("b", [(2, "z")]))
+    assert sorted(_bucketed_wh(spark, root).read_arrow("b", [2, 6])
+                  .column("v").to_pylist()) == ["z"]
 
 
 _HOLDER_SCRIPT = """
@@ -321,7 +297,7 @@ def _spawn_holder(path, hold_s, stale_s, ready):
     return subprocess.Popen(
         [sys.executable, "-c", _HOLDER_SCRIPT,
          path, str(hold_s), str(stale_s), str(ready)],
-        cwd="/root/repo",
+        cwd=_REPO,
     )
 
 
