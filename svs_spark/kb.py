@@ -34,10 +34,12 @@ guard and cascade search) read the columns they test from the whole
 table. The warehouse decodes each data file once and serves it again
 while the manifest lists it, so a call pays for reading the table's
 manifest and for the files changed since the last read. ``retrieve``
-scores each file's vectors, kept decoded on the
-file's cache entry, with the same float64 fold as
-``functions.vector.dot`` — the analogue of the reference's RAM matrix
-(``kb.py:856-893``), rebuilt per file only after a write. The
+scores each file's vectors, kept decoded on the file's cache entry,
+with the same float64 fold as ``functions.vector.dot``, and selects its
+top n once from the table's scores — the analogue of the reference's
+RAM matrix (``kb.py:856-893``), rebuilt per file only after a write.
+Records carry a doc's vector only when the caller asks for it; the
+others never turn the vector column into Python values. The
 whole-table calls collect their whole answer, so they read in the
 driver too: ``dfs_traversal`` walks the ``id``, ``parent_id`` columns
 and ``build_networkx_graph`` the edges table.
@@ -184,16 +186,15 @@ def _retrieve_decode(part: pa.Table) -> tuple:
     return ids, lens, bad, flat.to_numpy(zero_copy_only=False)
 
 
-def _retrieve_candidates(decoded: tuple, q: np.ndarray, n: int) -> tuple:
-    """``(ids, rank, scores)`` of the rows of one docs file (its
-    :func:`_retrieve_decode`) that can be in a top ``n`` against the
-    query ``q``. Scores are ``functions.vector.dot_many``'s, bit-equal
-    to the Spark ``dot`` fold. ``rank`` orders before the score, the
-    way Spark's descending sort places the values: 2 for a NaN score
-    (first), 1 for a number, 0 for a null score (last) — a vector whose
-    length differs from the query's, or that holds a null. Docs without
-    a vector are not candidates. Finite scores are pruned with
-    ``topk_ties``; the rare others are all kept."""
+def _retrieve_scores(decoded: tuple, q: np.ndarray) -> tuple:
+    """``(ids, rank, scores)`` of the rows of one docs file that have a
+    vector (its :func:`_retrieve_decode`) against the query ``q``.
+    Scores are ``functions.vector.dot_many``'s, bit-equal to the Spark
+    ``dot`` fold. ``rank`` orders before the score, the way Spark's
+    descending sort places the values: 2 for a NaN score (first), 1 for
+    a number, 0 for a null score (last) — a vector whose length differs
+    from the query's, or that holds a null; the score of a rank other
+    than 1 is 0.0."""
     ids, lens, bad, flat = decoded
     ok = (lens == len(q)) & ~bad
     scores = np.zeros(len(ids))
@@ -203,11 +204,19 @@ def _retrieve_candidates(decoded: tuple, q: np.ndarray, n: int) -> tuple:
     rank = ok.astype(np.int8)
     rank[ok & np.isnan(scores)] = 2
     scores[rank != 1] = 0.0
+    return ids, rank, scores
+
+
+def _retrieve_candidates(rank: np.ndarray, scores: np.ndarray,
+                         n: int) -> np.ndarray:
+    """Indices of the scored rows (:func:`_retrieve_scores` of every
+    docs file, end to end) that can be in the top ``n``: the finite
+    scores ``topk_ties`` keeps, boundary ties included, and all of the
+    rare others."""
     finite = (rank == 1) & np.isfinite(scores)
     pick = np.flatnonzero(finite)
     [top] = topk_ties(scores[pick], n)
-    keep = np.concatenate([pick[top], np.flatnonzero(~finite)])
-    return ids[keep], rank[keep], scores[keep]
+    return np.concatenate([pick[top], np.flatnonzero(~finite)])
 
 
 class KnowledgeBase:
@@ -355,13 +364,12 @@ class KnowledgeBase:
     def edges(self) -> DataFrame:
         return self.wh.read("edges")
 
-    def _find(self, table: str, keys) -> pa.Table:
+    def _find(self, table: str, keys, columns=None) -> pa.Table:
         """The rows of ``table`` whose bucket key is in ``keys``, read
-        in the driver from only the buckets that can hold them."""
+        in the driver from only the buckets that can hold them, projected
+        to ``columns`` (the bucket key among them) when given."""
         keys = list(keys)
-        if not keys:
-            return self.wh.arrow_schema(table).empty_table()
-        rows = self.wh.read_arrow(table, keys)
+        rows = self.wh.read_arrow(table, keys, columns)
         col = rows.column(BUCKET_KEYS[table][0])
         return rows.filter(pc.is_in(col, value_set=pa.array(keys, col.type)))
 
@@ -482,11 +490,11 @@ class KnowledgeBase:
                 elif parent_id in known_levels:
                     level = known_levels[parent_id] + 1
                 else:
-                    row = self._point_read(parent_id)
-                    if row is None:
+                    found = self._find("docs", [parent_id], ["id", "level"])
+                    if not found.num_rows:
                         raise ValueError(f"invalid parent_id: {parent_id}")
-                    known_levels[parent_id] = row["level"]
-                    level = row["level"] + 1
+                    known_levels[parent_id] = found.column("level")[0].as_py()
+                    level = known_levels[parent_id] + 1
                 doc_id = counter[0]
                 counter[0] += 1
                 known_levels[doc_id] = level
@@ -568,12 +576,14 @@ class KnowledgeBase:
             .filter(F.col("text").isNotNull())
             .dropDuplicates(["id"])
         )
-        clash = self.docs.join(
-            new_rows.select("id"), on="id", how="left_semi"
-        ).count()
+        # one action counts the new docs and those whose id is taken
+        # (doc ids are unique, so the left join keeps one row per new doc)
+        n_new, clash = new_rows.select("id").join(
+            self.docs.select("id", F.lit(True).alias("taken")),
+            on="id", how="left",
+        ).agg(F.count("*"), F.count("taken")).first()
         if clash:
             raise ValueError(f"{clash} incoming doc ids already exist")
-        n_new = new_rows.count()
         if no_embedding:
             staged = new_rows.withColumn(
                 "embedding", F.lit(None).cast(ArrayType(FloatType()))
@@ -759,33 +769,36 @@ class KnowledgeBase:
     # -- queries (Q2-Q6) --------------------------------------------------------
 
     @staticmethod
-    def _to_record(row, include_embedding: bool) -> dict:
-        """One doc row (a Spark Row or an Arrow row dict) as a record."""
-        emb: Any
-        if include_embedding:
-            emb = list(row["embedding"]) if row["embedding"] is not None else None
-        else:
-            emb = row["embedding"] is not None  # tri-state bool (kb.py:442-473)
+    def _to_record(row: dict) -> dict:
+        """One doc row, as :meth:`_records` hands it over, as a record."""
         return {
             "id": row["id"],
             "parent_id": row["parent_id"],
             "level": row["level"],
             "text": row["text"],
-            "embedding": emb,
+            "embedding": row["embedding"],
             "meta": json.loads(row["meta"]) if row["meta"] is not None else None,
         }
 
-    def _point_read(self, doc_id: int) -> Optional[dict]:
-        """Point lookup of one doc row, read in the driver from the one
-        bucket that can hold it (1/DOCS_BUCKETS of the table)."""
-        rows = self._find("docs", [doc_id]).slice(0, 1).to_pylist()
-        return rows[0] if rows else None
+    @classmethod
+    def _records(cls, rows: pa.Table, include_embedding: bool) -> List[dict]:
+        """The records of doc ``rows``, in order. Without
+        ``include_embedding`` a record's ``embedding`` is whether the doc
+        has a vector (svs's tri-state field, kb.py:442-473), taken in
+        Arrow before the rows become Python objects: vectors the caller
+        did not ask for are never turned into Python floats."""
+        if not include_embedding:
+            i = rows.schema.get_field_index("embedding")
+            rows = rows.set_column(i, "embedding", pc.is_valid(rows.column(i)))
+        return [cls._to_record(r) for r in rows.to_pylist()]
 
     def query_doc(self, doc_id: int, include_embedding: bool = False) -> dict:
-        row = self._point_read(doc_id)
-        if row is None:
+        """One doc's record, read in the driver from the one bucket that
+        can hold it (1/DOCS_BUCKETS of the table)."""
+        recs = self._records(self._find("docs", [doc_id]), include_embedding)
+        if not recs:
             raise KeyError(f"no such doc: {doc_id}")
-        return self._to_record(row, include_embedding)
+        return recs[0]
 
     def _docs_where(self, col: str, value, include_embedding: bool) -> List[dict]:
         """Records of the docs whose ``col`` equals ``value``, by id: the
@@ -794,7 +807,7 @@ class KnowledgeBase:
         links = self.wh.read_arrow("docs", None, ["id", col])
         ids = links.filter(pc.equal(links.column(col), value)).column("id")
         rows = self._find("docs", ids.to_pylist()).sort_by("id")
-        return [self._to_record(r, include_embedding) for r in rows.to_pylist()]
+        return self._records(rows, include_embedding)
 
     def query_children(
         self, doc_id: int, include_embedding: bool = False
@@ -822,11 +835,11 @@ class KnowledgeBase:
         while stack:
             order.append(stack.pop())
             stack.extend(kids.get(order[-1], []))
-        rows = {r["id"]: r for r in self._find("docs", order).to_pylist()}
-        return [
-            self._to_record(rows[i], include_embedding)
-            for i in order if i in rows  # unless a concurrent commit deleted it
-        ]
+        recs = {r["id"]: r for r in self._records(
+            self._find("docs", order), include_embedding
+        )}
+        # unless a concurrent commit deleted it
+        return [recs[i] for i in order if i in recs]
 
     def fetch_doc_with_emb_id(self, doc_id: int) -> dict:
         """Q5 reverse-FK parity (kb.py:511-524) — with the vector stored
@@ -841,29 +854,33 @@ class KnowledgeBase:
         order — bit for bit what ``operators.similarity.retrieve_topk``
         returns on ``docs``. The driver scores each docs file's vectors
         (the reference's RAM matrix: decoded once per file and kept
-        until a commit replaces the file, see ``load``), takes the top
-        n of the candidates :func:`_retrieve_candidates` leaves of each
-        file, then reads the winners' fields from their buckets.
-        Large-corpus retrieval is ``operators.similarity.knn_join_batch``
-        and the IVF operators."""
+        until a commit replaces the file, see ``load``) into one score
+        vector for the table, selects from it once
+        (:func:`_retrieve_candidates`, then the order), and reads the
+        winners' fields, without their vectors, from their buckets. The
+        vectors themselves are never copied together: at 1M × 1536 that
+        would be 6 GB a call. Large-corpus retrieval is
+        ``operators.similarity.knn_join_batch`` and the IVF operators."""
         q = np.asarray(self.embedding_func([query])[0], dtype=np.float64)
         if n <= 0:
             return []  # reference get_top_k clamps k<=0 to [] (util.py:190-203)
+        # one score vector for the table; the vectors stay in their files
         ids, rank, scores = (np.concatenate(c) for c in zip(
             (np.empty(0, np.int64), np.empty(0, np.int8), np.empty(0)),
-            *(_retrieve_candidates(decoded, q, n)
+            *(_retrieve_scores(decoded, q)
               for decoded in self.wh.map_files("docs", _retrieve_decode)),
         ))
-        # ids are unique, so this order is total: the top n of every
-        # file's candidates together is the top n of the table
-        top = np.lexsort((ids, scores, rank))[::-1][:n]
+        keep = _retrieve_candidates(rank, scores, n)
+        # ids are unique, so this order is total
+        top = keep[np.lexsort((ids[keep], scores[keep], rank[keep]))[::-1][:n]]
         ids, rank, scores = ids[top], rank[top], scores[top]
-        rows = {r["id"]: r for r in self._find("docs", ids.tolist()).to_pylist()}
+        recs = {r["id"]: r for r in self._records(
+            self._find("docs", ids.tolist()), False
+        )}
         return [
-            {"score": float(s) if c else None,
-             "doc": self._to_record(rows[i], False)}
+            {"score": float(s) if c else None, "doc": recs[i]}
             for i, c, s in zip(ids.tolist(), rank.tolist(), scores.tolist())
-            if i in rows  # unless a concurrent commit deleted it since
+            if i in recs  # unless a concurrent commit deleted it since
         ]
 
     def document_top_pairwise_scores(
@@ -876,12 +893,9 @@ class KnowledgeBase:
         pairs = block_pairwise_topk(
             emb, n, id_col="id", vec_col="embedding", round_decimals=None
         ).collect()
-        docs_by_id = {
-            r["id"]: self._to_record(r, False)
-            for r in self._find(
-                "docs", {p[k] for p in pairs for k in ("id_a", "id_b")}
-            ).to_pylist()
-        }
+        docs_by_id = {r["id"]: r for r in self._records(self._find(
+            "docs", {p[k] for p in pairs for k in ("id_a", "id_b")}
+        ), False)}
         return [
             (p["score"], docs_by_id[p["id_a"]], docs_by_id[p["id_b"]])
             for p in pairs
@@ -976,7 +990,7 @@ class KnowledgeBase:
                 if eager_validation:
                     for i in (src, dst, rel):
                         if i not in eager_docs_ok:
-                            if self._point_read(i) is None:
+                            if not self._find("docs", [i], ["id"]).num_rows:
                                 raise ValueError(f"no such doc: {i}")
                             eager_docs_ok.add(i)
                     if key not in eager_del_keys and self._stored_edge_keys([key]):
@@ -1041,7 +1055,9 @@ class KnowledgeBase:
                 {i for op in ops if op[0] == "add" for i in op[2:5]}
             )
             persisted_keys = self._stored_edge_keys(need_keys)
-            found_docs = set(self._find("docs", need_docs).column("id").to_pylist())
+            found_docs = set(
+                self._find("docs", need_docs, ["id"]).column("id").to_pylist()
+            )
             persisted_del_ids = sorted(
                 {op[1] for op in ops if op[0] == "del" and op[1] < start_eid}
             )
@@ -1141,10 +1157,9 @@ class KnowledgeBase:
             {r["src"] for r in edge_rows} | {r["dst"] for r in edge_rows}
             | {r["rel"] for r in edge_rows}
         )
-        recs = {
-            r["id"]: self._to_record(r, False)
-            for r in self._find("docs", needed).to_pylist()
-        }
+        recs = {r["id"]: r for r in self._records(
+            self._find("docs", needed), False
+        )}
         for r in edge_rows:
             attrs = {"edge_doc": recs[r["rel"]]}
             if r["weight"] is not None:

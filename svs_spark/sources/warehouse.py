@@ -56,6 +56,7 @@ import hashlib
 import json
 import os
 import shutil
+import threading
 import time
 import urllib.request
 import uuid
@@ -146,7 +147,9 @@ def _write_files(d: str, data, bucketing: dict | None) -> dict:
         for sub, rows in parts.items():
             os.makedirs(os.path.join(d, sub), exist_ok=True)
             rel = os.path.join(sub, _part_file())
-            pq.write_table(rows, os.path.join(d, rel))
+            # no dictionary: a vector column's values are all distinct,
+            # so encoding one only costs write time, bytes and read time
+            pq.write_table(rows, os.path.join(d, rel), use_dictionary=False)
             written[rel] = rows
         return written
     staging = os.path.join(d, f".staging-{uuid.uuid4().hex}")
@@ -175,34 +178,69 @@ def _write_files(d: str, data, bucketing: dict | None) -> dict:
         shutil.rmtree(staging, ignore_errors=True)
 
 
-def _start_lock_heartbeat(lp: str, token: bytes, stale_after_s: float):
-    """Daemon thread refreshing the lock file mtime so a legitimately
-    slow holder (a multi-hour rollup overwrite at scale) is never
-    stale-broken while still writing: staleness now means "no live
-    holder process", not "write took longer than stale_after_s". The
-    beat verifies the file still holds OUR token before touching, so a
-    broken-and-reacquired lock is never refreshed on someone else's
-    behalf. Returns (stop_event, thread)."""
-    import threading
+class _Heartbeat:
+    """One daemon thread per process refreshing the mtime of every
+    writer lock the process holds, each at its own beat (a quarter of
+    its stale window, within 0.05-10 s), so a legitimately slow holder
+    (a multi-hour rollup overwrite at scale) is never stale-broken while
+    still writing: staleness means "no live holder process", not "write
+    took longer than stale_after_s". Before each touch the beat checks
+    that the file still holds the holder's token, so a broken-and-
+    reacquired lock is never refreshed on someone else's behalf, and it
+    touches under the registry's lock, so none is in flight once
+    :meth:`remove` returns. The thread starts with the first lock; a
+    lock's acquire and release only add to and take from its registry."""
 
-    stop = threading.Event()
-    beat_s = min(max(stale_after_s / 4.0, 0.05), 10.0)
+    def __init__(self):
+        self._cv = threading.Condition()
+        # (lock path, token) -> [beat interval s, next beat on monotonic]
+        self._locks: dict[tuple[str, bytes], list] = {}
+        self._thread: threading.Thread | None = None
 
-    def run():
-        while not stop.wait(beat_s):
-            try:
-                with open(lp, "rb") as f:
-                    if f.read(len(token)) != token:
-                        return  # displaced — stop beating, never touch
-                os.utime(lp)
-            except OSError:
-                return  # released or broken — nothing to refresh
+    def add(self, lp: str, token: bytes, stale_after_s: float) -> None:
+        beat_s = min(max(stale_after_s / 4.0, 0.05), 10.0)
+        with self._cv:
+            self._locks[(lp, token)] = [beat_s, time.monotonic() + beat_s]
+            if self._thread is None or not self._thread.is_alive():
+                self._thread = threading.Thread(
+                    target=self._run, name="writer-lock-heartbeat", daemon=True
+                )
+                self._thread.start()
+            self._cv.notify()
 
-    t = threading.Thread(
-        target=run, name=f"writer-lock-heartbeat:{lp}", daemon=True
-    )
-    t.start()
-    return stop, t
+    def remove(self, lp: str, token: bytes) -> None:
+        with self._cv:
+            self._locks.pop((lp, token), None)
+
+    def forget_all(self) -> None:
+        """A forked child holds none of its parent's locks."""
+        self._cv = threading.Condition()
+        self._locks.clear()
+        self._thread = None
+
+    def _run(self) -> None:
+        with self._cv:
+            while True:
+                now = time.monotonic()
+                for (lp, token), beat in list(self._locks.items()):
+                    if beat[1] > now:
+                        continue
+                    beat[1] = now + beat[0]
+                    try:
+                        with open(lp, "rb") as f:
+                            mine = f.read(len(token)) == token
+                        if mine:
+                            os.utime(lp)
+                    except OSError:
+                        mine = False  # released or broken
+                    if not mine:  # displaced: never touch it again
+                        del self._locks[(lp, token)]
+                due = min((b[1] for b in self._locks.values()), default=None)
+                self._cv.wait(None if due is None else due - time.monotonic())
+
+
+_HEARTBEAT = _Heartbeat()
+os.register_at_fork(after_in_child=_HEARTBEAT.forget_all)
 
 
 def _break_stale_lock(lp: str, stale_after_s: float) -> bool:
@@ -287,14 +325,13 @@ def path_writer_lock(
                     f"retry or remove the lock if the holder is dead"
                 )
             time.sleep(0.2)
-    stop, beat = _start_lock_heartbeat(lp, token, stale_after_s)
+    _HEARTBEAT.add(lp, token, stale_after_s)
     if held is not None:
         held.add(path)
     try:
         yield
     finally:
-        stop.set()
-        beat.join(timeout=1.0)
+        _HEARTBEAT.remove(lp, token)
         if held is not None:
             held.discard(path)
         try:
@@ -355,6 +392,9 @@ class Warehouse:
         self.spark = spark
         self.root = root
         self.schemas = schemas or {}
+        self._arrow_schemas = {
+            n: to_arrow_schema(s) for n, s in self.schemas.items()
+        }
         # name -> (stamp, scan with _pb, scan without _pb)
         self._handles: dict[str, tuple] = {}
         # name -> data-file path relative to the table -> _Decoded
@@ -384,10 +424,11 @@ class Warehouse:
         layout moves off a filesystem. Re-entrant within one Warehouse
         instance (a caller holds the lock across its read-modify-write
         and the inner overwrite_buckets acquire is then a no-op).
-        While held, a heartbeat thread refreshes the lock mtime, so a
-        lock older than ``stale_after_s`` means the holder PROCESS is
-        dead (crashed writer), not merely slow — a multi-hour rollup
-        overwrite keeps its lock alive. Dead-holder locks are broken
+        While held, the process's heartbeat thread (:class:`_Heartbeat`)
+        refreshes the lock mtime, so a lock older than ``stale_after_s``
+        means the holder PROCESS is dead (crashed writer), not merely
+        slow — a multi-hour rollup overwrite keeps its lock alive.
+        Dead-holder locks are broken
         with a warning via single-winner atomic rename
         (:func:`_break_stale_lock`); safe because every commit below
         is one ``os.replace`` of the manifest, so the table itself is
@@ -591,7 +632,7 @@ class Warehouse:
 
     def arrow_schema(self, name: str) -> pa.Schema:
         """Table ``name``'s fixed schema as an Arrow schema."""
-        return to_arrow_schema(self.schemas[name])
+        return self._arrow_schemas[name]
 
     def arrow_table(self, name: str, rows: list[tuple]) -> pa.Table:
         """``rows`` (tuples in column order) as a pyarrow Table in table

@@ -261,6 +261,131 @@ class TestRetrieval:
                 add("anything")
 
 
+class TestRecords:
+    """A record's ``embedding`` is the doc's vector only when the caller
+    asks for it, and otherwise whether the doc has one; the vectors not
+    asked for stay in Arrow."""
+
+    @staticmethod
+    def _kb(spark, path):
+        """Doc 1 has a vector, 2 none, 3 one holding a null, 4 a short
+        one; the edges touch every doc."""
+        kb = KnowledgeBase(spark, path,
+                           embedding_func=make_mock_embeddings_func(),
+                           force_fresh_db=True)
+        with kb.bulk_add_docs() as add:
+            add("with a vector")
+            add("without", parent_id=1, no_embedding=True)
+            add("null-holding", parent_id=1)
+            add("short", parent_id=2)
+        kb._point_update_docs(3, "embedding", [0.5, None, 0.5])
+        kb.set_doc_embedding(4, [0.6, 0.8])
+        kb.add_edge(1, 3, 2)
+        kb.add_edge(3, 4, 1)
+        return kb
+
+    def test_embedding_field_in_every_record_call(self, spark, tmp_path,
+                                                  monkeypatch):
+        kb = self._kb(spark, str(tmp_path / "kb"))
+        vectors = {r["id"]: r["embedding"] for r in kb.docs.collect()}
+        assert vectors[2] is None and vectors[3] == [0.5, None, 0.5]
+        flags = {i: v is not None for i, v in vectors.items()}
+        orig = KnowledgeBase.__dict__["_to_record"].__func__
+        handed: list = []
+
+        def spy(row, *rest):
+            handed.append(row["embedding"])
+            return orig(row, *rest)
+
+        monkeypatch.setattr(KnowledgeBase, "_to_record", staticmethod(spy))
+
+        def records(call, include):
+            handed.clear()
+            recs = call(include)
+            assert recs
+            if not include:  # no row handed over carried a vector
+                assert all(isinstance(e, bool) for e in handed), handed
+            return recs
+
+        listing = {
+            "query_doc": lambda inc: [kb.query_doc(i, inc) for i in vectors],
+            "query_children": lambda inc: (
+                kb.query_children(1, inc) + kb.query_children(2, inc)),
+            "query_level": lambda inc: (
+                kb.query_level(1, inc) + kb.query_level(2, inc)),
+            "dfs_traversal": lambda inc: kb.dfs_traversal(inc),
+        }
+        for name, call in listing.items():
+            for include, want in ((False, flags), (True, vectors)):
+                got = {r["id"]: r["embedding"]
+                       for r in records(call, include)}
+                assert len(got) >= 2
+                for i, e in got.items():
+                    assert e == want[i] and type(e) is type(want[i]), (
+                        name, include, i)
+        hits = records(lambda _: kb.retrieve("anything", 10), False)
+        assert [(h["doc"]["id"], h["doc"]["embedding"]) for h in hits] == [
+            (1, True), (4, True), (3, True)]
+        g = records(lambda _: kb.build_networkx_graph(), False)
+        assert {n: g.nodes[n]["doc"]["embedding"] for n in g.nodes} == {
+            i: flags[i] for i in (1, 3, 4)}  # the endpoints
+        assert sorted((d["edge_doc"]["id"], d["edge_doc"]["embedding"])
+                      for *_, d in g.edges(data=True)) == [(1, True), (2, False)]
+        # the pairwise GEMM stacks the vectors: give doc 4 the query's length
+        kb.set_doc_embedding(4, [0.0, 0.6, 0.8])
+        pairs = records(lambda _: kb.document_top_pairwise_scores(10), False)
+        assert {(d["id"], d["embedding"]) for p in pairs for d in p[1:]} == {
+            (1, True), (3, True), (4, True)}
+
+    def test_retrieve_tie_at_the_nth_score_across_buckets(self, spark,
+                                                          tmp_path):
+        """Docs 3 and 18, in two docs buckets, tie at the second score:
+        the higher id wins, and every answer is ``retrieve_topk``'s."""
+        from pyspark.sql import functions as F
+
+        from svs_spark.kb import DOCS_BUCKETS
+        from svs_spark.operators.similarity import retrieve_topk
+
+        vec = {"best": [1.0, 0.0], "tie": [0.6, 0.8], "low": [0.0, 1.0]}
+        kb = KnowledgeBase(
+            spark, str(tmp_path / "kb"),
+            embedding_func=lambda ts: [vec[t.split()[-1]] for t in ts],
+            force_fresh_db=True)
+        with kb.bulk_add_docs() as add:
+            for i in range(1, 21):
+                add(f"doc {i} " + {1: "best", 3: "tie", 18: "tie"}.get(i, "low"))
+        assert 3 % DOCS_BUCKETS != 18 % DOCS_BUCKETS
+        emb = kb.docs.filter(F.col("embedding").isNotNull())
+        for n in (1, 2, 3):
+            got = [(r["doc"]["id"], r["score"])
+                   for r in kb.retrieve("q best", n)]
+            want = [(r["id"], r["score"]) for r in retrieve_topk(
+                emb, vec["best"], n, id_col="id", vec_col="embedding"
+            ).collect()]
+            assert got == want
+        assert [r["doc"]["id"] for r in kb.retrieve("q best", 2)] == [1, 18]
+        assert [r["doc"]["id"] for r in kb.retrieve("q best", 3)] == [1, 18, 3]
+
+    def test_driver_written_docs_files_have_no_dictionary(self, tmp_path,
+                                                          kb):
+        """A docs file written from the driver stores its vectors plain:
+        their values are all distinct, so a dictionary only costs."""
+        import os
+
+        import pyarrow.parquet as pq
+
+        kb.add_doc("first doc")
+        files = kb.wh._manifest("docs")["files"]
+        assert files
+        for f in files:
+            md = pq.ParquetFile(os.path.join(kb.wh.table_path("docs"), f)).metadata
+            cols = {md.row_group(0).column(c).path_in_schema:
+                    md.row_group(0).column(c) for c in range(md.num_columns)}
+            emb = cols["embedding.list.element"]
+            assert not emb.has_dictionary_page
+            assert not any("DICTIONARY" in e for e in emb.encodings)
+
+
 class TestGraph:
     def _setup(self, kb):
         with kb.bulk_add_docs() as add:
@@ -1014,11 +1139,12 @@ class TestCallCost:
                 assert kv.items() == [("a", 1), ("b", 2)]
 
     def test_add_documents_df_job_count(self, spark, kb):
-        """On a warm KB, add_documents_df runs the jobs of its id-clash
-        check, of its count of new docs and of the one write of the new
-        files, embedded or not: the commit only adds those files to the
-        docs manifest, with no bucket probe, no re-read of the touched
-        buckets and no persist before the write."""
+        """On a warm KB, add_documents_df runs the jobs of one action
+        that counts the new docs and the taken ids together, and of the
+        one write of the new files, embedded or not: the commit only
+        adds those files to the docs manifest, with no bucket probe, no
+        re-read of the touched buckets and no persist before the
+        write."""
         with kb.bulk_add_docs() as add:
             for i in range(8):
                 add(f"doc {i}")
@@ -1031,8 +1157,8 @@ class TestCallCost:
             return lambda: kb.add_documents_df(df, **kw)
 
         _jobs_in(spark, "add-df-warm", ingest(0))
-        assert _jobs_in(spark, "add-df", ingest(1)) == 11
-        assert _jobs_in(spark, "add-df-bare", ingest(2, no_embedding=True)) == 11
+        assert _jobs_in(spark, "add-df", ingest(1)) == 7
+        assert _jobs_in(spark, "add-df-bare", ingest(2, no_embedding=True)) == 7
         assert kb.count() == 8 + 3 * 4
 
     def test_warm_call_job_budget(self, spark, kb):

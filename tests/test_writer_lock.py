@@ -371,6 +371,41 @@ def test_heartbeat_keeps_slow_writer_alive_past_stale_window(tmp_path):
             holder.wait(timeout=10)
 
 
+def test_one_heartbeat_thread_refreshes_every_held_lock(tmp_path):
+    """The process refreshes every lock it holds from one heartbeat
+    thread, each at its own beat, and stops touching a lock when it is
+    released or holds another holder's token: acquire and release start
+    and join no thread."""
+    import threading
+
+    from svs_spark.sources.warehouse import path_writer_lock
+
+    def beats():
+        return [t for t in threading.enumerate()
+                if t.name.startswith("writer-lock-heartbeat")]
+
+    def mtime(p):
+        return os.stat(p + WRITER_LOCK_SUFFIX).st_mtime_ns
+
+    fast, slow, taken = (str(tmp_path / t) for t in ("fast", "slow", "taken"))
+    with path_writer_lock(fast, stale_after_s=0.2):  # beats every 0.05 s
+        with path_writer_lock(slow, stale_after_s=3600.0):  # every 10 s
+            with path_writer_lock(taken, stale_after_s=0.2):
+                with open(taken + WRITER_LOCK_SUFFIX, "wb") as f:
+                    f.write(b"pid=0 someone else")  # displaced
+                os.utime(taken + WRITER_LOCK_SUFFIX, ns=(0, 0))
+                assert len(beats()) == 1
+                before = {p: mtime(p) for p in (fast, slow)}
+                time.sleep(0.5)
+                assert mtime(fast) > before[fast]
+                assert mtime(slow) == before[slow]
+                assert mtime(taken) == 0  # never touched on another's behalf
+            os.unlink(taken + WRITER_LOCK_SUFFIX)  # left to its holder
+        assert not os.path.exists(slow + WRITER_LOCK_SUFFIX)
+    assert not os.path.exists(fast + WRITER_LOCK_SUFFIX)
+    assert len(beats()) == 1  # not joined: it waits for the next lock
+
+
 def test_break_restores_lock_when_rename_races_a_fresh_refresh(tmp_path):
     """_break_stale_lock must re-verify after the rename: capturing a
     lock whose mtime turns out fresh (a heartbeat raced the stat) is
