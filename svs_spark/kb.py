@@ -29,11 +29,13 @@ driver with pyarrow and runs no Spark job, as a reference call is one
 SQLite transaction: keyed calls (single-doc adds, reads and updates,
 keyval, edge commits) touch only the buckets that can hold their keys
 (``Warehouse.read_arrow`` and a Table commit), and predicate reads
-(children, levels, counts, the next id, the edge-key probe, the delete
-guard and cascade search) read the columns they test from the whole
-table. The warehouse decodes each data file once and serves it again
-while the manifest lists it, so a call pays for reading the table's
-manifest and for the files changed since the last read. ``retrieve``
+(children, levels, counts, the delete guard and cascade search) read
+the columns they test from the whole table. The warehouse decodes each
+data file once and serves it again while the manifest lists it, so a
+call pays for reading the table's manifest and for the files changed
+since the last read; the next id and the edge calls' checks use what
+each file holds (its largest key, its doc ids, its edge keys), derived
+once per file and kept beside it (``Warehouse.map_files``). ``retrieve``
 scores each file's vectors, kept decoded on the file's cache entry,
 with the same float64 fold as ``functions.vector.dot``, and selects its
 top n once from the table's scores — the analogue of the reference's
@@ -52,8 +54,8 @@ from creation (a plain table from an older version is rewritten
 bucketed once, at open), and nothing is cached across calls except
 what is keyed by a table's stamp or by a data file that no commit
 replaced, so every commit, by any instance or process, is seen by the
-next read. The async/sync API duality is deliberately not ported (no
-query semantics in it; SURVEY.md §7).
+next read. The reference's async API is ``kb_async.AsyncKnowledgeBase``,
+which runs each call of this class in a worker thread.
 """
 
 from __future__ import annotations
@@ -61,6 +63,7 @@ from __future__ import annotations
 import base64
 import datetime
 import functools
+import itertools
 import json
 import warnings
 from contextlib import contextmanager
@@ -95,8 +98,8 @@ DOCS_BUCKETS = 16
 
 # same point-update locality for the edges table: keyed by edge_id, so a
 # point del_edge/add_edge rewrites 1/EDGES_BUCKETS of the table. The
-# (src, dst, rel) uniqueness probe is not keyed by the bucket key: it
-# reads the src, dst and rel columns of every bucket in the driver.
+# (src, dst, rel) uniqueness check is not keyed by the bucket key: it
+# looks in every edges file's key index (``_edge_index``).
 EDGES_BUCKETS = 16
 
 DOCS_SCHEMA = StructType([
@@ -219,6 +222,29 @@ def _retrieve_candidates(rank: np.ndarray, scores: np.ndarray,
     return np.concatenate([pick[top], np.flatnonzero(~finite)])
 
 
+# What the calls below derive from one data file, each kept on the
+# file's cache entry by ``Warehouse.map_files`` while a manifest lists it.
+
+# table -> the largest bucket key of one of its files: the next id
+_KEY_MAX = {
+    table: lambda part, col=col: pc.max(part.column(col)).as_py()
+    for table, (col, _n) in BUCKET_KEYS.items()
+}
+
+
+def _doc_ids(part: pa.Table) -> set:
+    """The ids of one docs file."""
+    return set(part.column("id").to_pylist())
+
+
+def _edge_index(part: pa.Table) -> tuple[dict, set]:
+    """``(src, dst, rel) -> edge_id`` and the edge ids of one edges
+    file."""
+    eids = part.column("edge_id").to_pylist()
+    keys = zip(*(part.column(c).to_pylist() for c in ("src", "dst", "rel")))
+    return dict(zip(keys, eids)), set(eids)
+
+
 class KnowledgeBase:
     """Open (or create) a knowledge base at ``path_or_url``.
 
@@ -242,8 +268,6 @@ class KnowledgeBase:
         self.wh = Warehouse(spark, root, schemas=TABLE_SCHEMAS)
         if force_fresh_db:
             self.wh.drop_all()
-        # table -> (stamp, next id): max(id) + 1 of that table version
-        self._next_ids: dict[str, tuple] = {}
         self._init_meta(embedding_func, embedding_params)
 
     # -- lifecycle (S1-S5) --------------------------------------------------
@@ -308,16 +332,10 @@ class KnowledgeBase:
         (as older versions wrote them) bucketed, under its writer lock:
         every later call reads and commits buckets."""
         with self.wh.write_lock(table):
-            if not self.wh.exists(table):
-                stamp = self.wh.write_bucketed(
-                    table, self.wh.arrow_table(table, []), *BUCKET_KEYS[table]
-                )
-                # an empty table's next id needs no max() scan
-                self._next_ids[table] = (stamp, 1)
-            elif self.wh.bucket_meta(table) is None:
-                self.wh.write_bucketed(
-                    table, self.wh.read_arrow(table), *BUCKET_KEYS[table]
-                )
+            if self.wh.bucket_meta(table) is None:
+                rows = (self.wh.read_arrow(table) if self.wh.exists(table)
+                        else self.wh.arrow_table(table, []))
+                self.wh.write_bucketed(table, rows, *BUCKET_KEYS[table])
 
     def _read_kv(self, table: str) -> dict:
         return {
@@ -373,30 +391,15 @@ class KnowledgeBase:
         col = rows.column(BUCKET_KEYS[table][0])
         return rows.filter(pc.is_in(col, value_set=pa.array(keys, col.type)))
 
-    # -- id allocation: max(id) + 1, cached per table version ----------------
+    # -- id allocation: max(id) + 1 -------------------------------------------
 
-    def _next_id(self, table: str, col: str) -> int:
-        stamp = self.wh.stamp(table)
-        hit = self._next_ids.get(table)
-        if hit is None or hit[0] != stamp:
-            top = pc.max(self.wh.read_arrow(table, None, [col]).column(col))
-            hit = self._next_ids[table] = (stamp, (top.as_py() or 0) + 1)
-        return hit[1]
-
-    def _commit(self, table: str, write, next_id: Optional[int] = None):
-        """Run ``write`` (a read-modify-write of ``table`` returning the
-        stamp after its commit); the caller holds the table's writer
-        lock. The cached next id survives only if it described the
-        version this commit replaced: unchanged, or ``next_id`` when the
-        commit added ids. Commits made any other way move the stamp and
-        so drop it."""
-        before = self.wh.stamp(table)
-        after = write()
-        hit = self._next_ids.get(table)
-        if hit is not None and hit[0] == before:
-            self._next_ids[table] = (
-                after, hit[1] if next_id is None else next_id
-            )
+    def _next_id(self, table: str) -> int:
+        """The largest bucket key of the current ``table`` plus 1 (1 when
+        it is empty), from each file's largest key: after a commit only
+        the file it wrote, already decoded, is looked at."""
+        tops = [t for t in self.wh.map_files(table, _KEY_MAX[table])
+                if t is not None]
+        return max(tops, default=0) + 1
 
     # -- counts (Q1) ----------------------------------------------------------
 
@@ -442,8 +445,7 @@ class KnowledgeBase:
                 hit, pa.scalar(value, col.type), col
             ))
 
-        with self.wh.write_lock("docs"):
-            self._commit("docs", lambda: self._rewrite("docs", [doc_id], patch))
+        self._rewrite("docs", [doc_id], patch)
 
     def _append_embedded(
         self, df: DataFrame, head: Optional[DataFrame] = None
@@ -477,7 +479,7 @@ class KnowledgeBase:
         with self.wh.write_lock("docs"):
             pending: list[tuple] = []
             known_levels: dict[int, int] = {}
-            counter = [self._next_id("docs", "id")]
+            ids = itertools.count(self._next_id("docs"))
 
             def add_doc(
                 text: str,
@@ -495,8 +497,7 @@ class KnowledgeBase:
                         raise ValueError(f"invalid parent_id: {parent_id}")
                     known_levels[parent_id] = found.column("level")[0].as_py()
                     level = known_levels[parent_id] + 1
-                doc_id = counter[0]
-                counter[0] += 1
+                doc_id = next(ids)
                 known_levels[doc_id] = level
                 enc = json.dumps(meta) if meta is not None else None
                 pending.append((doc_id, parent_id, level, text, enc, no_embedding))
@@ -520,14 +521,8 @@ class KnowledgeBase:
                 (i, pid, level, text, None if skip else next(vecs), enc)
                 for i, pid, level, text, enc, skip in pending
             ])
-            self._commit(
-                "docs",
-                lambda: self._rewrite(
-                    "docs", [p[0] for p in pending],
-                    lambda cur: pa.concat_tables([cur, new_rows]),
-                ),
-                next_id=counter[0],
-            )
+            self._rewrite("docs", [p[0] for p in pending],
+                          lambda cur: pa.concat_tables([cur, new_rows]))
 
     def add_doc(self, text: str, parent_id: Optional[int] = None,
                 meta: Optional[dict] = None, no_embedding: bool = False) -> int:
@@ -734,14 +729,17 @@ class KnowledgeBase:
                 for c in ("src", "dst", "rel")
             ])
 
-        probe = self.wh.read_arrow(
-            "edges", None, ["edge_id", "src", "dst", "rel"]
-        )
-        victims = probe.filter(incident(probe)).column("edge_id").to_pylist()
-        if victims:
-            self._rewrite(
-                "edges", victims, lambda e: e.filter(pc.invert(incident(e)))
+        # the edges lock from the search to the commit: an open edge bulk
+        # that found a deleted doc commits first, so its edges cascade too
+        with self.wh.write_lock("edges"):
+            probe = self.wh.read_arrow(
+                "edges", None, ["edge_id", "src", "dst", "rel"]
             )
+            victims = probe.filter(incident(probe)).column("edge_id").to_pylist()
+            if victims:
+                self._rewrite(
+                    "edges", victims, lambda e: e.filter(pc.invert(incident(e)))
+                )
 
     def del_doc(self, doc_id: int) -> None:
         with self.bulk_del_docs() as dd:
@@ -886,9 +884,22 @@ class KnowledgeBase:
     def document_top_pairwise_scores(
         self, n: int
     ) -> List[tuple[float, dict, dict]]:
-        """kb.py:1642-1671: top-n pairs from the strict upper triangle."""
+        """kb.py:1642-1671: top-n pairs from the strict upper triangle.
+        The pairs come from one matrix of the vectors, as in svs, so
+        vectors of more than one length raise ValueError, in the driver
+        before any Spark job."""
         from svs_spark.operators.similarity import block_pairwise_topk
 
+        lens = set()
+        for _ids, file_lens, _bad, _flat in self.wh.map_files(
+            "docs", _retrieve_decode
+        ):
+            lens.update(np.unique(file_lens).tolist())
+        if len(lens) > 1:
+            raise ValueError(
+                f"the docs hold vectors of lengths {sorted(lens)}: "
+                "pairwise scores need one length"
+            )
         emb = self.docs.filter(F.col("embedding").isNotNull())
         pairs = block_pairwise_topk(
             emb, n, id_col="id", vec_col="embedding", round_decimals=None
@@ -903,131 +914,71 @@ class KnowledgeBase:
 
     # -- graph (G1-G6) ---------------------------------------------------------
 
-    def _stored_edge_keys(self, keys: list) -> set:
-        """Which (src, dst, rel) ``keys`` the stored edges hold — the
-        uniqueness probe, whose key is not the bucket key. The driver
-        reads the ``src``, ``dst`` and ``rel`` columns of every edges
-        file, keeps the rows whose ``src`` is a probed one, and matches
-        those against the exact tuples."""
-        if not keys:
-            return set()
-        cols = ["src", "dst", "rel"]
-        e = self.wh.read_arrow("edges", None, cols)
-        e = e.filter(pc.is_in(e.column("src"), value_set=pa.array(
-            list({k[0] for k in keys}), pa.int64()
-        )))
-        want = set(keys)
-        return {
-            k for k in zip(*(e.column(c).to_pylist() for c in cols))
-            if k in want
-        }
-
     @contextmanager
-    def bulk_graph_update(self, eager_validation: bool = False):
-        """kb.py:1673-1729: transactional edge mutations with (src, dst,
-        rel) uniqueness (kb.py:650-651) — duplicates raise RuntimeError,
-        missing endpoint/relationship docs ValueError, missing del ids
-        ValueError.
+    def bulk_graph_update(self):
+        """kb.py:1673-1729: transactional edge mutations, each checked and
+        applied in order when it is called, as svs does inside its
+        transaction (kb.py:651/670): a duplicate (src, dst, rel) raises
+        RuntimeError (kb.py:650-651), a missing endpoint or relationship
+        doc or an unknown ``del_edge`` id ValueError, at that call. A
+        caller that catches the error keeps the rest of the bulk; an
+        error that leaves the block writes nothing. A deleted edge's key
+        can be added again, and deleting an edge added in this bulk takes
+        the add back.
 
-        **Deferred-raise contract (deliberate divergence from the
-        reference):** by default, only the in-bulk duplicate check runs
-        at call time; every persisted-state violation (duplicate
-        against stored edges, missing doc, missing del id) raises at
-        context-manager EXIT, before anything is written — the whole
-        bulk is then discarded. The reference raises at each call
-        (reference kb.py:651/670), so callers that catch per-call
-        errors to skip bad edges and keep the rest must pass
-        ``eager_validation=True``: every call then validates against
-        persisted state immediately (reference-parity semantics, at the
-        cost of one driver read of the edges' key columns per call — use
-        only for small bulks).
-        "First violation wins" is exact under eager validation; under
-        deferred validation the commit REPLAYS the calls in order (so
-        among staged ops the earliest violation raises first), with one
-        caveat: a call-time in-bulk-duplicate error still fires before
-        an EARLIER op's persisted-state violation is discovered at
-        exit.
-
-        Scale shape: calls only stage ops in a driver-side buffer (the
-        single per-call check — duplicate key within this bulk — is
-        pure memory); ALL persisted-state validation happens once at
-        commit, in the driver with no Spark job: one read of the edges'
-        key columns (the edge-key probe) and two reads of the buckets
-        that can hold the ids (doc FKs, del ids), then the original
-        sequential semantics are REPLAYED in memory
-        against the prefetched answers — first violation wins, exactly
-        as if each call had validated eagerly (including adds later
-        rolled back by an in-bulk del: sequential execution errors
-        before the del can save them). A 100k-edge bulk is 3 validation
-        reads, not 100k per-edge ``isEmpty`` jobs (round-3 verdict #1).
-        The commit itself is a single del-filter + append of the touched
-        buckets, written from the driver (atomic via the warehouse
-        manifest); on any validation error nothing is written. The edges
-        writer lock is held from entry to the commit, so the edge ids
-        handed out at call time stay free and the probe's answers stay
-        true until the commit.
-        """
+        No call runs a Spark job. The edges writer lock is held from
+        entry to the commit, so the stored edges cannot change meanwhile:
+        the first call that needs them takes each edges file's key index
+        (:func:`_edge_index`). Doc ids are looked up in each docs file's
+        ids (:func:`_doc_ids`); docs are not locked, so an id missing
+        from them is looked up once more in the current version before
+        the call raises. Both are derived once per file and kept beside
+        it. The commit rewrites the buckets of the added and deleted
+        edge ids only."""
         with self.wh.write_lock("edges"):
-            start_eid = self._next_id("edges", "edge_id")
-            counter = [start_eid]
-            # ops replayed at commit: ("add", eid, src, dst, rel, w, directed)
-            # or ("del", edge_id)
-            ops: list[tuple] = []
-            batch_keys: dict[tuple, int] = {}  # live in-bulk adds, call-time dup gate
-            # eager-mode state: docs verified present, keys of persisted
-            # edges deleted in this bulk, persisted ids already deleted
-            eager_docs_ok: set[int] = set()
-            eager_del_keys: set[tuple] = set()
-            eager_dels: set[int] = set()
+            ids = itertools.count(self._next_id("edges"))
+            adds: dict[int, tuple] = {}  # edge id -> row, in call order
+            live: dict[tuple, int] = {}  # their (src, dst, rel) -> edge id
+            deleted: set[int] = set()  # stored edge ids
+            docs_ok: set[int] = set()
+            # read at the first call that needs them
+            stored = functools.cache(
+                lambda: list(self.wh.map_files("edges", _edge_index)))
+            docs = functools.cache(
+                lambda: list(self.wh.map_files("docs", _doc_ids)))
+
+            def check_doc(i: int) -> None:
+                if i in docs_ok:
+                    return
+                for view in (docs(), self.wh.map_files("docs", _doc_ids, [i])):
+                    if any(i in part for part in view):
+                        docs_ok.add(i)
+                        return
+                raise ValueError(f"no such doc: {i}")
 
             def _add(src: int, dst: int, rel: int, weight: Optional[float],
                      directed: bool) -> int:
                 key = (src, dst, rel)
-                if key in batch_keys:
+                held = next((k[key] for k, _ in stored() if key in k), None)
+                if key in live or (held is not None and held not in deleted):
                     raise RuntimeError(
                         f"edge ({src}, {dst}, {rel}) already exists"
                     )
-                if eager_validation:
-                    for i in (src, dst, rel):
-                        if i not in eager_docs_ok:
-                            if not self._find("docs", [i], ["id"]).num_rows:
-                                raise ValueError(f"no such doc: {i}")
-                            eager_docs_ok.add(i)
-                    if key not in eager_del_keys and self._stored_edge_keys([key]):
-                        raise RuntimeError(
-                            f"edge ({src}, {dst}, {rel}) already exists"
-                        )
-                    eager_del_keys.discard(key)
-                eid = counter[0]
-                counter[0] += 1
-                batch_keys[key] = eid
-                ops.append(("add", eid, src, dst, rel, weight, directed))
+                for i in key:
+                    check_doc(i)
+                eid = live[key] = next(ids)
+                adds[eid] = (eid, src, dst, rel, weight, directed)
                 return eid
 
             def _del(edge_id: int) -> None:
-                # rolling back an in-bulk add frees its key for later adds
-                # in THIS bulk; the op itself still replays (a rolled-back
-                # add must still fail validation the way sequential
-                # execution would have)
-                if eager_validation:
-                    if edge_id >= start_eid:
-                        if edge_id not in batch_keys.values():
-                            raise ValueError(f"no such edge: [{edge_id}]")
-                    else:
-                        if edge_id in eager_dels:
-                            raise ValueError(f"no such edge: [{edge_id}]")
-                        rows = self._find("edges", [edge_id]).to_pylist()
-                        if not rows:
-                            raise ValueError(f"no such edge: [{edge_id}]")
-                        eager_dels.add(edge_id)
-                        eager_del_keys.add(
-                            (rows[0]["src"], rows[0]["dst"], rows[0]["rel"])
-                        )
-                for key, eid in list(batch_keys.items()):
-                    if eid == edge_id:
-                        del batch_keys[key]
-                        break
-                ops.append(("del", edge_id))
+                if edge_id in adds:
+                    del live[adds.pop(edge_id)[1:4]]
+                elif edge_id in deleted or not any(
+                    edge_id in e for _, e in stored()
+                ):
+                    raise ValueError(f"no such edge: [{edge_id}]")
+                else:
+                    deleted.add(edge_id)
 
             class GraphUpdater:
                 def add_edge(self, doc1: int, doc2: int, relationship: int,
@@ -1044,84 +995,14 @@ class KnowledgeBase:
 
             yield GraphUpdater()
 
-            if not ops:
-                return
-
-            # -- batched prefetch: three driver reads -----------------------
-            need_keys = sorted(
-                {(op[2], op[3], op[4]) for op in ops if op[0] == "add"}
-            )
-            need_docs = sorted(
-                {i for op in ops if op[0] == "add" for i in op[2:5]}
-            )
-            persisted_keys = self._stored_edge_keys(need_keys)
-            found_docs = set(
-                self._find("docs", need_docs, ["id"]).column("id").to_pylist()
-            )
-            persisted_del_ids = sorted(
-                {op[1] for op in ops if op[0] == "del" and op[1] < start_eid}
-            )
-            del_map = {
-                r["edge_id"]: (r["src"], r["dst"], r["rel"])
-                for r in self._find("edges", persisted_del_ids).to_pylist()
-            }
-
-            # -- sequential replay (first violation wins) ------------------
-            adds: list[tuple] = []
-            dels: set[int] = set()
-            sim_keys: dict[tuple, int] = {}
-            del_keys: set[tuple] = set()
-            for op in ops:
-                if op[0] == "add":
-                    _, eid, src, dst, rel, weight, directed = op
-                    for i in (src, dst, rel):
-                        if i not in found_docs:
-                            raise ValueError(f"no such doc: {i}")
-                    key = (src, dst, rel)
-                    if key in sim_keys or (
-                        key not in del_keys and key in persisted_keys
-                    ):
-                        raise RuntimeError(
-                            f"edge ({src}, {dst}, {rel}) already exists"
-                        )
-                    del_keys.discard(key)
-                    sim_keys[key] = eid
-                    adds.append((eid, src, dst, rel, weight, directed))
-                else:
-                    edge_id = op[1]
-                    rolled_back = next(
-                        (k for k, e in sim_keys.items() if e == edge_id), None
-                    )
-                    if rolled_back is not None:
-                        del sim_keys[rolled_back]
-                        adds[:] = [a for a in adds if a[0] != edge_id]
-                        continue
-                    row_key = del_map.get(edge_id)
-                    if row_key is None or edge_id in dels:
-                        raise ValueError(f"no such edge: [{edge_id}]")
-                    dels.add(edge_id)
-                    del_keys.add(row_key)
-
-            if not adds and not dels:
-                return
-            added = self.wh.arrow_table("edges", adds)
-
-            def patch(post: pa.Table) -> pa.Table:
-                if dels:
-                    post = post.filter(pc.invert(pc.is_in(
-                        post.column("edge_id"),
-                        value_set=pa.array(list(dels), pa.int64()),
-                    )))
-                return pa.concat_tables([post, added])
-
-            def write():
-                keys = [a[0] for a in adds] + list(dels)
-                return self._rewrite("edges", keys, patch)
-
-            if dels:
-                write()  # a delete may lower max(edge_id): the stamp drops it
-            else:
-                self._commit("edges", write, next_id=max(a[0] for a in adds) + 1)
+            if adds or deleted:
+                added = self.wh.arrow_table("edges", list(adds.values()))
+                gone = pa.array(list(deleted), pa.int64())
+                self._rewrite("edges", [*adds, *deleted], lambda cur: (
+                    pa.concat_tables([cur.filter(pc.invert(pc.is_in(
+                        cur.column("edge_id"), value_set=gone
+                    ))), added])
+                ))
 
     def add_edge(self, doc1: int, doc2: int, relationship: int,
                  weight: Optional[float] = None) -> int:

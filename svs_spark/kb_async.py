@@ -173,19 +173,12 @@ class AsyncKnowledgeBase:
                 yield AsyncDocumentDeleter(del_doc, guard, inner)
 
     @asynccontextmanager
-    async def bulk_graph_update(
-        self, eager_validation: bool = False
-    ) -> AsyncIterator["AsyncGraphUpdater"]:
-        """See KnowledgeBase.bulk_graph_update for the deferred-raise
-        contract: by default persisted-state violations raise at
-        context exit (discarding the bulk); pass
-        ``eager_validation=True`` for the reference's raise-at-call
-        semantics."""
+    async def bulk_graph_update(self) -> AsyncIterator["AsyncGraphUpdater"]:
+        """Reference kb.py:1246-1320: each edge call raises at the call,
+        as KnowledgeBase.bulk_graph_update's do."""
         async with self._get_lock():
             kb = await self._ensure_kb()
-            async with _async_over_sync_cm(
-                kb.bulk_graph_update(eager_validation=eager_validation)
-            ) as (
+            async with _async_over_sync_cm(kb.bulk_graph_update()) as (
                 updater,
                 guard,
                 inner,
@@ -221,7 +214,7 @@ class _CmGuard:
 async def _async_over_sync_cm(cm):
     """Drive a sync @contextmanager from async land: __enter__ and
     __exit__ each run in a worker thread (the exit is where bulk CMs
-    commit — a Spark job that must not block the loop). Yields
+    commit — file writes that must not block the loop). Yields
     (entered_value, guard, inner_lock); the inner lock serializes the
     bulk's operations like the reference's per-bulk ``lock``."""
     value = await _to_thread(cm.__enter__)

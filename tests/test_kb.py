@@ -337,6 +337,20 @@ class TestRecords:
         assert {(d["id"], d["embedding"]) for p in pairs for d in p[1:]} == {
             (1, True), (3, True), (4, True)}
 
+    def test_pairwise_scores_refuse_vectors_of_two_lengths(self, spark,
+                                                           tmp_path):
+        """Vectors of two lengths make document_top_pairwise_scores raise
+        ValueError naming the lengths, in the driver and before any
+        Spark job; with one length again it answers."""
+        kb = self._kb(spark, str(tmp_path / "kb"))
+        with pytest.raises(ValueError, match=r"lengths \[2, 3\]"):
+            _jobs_in(spark, "pairwise-ragged",
+                     lambda: kb.document_top_pairwise_scores(10))
+        assert not spark.sparkContext.statusTracker().getJobIdsForGroup(
+            "pairwise-ragged")
+        kb.set_doc_embedding(4, [0.0, 0.6, 0.8])
+        assert len(kb.document_top_pairwise_scores(10)) == 3
+
     def test_retrieve_tie_at_the_nth_score_across_buckets(self, spark,
                                                           tmp_path):
         """Docs 3 and 18, in two docs buckets, tie at the second score:
@@ -518,14 +532,13 @@ class TestGraph:
         assert kb.count_edges() == 1  # nothing written by the failed bulk
 
     def test_eager_validation_raises_at_call_time(self, kb):
-        """Reference-parity mode (ADVICE round 4): with
-        eager_validation=True every persisted-state violation raises at
-        the CALL, so callers can catch per-call errors, skip the bad
-        edge, and keep the rest of the bulk."""
+        """As in svs, every violation of the stored state raises at the
+        CALL, so callers can catch per-call errors, skip the bad edge,
+        and keep the rest of the bulk."""
         self._setup(kb)
         kb.add_edge(2, 4, 6)
         kept = []
-        with kb.bulk_graph_update(eager_validation=True) as g:
+        with kb.bulk_graph_update() as g:
             for args in [(2, 4, 6), (1, 3, 6), (1, 99, 6), (3, 4, 6)]:
                 try:
                     kept.append(g.add_edge(*args))
@@ -535,16 +548,105 @@ class TestGraph:
         assert kb.count_edges() == 3  # the persisted one + the 2 kept
 
     def test_eager_validation_del_semantics(self, kb):
-        """Eager del: missing ids raise immediately; del-then-re-add of
-        the same triplet still works inside one eager bulk."""
+        """A missing del id raises at the call; del-then-re-add of the
+        same triplet still works inside the bulk."""
         self._setup(kb)
         e1 = kb.add_edge(2, 4, 6)
-        with kb.bulk_graph_update(eager_validation=True) as g:
+        with kb.bulk_graph_update() as g:
             with pytest.raises(ValueError, match="no such edge"):
                 g.del_edge(999)
             g.del_edge(e1)
-            g.add_edge(2, 4, 6)  # key freed by the eager del
+            g.add_edge(2, 4, 6)  # key freed by the del
         assert kb.count_edges() == 1
+
+    def test_each_violation_raises_at_its_call(self, kb):
+        """A duplicate of a stored key, a missing endpoint, a missing
+        relationship doc and an unknown or already deleted edge id each
+        raise at their call; the calls caught around them are kept, and
+        one stored edge deleted in the bulk is gone."""
+        self._setup(kb)
+        stored = kb.add_edge(2, 4, 6)
+        gone = kb.add_edge(1, 2, 3)
+        with kb.bulk_graph_update() as g:
+            first = g.add_edge(1, 3, 6)
+            with pytest.raises(RuntimeError, match="already exists"):
+                g.add_edge(2, 4, 6)
+            with pytest.raises(ValueError, match="no such doc: 99"):
+                g.add_directed_edge(1, 99, 6)
+            with pytest.raises(ValueError, match="no such doc: 98"):
+                g.add_edge(1, 4, 98)
+            g.del_edge(gone)
+            for bad in (gone, 77, first + 1):
+                with pytest.raises(ValueError, match="no such edge"):
+                    g.del_edge(bad)
+            last = g.add_edge(3, 4, 6)
+        assert last == first + 1
+        assert {(r["edge_id"], r["src"], r["dst"], r["rel"])
+                for r in kb.edges.collect()} == {
+            (stored, 2, 4, 6), (first, 1, 3, 6), (last, 3, 4, 6)}
+
+    def test_bulk_indexes_each_file_once(self, spark, kb, monkeypatch):
+        """A 1,000-edge bulk on a KB holding 2,000 edges derives each
+        edges file's key index, each docs file's ids and each file's
+        largest key at most once, reads no whole table for any call
+        (the table's files are listed a fixed number of times, not per
+        call), and runs no Spark job."""
+        import svs_spark.kb as kbmod
+        from svs_spark.sources.warehouse import Warehouse
+
+        with kb.bulk_add_docs() as add:
+            for i in range(30):
+                add(f"doc {i + 1}")
+        keys = [(i, j, r) for i in range(1, 31) for j in range(1, 31)
+                for r in range(1, 31) if (i + j + r) % 7 == 0][:3000]
+        assert len(keys) == 3000
+        with kb.bulk_graph_update() as g:
+            for key in keys[:2000]:
+                g.add_edge(*key)
+        assert len(kb.wh._manifest("edges")["files"]) == 16
+
+        derived: dict = {}
+
+        def spy(name, fn):
+            def counted(part):
+                derived.setdefault(name, []).append(id(part))
+                return fn(part)
+            return counted
+
+        monkeypatch.setattr(kbmod, "_edge_index", spy("edges", kbmod._edge_index))
+        monkeypatch.setattr(kbmod, "_doc_ids", spy("docs", kbmod._doc_ids))
+        monkeypatch.setattr(kbmod, "_KEY_MAX", {
+            t: spy(f"{t} max", fn) for t, fn in kbmod._KEY_MAX.items()})
+        listed, reads = [], []
+        files, read_arrow = Warehouse._files, Warehouse.read_arrow
+
+        def listing(self, name, keys):
+            listed.append(name)
+            return files(self, name, keys)
+
+        def reading(self, name, *a, **k):
+            reads.append(name)
+            return read_arrow(self, name, *a, **k)
+
+        monkeypatch.setattr(Warehouse, "_files", listing)
+        monkeypatch.setattr(Warehouse, "read_arrow", reading)
+
+        def bulk():
+            with kb.bulk_graph_update() as g:
+                for key in keys[2000:]:
+                    g.add_edge(*key)
+                # the next id, the edges' and the docs' indexes
+                assert sorted(listed) == ["docs", "edges", "edges"]
+                assert reads == []
+
+        assert _jobs_in(spark, "bulk-indexes-once", bulk) == 0
+        assert set(derived) == {"edges", "docs", "edges max"}
+        for name, parts in derived.items():
+            assert len(parts) == len(set(parts)) <= 16, name
+        assert kb.count_edges() == 3000
+        got = {(r["src"], r["dst"], r["rel"]): r["edge_id"]
+               for r in kb.edges.collect()}
+        assert got == {k: i + 1 for i, k in enumerate(keys)}
 
     def test_bulk_job_count_is_constant(self, spark, kb):
         """The round-3 scale fix: a bulk of N adds runs no Spark job —
@@ -1063,8 +1165,9 @@ class TestDriverCommits:
 
 class TestCallCost:
     def test_two_instances_take_turns(self, spark, kb):
-        """A second instance's commits are seen by the first: handles and
-        id counters are keyed by the table version, not held forever."""
+        """A second instance's commits are seen by the first: handles are
+        keyed by the table version, and ids come from the files the
+        current version lists, so each instance hands out the next id."""
         other = KnowledgeBase(spark, kb.wh.root)
 
         def both_see(n_docs: int, kids: list) -> None:
@@ -1138,6 +1241,31 @@ class TestCallCost:
             with x.bulk_keyval_update() as kv:
                 assert kv.items() == [("a", 1), ("b", 2)]
 
+    def test_delete_during_an_edge_bulk_cascades_its_edges(self, spark, kb):
+        """An edge bulk checks its docs when called. A second instance
+        deleting one of them while the bulk is open waits for the
+        bulk's commit before it searches the edges to cascade, so the
+        bulk's edges to the deleted doc go too."""
+        import threading
+        import time
+
+        other = KnowledgeBase(spark, kb.wh.root)
+        _add_fixture_docs(kb)
+        with kb.bulk_graph_update() as g:
+            g.add_edge(1, 2, 3)
+            t = threading.Thread(target=other.del_doc, args=(3,))
+            t.start()
+            time.sleep(0.5)
+            g.add_edge(2, 4, 3)  # doc 3 passed its check in this bulk
+            g.add_edge(2, 4, 5)
+            assert t.is_alive()  # the cascade waits for this commit
+        t.join(30)
+        assert not t.is_alive()
+        for x in (kb, other):
+            assert x.count() == 4
+            assert [(r["src"], r["dst"], r["rel"]) for r in x.edges.collect()
+                    ] == [(2, 4, 5)]
+
     def test_add_documents_df_job_count(self, spark, kb):
         """On a warm KB, add_documents_df runs the jobs of one action
         that counts the new docs and the taken ids together, and of the
@@ -1164,9 +1292,9 @@ class TestCallCost:
     def test_warm_call_job_budget(self, spark, kb):
         """A call that takes Python values runs no Spark job: keyed calls
         read and commit their buckets in the driver with pyarrow, and
-        predicate reads (children, levels, retrieve, counts, the
-        edge-key probe, the delete guard and cascade, the next id after
-        a delete) read the columns they test from the whole table. The
+        predicate reads (children, levels, retrieve, counts, the delete
+        guard and cascade) read the columns they test from the whole
+        table; the next id and the edge checks use per-file memos. The
         whole-table calls that collect their answer (DFS, the networkx
         graph) read in the driver too, and load() has nothing to warm."""
         with kb.bulk_add_docs() as add:
@@ -1181,7 +1309,6 @@ class TestCallCost:
             with kb.bulk_keyval_update() as kv:
                 kv.set("key", 1)
 
-        # del_doc drops the cached next id, so add_doc after it reads max(id)
         calls = {
             "query_doc": lambda p: kb.query_doc(roots[1]),
             "query_children": lambda p: kb.query_children(roots[0]),
@@ -1197,7 +1324,7 @@ class TestCallCost:
             "build_networkx_graph": lambda p: kb.build_networkx_graph(),
             "load": lambda p: kb.load(),
         }
-        for p in (0, 1):  # pass 0 warms the KB's id counters
+        for p in (0, 1):  # pass 0 decodes the files the calls read
             for name, call in calls.items():
                 jobs = _jobs_in(spark, f"kb-budget-{name}-{p}", lambda: call(p))
                 if p == 1:
@@ -1225,8 +1352,8 @@ class TestCallCost:
             assert new in seen and seen[1]["meta"] == {"by": "other"}
 
     def test_id_allocation_is_max_plus_one(self, kb):
-        """Cached id counters give exactly the ids max(id) + 1 gives,
-        including reuse of a deleted max id."""
+        """New ids are max(id) + 1 of the current table, including
+        reuse of a deleted max id."""
         a, b = kb.add_doc("first doc"), kb.add_doc("second doc")
         assert (a, b) == (1, 2)
         kb.del_doc(b)

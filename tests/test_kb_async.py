@@ -178,21 +178,48 @@ def test_concurrent_queries_outside_bulk(akb):
 
 
 def test_commit_time_validation_error_propagates_and_recovers(akb):
-    """An error raised BY the bulk's exit-commit (batched graph
-    validation) — as opposed to one thrown INTO the context — must
-    propagate out of the async context manager, write nothing, and
-    leave the KB lock usable for the next bulk."""
+    """An error raised BY the bulk's exit-commit (bulk_del_docs' check
+    of the ids it was given) — as opposed to one thrown INTO the
+    context — must propagate out of the async context manager, write
+    nothing, and leave the KB lock usable for the next bulk."""
+
+    async def flow():
+        async with akb.bulk_add_docs() as adder:
+            d1 = await adder.add_doc("a")
+            await adder.add_doc("b")
+        with pytest.raises(ValueError, match="no such doc: 99999"):
+            async with akb.bulk_del_docs() as deleter:
+                await deleter.del_doc(d1)
+                await deleter.del_doc(99999)  # raises at the exit
+        assert await akb.count() == 2
+        async with akb.bulk_del_docs() as deleter:
+            await deleter.del_doc(d1)
+        assert await akb.count() == 1
+
+    run(flow())
+
+
+def test_call_time_graph_error_writes_nothing_and_recovers(akb):
+    """An edge call's error raises at that await; caught, the bulk keeps
+    its other edges, and uncaught, it leaves the block, writes nothing,
+    and leaves the KB lock usable for the next bulk."""
 
     async def flow():
         async with akb.bulk_add_docs() as adder:
             d1 = await adder.add_doc("a")
             d2 = await adder.add_doc("b")
-        with pytest.raises(ValueError):
-            async with akb.bulk_graph_update() as g:
-                await g.add_edge(d1, 99999, d2)  # missing endpoint
-        assert await akb.count_edges() == 0
         async with akb.bulk_graph_update() as g:
+            with pytest.raises(ValueError, match="no such doc: 99999"):
+                await g.add_edge(d1, 99999, d2)
             await g.add_edge(d1, d2, d1)
         assert await akb.count_edges() == 1
+        with pytest.raises(ValueError, match="no such doc: 99999"):
+            async with akb.bulk_graph_update() as g:
+                await g.add_edge(d2, d1, d1)
+                await g.add_edge(d1, 99999, d2)  # missing endpoint
+        assert await akb.count_edges() == 1
+        async with akb.bulk_graph_update() as g:
+            await g.add_edge(d2, d1, d1)
+        assert await akb.count_edges() == 2
 
     run(flow())
